@@ -2,6 +2,8 @@ package graft.connectors.vectorstore
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import scala.jdk.CollectionConverters._
 import graft.config.{LoadSpec, QuerySpec}
 import graft.connectors.{SchemaInfo, VectorConnector, WriteReport}
 import graft.model.Canonical
@@ -96,9 +98,12 @@ abstract class VectorStoreConnector(fmt: String, dialect: FilterDialect)
     // true per-writer accounting from the commit messages — counts upserted
     // AND skipped records, which a before/after size diff cannot see;
     // keyed by THIS write's endpoint so concurrent same-named collections
-    // on other endpoints never alias
-    val (written, skipped) = VSWriteStats.get(specOf(connection), load.collection)
-      .getOrElse((VectorStore.resolve(specOf(connection)).count(load.collection).toLong, 0L))
+    // on other endpoints never alias, and by the namespace-qualified name
+    // the writer recorded under (same options, same precedence as above)
+    val target = VectorStoreProvider.collectionName(new CaseInsensitiveStringMap(
+      (connection + ("collection" -> load.collection) ++ load.options).asJava), fmt)
+    val (written, skipped) = VSWriteStats.get(specOf(connection), target)
+      .getOrElse((VectorStore.resolve(specOf(connection)).count(target).toLong, 0L))
     WriteReport(written = written, skipped = skipped)
   }
 

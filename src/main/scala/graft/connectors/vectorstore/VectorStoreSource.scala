@@ -70,11 +70,19 @@ abstract class VectorStoreProvider extends TableProvider with DataSourceRegister
         .map(_.vectorType))
       .getOrElse(VectorTypes.Float)
 
-  protected def collectionName(opts: CaseInsensitiveStringMap): String = {
+  private def collectionName(opts: CaseInsensitiveStringMap): String =
+    VectorStoreProvider.collectionName(opts, shortName())
+}
+
+object VectorStoreProvider {
+  /** The store-side name a source/sink's options address: `collection`,
+    * or `collection::namespace` when a namespace is set. Pinecone
+    * addresses data as index + namespace (examples/
+    * pinecone_to_pgvector_config.json "query" block). Write accounting is
+    * keyed by this name, so readers of [[VSWriteStats]] derive it here too. */
+  def collectionName(opts: CaseInsensitiveStringMap, source: String): String = {
     val base = Option(opts.get("collection"))
-      .getOrElse(throw new IllegalArgumentException(s"${shortName()} needs option 'collection'"))
-    // Pinecone addresses data as index + namespace (examples/
-    // pinecone_to_pgvector_config.json "query" block)
+      .getOrElse(throw new IllegalArgumentException(s"$source needs option 'collection'"))
     Option(opts.get("namespace")).filter(_.nonEmpty).map(ns => s"$base::$ns").getOrElse(base)
   }
 }

@@ -36,9 +36,6 @@ object VectorFunctions {
     * (`adapters/qdrant.py:164`). 0.0 when either norm is 0 (no NaN). */
   def cosineSimilarity(a: Column, b: Column): Column = VectorExpressions.cosine(a, b)
 
-  def cosineDistance(a: Column, b: Column): Column =
-    lit(1.0) - cosineSimilarity(a, b)
-
   /** a / ‖a‖₂ (unchanged if zero vector). Pre-normalizing embeddings turns
     * cosine top-k into dot-product top-k — one aggregate per candidate
     * instead of three at 100 TB scale. */

@@ -89,23 +89,35 @@ object TextAnalysis {
     * occurrences taken by the single most frequent bigram. The duplicate
     * ratios are pure array math (codegen'd, no shuffle); the top-bigram
     * fraction is an explode + two-level aggregate keyed on (doc, gram) —
-    * well-spread keys, one shuffle, no per-doc state beyond counters. */
+    * well-spread keys, one shuffle, no per-doc state beyond counters.
+    *
+    * The per-document columns are computed in projections BELOW the
+    * explode: Spark evaluates a column that sits next to a generator in
+    * the same `select` in a Project above the `Generate`, once per
+    * exploded bigram — O(len²) per document once the output is
+    * materialized. Below it, each n-gram array is built once per
+    * document and only the bigram array reaches the `Generate`. */
   def repetitionStats(docs: DataFrame, idCol: String = "doc_id",
                       textCol: String = "text"): DataFrame = {
     def dupRatio(grams: org.apache.spark.sql.Column) =
       when(size(grams) === 0, 0.0)
         .otherwise(lit(1.0) - size(array_distinct(grams)).cast("double") / size(grams))
-    val g2 = TextFunctions.wordNgrams(col(textCol), 2)
-    // Single scan: the per-doc ratios ride the exploded (doc, gram) rows
-    // through one shuffle (a few constant bytes per row) instead of a
-    // second scan+tokenize branch joined back on doc id. explode_OUTER
-    // keeps empty documents (null gram → excluded from the top-count).
-    docs.select(
-        col(idCol),
-        size(g2).as("n_bigrams"),
-        round(dupRatio(g2), 6).as("dup_bigram_ratio"),
-        round(dupRatio(TextFunctions.wordNgrams(col(textCol), 5)), 6).as("dup_5gram_ratio"),
-        explode_outer(g2).as("__g"))
+    // Two projections, not one: each array is referenced several times
+    // in the second, so the optimizer keeps it as one attribute instead
+    // of inlining (and re-evaluating) the kernel per reference. Single
+    // scan: the per-doc ratios ride the exploded (doc, gram) rows through
+    // one shuffle (a few constant bytes per row) instead of a second
+    // scan+tokenize branch joined back on doc id. explode_OUTER keeps
+    // empty documents (null gram → excluded from the top-count).
+    docs.select(col(idCol),
+        TextFunctions.wordNgrams(col(textCol), 2).as("__g2"),
+        TextFunctions.wordNgrams(col(textCol), 5).as("__g5"))
+      .select(col(idCol), col("__g2"),
+        size(col("__g2")).as("n_bigrams"),
+        round(dupRatio(col("__g2")), 6).as("dup_bigram_ratio"),
+        round(dupRatio(col("__g5")), 6).as("dup_5gram_ratio"))
+      .select(col(idCol), col("n_bigrams"), col("dup_bigram_ratio"), col("dup_5gram_ratio"),
+        explode_outer(col("__g2")).as("__g"))
       .groupBy(col(idCol), col("__g"))
       .agg(first("n_bigrams").as("n_bigrams"),
         first("dup_bigram_ratio").as("dup_bigram_ratio"),

@@ -164,6 +164,63 @@ class TextPipelineSpec extends SparkSpec {
     assert(r(2).getInt(1) == 0 && r(2).getDouble(3) == 0.0)
   }
 
+  test("repetitionStats evaluates each n-gram array ONCE, below the explode " +
+    "(a per-doc column above the Generate re-runs per bigram: O(len²))") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.functions.WordNgramsExpr
+    // the gate's own input: a file scan (a local Seq would be folded away)
+    val plan = graft.ops.TextAnalysis.repetitionStats(Tables(spark, sf(), "documents"))
+      .queryExecution.optimizedPlan
+    def ngrams(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.collect { case w: WordNgramsExpr => w.n }
+    val aboveGenerate = plan.collect {
+      case p if !p.isInstanceOf[Generate] && p.exists(_.isInstanceOf[Generate]) => p
+    }
+    assert(aboveGenerate.nonEmpty, s"no Generate in the plan:\n$plan")
+    aboveGenerate.foreach(p => assert(p.expressions.flatMap(ngrams).isEmpty,
+      s"word_ngrams evaluated above the Generate in ${p.nodeName}:\n$plan"))
+    val evals = plan.collect { case p => p.expressions.flatMap(ngrams) }.flatten.sorted
+    assert(evals == Seq(2, 5), s"expected one word_ngrams per n, got $evals:\n$plan")
+  }
+
+  test("repetitionStats matches a plain-Scala reference on edge-case and long documents") {
+    def round6(x: Double) =
+      BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    // the kernel's tokenizer: SQL trim (spaces only, so "\t\n" survives
+    // as two empty tokens), split on \s+ keeping trailing empties, lower
+    def grams(text: String, n: Int): Seq[String] = {
+      val t = Option(text).getOrElse("").dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
+      val toks = if (t.isEmpty) Seq.empty else t.split("\\s+", -1).toSeq.map(_.toLowerCase)
+      if (toks.length < n) Seq.empty else toks.sliding(n).map(_.mkString(" ")).toSeq
+    }
+    def dup(g: Seq[String]) = if (g.isEmpty) 0.0 else 1.0 - g.distinct.size.toDouble / g.size
+    def reference(text: String): (Int, Double, Double, Double) = {
+      val g2 = grams(text, 2)
+      val top = if (g2.isEmpty) 0.0
+        else g2.groupBy(identity).values.map(_.size).max.toDouble / g2.size
+      (g2.size, round6(dup(g2)), round6(dup(grams(text, 5))), round6(top))
+    }
+    // a ~300-char fixture-sized document, and one 64x that length with
+    // mixed case and uneven whitespace (repeats and near-repeats)
+    val rnd = new scala.util.Random(7)
+    val vocab = Seq("the", "Data", "model", "of", "a", "TEXT", "run", "and", "corpus", "to")
+    def words(k: Int) = Seq.fill(k)(vocab(rnd.nextInt(vocab.size)))
+    val fixture = words(60).mkString(" ")
+    val long = Seq.fill(64)(words(60).mkString(" \t ")).mkString("\n")
+    assert(fixture.length >= 200 && long.length >= 64 * fixture.length)
+    val texts = Seq[String](null, "", "   ", "  \t\n ", "one", "Buy now buy NOW", fixture, long)
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    val got = graft.ops.TextAnalysis.repetitionStats(docs).collect()
+      .map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2), r.getDouble(3), r.getDouble(4)))
+      .toMap
+    assert(got.size == texts.size)
+    texts.zipWithIndex.foreach { case (t, i) =>
+      assert(got(i.toLong) == reference(t), s"doc $i (${Option(t).map(_.length)} chars)")
+    }
+    assert(got(3L)._1 == 1)    // "\t\n": two empty tokens, one bigram
+    assert(got(7L)._1 > 3000) // the long document really is long
+  }
+
   test("redactPii replaces emails, IPs, and phone runs with typed tags") {
     val docs = Seq(
       (1L, "mail alice.smith+x@corp.example.com or call +1 555-123 4567 at 192.168.0.12"),

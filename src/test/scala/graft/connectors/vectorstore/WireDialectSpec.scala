@@ -908,6 +908,31 @@ class WireDialectSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("migration into a namespaced pinecone target reports every row written") {
+    // write stats are recorded under index::namespace; the report must
+    // look them up under that name, not the bare index (which held no
+    // stats and counted an index-level namespace that does not exist)
+    val src = new QdrantWireServer(new InMemoryStore)
+    val dst = new PineconeWireServer(new InMemoryStore)
+    try {
+      val t = new QdrantWireTransport(src.url)
+      t.createCollection("emb", CollectionConfig(dim = 2), recreate = true)
+      t.upsert("emb", canon(23))
+      val cfg = graft.config.MigrationConfig.fromJson(
+        s"""{"source": {"type": "qdrant", "connection": {"url": "${src.url}"},
+           |            "query": {"collection": "emb"}},
+           | "target": {"type": "pinecone",
+           |            "connection": {"url": "${dst.url}", "namespace": "team1"},
+           |            "load": {"collection": "pix", "recreate": true,
+           |                     "dimension": 2, "batch_size": 5}}}""".stripMargin)
+      val report = new graft.core.Migrator(spark).run(cfg)
+      assert(report.success, report.error)
+      assert(report.written == 23 && report.skipped == 0 && report.extracted == 23,
+        report.toString)
+      assert(new PineconeWireTransport(dst.url).count("pix::team1") == 23)
+    } finally { src.stop(); dst.stop() }
+  }
+
   test("DSv2 write + scan through the pinecone wire, namespace option") {
     val server = new PineconeWireServer(new InMemoryStore)
     try {
