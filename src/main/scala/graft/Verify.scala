@@ -1,14 +1,22 @@
 package graft
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the DuckDB oracle compare (`tools/check.py`).
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q1 q2 ...]
+  * Query names after the two directories restrict the dump (and
+  * oracle_sql.json) to those queries — fast local iteration on a few
+  * gates, since `tools/check.py` only adjudicates what oracle_sql.json
+  * lists. With no names every query is dumped. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    def wanted(name: String): Boolean = names.isEmpty || names(name)
     val spark = GraftSession.local("graft-verify")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -27,7 +35,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => wanted(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

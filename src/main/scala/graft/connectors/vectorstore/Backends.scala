@@ -135,9 +135,4 @@ class MilvusConnector extends VectorStoreConnector("graft-milvus", new MilvusExp
 
 class PineconeConnector extends VectorStoreConnector("graft-pinecone", new PineconeFilterDialect()) {
   override def name: String = "pinecone"
-
-  /** Pinecone addresses data as index::namespace. */
-  override def read(spark: SparkSession, connection: Map[String, String],
-                    query: QuerySpec): DataFrame =
-    super.read(spark, connection, query)
 }

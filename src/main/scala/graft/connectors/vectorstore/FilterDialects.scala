@@ -8,21 +8,31 @@ import scala.jdk.CollectionConverters._
 
 /** Backend filter dialects, both directions:
   *
-  *  - `parse`: backend-native filter (config `query.filter`) → Spark Column,
-  *    replacing the reference's pass-the-string-through model
+  *  - `parseFilter`: backend-native filter (config `query.filter`, or the
+  *    filter of a wire request) → DSv2 [[Filter]]. This is the dialect's
+  *    ONE grammar. The client turns its result into a Spark Column
+  *    (`parse`), replacing the reference's pass-the-string-through model
   *    (`adapters/pgvector.py:99`, `adapters/qdrant.py:105`,
-  *    `adapters/milvus.py:102`) with a parsed, optimizable predicate.
+  *    `adapters/milvus.py:102`) with a parsed, optimizable predicate; the
+  *    loopback servers evaluate it with [[FilterEval]], so the emulated
+  *    backend and the engine can never disagree about what a filter
+  *    matches. Anything outside the grammar raises IllegalArgumentException
+  *    — a filter silently ignored would return unfiltered rows.
   *  - `render`: Catalyst pushdown [[Filter]]s → backend filter syntax, the
   *    DSv2 `SupportsPushDownFilters` side the reference never had.
   *
   * Predicates reference the canonical columns: `id`, or `metadata.<key>`
   * (rendered per backend's addressing: payload keys for Qdrant, scalar
-  * fields for Milvus, SQL columns for pgvector).
+  * fields for Milvus, SQL columns for pgvector). Parsed filters address a
+  * metadata key by its bare name, which every consumer resolves the same
+  * way ([[DialectUtil.attr]], [[FilterEval]]).
   */
 trait FilterDialect extends Serializable {
   def name: String
+  /** Backend-native filter string → DSv2 Filter over id/metadata keys. */
+  def parseFilter(filter: String): Filter
   /** Backend-native filter string → Spark Column over canonical schema. */
-  def parse(filter: String): Column
+  final def parse(filter: String): Column = DialectUtil.column(parseFilter(filter))
   /** Catalyst pushdown filter → backend-native syntax; None = unsupported
     * (Spark re-applies it post-scan — an upgrade on the reference, which
     * cannot evaluate anything engine-side). */
@@ -49,6 +59,10 @@ private object DialectUtil {
   import graft.model.Canonical
 
   private val MetaPrefix = Canonical.METADATA + "."
+
+  val mapper = new ObjectMapper()
+
+  def raise(msg: String): Nothing = throw new IllegalArgumentException(msg)
 
   /** Backend filter languages can address the id or a metadata KEY — not
     * the bare map/vector columns. Renderers must refuse anything else
@@ -78,21 +92,78 @@ private object DialectUtil {
     case other => String.valueOf(other)
   }
 
+  /** JSON string escape — rendered filters TRAVEL as parsed scroll/search/
+    * query bodies, so values and keys must survive `mapper.readTree`
+    * (quotes, backslashes, control chars). */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+  def jkey(a: String): String = jstr(stripMeta(a))
+
+  /** A JSON filter scalar as the parsers type it: a number compares as a
+    * double, a string or boolean as text. None for an array, object or
+    * null, which `asText()` would silently turn into "" (matching nothing)
+    * — callers raise instead. */
+  def jsonScalar(v: JsonNode): Option[Any] =
+    if (v.isNumber) Some(v.asDouble())
+    else if (v.isTextual || v.isBoolean) Some(v.asText())
+    else None
+
   /** Metadata values are strings in canonical shape; compare numerically
     * when the literal is numeric. */
   def cmp(name: String, v: Any): (Column, Column) = v match {
     case n: Number => (attr(name).cast("double"), lit(n.doubleValue()))
     case other => (attr(name), lit(String.valueOf(other)))
   }
+
+  /** The one Filter → Column translation behind every dialect's `parse`.
+    * `In` keeps the `isInCollection` shape; a list mixing numbers and
+    * strings matches either way, each value typed as [[FilterEval]] types
+    * it. */
+  def column(f: Filter): Column = {
+    def bin(a: String, v: Any)(op: (Column, Column) => Column): Column = {
+      val (c, l) = cmp(a, v)
+      op(c, l)
+    }
+    f match {
+      case EqualTo(a, v) => bin(a, v)(_ === _)
+      case GreaterThan(a, v) => bin(a, v)(_ > _)
+      case GreaterThanOrEqual(a, v) => bin(a, v)(_ >= _)
+      case LessThan(a, v) => bin(a, v)(_ < _)
+      case LessThanOrEqual(a, v) => bin(a, v)(_ <= _)
+      case In(a, vs) =>
+        val (nums, strs) = vs.toSeq.partition(_.isInstanceOf[Number])
+        lazy val numIn = attr(a).cast("double")
+          .isInCollection(nums.map(_.asInstanceOf[Number].doubleValue()))
+        lazy val strIn = attr(a).isInCollection(strs.map(String.valueOf))
+        if (nums.isEmpty) strIn else if (strs.isEmpty) numIn else strIn || numIn
+      case IsNull(a) => attr(a).isNull
+      case IsNotNull(a) => attr(a).isNotNull
+      case StringStartsWith(a, p) => attr(a).startsWith(p)
+      case StringEndsWith(a, p) => attr(a).endsWith(p)
+      case StringContains(a, p) => attr(a).contains(p)
+      case And(l, r) => column(l) && column(r)
+      case Or(l, r) => column(l) || column(r)
+      case Not(c) => !column(c)
+      case _: AlwaysTrue => lit(true)
+      case other => raise(s"no Column form for filter: $other")
+    }
+  }
 }
 
-/** SQL WHERE dialect (pgvector): `parse` delegates to Spark's SQL parser —
-  * the filter is a SQL boolean expression over id/metadata keys. */
-class SqlWhereDialect extends FilterDialect {
+/** SQL WHERE rendering (pgvector): metadata keys are SQL columns there. A
+  * user's pgvector filter is already a SQL boolean expression, so there is
+  * nothing to parse — this dialect only renders pushdown filters. */
+class SqlWhereDialect extends Serializable {
   import DialectUtil._
-  override def name: String = "sql"
-
-  override def parse(filter: String): Column = expr(filter)
+  def name: String = "sql"
 
   /** SQL-land addressability: unlike the structured dialects, metadata
     * keys here are real SQL COLUMNS (the pgvector model), so any bare
@@ -103,7 +174,7 @@ class SqlWhereDialect extends FilterDialect {
     * structured dialects guard with [[DialectUtil.addressable]]). */
   private def sqlAddressable(name: String): Boolean = !bareCanonical(name)
 
-  override def render(f: Filter): Option[String] = f match {
+  def render(f: Filter): Option[String] = f match {
     case EqualTo(a, v) if sqlAddressable(a) => Some(s"${stripMeta(a)} = ${litStr(v)}")
     case GreaterThan(a, v) if sqlAddressable(a) => Some(s"${stripMeta(a)} > ${litStr(v)}")
     case GreaterThanOrEqual(a, v) if sqlAddressable(a) => Some(s"${stripMeta(a)} >= ${litStr(v)}")
@@ -128,7 +199,6 @@ class SqlWhereDialect extends FilterDialect {
 class QdrantFilterDialect extends FilterDialect {
   import DialectUtil._
   override def name: String = "qdrant"
-  @transient private lazy val mapper = new ObjectMapper()
 
   /** Cursor slices range-filter the reserved numeric `__gid` payload field
     * the Qdrant writer mirrors numeric ids into ([[QdrantWireTransport
@@ -142,79 +212,72 @@ class QdrantFilterDialect extends FilterDialect {
     if (rendered.length <= 1) rendered.headOption
     else Some(rendered.mkString("""{"must":[""", ",", "]}"))
 
-  override def parse(filter: String): Column = {
-    val root = mapper.readTree(filter)
-    parseClauseList(root)
-  }
+  // ------------------------------------------------------------- parse
+
+  override def parseFilter(filter: String): Filter = parseFilter(mapper.readTree(filter))
+
+  /** Entry for an already-parsed request body (the loopback server's). */
+  def parseFilter(node: JsonNode): Filter = clauseList(node)
 
   /** Clause lists must BE lists: Jackson's `elements()` on a scalar is
     * empty, so `{"must": "lang=en"}` (a malformed hand-written filter)
     * would silently parse as NO constraints — a subset migration quietly
     * copying the whole collection. Real Qdrant 400s on the shape. */
   private def jarr(n: JsonNode, what: String): Seq[JsonNode] = {
-    if (!n.isArray) throw new IllegalArgumentException(
-      s"qdrant filter: '$what' must be an array, got: $n")
+    if (!n.isArray) raise(s"qdrant filter: '$what' must be an array, got: $n")
     n.elements().asScala.toSeq
   }
 
-  private def parseClauseList(n: JsonNode): Column = {
-    def conds(key: String): Seq[Column] =
-      Option(n.get(key)).map(v => jarr(v, key).map(parseCond)).getOrElse(Nil)
-    val must = conds("must")
-    val should = conds("should")
-    val mustNot = conds("must_not")
-    val parts =
-      (if (must.nonEmpty) Seq(must.reduce(_ && _)) else Nil) ++
-        (if (should.nonEmpty) Seq(should.reduce(_ || _)) else Nil) ++
-        (if (mustNot.nonEmpty) Seq(!mustNot.reduce(_ || _)) else Nil)
-    if (parts.isEmpty) lit(true) else parts.reduce(_ && _)
+  private def clauseList(n: JsonNode): Filter = {
+    if (!n.isObject) raise(s"qdrant filter must be an object, got: $n")
+    def conds(key: String): Seq[Filter] =
+      Option(n.get(key)).map(v => jarr(v, key).map(cond)).getOrElse(Nil)
+    Seq(conds("must").reduceOption(And(_, _)),
+      conds("should").reduceOption(Or(_, _)),
+      conds("must_not").reduceOption(Or(_, _)).map(Not(_)))
+      .flatten.reduceOption(And(_, _)).getOrElse(AlwaysTrue)
   }
 
-  private def parseCond(c: JsonNode): Column = {
-    if (c.has("must") || c.has("should") || c.has("must_not")) return parseClauseList(c)
-    // condition-shape checks shared with the server-side decoder
-    // (WireFilters) so the two qdrant parsers cannot drift
-    if (c.has("is_null")) return attr(WireFilters.keyOf(c, "is_null")).isNull
-    if (c.has("is_empty")) return attr(WireFilters.keyOf(c, "is_empty")).isNull
+  /** `{"is_null": {"key": k}}`-shaped conditions, loudly: a scalar or
+    * key-less body (`{"is_null": "x"}` — the hand-written-config typo)
+    * must raise the same parse error as the sibling branches, never NPE. */
+  private def keyOf(c: JsonNode, cond: String): String =
+    Option(c.get(cond)).flatMap(n => Option(n.get("key"))).filterNot(_.isNull)
+      .map(_.asText()).getOrElse(raise(s"""qdrant $cond condition needs {"key": ...}: $c"""))
+
+  private def scalar(key: String, v: JsonNode): Any = jsonScalar(v).getOrElse(
+    raise(s"qdrant match value for '$key' must be a string/number/boolean, got: $v"))
+
+  private def cond(c: JsonNode): Filter = {
+    if (c.has("must") || c.has("should") || c.has("must_not")) return clauseList(c)
+    if (c.has("is_null")) return IsNull(keyOf(c, "is_null"))
+    if (c.has("is_empty")) return IsNull(keyOf(c, "is_empty"))
     if (c.has("has_id")) // documented point-id membership condition
-      return attr("id").isInCollection(
-        jarr(c.get("has_id"), "has_id").map(_.asText()))
+      return In("id", jarr(c.get("has_id"), "has_id").map(v => v.asText(): Any).toArray)
     val key = Option(c.get("key")).map(_.asText())
-      .getOrElse(throw new IllegalArgumentException(s"qdrant condition missing key: $c"))
+      .getOrElse(raise(s"qdrant condition missing key: $c"))
     if (c.has("match")) {
       val m = c.get("match")
-      if (m.has("any")) {
-        val vals = jarr(m.get("any"), "match.any")
-        return if (vals.forall(_.isNumber))
-          attr(key).cast("double").isInCollection(vals.map(_.asDouble()))
-        else attr(key).isInCollection(vals.map(_.asText()))
-      }
-      val v = WireFilters.matchValue(c, m)
-      if (v.isNumber) attr(key).cast("double") === v.asDouble() else attr(key) === v.asText()
+      if (m.has("any")) In(key, jarr(m.get("any"), "match.any").map(scalar(key, _)).toArray)
+      else EqualTo(key, scalar(key, Option(m.get("value")).orElse(Option(m.get("text")))
+        .filterNot(_.isNull)
+        .getOrElse(raise(s"qdrant match condition needs value/text/any: $c"))))
     } else if (c.has("range")) {
+      // a bound must be a number: Jackson's asDouble() turns a string (an
+      // RFC 3339 datetime, "abc") into 0.0 — a silent `>= 0`
       val r = c.get("range")
-      Seq("gt" -> ((a: Column, b: Double) => a > b), "gte" -> ((a: Column, b: Double) => a >= b),
-        "lt" -> ((a: Column, b: Double) => a < b), "lte" -> ((a: Column, b: Double) => a <= b))
-        .flatMap { case (k, op) =>
-          Option(r.get(k)).map(v => op(attr(key).cast("double"), v.asDouble())) }
-        .reduceOption(_ && _).getOrElse(lit(true))
-    } else throw new IllegalArgumentException(s"unsupported qdrant condition: $c")
+      Seq[(String, Double => Filter)]("gt" -> (GreaterThan(key, _)),
+        "gte" -> (GreaterThanOrEqual(key, _)), "lt" -> (LessThan(key, _)),
+        "lte" -> (LessThanOrEqual(key, _)))
+        .flatMap { case (k, op) => Option(r.get(k)).map { v =>
+          if (!v.isNumber) raise(s"qdrant range '$k' for '$key' needs a number, got: $v")
+          op(v.asDouble())
+        } }
+        .reduceOption(And(_, _)).getOrElse(AlwaysTrue)
+    } else raise(s"unsupported qdrant condition: $c")
   }
 
-  /** JSON string escape — the rendered filter now actually TRAVELS as a
-    * parsed scroll/search body, so values and keys must survive
-    * `mapper.readTree` (quotes, backslashes, control chars). */
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-  private def jkey(a: String): String = jstr(stripMeta(a))
+  // ------------------------------------------------------------ render
 
   /** Point-id literal for a `has_id` list: canonical uints ride as JSON
     * numbers, everything else as strings — the same round-trip rule as
@@ -279,14 +342,14 @@ class QdrantFilterDialect extends FilterDialect {
   * id predicates return None and Spark evaluates them client-side).
   *
   * Emulation notes: `$ne`/`$nin` here require the key to be present
-  * (missing-key records do not match), and `$exists: false` matches only
-  * missing keys — a record whose key holds a non-numeric value where a
-  * numeric range is expected simply fails the range, like the real
-  * service's typed metadata. */
+  * (missing-key records do not match — hence the IsNotNull conjunct the
+  * parser adds, without which [[FilterEval]]'s two-valued `Not` would
+  * match them), and `$exists: false` matches only missing keys — a record
+  * whose key holds a non-numeric value where a numeric range is expected
+  * simply fails the range, like the real service's typed metadata. */
 class PineconeFilterDialect extends FilterDialect {
   import DialectUtil._
   override def name: String = "pinecone"
-  @transient private lazy val mapper = new ObjectMapper()
 
   /** Parallel cursor slices range-filter the reserved numeric `__gid`
     * metadata field the Pinecone writer mirrors numeric ids into
@@ -301,92 +364,65 @@ class PineconeFilterDialect extends FilterDialect {
 
   // ------------------------------------------------------------- parse
 
-  override def parse(filter: String): Column = parseNode(mapper.readTree(filter))
+  override def parseFilter(filter: String): Filter = parseFilter(mapper.readTree(filter))
 
-  private def parseNode(n: JsonNode): Column = {
-    val parts = n.properties().asScala.map { e =>
+  /** Entry for an already-parsed request body (the loopback server's). */
+  def parseFilter(n: JsonNode): Filter = {
+    if (!n.isObject) raise(s"pinecone filter must be an object, got: $n")
+    n.properties().iterator().asScala.map { e =>
       (e.getKey, e.getValue) match {
-        case ("$and", arr) =>
-          if (!arr.isArray || arr.isEmpty) throw new IllegalArgumentException(
-            s"pinecone filter: '$$and' needs a non-empty array, got: $arr")
-          arr.elements().asScala.map(parseNode).reduce(_ && _)
-        case ("$or", arr) =>
-          if (!arr.isArray || arr.isEmpty) throw new IllegalArgumentException(
-            s"pinecone filter: '$$or' needs a non-empty array, got: $arr")
-          arr.elements().asScala.map(parseNode).reduce(_ || _)
-        case (key, v) if v.isObject => parseOps(key, v)
-        case (key, v) => cmpEq(key, v) // implicit $eq shorthand
+        case ("$and", arr) => list(arr, "$and").reduce(And(_, _))
+        case ("$or", arr) => list(arr, "$or").reduce(Or(_, _))
+        case (key, v) if v.isObject => ops(key, v)
+        case (key, v) => EqualTo(key, prim(key, "$eq", v)) // implicit $eq shorthand
       }
-    }.toSeq
-    if (parts.isEmpty) lit(true) else parts.reduce(_ && _)
+    }.reduceOption(And(_, _)).getOrElse(AlwaysTrue)
   }
 
-  private def cmpEq(key: String, v: JsonNode): Column =
-    if (v.isNumber) attr(key).cast("double") === v.asDouble()
-    else if (v.isBoolean) attr(key) === v.asBoolean().toString
-    else if (v.isTextual) attr(key) === v.asText()
-    else throw new IllegalArgumentException(
-      // a silently-coerced array/object (asText = "") would match NOTHING —
-      // a config carrying the OLD Qdrant-style filter shape must fail
-      // loudly here, not "succeed" having migrated zero rows
-      s"pinecone filter value for '$key' must be a string/number/boolean, " +
-        s"got: $v (Qdrant-style structured filters are not valid Pinecone " +
-        "filters — use the Mongo-style operators)")
+  private def list(arr: JsonNode, op: String): Iterator[Filter] = {
+    if (!arr.isArray || arr.isEmpty)
+      raise(s"pinecone filter: '$op' needs a non-empty array, got: $arr")
+    arr.elements().asScala.map(parseFilter)
+  }
 
-  private def parseOps(key: String, ops: JsonNode): Column =
-    ops.properties().asScala.map { e =>
-      // every operator validates its value SHAPE — a structured value
-      // silently coerced via asText() would compare against "" and match
-      // nothing (or nearly everything under $ne): the zero-row/-all-rows
-      // failure must be a parse error, not a quiet result
-      def requirePrim(v: JsonNode): JsonNode =
-        if (v.isNumber || v.isTextual || v.isBoolean) v
-        else throw new IllegalArgumentException(
-          s"pinecone filter value for '$key'.${e.getKey} must be a " +
-            s"string/number/boolean, got: $v")
-      def num = {
-        if (!e.getValue.isNumber) throw new IllegalArgumentException(
-          s"pinecone filter '$key'.${e.getKey} needs a numeric value, got: ${e.getValue}")
-        e.getValue.asDouble()
-      }
-      def numAttr = attr(key).cast("double")
-      e.getKey match {
-        case "$eq" => cmpEq(key, e.getValue)
-        case "$ne" =>
-          val v = requirePrim(e.getValue)
-          if (v.isNumber) numAttr =!= v.asDouble() else attr(key) =!= v.asText()
-        case "$gt" => numAttr > num
-        case "$gte" => numAttr >= num
-        case "$lt" => numAttr < num
-        case "$lte" => numAttr <= num
-        case "$in" | "$nin" =>
-          if (!e.getValue.isArray) throw new IllegalArgumentException(
-            s"pinecone filter '$key'.${e.getKey} needs an array value, got: ${e.getValue}")
-          val vals = e.getValue.elements().asScala.toSeq.map(requirePrim)
-          val in = if (vals.forall(_.isNumber))
-            numAttr.isInCollection(vals.map(_.asDouble()))
-          else attr(key).isInCollection(vals.map(_.asText()))
-          if (e.getKey == "$in") in else !in
+  /** Every operator validates its value SHAPE — a structured value
+    * silently coerced via asText() would compare against "" and match
+    * nothing (or nearly everything under $ne): the zero-row/all-rows
+    * failure must be a parse error, not a quiet result. A config carrying
+    * the OLD Qdrant-style filter shape fails here too. */
+  private def prim(key: String, op: String, v: JsonNode): Any = jsonScalar(v).getOrElse(
+    raise(s"pinecone filter value for '$key'.$op must be a string/number/boolean, " +
+      s"got: $v (Qdrant-style structured filters are not valid Pinecone filters — " +
+      "use the Mongo-style operators)"))
+
+  private def ops(key: String, ops: JsonNode): Filter =
+    ops.properties().iterator().asScala.map { e =>
+      val (op, v) = (e.getKey, e.getValue)
+      def num: Double =
+        if (v.isNumber) v.asDouble()
+        else raise(s"pinecone filter '$key'.$op needs a numeric value, got: $v")
+      def vals: Array[Any] =
+        if (v.isArray) v.elements().asScala.map(prim(key, op, _)).toArray
+        else raise(s"pinecone filter '$key'.$op needs an array value, got: $v")
+      op match {
+        case "$eq" => EqualTo(key, prim(key, op, v))
+        case "$ne" => And(IsNotNull(key), Not(EqualTo(key, prim(key, op, v))))
+        case "$gt" => GreaterThan(key, num)
+        case "$gte" => GreaterThanOrEqual(key, num)
+        case "$lt" => LessThan(key, num)
+        case "$lte" => LessThanOrEqual(key, num)
+        case "$in" => In(key, vals)
+        case "$nin" => And(IsNotNull(key), Not(In(key, vals)))
         case "$exists" =>
-          if (e.getValue.asBoolean()) attr(key).isNotNull else attr(key).isNull
-        case other => throw new IllegalArgumentException(
-          s"unsupported pinecone filter operator: $other")
+          // asBoolean() reads "yes" as false — IsNull, the opposite intent
+          if (!v.isBoolean) raise(s"pinecone filter '$key'.$op needs a boolean, got: $v")
+          if (v.asBoolean()) IsNotNull(key) else IsNull(key)
+        case other => raise(s"unsupported pinecone filter operator: $other")
       }
-    }.reduce(_ && _)
+    }.reduceOption(And(_, _)).getOrElse(raise(s"empty operator object for key $key"))
 
   // ------------------------------------------------------------ render
 
-  private def jstr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-  private def jkey(a: String): String = jstr(stripMeta(a))
   private def jval(v: Any): String = v match {
     case n: Number => String.valueOf(n)
     case other => jstr(String.valueOf(other))
@@ -427,7 +463,7 @@ class MilvusExprDialect extends FilterDialect {
   override def combine(rendered: Seq[String]): Option[String] =
     rendered.reduceOption((a, b) => s"($a && $b)")
 
-  override def parse(filter: String): Column = new MilvusParser(filter).parseExpr()
+  override def parseFilter(filter: String): Filter = new MilvusExprParser(filter).parse()
 
   override def render(f: Filter): Option[String] = f match {
     case _ if f.references.exists(!addressable(_)) => None
@@ -444,117 +480,137 @@ class MilvusExprDialect extends FilterDialect {
   }
 }
 
-/** Tiny recursive-descent parser for Milvus filter expressions. */
-private class MilvusParser(input: String) {
-  import DialectUtil._
+/** Recursive-descent parser over the Milvus expression grammar. */
+private class MilvusExprParser(input: String) {
+  import DialectUtil.raise
   private var pos = 0
 
-  def parseExpr(): Column = {
-    val c = parseOr()
+  def parse(): Filter = {
+    val f = parseOr()
     skipWs()
-    require(pos >= input.length, s"trailing input at $pos in: $input")
-    c
+    if (pos < input.length) raise(s"trailing input at $pos in: $input")
+    f
   }
 
-  private def parseOr(): Column = {
-    var left = parseAnd()
-    while (eat("||") || eatWord("or")) left = left || parseAnd()
-    left
-  }
+  private def skipWs(): Unit = while (pos < input.length && input(pos).isWhitespace) pos += 1
 
-  private def parseAnd(): Column = {
-    var left = parseNot()
-    while (eat("&&") || eatWord("and")) left = left && parseNot()
-    left
-  }
-
-  private def parseNot(): Column =
-    if (eat("!") || eatWord("not")) !parseNot() else parsePrimary()
-
-  private def parsePrimary(): Column = {
+  private def peekWord(w: String): Boolean = {
     skipWs()
-    if (eat("(")) { val c = parseOr(); require(eat(")"), s"missing ) at $pos"); c }
-    else parseComparison()
+    // boundary must match the IDENTIFIER charset ('_' and '.' included):
+    // a field named not_spam must not tokenize as `not` + `_spam`
+    def identChar(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
+    input.regionMatches(true, pos, w, 0, w.length) &&
+      (pos + w.length >= input.length || !identChar(input(pos + w.length)))
   }
 
-  private def parseComparison(): Column = {
+  private def eat(s: String): Boolean = {
+    skipWs()
+    if (input.regionMatches(true, pos, s, 0, s.length)) { pos += s.length; true } else false
+  }
+
+  private def eatWord(w: String): Boolean = peekWord(w) && eat(w)
+
+  private def parseOr(): Filter = {
+    var l = parseAnd()
+    while (eat("||") || eatWord("or")) l = Or(l, parseAnd())
+    l
+  }
+
+  private def parseAnd(): Filter = {
+    var l = parseNot()
+    while (eat("&&") || eatWord("and")) l = And(l, parseNot())
+    l
+  }
+
+  private def parseNot(): Filter = {
+    skipWs()
+    if (eatWord("not")) Not(parseNot())
+    else if (pos < input.length && input(pos) == '!' &&
+      (pos + 1 >= input.length || input(pos + 1) != '=')) { pos += 1; Not(parseNot()) }
+    else parsePrimary()
+  }
+
+  private def parsePrimary(): Filter = {
+    if (eat("(")) {
+      val f = parseOr()
+      if (!eat(")")) raise(s"expected ) at $pos: $input")
+      return f
+    }
     val field = parseIdent()
-    skipWs()
     if (eatWord("in")) {
-      require(eat("["), s"expected [ after in at $pos")
-      val vals = scala.collection.mutable.ArrayBuffer[Any]()
-      while (!eat("]")) { vals += parseValue(); eat(",") }
-      vals.headOption match {
-        case Some(_: Double) => attr(field).cast("double")
-          .isInCollection(vals.map(_.asInstanceOf[Double]).toSeq)
-        case _ => attr(field).isInCollection(vals.map(String.valueOf(_)).toSeq)
+      if (!eat("[")) raise(s"expected [ at $pos: $input")
+      val vals = scala.collection.mutable.ArrayBuffer.empty[Any]
+      while (!eat("]")) {
+        if (vals.nonEmpty && !eat(",")) raise(s"expected , at $pos: $input")
+        vals += parseLiteral()
       }
-    } else if (eatWord("like")) {
-      parseValue() match {
-        case s: String => attr(field).like(s)
-        case v => throw new IllegalArgumentException(s"like needs a string, got $v")
-      }
+      In(field, vals.toArray)
+    } else if (eatWord("like")) parseLiteral() match {
+      case p: String => like(field, p)
+      case v => raise(s"like needs a string pattern, got $v in: $input")
     } else {
       val op = Seq("==", "!=", ">=", "<=", ">", "<").find(eat)
-        .getOrElse(throw new IllegalArgumentException(s"expected comparison op at $pos in: $input"))
-      parseValue() match {
-        case d: Double =>
-          val a = attr(field).cast("double")
-          op match {
-            case "==" => a === d; case "!=" => a =!= d; case ">" => a > d
-            case ">=" => a >= d; case "<" => a < d; case "<=" => a <= d
-          }
-        case v =>
-          val a = attr(field)
-          val s = String.valueOf(v)
-          op match {
-            case "==" => a === s; case "!=" => a =!= s; case ">" => a > s
-            case ">=" => a >= s; case "<" => a < s; case "<=" => a <= s
-          }
+        .getOrElse(raise(s"expected operator at $pos: $input"))
+      val v = parseLiteral()
+      op match {
+        case "==" => EqualTo(field, v)
+        case "!=" => Not(EqualTo(field, v))
+        case ">" => GreaterThan(field, v)
+        case ">=" => GreaterThanOrEqual(field, v)
+        case "<" => LessThan(field, v)
+        case "<=" => LessThanOrEqual(field, v)
       }
+    }
+  }
+
+  /** The `like` patterns the Filter algebra states exactly — prefix `p%`,
+    * suffix `%s`, infix `%s%`, and a wildcard-free literal. Anything else
+    * (an inner `%`, the `_` single-char wildcard, a `\` escape) raises
+    * rather than match by a rule the servers would not share. */
+  private def like(field: String, p: String): Filter = {
+    val lead = p.startsWith("%")
+    val trail = p.length > (if (lead) 1 else 0) && p.endsWith("%")
+    val body = p.substring(if (lead) 1 else 0, p.length - (if (trail) 1 else 0))
+    if (body.exists("%_\\".contains(_))) raise(s"unsupported like pattern '$p' in: $input")
+    (lead, trail) match {
+      case (false, false) => EqualTo(field, body)
+      case (false, true) => StringStartsWith(field, body)
+      case (true, false) => StringEndsWith(field, body)
+      case (true, true) => StringContains(field, body)
     }
   }
 
   private def parseIdent(): String = {
     skipWs()
     val start = pos
-    while (pos < input.length && (input(pos).isLetterOrDigit || "._".contains(input(pos)))) pos += 1
-    require(pos > start, s"expected identifier at $start in: $input")
+    while (pos < input.length &&
+      (input(pos).isLetterOrDigit || input(pos) == '_' || input(pos) == '.')) pos += 1
+    if (pos == start) raise(s"expected identifier at $start: $input")
     input.substring(start, pos)
   }
 
-  private def parseValue(): Any = {
+  private def parseLiteral(): Any = {
     skipWs()
-    if (pos < input.length && (input(pos) == '"' || input(pos) == '\'')) {
+    if (pos < input.length && (input(pos) == '\'' || input(pos) == '"')) {
       val quote = input(pos); pos += 1
-      val start = pos
-      while (pos < input.length && input(pos) != quote) pos += 1
-      require(pos < input.length, s"unterminated string at $start")
-      val s = input.substring(start, pos); pos += 1
-      s
+      val sb = new StringBuilder
+      var closed = false
+      while (!closed && pos < input.length) {
+        if (input(pos) == quote) {
+          // '' escapes a quote inside single-quoted strings (litStr's form)
+          if (quote == '\'' && pos + 1 < input.length && input(pos + 1) == '\'') {
+            sb.append('\''); pos += 2
+          } else { pos += 1; closed = true }
+        } else { sb.append(input(pos)); pos += 1 }
+      }
+      if (!closed) raise(s"unterminated string: $input")
+      sb.toString
     } else {
       val start = pos
       while (pos < input.length && (input(pos).isDigit || "+-.eE".contains(input(pos)))) pos += 1
-      require(pos > start, s"expected value at $start in: $input")
-      input.substring(start, pos).toDouble
+      if (pos == start) raise(s"expected literal at $start: $input")
+      val s = input.substring(start, pos)
+      s.toDoubleOption.getOrElse(raise(s"bad number '$s' in: $input"))
     }
-  }
-
-  private def skipWs(): Unit = while (pos < input.length && input(pos).isWhitespace) pos += 1
-
-  private def eat(tok: String): Boolean = {
-    skipWs()
-    if (input.startsWith(tok, pos)) { pos += tok.length; true } else false
-  }
-
-  private def eatWord(w: String): Boolean = {
-    skipWs()
-    val end = pos + w.length
-    // boundary = identifier charset ('_'/'.' included): not_spam is a
-    // field, not `not` + `_spam`
-    def identChar(c: Char) = c.isLetterOrDigit || c == '_' || c == '.'
-    if (end <= input.length && input.substring(pos, end).equalsIgnoreCase(w) &&
-      (end == input.length || !identChar(input(end)))) { pos = end; true }
-    else false
   }
 }

@@ -1147,11 +1147,14 @@ object FilterEval {
     * metadata keys whose absent-is-false matches SQL's filter outcome);
     * deletes are where the two-valued collapse over-deletes. */
   def eval3(f: Filter, r: VSRecord): Option[Boolean] = {
+    // a present value that is not a number compares to a numeric literal
+    // as UNKNOWN: Spark's double cast of it is NULL, so `NOT (k > 5)` does
+    // not delete a row whose k is "abc"
     def cmp3(name: String, v: Any)(op: Int => Boolean): Option[Boolean] =
-      attr(name, r).map { s =>
+      attr(name, r).flatMap { s =>
         v match {
-          case n: Number => s.toDoubleOption.exists(d => op(d.compareTo(n.doubleValue())))
-          case other => op(utf8Cmp(s, String.valueOf(other)))
+          case n: Number => s.toDoubleOption.map(d => op(d.compareTo(n.doubleValue())))
+          case other => Some(op(utf8Cmp(s, String.valueOf(other))))
         }
       }
     f match {
@@ -1160,8 +1163,11 @@ object FilterEval {
       case GreaterThanOrEqual(a, v) => cmp3(a, v)(_ >= 0)
       case LessThan(a, v) => cmp3(a, v)(_ < 0)
       case LessThanOrEqual(a, v) => cmp3(a, v)(_ <= 0)
-      case In(a, vs) =>
-        attr(a, r).map(_ => vs.exists(v => cmp3(a, v)(_ == 0).contains(true)))
+      case In(a, vs) => attr(a, r).flatMap { _ => // SQL IN: Kleene OR of equalities
+        val hits = vs.map(v => cmp3(a, v)(_ == 0))
+        if (hits.contains(Some(true))) Some(true)
+        else if (hits.contains(None)) None else Some(false)
+      }
       case IsNull(a) => Some(attr(a, r).isEmpty)
       case IsNotNull(a) => Some(attr(a, r).isDefined)
       case StringStartsWith(a, p) => attr(a, r).map(_.startsWith(p))

@@ -680,10 +680,10 @@ class MilvusWireTransport(baseUrl: String, apiKey: Option[String] = None)
 
   override def delete(name: String, ids: Seq[String]): Int = {
     val b = named(name)
-    // litStr escaping ('' for embedded quotes) — the same literal form
-    // MilvusExprDialect renders, so ids with quotes survive the expr
-    b.put("filter", ids.map(i => s"'${i.replace("'", "''")}'")
-      .mkString("id in [", ", ", "]"))
+    // rendered by the dialect ('' for embedded quotes), so ids with quotes
+    // survive the expr and Milvus literal quoting lives in one place
+    b.put("filter", new MilvusExprDialect()
+      .render(org.apache.spark.sql.sources.In("id", ids.toArray[Any])).get)
     val r = post("entities/delete", b)
     Option(r.get("data")).flatMap(d => Option(d.get("deleteCount")))
       .map(_.asInt()).getOrElse(ids.length)

@@ -186,13 +186,14 @@ class QdrantWireServer(inner: VectorStoreTransport, port: Int = 0,
   }
 
   /** Evaluate the request's structured `filter` (if any) through the
-    * engine's own [[FilterEval]] — decoded via [[WireFilters]], so server
-    * and engine can never disagree about a match. */
+    * engine's own [[FilterEval]] — parsed by the client's own
+    * [[QdrantFilterDialect]], so server and engine can never disagree
+    * about a match. */
   private def applyFilter(recs: Seq[VSRecord], body: JsonNode): Seq[VSRecord] =
     Option(body.get("filter")).filterNot(_.isNull) match {
       case None => recs
       case Some(f) =>
-        val filter = WireFilters.fromQdrantJson(f)
+        val filter = new QdrantFilterDialect().parseFilter(f)
         recs.filter(r => FilterEval.eval(filter, r))
     }
 
@@ -483,12 +484,13 @@ class MilvusWireServer(inner: VectorStoreTransport, port: Int = 0,
   private def resolved(name: String): String = aliases.getOrDefault(name, name)
 
   /** Evaluate the request's boolean-expression `filter` (if non-empty)
-    * through the engine's FilterEval, decoded via [[WireFilters]]. */
+    * through the engine's FilterEval, parsed by the client's own
+    * [[MilvusExprDialect]]. */
   private def applyExprFilter(recs: Seq[VSRecord], body: JsonNode): Seq[VSRecord] =
     Option(body.get("filter")).map(_.asText()).filter(_.nonEmpty) match {
       case None => recs
       case Some(expr) =>
-        val f = WireFilters.fromMilvusExpr(expr)
+        val f = new MilvusExprDialect().parseFilter(expr)
         recs.filter(r => FilterEval.eval(f, r))
     }
 
@@ -705,8 +707,8 @@ class MilvusWireServer(inner: VectorStoreTransport, port: Int = 0,
             val o = obj(); o.put("code", 0); o.set[ObjectNode]("data", a)
             respond(ex, 200, o)
           } else {
-            // server-side boolean-expression filter: parsed via
-            // WireFilters into the engine's own Filter/FilterEval, then
+            // server-side boolean-expression filter: parsed by the
+            // client's dialect into the engine's own Filter/FilterEval, then
             // offset/limit index the FILTERED sequence — the real
             // entities/query contract
             val filtered = filteredView(entity, body)
@@ -741,7 +743,7 @@ class MilvusWireServer(inner: VectorStoreTransport, port: Int = 0,
           // parse the expr through the engine's own parser instead of a
           // regex — quotes in ids survive, and non-id filters raise
           val filter = Option(body.get("filter")).map(_.asText()).getOrElse("")
-          val ids = WireFilters.fromMilvusExpr(filter) match {
+          val ids = new MilvusExprDialect().parseFilter(filter) match {
             case org.apache.spark.sql.sources.In("id", vs) => vs.map(String.valueOf).toSeq
             case other => throw new IllegalArgumentException(s"unsupported delete filter: $other")
           }
@@ -1010,15 +1012,15 @@ class PineconeWireServer(inner: VectorStoreTransport, port: Int = 0,
         // includeMetadata} -> {matches: [{id, score, values, metadata}]},
         // scored by the engine's canonical VSScoring; the Mongo-style
         // metadata filter applies BEFORE selection (the real service's
-        // filtered-query contract), decoded through WireFilters so the
-        // server can never disagree with the engine's FilterEval
+        // filtered-query contract), parsed by the client's own dialect so
+        // the server can never disagree with the engine's FilterEval
         val ix = query.getOrElse("index", "")
         val ns = Option(body.get("namespace")).map(_.asText()).getOrElse("")
         val target = coll(ix, ns)
         val topK = Option(body.get("topK")).map(_.asInt()).getOrElse(10)
         val qv = floats(body.get("vector"))
         val filterF = Option(body.get("filter")).filterNot(_.isNull)
-          .map(WireFilters.fromPineconeJson)
+          .map(new PineconeFilterDialect().parseFilter(_))
         val cands = filterF.fold(queryCandidates(target, None))(f =>
           queryCandidates(target, Some(f)).filter(FilterEval.eval(f, _)))
         val includeValues = Option(body.get("includeValues")).exists(_.asBoolean())

@@ -149,7 +149,7 @@ object VectorStoreProps extends Properties("vectorstore") {
   } yield VSRecord(s"v$id", Array(1f),
     (lang.map("lang" -> _) ++ cat.map("cat" -> _)).toMap)
 
-  /** render → wire string → WireFilters decode → FilterEval must select
+  /** render → wire string → dialect parseFilter → FilterEval must select
     * the SAME records as the original filter — for values with quotes,
     * backslashes, newlines, and non-ASCII (the escaping paths). */
   private def roundTrips(name: String,
@@ -165,11 +165,60 @@ object VectorStoreProps extends Properties("vectorstore") {
         }
       }
 
-  roundTrips("qdrant", s => WireFilters.fromQdrantJson(WireJson.mapper.readTree(s)),
+  roundTrips("qdrant", s => new QdrantFilterDialect().parseFilter(WireJson.mapper.readTree(s)),
     new QdrantFilterDialect)
-  roundTrips("milvus", WireFilters.fromMilvusExpr, new MilvusExprDialect)
-  roundTrips("pinecone", s => WireFilters.fromPineconeJson(WireJson.mapper.readTree(s)),
+  roundTrips("milvus", new MilvusExprDialect().parseFilter, new MilvusExprDialect)
+  roundTrips("pinecone", s => new PineconeFilterDialect().parseFilter(WireJson.mapper.readTree(s)),
     new PineconeFilterDialect)
+
+  // ------------------------ client/server agreement over filter trees
+
+  private def genTree(depth: Int): Gen[f.Filter] =
+    if (depth <= 0) genValueAtom
+    else Gen.frequency(
+      3 -> genValueAtom,
+      1 -> Gen.zip(genTree(depth - 1), genTree(depth - 1)).map(t => f.And(t._1, t._2)),
+      1 -> Gen.zip(genTree(depth - 1), genTree(depth - 1)).map(t => f.Or(t._1, t._2)),
+      1 -> genTree(depth - 1).map(f.Not(_)))
+
+  private lazy val spark = graft.SparkSpec.session
+
+  /** SQL filter outcome: the records a three-valued evaluation keeps. */
+  private def selected(filter: f.Filter, recs: Seq[VSRecord]): Seq[String] =
+    recs.filter(r => FilterEval.eval3(filter, r).contains(true)).map(_.id).sorted
+
+  /** Ids Spark keeps under the client's Column for `filter`. */
+  private def sparkSelected(dialect: FilterDialect, filter: String,
+                            recs: Seq[VSRecord]): Seq[String] = {
+    import spark.implicits._
+    recs.map(r => (r.id, r.metadata)).toDF("id", "metadata")
+      .filter(dialect.parse(filter)).select("id").as[String].collect().toSeq.sorted
+  }
+
+  /** One grammar, two consumers: whatever a dialect renders, its parser
+    * reads back as a Filter selecting the same records, and the client's
+    * Column selects in Spark exactly what the servers' FilterEval selects. */
+  private def agrees(dialect: FilterDialect): Unit =
+    property(s"${dialect.name}: client Column and server Filter agree on rendered trees") =
+      forAll(genTree(3), Gen.listOfN(12, genValueRecord)) { (filter, recs) =>
+        dialect.render(filter) match {
+          case None => true // shape outside this dialect's grammar
+          case Some(rendered) =>
+            val back = dialect.parseFilter(rendered)
+            selected(back, recs) == selected(filter, recs) &&
+              sparkSelected(dialect, rendered, recs) == selected(back, recs)
+        }
+      }
+
+  agrees(new QdrantFilterDialect)
+  agrees(new MilvusExprDialect)
+  agrees(new PineconeFilterDialect)
+
+  property("milvus: the client parses the ''-escaped literal its renderer emits") = {
+    val recs = Seq(VSRecord("1", Array(1f), Map("lang" -> "it's")),
+      VSRecord("2", Array(1f), Map("lang" -> "its")))
+    sparkSelected(new MilvusExprDialect, "lang == 'it''s'", recs) == Seq("1")
+  }
 
   property("Not over a value predicate violates the invariant (the hazard is real)") = {
     // the counterexample class the classifier exists to exclude: a record

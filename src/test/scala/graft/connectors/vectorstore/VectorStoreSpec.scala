@@ -319,12 +319,12 @@ class FilterDialectSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       qd.parse("""{"must": [{"key": "k", "match": {"any": "x"}}]}""") }
     intercept[IllegalArgumentException] {
-      WireFilters.fromQdrantJson(
+      new QdrantFilterDialect().parseFilter(
         WireJson.mapper.readTree("""{"must": {"key": "k"}}""")) }
     val pc = new PineconeFilterDialect()
     intercept[IllegalArgumentException] { pc.parse("""{"$and": {"k": "v"}}""") }
     intercept[IllegalArgumentException] {
-      WireFilters.fromPineconeJson(
+      new PineconeFilterDialect().parseFilter(
         WireJson.mapper.readTree("""{"$or": "oops"}""")) }
     // key-less / scalar condition bodies raise the parse error, never NPE
     intercept[IllegalArgumentException] {
@@ -334,10 +334,10 @@ class FilterDialectSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       qd.parse("""{"must": [{"key": "k", "match": {}}]}""") }
     intercept[IllegalArgumentException] {
-      WireFilters.fromQdrantJson(
+      new QdrantFilterDialect().parseFilter(
         WireJson.mapper.readTree("""{"must": [{"is_null": "k"}]}""")) }
     intercept[IllegalArgumentException] {
-      WireFilters.fromQdrantJson(
+      new QdrantFilterDialect().parseFilter(
         WireJson.mapper.readTree("""{"must": [{"key": "k", "match": {}}]}""")) }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.sources._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-trip glue: every Filter shape a dialect RENDERS must decode back
-  * through [[WireFilters]] to a predicate that matches exactly the same
+  * through the dialect's `parseFilter` to a predicate that matches exactly the same
   * records under [[FilterEval]] — the server-side evaluation can then
   * never drift from the engine's. */
 class WireFiltersSpec extends AnyFunSuite {
@@ -43,7 +43,7 @@ class WireFiltersSpec extends AnyFunSuite {
     val d = new QdrantFilterDialect
     shapes.foreach { f =>
       val rendered = d.render(f).getOrElse(fail(s"unrenderable: $f"))
-      val back = WireFilters.fromQdrantJson(WireJson.mapper.readTree(rendered))
+      val back = new QdrantFilterDialect().parseFilter(WireJson.mapper.readTree(rendered))
       assert(matches(back) == matches(f), s"$f -> $rendered -> $back")
     }
   }
@@ -53,7 +53,7 @@ class WireFiltersSpec extends AnyFunSuite {
     val fs = Seq[Filter](GreaterThanOrEqual("metadata.label", 5),
       EqualTo("metadata.lang", "en"))
     val combined = d.combine(fs.flatMap(d.render)).get
-    val back = WireFilters.fromQdrantJson(WireJson.mapper.readTree(combined))
+    val back = new QdrantFilterDialect().parseFilter(WireJson.mapper.readTree(combined))
     assert(matches(back) == matches(And(fs(0), fs(1))), combined)
   }
 
@@ -64,7 +64,7 @@ class WireFiltersSpec extends AnyFunSuite {
     val renderable = shapes.flatMap(f => d.render(f).map(f -> _))
     assert(renderable.length == shapes.length - 2, renderable.length.toString)
     renderable.foreach { case (f, rendered) =>
-      val back = WireFilters.fromMilvusExpr(rendered)
+      val back = new MilvusExprDialect().parseFilter(rendered)
       assert(matches(back) == matches(f), s"$f -> $rendered -> $back")
     }
   }
@@ -74,7 +74,7 @@ class WireFiltersSpec extends AnyFunSuite {
     val fs = Seq[Filter](EqualTo("metadata.lang", "it's"), // embedded quote
       GreaterThan("metadata.label", 3))
     val combined = d.combine(fs.flatMap(d.render)).get
-    val back = WireFilters.fromMilvusExpr(combined)
+    val back = new MilvusExprDialect().parseFilter(combined)
     val probe = Seq(VSRecord("9", null, Map("lang" -> "it's", "label" -> "4")),
       VSRecord("10", null, Map("lang" -> "it's", "label" -> "2")))
     assert(probe.filter(r => FilterEval.eval(back, r)).map(_.id) == Seq("9"), combined)
@@ -88,7 +88,7 @@ class WireFiltersSpec extends AnyFunSuite {
     val renderable = shapes.flatMap(f => d.render(f).map(f -> _))
     assert(renderable.length == shapes.length - 3, renderable.map(_._1).toString)
     renderable.foreach { case (f, rendered) =>
-      val back = WireFilters.fromPineconeJson(WireJson.mapper.readTree(rendered))
+      val back = new PineconeFilterDialect().parseFilter(WireJson.mapper.readTree(rendered))
       assert(matches(back) == matches(f), s"$f -> $rendered -> $back")
     }
   }
@@ -98,24 +98,24 @@ class WireFiltersSpec extends AnyFunSuite {
     val fs = Seq[Filter](GreaterThanOrEqual("metadata.label", 5),
       EqualTo("metadata.lang", "en"))
     val combined = d.combine(fs.flatMap(d.render)).get
-    val back = WireFilters.fromPineconeJson(WireJson.mapper.readTree(combined))
+    val back = new PineconeFilterDialect().parseFilter(WireJson.mapper.readTree(combined))
     assert(matches(back) == matches(And(fs(0), fs(1))), combined)
   }
 
   test("keyword-prefixed field names parse as identifiers, not operators") {
     // regression: peekWord treated '_'/'.' as word boundaries, so
     // `not_spam == 1` tokenized as `not` + `_spam` and matched everything
-    assert(WireFilters.fromMilvusExpr("not_spam == 1") == EqualTo("not_spam", 1.0))
-    assert(WireFilters.fromMilvusExpr("in_list == 'x'") == EqualTo("in_list", "x"))
-    assert(WireFilters.fromMilvusExpr("and.b > 2") == GreaterThan("and.b", 2.0))
-    assert(WireFilters.fromMilvusExpr("not not_spam == 1") ==
+    assert(new MilvusExprDialect().parseFilter("not_spam == 1") == EqualTo("not_spam", 1.0))
+    assert(new MilvusExprDialect().parseFilter("in_list == 'x'") == EqualTo("in_list", "x"))
+    assert(new MilvusExprDialect().parseFilter("and.b > 2") == GreaterThan("and.b", 2.0))
+    assert(new MilvusExprDialect().parseFilter("not not_spam == 1") ==
       Not(EqualTo("not_spam", 1.0)))
     // the Column-producing twin must agree (same grammar, same fix)
     val c = new MilvusExprDialect().parse("not_spam == 1")
     val probe = Seq(VSRecord("1", null, Map("not_spam" -> "1")),
       VSRecord("2", null, Map("other" -> "9")))
     assert(probe.filter(r =>
-      FilterEval.eval(WireFilters.fromMilvusExpr("not_spam == 1"), r)).map(_.id) == Seq("1"))
+      FilterEval.eval(new MilvusExprDialect().parseFilter("not_spam == 1"), r)).map(_.id) == Seq("1"))
   }
 
   test("$ne / must_not on a MISSING key: decode matches Column semantics, not bare Not") {
@@ -138,7 +138,7 @@ class WireFiltersSpec extends AnyFunSuite {
     // as present-AND-different; the decode's IsNotNull conjunct reproduces
     // that, agreeing with Column semantics on the missing-key record:
     val pc = new PineconeFilterDialect
-    val pcBack = WireFilters.fromPineconeJson(
+    val pcBack = new PineconeFilterDialect().parseFilter(
       WireJson.mapper.readTree(pc.render(f).get))
     assert(pcBack == And(IsNotNull("lang"), Not(EqualTo("lang", "en"))))
     assert(rs.filter(r => FilterEval.eval(pcBack, r)).map(_.id) == columnMatches(f))
@@ -148,11 +148,11 @@ class WireFiltersSpec extends AnyFunSuite {
     // without its IsNotNull companion; the conjunction it actually pushes
     // round-trips to the Column-semantics matches:
     val qd = new QdrantFilterDialect
-    val qdBareBack = WireFilters.fromQdrantJson(
+    val qdBareBack = new QdrantFilterDialect().parseFilter(
       WireJson.mapper.readTree(qd.render(f).get))
     assert(rs.filter(r => FilterEval.eval(qdBareBack, r)).map(_.id) == Seq("2", "4", "6"))
     val pushed = And(IsNotNull("metadata.lang"), f)
-    val qdBack = WireFilters.fromQdrantJson(
+    val qdBack = new QdrantFilterDialect().parseFilter(
       WireJson.mapper.readTree(qd.render(pushed).get))
     assert(rs.filter(r => FilterEval.eval(qdBack, r)).map(_.id) == columnMatches(f))
     assert(columnMatches(pushed) == columnMatches(f))
@@ -160,9 +160,9 @@ class WireFiltersSpec extends AnyFunSuite {
 
   test("unsupported wire payloads raise instead of silently matching all") {
     intercept[IllegalArgumentException](
-      WireFilters.fromQdrantJson(WireJson.mapper.readTree(
+      new QdrantFilterDialect().parseFilter(WireJson.mapper.readTree(
         """{"must":[{"key":"x","geo_radius":{}}]}""")))
-    intercept[IllegalArgumentException](WireFilters.fromMilvusExpr("label ~~ 3"))
-    intercept[IllegalArgumentException](WireFilters.fromMilvusExpr("label == "))
+    intercept[IllegalArgumentException](new MilvusExprDialect().parseFilter("label ~~ 3"))
+    intercept[IllegalArgumentException](new MilvusExprDialect().parseFilter("label == "))
   }
 }
