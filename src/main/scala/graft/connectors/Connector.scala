@@ -54,19 +54,13 @@ trait VectorConnector {
                load: LoadSpec): DataFrame =
     read(spark, connection, QuerySpec(collection = load.collection))
 
-  /** Whether [[write]] REPLACES records by id (id-keyed upsert). Insert-
-    * only sinks (JDBC append, files, the in-memory test connector) return
-    * false: appending a CHANGED record there creates a second copy of its
-    * id — the incremental migrator ships inserts only and warns about
-    * withheld updates instead of silently duplicating the target. */
+  /** Whether [[write]] REPLACES records by id (id-keyed upsert: pgvector
+    * and the vector stores). Insert-only sinks (files, the in-memory test
+    * connector) return false: appending a CHANGED record there creates a
+    * second copy of its id — the incremental migrator ships inserts only
+    * and warns about withheld updates instead of silently duplicating the
+    * target. */
   def upsertsById: Boolean = false
-
-  /** Connection-aware refinement of [[upsertsById]]: a connector whose
-    * upsert capability depends on HOW it is addressed overrides this —
-    * pgvector's wire face deletes-then-inserts each batch by id (upsert
-    * semantics, one implicit transaction per batch) while its JDBC face
-    * appends. Defaults to the static answer. */
-  def upsertsById(connection: Map[String, String]): Boolean = upsertsById
 
   /** Definitive existence probe: `false` ONLY on positive evidence of
     * absence (missing path / no catalog row / describe miss); every other

@@ -1,10 +1,10 @@
 package graft.connectors
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.jdbc.{JdbcDialect, JdbcDialects, JdbcType}
 import org.apache.spark.sql.types._
 import graft.config.{LoadSpec, QuerySpec}
+import graft.connectors.pgwire.{PgBinary, PgWireClient, PgWireException}
 import graft.model.Canonical
 
 /** pgvector text codec: `vector` columns travel as text `[x,y,z]`
@@ -33,62 +33,132 @@ object PgVectorCodec {
     if (v == null) null else v.mkString("[", ",", "]")
 }
 
-/** JDBC dialect for PostgreSQL+pgvector: maps the `vector` UDT to text on
-  * read (decoded by [[PgVectorCodec]]) and emits `VECTOR(d)` DDL on write
-  * — the Spark-native version of the reference's hand-built DDL
-  * (`adapters/pgvector.py:180-196`). */
-class PgVectorDialect(vectorDim: Int) extends JdbcDialect {
-  override def canHandle(url: String): Boolean = url.startsWith("jdbc:postgresql")
-
-  override def getCatalystType(sqlType: Int, typeName: String, size: Int,
-                               md: org.apache.spark.sql.types.MetadataBuilder): Option[DataType] =
-    if (typeName == "vector") Some(StringType) else None
-
-  override def getJDBCType(dt: DataType): Option[JdbcType] = dt match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) =>
-      Some(JdbcType(s"VECTOR($vectorDim)", java.sql.Types.OTHER))
-    case _ => None
-  }
-}
-
-/** pgvector connector over Spark's built-in JDBC source.
+/** Connection handling for [[PgVectorConnector]]: the endpoint, the
+  * data-path switches, and the executor-side helpers (kept on the object
+  * so the partition closures capture no connector instance).
   *
-  * Reads are partitioned on the numeric id column when bounds are supplied
-  * (`partitions`/`lower_bound`/`upper_bound` connection keys) — the scale
-  * upgrade over the reference's single-connection fetch-all
-  * (`adapters/pgvector.py:64-132`). Filter/projection/limit are embedded in
-  * a pushdown `query`, exactly the SELECT the reference builds by string
-  * concat (`adapters/pgvector.py:94-108`) — but parameterized per
-  * partition by Spark.
-  *
-  * There is no live PostgreSQL in this environment; the SQL generation and
-  * the codec are spec-tested, the JDBC wiring follows the stock
-  * `spark.read.jdbc` path.
-  */
+  * Connection keys: `host`/`port`/`database`/`user`/`password`, `ssl`
+  * (`true`/`require`/`on`) + optional `ssl_root_cert` PEM pinning
+  * (absent means the platform trust store), `partitions`/`lower_bound`/
+  * `upper_bound` for range-sliced reads, `write_mode` (`copy` default,
+  * `insert`), `query_protocol=extended` (Parse/Bind/Execute), and
+  * `data_format=binary` (binary COPY framing on writes, per-column binary
+  * results on extended reads). Auth = trust, cleartext, MD5 or
+  * SCRAM-SHA-256. `protocol=wire` is accepted for older configs; it names
+  * the only data path there is. */
 object PgVectorConnector {
-  private var installed: Option[PgVectorDialect] = None
 
-  /** Register the dialect once per dim; re-registration with a new dim
-    * replaces the old instance instead of accumulating dialects in
-    * Spark's global registry. */
-  def installDialect(dim: Int): Unit = synchronized {
-    installed.foreach(JdbcDialects.unregisterDialect)
-    val d = new PgVectorDialect(dim)
-    JdbcDialects.registerDialect(d)
-    installed = Some(d)
+  /** `query_protocol=extended`: route reads and insert-mode writes
+    * through the Extended Query protocol (Parse/Bind/Execute) — values
+    * travel as Bind PARAMETERS, so the SQL text never carries data and
+    * the literal-escaping surface disappears from the data path. COPY
+    * mode already has no literals (rows ride the COPY sub-protocol). */
+  private def extendedEnabled(connection: Map[String, String]): Boolean =
+    connection.get("query_protocol").contains("extended")
+
+  /** `data_format=binary`: negotiate the BINARY wire format on the data
+    * path. Writes: COPY streams `FORMAT binary` framing (and extended-
+    * mode upserts bind binary parameters); a real `VECTOR(d)` column
+    * crosses as float4s — 4 bytes/component vs ~9-13 text chars, the
+    * dominant byte tax on a vector migration — and TEXT columns skip
+    * the per-character escape scan. Reads (extended protocol only — the
+    * Simple Query protocol is text-by-definition): Describe the
+    * prepared scan, then Bind requests format 1 for every column whose
+    * type OID this client decodes text-exactly ([[pgwire.PgBinary
+    * .textExactOids]]) and format 0 for the rest — per-column
+    * negotiation, never all-or-nothing. */
+  private def binaryEnabled(connection: Map[String, String]): Boolean =
+    connection.get("data_format").contains("binary")
+
+  /** Sync-window cap for the extended-protocol pipelined upsert: ~256
+    * unread per-statement responses (~5 KB) between reads — far under
+    * any socket-buffer pair, so the pipeline can never write-deadlock.
+    * Transaction (= batch) boundaries are explicit BEGIN/COMMIT, NOT the
+    * Sync windows, so this caps memory-in-flight without changing
+    * atomicity. */
+  private val PipeChunk = 128
+
+  /** Serializable connection endpoint — rides into executor closures.
+    * `ssl` = the `ssl` connection key ("true"/"require"/"on");
+    * `sslRootCert` = a PEM path to pin the server/root certificate
+    * (absent -> the platform trust store, the secure default). */
+  private case class PgEndpoint(host: String, port: Int,
+      user: String, database: String, password: Option[String],
+      ssl: Boolean, sslRootCert: Option[String]) {
+    def connect(): PgWireClient =
+      new PgWireClient(host, port, user, database, password, ssl, sslRootCert)
+  }
+
+  /** The endpoint of a connection block. Keys this connector would
+    * otherwise ignore — a JDBC `url`, psycopg2's `dbname`, a `protocol`
+    * other than `wire` — fail here, before any socket opens: ignored,
+    * they would send the connector to its localhost:5432/postgres
+    * defaults instead of the server the config names. */
+  private def endpoint(connection: Map[String, String]): PgEndpoint = {
+    val unread = Seq("url", "dbname").filter(connection.contains)
+    require(unread.isEmpty, s"pgvector connection key(s) ${unread.mkString(", ")} " +
+      "are not supported: address the server with host, port and database")
+    connection.get("protocol").foreach(p => require(p == "wire",
+      s"pgvector protocol '$p' is not supported: the connector speaks the " +
+        "PostgreSQL wire protocol to host, port and database (omit 'protocol' " +
+        "or set it to 'wire')"))
+    PgEndpoint(
+      connection.getOrElse("host", "localhost"),
+      connection.getOrElse("port", "5432").toInt,
+      connection.getOrElse("user", "postgres"),
+      connection.getOrElse("database", "postgres"),
+      connection.get("password").filter(_.nonEmpty),
+      connection.get("ssl").exists(v => Set("true", "require", "on")(v.toLowerCase)),
+      connection.get("ssl_root_cert").filter(_.nonEmpty))
+  }
+
+  /** Single-quoted SQL text literal: `''`-escaped, NULs rejected loudly
+    * (PostgreSQL text cannot carry them — silently stripping one would
+    * alter user data). Identifiers never ride this path — they go
+    * through the connector's whitelist (`ident`). */
+  private def sqlLit(v: String): String = {
+    if (v == null) return "NULL"
+    require(!v.contains('\u0000'),
+      "PostgreSQL text literals cannot carry NUL (\\u0000) bytes")
+    "'" + v.replace("'", "''") + "'"
+  }
+
+  private def withClient[A](ep: PgEndpoint)(f: PgWireClient => A): A = {
+    val c = ep.connect()
+    try f(c) finally c.close()
   }
 }
 
+/** pgvector connector over the documented PostgreSQL v3 wire protocol
+  * ([[graft.connectors.pgwire.PgWireClient]]) — the one client, as the
+  * reference drives pgvector through psycopg2 alone
+  * (`adapters/pgvector.py`). No driver jar is needed, and the data path
+  * is verified against a LIVE PostgreSQL server in this repo's own test
+  * suite (`PgLiveWireSpec`).
+  *
+  *  - Reads run the connector's pushdown SELECT ([[buildSelect]]: the
+  *    filter/projection/limit the reference builds by string concat,
+  *    `adapters/pgvector.py:94-108`), one wire connection per Spark
+  *    partition, range-sliced on the id column when `partitions`/
+  *    `lower_bound`/`upper_bound` are declared — the scale upgrade over
+  *    the reference's single-connection fetch-all
+  *    (`adapters/pgvector.py:64-132`). `limit`/`offset` force a single
+  *    range (a per-partition LIMIT would multiply it).
+  *  - Writes land an (id TEXT, vector VECTOR(d), metadata TEXT) table. On
+  *    an extension-less server the `VECTOR(d)` DDL fails with SQLSTATE
+  *    42704 and the column falls back to TEXT with ONE loud warning —
+  *    vectors travel in pgvector's text form (`'[x,y,z]'`) either way, so
+  *    the readBack codec decodes both. Every write is an id-keyed upsert
+  *    ([[write]]), so the incremental migrator ships changed records here
+  *    instead of withholding them. */
 class PgVectorConnector extends VectorConnector {
+  import PgVectorConnector._
+
   override def name: String = "pgvector"
 
-  /** The WIRE face upserts by id (each batch is one atomic
-    * delete-then-insert statement — [[PgWireFace.write]]), so the
-    * incremental migrator SHIPS changed records to it instead of
-    * withholding them; the JDBC face stays insert-only (Spark's JDBC
-    * sink appends — applying an update there would duplicate the id). */
-  override def upsertsById(connection: Map[String, String]): Boolean =
-    PgWireFace.enabled(connection)
+  /** Each write batch is one atomic delete-then-insert by id
+    * ([[write]]). */
+  override def upsertsById: Boolean = true
 
   /** Identifier whitelist — the reference interpolates unvalidated strings
     * into SQL (`adapters/pgvector.py:96-108`, an injection hazard SURVEY §2
@@ -98,15 +168,13 @@ class PgVectorConnector extends VectorConnector {
     s
   }
 
-  private[connectors] def buildSelect(q: QuerySpec): String = buildSelect(q, rawVector = false)
-
   /** `rawVector = true` drops the `::text` cast on the vector column —
-    * the wire face's BINARY read path wants the column in its own type
-    * so a real `vector` column crosses as float4s (pgvector binary
-    * `vector_send`), not as decimal text; on a TEXT-column fallback
-    * table the no-cast projection is identical. The JDBC path always
-    * casts (its reader has no vector decoder). */
-  private[connectors] def buildSelect(q: QuerySpec, rawVector: Boolean): String = {
+    * the BINARY read path wants the column in its own type so a real
+    * `vector` column crosses as float4s (pgvector binary `vector_send`),
+    * not as decimal text; on a TEXT-column fallback table the no-cast
+    * projection is identical. Text reads always cast (the text result
+    * path has no vector decoder of its own). */
+  private[connectors] def buildSelect(q: QuerySpec, rawVector: Boolean = false): String = {
     val vecSel = (v: String) =>
       if (rawVector) ident(v) else s"${ident(v)}::text AS ${ident(v)}"
     val cols = (Seq(ident(q.idColumn)) ++ q.vectorColumn.map(vecSel).toSeq
@@ -117,39 +185,115 @@ class PgVectorConnector extends VectorConnector {
     s"SELECT $cols FROM ${ident(q.collection)}$where$limit$offset"
   }
 
-  private def jdbcUrl(connection: Map[String, String]): String =
-    connection.getOrElse("url", {
-      val host = connection.getOrElse("host", "localhost")
-      val port = connection.getOrElse("port", "5432")
-      val db = connection.getOrElse("database", "postgres")
-      s"jdbc:postgresql://$host:$port/$db"
-    })
-
+  /** Partitioned wire read: the pushdown SELECT per id-range slice (one
+    * wire connection per Spark partition), text-format rows decoded
+    * through [[PgVectorCodec]]. Without declared bounds — or with a
+    * limit/offset, which cannot split — ONE range.
+    *
+    * TYPE-ADAPTIVE slicing (one catalog probe at plan time): a numeric
+    * id column compares directly; a TEXT id column — which includes
+    * every table this connector's own WRITE created (canonical ids are
+    * strings) — gets CASE-guarded numeric slices
+    * (`CASE WHEN id ~ '^[0-9]{1,18}$' THEN id::bigint END ∈ [a,b)` —
+    * CASE, not a bare AND, because PostgreSQL may evaluate AND operands
+    * in any cost order and an unguarded cast would raise on non-numeric
+    * ids) plus ONE catch-all slice for non-numeric, >18-digit, and NULL
+    * ids, the same slices-plus-catch-all shape as the Qdrant parallel
+    * cursor scan. Bounds set the STRIDE only, exactly as in Spark's JDBC
+    * reader: the first slice is unbounded below (numeric path: and
+    * carries NULL ids), the last unbounded above — disjoint AND
+    * covering, so no row is ever silently range-excluded even when the
+    * declared bounds under-cover the id space. */
   override def read(spark: SparkSession, connection: Map[String, String],
                     query: QuerySpec): DataFrame = {
-    // `"protocol": "wire"` routes the data path through the engine's own
-    // v3-protocol client ([[PgWireFace]]) — same SELECT builder, same
-    // codec, no JDBC driver jar needed (and live-server-tested here,
-    // which the JDBC path cannot be)
-    if (PgWireFace.enabled(connection)) return PgWireFace.read(spark, connection, query)
-    // dbtable-with-subquery (not the `query` option) so partitionColumn
-    // range splitting stays available
-    val reader = spark.read.format("jdbc")
-      .option("url", jdbcUrl(connection))
-      .option("dbtable", s"(${buildSelect(query)}) graft_scan")
-      .option("user", connection.getOrElse("user", "postgres"))
-      .option("password", connection.getOrElse("password", ""))
-    // partitioned scan over the id range when declared
-    val partitioned = (connection.get("partitions"), connection.get("lower_bound"),
-      connection.get("upper_bound")) match {
-      case (Some(n), Some(lo), Some(hi)) => reader
-        .option("partitionColumn", query.idColumn)
-        .option("numPartitions", n).option("lowerBound", lo).option("upperBound", hi)
-      case _ => reader
+    val ep = endpoint(connection)
+    val cols = Seq(query.idColumn) ++ query.vectorColumn.toSeq ++ query.metadataColumns
+    val ranged: Seq[QuerySpec] =
+      (connection.get("partitions"), connection.get("lower_bound"),
+        connection.get("upper_bound")) match {
+        case (Some(n), Some(lo), Some(hi))
+          if query.limit.isEmpty && query.offset.isEmpty && n.toInt > 1 =>
+          val (nP, loL, hiL) = (n.toInt, lo.toLong, hi.toLong)
+          val idNumeric = describe(ep, query.collection).schema.fields
+            .find(_.name == query.idColumn)
+            .exists(f => f.dataType == LongType || f.dataType == DoubleType)
+          val idc = query.idColumn
+          val digits = s"$idc ~ '^[0-9]{1,18}$$'"
+          // Cast that CANNOT fire unguarded: PostgreSQL does not promise
+          // left-to-right AND evaluation (quals are ordered by estimated
+          // cost), so a bare `digits AND (id)::bigint >= a` may cast a
+          // non-numeric id first and raise 22P02/22003. CASE is the
+          // documented way to force the guard before the cast; it yields
+          // NULL for non-numeric ids, which every range comparison then
+          // excludes — so the numeric slices stay restricted to numeric
+          // ids without relying on evaluation order.
+          val castId = s"(CASE WHEN $digits THEN ($idc)::bigint END)"
+          def withPred(p: String) = query.copy(filter = Some(
+            query.filter.map(f => s"($f) AND ($p)").getOrElse(p)))
+          val step = math.max(1L, (hiL - loL) / nP)
+          // Spark-JDBC partition contract: lower_bound/upper_bound set the
+          // STRIDE only — the first slice is unbounded below (and carries
+          // the NULL ids), the last unbounded above, so ids outside
+          // [lo, hi) are never silently filtered out.
+          val slices = (0 until nP).map { i =>
+            val a = loL + i * step
+            val b = loL + (i + 1) * step
+            val ref = if (idNumeric) idc else castId
+            if (i == 0) // guard above requires nP > 1, so 0 != nP - 1
+              withPred(s"$ref < $b" +
+                (if (idNumeric) s" OR $idc IS NULL" else ""))
+            else if (i == nP - 1) withPred(s"$ref >= $a")
+            else withPred(s"$ref >= $a AND $ref < $b")
+          }
+          if (idNumeric) slices
+          // catch-all: non-numeric, >18-digit, AND NULL ids — `NOT (id ~ …)`
+          // alone is NULL for a NULL id, which would drop the row
+          else slices :+ withPred(s"NOT ($digits) OR $idc IS NULL")
+        case _ => Seq(query)
+      }
+    val ext = extendedEnabled(connection)
+    // binary rides the extended protocol only: Simple Query results are
+    // text by definition (no Bind to carry format codes)
+    val bin = binaryEnabled(connection) && ext
+    val sqls = ranged.map(q => buildSelect(q, rawVector = bin))
+    // the `vector` type OID is extension-ASSIGNED (not a stable
+    // built-in) — one plan-time catalog probe, shipped to every slice;
+    // None on an extension-less server, where the column is TEXT anyway
+    val vecOid: Option[Int] =
+      if (!bin) None
+      else withClient(ep) { c =>
+        c.query("SELECT oid FROM pg_type WHERE typname = 'vector'")
+          .rows.headOption.map(_.head.toInt)
+      }
+    val rdd = spark.sparkContext.parallelize(sqls, sqls.length).flatMap { sql =>
+      val c = ep.connect()
+      // query_protocol=extended runs each slice through Parse/Bind/
+      // Execute (unnamed statement, text results) — same rows, prepared
+      // plumbing exercised end to end. data_format=binary adds the
+      // Describe step and per-column format negotiation.
+      try {
+        if (bin) {
+          c.prepare("graft_read", sql)
+          val desc = c.describeStatement("graft_read")
+          val exact = PgBinary.textExactOids(vecOid)
+          val formats = desc.map { case (_, oid) => if (exact(oid)) 1 else 0 }
+          val res = c.execPreparedRaw("graft_read", Nil, Nil, formats)
+          res.rows.map { r =>
+            Row.fromSeq(r.zipWithIndex.map { case (cell, i) =>
+              if (cell == null) null
+              else if (res.formats(i) == 1)
+                PgBinary.recvToText(res.oids(i), vecOid, cell)
+              else new String(cell, java.nio.charset.StandardCharsets.UTF_8)
+            })
+          }
+        }
+        else (if (ext) c.execParams(sql) else c.query(sql)).rows.map(Row.fromSeq(_))
+      } finally c.close()
     }
-    val raw = partitioned.load()
-    val decoded = query.vectorColumn.foldLeft(raw)((d, v) =>
-      d.withColumn(v, PgVectorCodec.textToVector(col(v))))
+    val raw = spark.createDataFrame(rdd,
+      StructType(cols.map(StructField(_, StringType, nullable = true))))
+    val decoded = query.vectorColumn.foldLeft(raw)((df, v) =>
+      df.withColumn(v, PgVectorCodec.textToVector(col(v))))
     Canonical.from(decoded, query.idColumn, query.vectorColumn, query.metadataColumns)
   }
 
@@ -158,10 +302,9 @@ class PgVectorConnector extends VectorConnector {
     * `to_json` string column named `metadata` — a plain read would both
     * miss renamed columns and return an EMPTY map (hash-mismatching
     * every metadata-bearing row in the incremental migrator, which then
-    * re-appends the whole collection per run). */
+    * re-ships the whole collection per run). */
   override def readBack(spark: SparkSession, connection: Map[String, String],
-                        load: LoadSpec): DataFrame = {
-    import org.apache.spark.sql.types.{MapType, StringType}
+                        load: LoadSpec): DataFrame =
     read(spark, connection, QuerySpec(collection = load.collection,
       idColumn = load.idColumn, vectorColumn = Some(load.vectorColumn),
       metadataColumns = Seq("metadata")))
@@ -169,39 +312,251 @@ class PgVectorConnector extends VectorConnector {
         from_json(element_at(col(Canonical.METADATA), "metadata"),
           MapType(StringType, StringType)),
         map().cast(MapType(StringType, StringType))))
-  }
 
+  /** Distributed wire write: DDL once from the driver (VECTOR(d), TEXT
+    * fallback on 42704), then every partition drives its own connection.
+    * Both write modes are ATOMIC id-keyed UPSERTS — changed records
+    * replace their previous versions (the incremental migrator ships
+    * updates here instead of withholding them, [[upsertsById]]) and a
+    * RETRIED Spark task re-applies its rows idempotently instead of
+    * duplicating ids (the standing insert-only hazard of append sinks):
+    *
+    *  - `write_mode=copy` (DEFAULT — PostgreSQL's documented bulk path,
+    *    CopyInResponse/CopyData/CopyDone): each partition COPYs its rows
+    *    into a session-private TEMP staging table, then publishes with
+    *    ONE `DELETE … IN (SELECT id FROM stage); INSERT … SELECT` Simple
+    *    Query — a single implicit transaction, so the whole partition
+    *    lands atomically. COPY text rows skip per-value SQL quoting and
+    *    statement parsing entirely (measured ~3–10× the multi-VALUES
+    *    law; see ScaleProbe).
+    *  - `write_mode=insert`: `batchSize`-row multi-VALUES batches (the
+    *    reference batches 100 rows per executemany,
+    *    `adapters/pgvector.py:159`), each ONE `DELETE …; INSERT …`
+    *    statement string (implicit-txn atomic per batch) — the fallback
+    *    for servers that restrict COPY. Values are single-quoted literals
+    *    with `''` escaping (standard_conforming_strings, the server
+    *    default since 9.1) and NUL bytes rejected loudly — PostgreSQL
+    *    text cannot carry them.
+    *
+    * The row count rides the write action via `Dataset.observe` — no
+    * second pass. */
   override def write(df: DataFrame, connection: Map[String, String],
                      load: LoadSpec): WriteReport = {
-    if (PgWireFace.enabled(connection)) return PgWireFace.write(df, connection, load)
+    val ep = endpoint(connection)
+    val table = load.collection
     val dim = load.dimension.orElse(Canonical.inferDim(df)).getOrElse(0)
-    PgVectorConnector.installDialect(dim)
+    // ident-whitelist every identifier BEFORE any SQL is assembled
+    val ddlCols = (load.idColumn, load.vectorColumn)
+    val select = buildSelect(QuerySpec(collection = table,
+      idColumn = load.idColumn, vectorColumn = Some(load.vectorColumn)))
+    require(select.nonEmpty) // buildSelect ran the whitelist on all three
+    withClient(ep) { c =>
+      if (load.recreate) c.query(s"DROP TABLE IF EXISTS $table")
+      val mk = (vt: String) =>
+        s"CREATE TABLE IF NOT EXISTS $table " +
+          s"(${ddlCols._1} TEXT, ${ddlCols._2} $vt, metadata TEXT)"
+      try c.query(mk(s"VECTOR($dim)"))
+      catch {
+        case e: PgWireException if e.sqlState == "42704" =>
+          System.err.println("[graft] pgvector extension absent on the " +
+            s"target (SQLSTATE 42704 on VECTOR($dim)) — creating " +
+            s"$table.${ddlCols._2} as TEXT; vectors travel in pgvector " +
+            "text form and decode identically on read")
+          c.query(mk("TEXT"))
+      }
+      // id index: the upsert's DELETE leg is an index lookup instead of a
+      // per-batch sequential scan of the growing table — without it the
+      // write law goes quadratic-in-batches (measured: 10.5k rows/s at
+      // 60k rows degrading to 6.7k at 200k; see BASELINE.md r17 probe).
+      // An INDEX, not a PRIMARY KEY: canonical frames may carry null ids
+      // and the append face must not start rejecting them.
+      c.query(s"CREATE INDEX IF NOT EXISTS ${table.replace('.', '_')}_graft_id_ix " +
+        s"ON $table (${ddlCols._1})")
+    }
+    val useCopy0 = !connection.get("write_mode").contains("insert")
+    // COPY mode stages through a session-private TEMP table; pg_temp
+    // precedes every schema on the search path, so a TARGET named like
+    // the stage would make the publish statement's unqualified
+    // references resolve to the temp table — rows would land nowhere
+    // while the report claims success. Reject the collision loudly.
+    if (useCopy0)
+      require(!table.split('.').last.equalsIgnoreCase("graft_copy_stage"),
+        s"collection name '$table' collides with the COPY staging table " +
+          "(pg_temp shadows it on the search path) — rename the " +
+          "collection or use write_mode=insert")
+    val bin = binaryEnabled(connection)
+    val ext = extendedEnabled(connection)
+    // the COPY staging table must parse the same text the TARGET column
+    // parses — and the target's actual type comes from the CATALOG, not
+    // from which DDL branch ran: `CREATE TABLE IF NOT EXISTS` on an
+    // already-existing relation short-circuits BEFORE column-type
+    // analysis, so the VECTOR probe "succeeds" against a pre-existing
+    // TEXT-column table on an extension-less server (caught live by
+    // PgLiveWireSpec's append-mode write). Only the branches that need
+    // the target's actual type pay the catalog round trip: COPY (stage
+    // DDL + binary field encoding) and binary extended (vector
+    // parameter encoding).
+    val vecType = if (!useCopy0 && !(ext && bin)) "TEXT" else {
+      val si = describe(ep, table)
+      val isVector = si.schema.fields.exists(f =>
+        f.name.equalsIgnoreCase(ddlCols._2) && f.dataType.isInstanceOf[ArrayType])
+      if (isVector) s"VECTOR($dim)" else "TEXT"
+    }
+    // binary format against a REAL vector column ships the floats
+    // themselves (vector_send) — the projection keeps the array instead
+    // of rendering text the server would only re-parse
+    val vecAsFloats = bin && vecType.startsWith("VECTOR") && (useCopy0 || ext)
     val out = df.select(
-      col(Canonical.ID).as(load.idColumn),
-      PgVectorCodec.vectorToText(col(Canonical.VECTOR)).as(load.vectorColumn),
-      to_json(col(Canonical.METADATA)).as("metadata"))
-    // Row count rides along with the write itself (Dataset.observe) — a
-    // count() here would be a SECOND full pass over the source, which at
-    // 100 TB doubles the read cost just for the report number.
-    val obs = new org.apache.spark.sql.Observation(s"graft-pgv-write-${System.nanoTime()}")
+      col(Canonical.ID).cast("string"),
+      if (vecAsFloats) col(Canonical.VECTOR).cast(ArrayType(FloatType))
+      else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
+      to_json(col(Canonical.METADATA)))
+    val obs = new org.apache.spark.sql.Observation(s"graft-pgwire-${System.nanoTime()}")
     val observed = out.observe(obs, count(lit(1)).as("rows"))
-    observed.write.format("jdbc")
-      .option("url", jdbcUrl(connection))
-      .option("dbtable", load.collection)
-      .option("user", connection.getOrElse("user", "postgres"))
-      .option("password", connection.getOrElse("password", ""))
-      .option("createTableColumnTypes",
-        s"${load.vectorColumn} VECTOR($dim)")
-      .option("batchsize", load.batchSize.toString)
-      .mode(if (load.recreate) SaveMode.Overwrite else SaveMode.Append)
-      .save()
-    WriteReport(written = obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
+    val batch = math.max(1, load.batchSize)
+    val prefix = s"INSERT INTO $table (${ddlCols._1}, ${ddlCols._2}, metadata) VALUES "
+    // NOTE ids are assumed unique within the written frame (the canonical
+    // model's contract — every source connector emits one row per id): a
+    // frame carrying the same id twice lands both copies. Cross-WRITE
+    // duplicates are what the upsert delete leg removes.
+    val idCol = ddlCols._1
+    val vecCol = ddlCols._2
+    val useCopy = useCopy0
+    val useBin = bin
+    val vecFloats = vecAsFloats
+    // Non-upsert DIRECT COPY (recreate loads): the driver just dropped
+    // and recreated the target, so the staged path's publish leg would
+    // write every row a SECOND time server-side for a delete leg that
+    // can match nothing — COPY straight into the target instead. Retry
+    // safety holds because COPY FROM STDIN is ONE statement in its own
+    // implicit transaction: a task failing mid-copy (or aborting with
+    // CopyFail) lands ZERO rows, so the re-run is the first landing.
+    val direct = useCopy0 && load.recreate
+    observed.foreachPartition { (it: Iterator[Row]) =>
+      if (it.hasNext) {
+        val c = ep.connect()
+        // shared binary field encoders: TEXT columns are raw UTF-8 in
+        // binary format; the vector field is float4s against a real
+        // VECTOR column, its text rendering otherwise
+        def fTxt(r: Row, i: Int): Array[Byte] =
+          if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
+        def fVec(r: Row): Array[Byte] =
+          if (r.isNullAt(1)) null
+          else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
+          else PgBinary.textSend(r.getString(1))
+        try {
+          if (!useCopy && ext) {
+            // Extended-protocol upsert: named statements prepared once,
+            // then per batch a PIPELINE of Bind/Execute pairs (delete leg
+            // before insert per row chunk) with values as parameters.
+            // Batch atomicity rides an EXPLICIT transaction, NOT one
+            // giant Sync window: a Sync inside BEGIN...COMMIT does not
+            // commit (documented), so the batch stays all-or-nothing
+            // while each Sync window is capped at PipeChunk rows —
+            // writing an unbounded pipeline with no intermediate reads
+            // deadlocks once the server's unread BindComplete/
+            // CommandComplete responses fill both socket buffers (the
+            // classic pipelining deadlock libpq's pipeline docs warn
+            // about; a large batch_size would hang the Spark task).
+            c.prepare("graft_del", s"DELETE FROM $table WHERE $idCol = $$1")
+            c.prepare("graft_ins",
+              s"INSERT INTO $table ($idCol, $vecCol, metadata) VALUES ($$1, $$2, $$3)")
+            it.grouped(batch).foreach { g =>
+              c.query("BEGIN")
+              try {
+                // chunking keeps each id's delete before its insert
+                // (both legs ride the same chunk — ids are unique within
+                // the frame, the canonical contract)
+                g.grouped(PipeChunk).foreach { sub =>
+                  sub.foreach { r =>
+                    if (!r.isNullAt(0)) {
+                      if (useBin)
+                        c.bindExecRaw("graft_del", Seq(Option(fTxt(r, 0))), Seq(1))
+                      else c.bindExec("graft_del", Seq(Some(r.getString(0))))
+                    }
+                  }
+                  sub.foreach { r =>
+                    if (useBin)
+                      // binary parameters: the prepared statement's
+                      // inferred column types drive the server-side recv
+                      // (vector_recv for a real VECTOR column)
+                      c.bindExecRaw("graft_ins",
+                        Seq(Option(fTxt(r, 0)), Option(fVec(r)), Option(fTxt(r, 2))),
+                        Seq(1, 1, 1))
+                    else {
+                      def p(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
+                      c.bindExec("graft_ins", Seq(p(0), p(1), p(2)))
+                    }
+                  }
+                  c.syncBatch()
+                }
+                c.query("COMMIT")
+              } catch {
+                case e: Throwable =>
+                  // restore the session out of the failed transaction so
+                  // close() (and any retry on this connection) is clean
+                  try c.query("ROLLBACK")
+                  catch { case _: Throwable => () }
+                  throw e
+              }
+            }
+          } else if (useCopy) {
+            val copyTarget =
+              if (direct) s"$table ($idCol, $vecCol, metadata)"
+              else {
+                // per-session TEMP stage: invisible to other connections,
+                // so a half-copied retry never leaks rows; dropped with
+                // the session
+                c.query("CREATE TEMP TABLE graft_copy_stage " +
+                  s"(id TEXT, vector $vecType, metadata TEXT)")
+                "pg_temp.graft_copy_stage (id, vector, metadata)"
+              }
+            if (useBin)
+              c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
+                it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
+            else {
+              import graft.connectors.pgwire.PgWireClient.copyField
+              c.copyIn(s"COPY $copyTarget FROM STDIN",
+                it.map { r =>
+                  def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
+                  s"${f(0)}\t${f(1)}\t${f(2)}"
+                })
+            }
+            // ONE implicit-txn publish for the whole partition: the
+            // delete leg rides the target's id index; null ids have no
+            // previous version to replace. Direct mode already landed in
+            // the target — no second server-side write.
+            if (!direct) c.query(
+              s"DELETE FROM $table WHERE $idCol IN " +
+                "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
+                s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
+                "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
+            ()
+          } else it.grouped(batch).foreach { g =>
+            val values = g.map { r =>
+              def lit(i: Int) = if (r.isNullAt(i)) "NULL" else sqlLit(r.getString(i))
+              s"(${lit(0)}, ${lit(1)}, ${lit(2)})"
+            }.mkString(", ")
+            // delete leg first, SAME statement: id-keyed upsert, atomic per
+            // batch (null ids have no previous version to replace — IN with
+            // no non-null members is simply omitted)
+            val ids = g.collect { case r if !r.isNullAt(0) => sqlLit(r.getString(0)) }
+            val del =
+              if (ids.isEmpty) ""
+              else s"DELETE FROM $table WHERE $idCol IN (${ids.mkString(", ")}); "
+            c.query(del + prefix + values)
+          }
+        } finally c.close()
+      }
+    }
+    WriteReport(written =
+      obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
   }
 
   /** information_schema match for a table reference: Postgres stores
-    * UNQUOTED identifiers case-folded to lowercase, and the JDBC write
-    * path ships `dbtable` unquoted — so the probe must match the FOLDED
-    * name or an existing 'MyTable' target reads as absent (and the
+    * UNQUOTED identifiers case-folded to lowercase, and [[write]]'s DDL
+    * ships the name unquoted — so the probe must match the FOLDED name
+    * or an existing 'MyTable' target reads as absent (and the
     * incremental migrator would full-copy re-append). The verbatim name
     * is matched too (a foreign tool may have created it quoted), and a
     * `schema.table` reference constrains `table_schema`. Both parts are
@@ -251,54 +606,45 @@ class PgVectorConnector extends VectorConnector {
   }
 
   /** Catalog-definitive: zero information_schema rows = absent (NOTE the
-    * same query inside [[schemaInfo]] does NOT throw for a missing table —
-    * it returns an empty schema — so a Try-around-schemaInfo probe would
-    * misreport missing pg tables as present); JDBC faults propagate. */
+    * column query inside [[schemaInfo]] does NOT fail for a missing table
+    * — it returns an empty schema — so a Try-around-schemaInfo probe would
+    * misreport missing pg tables as present); wire faults propagate. */
   override def exists(spark: SparkSession, connection: Map[String, String],
                       collection: String): Boolean =
-    if (PgWireFace.enabled(connection)) PgWireFace.exists(connection, collection)
-    else spark.read.format("jdbc")
-      .option("url", jdbcUrl(connection))
-      .option("query",
-        s"SELECT 1 FROM information_schema.tables WHERE ${catalogPredicate(collection)}")
-      .option("user", connection.getOrElse("user", "postgres"))
-      .option("password", connection.getOrElse("password", ""))
-      .load().limit(1).count() > 0
+    withClient(endpoint(connection)) { c =>
+      c.query("SELECT 1 FROM information_schema.tables WHERE " +
+        catalogPredicate(collection)).rows.nonEmpty
+    }
 
   override def schemaInfo(spark: SparkSession, connection: Map[String, String],
-                          collection: String): SchemaInfo = {
-    if (PgWireFace.enabled(connection)) return PgWireFace.schemaInfo(connection, collection)
-    // information_schema introspection (adapters/pgvector.py:244-289).
-    // TWO-STEP name resolution, unlike exists(): a column query against
-    // IN ('Name', 'name') could match a quoted-mixed-case table AND the
-    // folded one at once and silently interleave their columns into one
-    // garbled schema — so the verbatim name is tried first, then the
-    // Postgres-folded name only if verbatim matched nothing. exists()
-    // keeps the combined IN: either match IS existence.
-    // firstVisibleOnly: an unqualified name present in TWO visible schemas
-    // must introspect only the first in search_path order (what the
-    // unqualified read resolves), not interleave both column sets
-    def columnsOf(mode: String) = spark.read.format("jdbc")
-      .option("url", jdbcUrl(connection))
-      .option("query",
-        s"SELECT column_name, data_type, udt_name FROM information_schema.columns " +
-          s"WHERE ${catalogPredicate(collection, mode, firstVisibleOnly = true)} " +
-          "ORDER BY ordinal_position")
-      .option("user", connection.getOrElse("user", "postgres"))
-      .option("password", connection.getOrElse("password", ""))
-      .load().collect()
+                          collection: String): SchemaInfo =
+    describe(endpoint(connection), collection)
+
+  /** information_schema introspection (adapters/pgvector.py:244-289).
+    * TWO-STEP name resolution, unlike [[exists]]: a column query against
+    * IN ('Name', 'name') could match a quoted-mixed-case table AND the
+    * folded one at once and silently interleave their columns into one
+    * garbled schema — so the verbatim name is tried first, then the
+    * Postgres-folded name only if verbatim matched nothing. exists()
+    * keeps the combined IN: either match IS existence. */
+  private def describe(ep: PgEndpoint, collection: String): SchemaInfo = {
+    def columnsOf(mode: String) = withClient(ep) { c =>
+      c.query("SELECT column_name, data_type, udt_name FROM information_schema.columns " +
+        s"WHERE ${catalogPredicate(collection, mode, firstVisibleOnly = true)} " +
+        "ORDER BY ordinal_position").rows
+    }
     val rows = {
       val verbatim = columnsOf("verbatim")
       if (verbatim.nonEmpty) verbatim else columnsOf("folded")
     }
     val fields = rows.map { r =>
-      val dt = r.getString(2) match {
+      val dt = r(2) match {
         case "vector" => ArrayType(FloatType)
         case "int4" | "int8" => LongType
         case "float4" | "float8" => DoubleType
         case _ => StringType
       }
-      StructField(r.getString(0), dt)
+      StructField(r(0), dt)
     }
     SchemaInfo(collection, StructType(fields), vectorDim = None, distance = None)
   }

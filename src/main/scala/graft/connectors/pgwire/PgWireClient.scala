@@ -142,17 +142,11 @@ case class PgResultRaw(columns: Seq[String], oids: Seq[Int], formats: Seq[Int],
   * `ssl_root_cert` is verify-ca against that one anchor. The Extended
   * Query protocol (Parse/Bind/Execute — [[prepare]]/[[bindExec]]/
   * [[execParams]]) carries values as parameters; `COPY FROM STDIN`
-  * ([[copyIn]]) is the bulk path. Text format only — this is still NOT
-  * a general JDBC replacement; it
-  * exists so the engine's hand-built SQL
-  * surface — the pgvector connector's `buildSelect` / catalog
-  * predicates / DDL shapes and the vector text codec — can be verified
-  * against a LIVE PostgreSQL server in environments where the JDBC
-  * driver jar is absent (this repo's offline sandbox), and so the
-  * connector's wire face ([[graft.connectors.PgWireFace]]) can carry
-  * real reads/writes there. The reference drives the same statements
-  * through psycopg2 (`adapters/pgvector.py`); here the statements
-  * themselves are the contract under test.
+  * ([[copyIn]], [[copyInBinary]]) is the bulk path. Not a general
+  * PostgreSQL driver: it carries exactly what the pgvector connector
+  * ([[graft.connectors.PgVectorConnector]], its only data path) sends —
+  * `buildSelect` scans, catalog predicates, DDL and upserts — which is
+  * what the reference drives through psycopg2 (`adapters/pgvector.py`).
   *
   * Thread-safety: none — one client per connection, like a raw socket. */
 class PgWireClient(host: String, port: Int,
@@ -470,7 +464,8 @@ class PgWireClient(host: String, port: Int,
   // the SQL text never carries data — no quoting/escaping surface at
   // all. Text format both ways (format code 0); an implicit transaction
   // spans everything up to Sync, which is what makes a pipelined
-  // delete+insert batch atomic ([[PgWireFace]]'s extended write mode).
+  // delete+insert batch atomic (the pgvector connector's extended write
+  // mode).
 
   private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
 

@@ -7,7 +7,6 @@ import java.nio.ByteOrder
 import java.nio.charset.StandardCharsets
 import java.util.Base64
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -158,7 +157,7 @@ object DeltaStaging {
 
   // ---------------------------------------------------------- record codec
 
-  private val mapper = new ObjectMapper()
+  private def mapper = WireJson.mapper
 
   private def floatsToB64(v: Array[Float]): String = {
     val bb = ByteBuffer.allocate(v.length * 4).order(ByteOrder.LITTLE_ENDIAN)

@@ -1,6 +1,6 @@
 package graft.connectors.vectorstore
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.JsonNode
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
@@ -60,7 +60,7 @@ private object DialectUtil {
 
   private val MetaPrefix = Canonical.METADATA + "."
 
-  val mapper = new ObjectMapper()
+  def mapper = WireJson.mapper
 
   def raise(msg: String): Nothing = throw new IllegalArgumentException(msg)
 

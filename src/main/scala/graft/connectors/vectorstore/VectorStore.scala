@@ -362,11 +362,11 @@ object TransportSpec {
   /** The in-process default (whatever [[VectorStore.use]] registered). */
   val Local: TransportSpec = TransportSpec()
 
-  /** From a connection/options map: `url` selects the HTTP wire (absent →
-    * in-process default), `api_key` rides as the backend's auth header,
-    * `max_retries` bounds the transient-fault retry wrapper,
-    * `reserved_key_policy` ∈ {reject, strip} decides what an upsert does
-    * with codec-reserved metadata keys. */
+  /** From a connection/options map: `url` selects the backend's wire
+    * client (absent → in-process default), `api_key` rides as the
+    * backend's auth header, `max_retries` bounds the transient-fault
+    * retry wrapper, `reserved_key_policy` ∈ {reject, strip} decides what
+    * an upsert does with codec-reserved metadata keys. */
   def fromOptions(get: String => Option[String], backend: String): TransportSpec = {
     val rk = get("reserved_key_policy").filter(_.nonEmpty).getOrElse("reject")
     require(rk == "reject" || rk == "strip",
@@ -398,13 +398,30 @@ object VectorStore {
   def current: VectorStoreTransport = transport
 
   /** Resolve a spec to a live transport. No url → the process default;
-    * a url → a retry-wrapped HTTP client speaking the spec's backend wire
-    * dialect, built once per (endpoint, auth, backend) per JVM. Tests can
-    * pre-pin an endpoint to a custom transport via [[pin]]. */
+    * a url → a retry-wrapped [[wireClient]], built once per (endpoint,
+    * auth, backend) per JVM. Tests can pre-pin an endpoint to a custom
+    * transport via [[pin]]. */
   def resolve(spec: TransportSpec): VectorStoreTransport =
     if (!spec.isRemote) transport
     else remote.computeIfAbsent(spec, s =>
-      RetryingTransport(HttpTransport.forSpec(s), maxAttempts = s.maxRetries))
+      RetryingTransport(wireClient(s), maxAttempts = s.maxRetries))
+
+  /** The client for a url spec: each backend speaks its own public REST
+    * dialect ([[QdrantWireTransport]]/[[MilvusWireTransport]]/
+    * [[PineconeWireTransport]]). Any other backend name is a config error,
+    * not a protocol to guess. */
+  def wireClient(spec: TransportSpec): VectorStoreTransport = {
+    val url = spec.url.getOrElse(
+      throw new IllegalArgumentException("a wire client needs a url"))
+    val strip = spec.reservedKeys == "strip"
+    spec.backend match {
+      case "qdrant" => new QdrantWireTransport(url, spec.apiKey, strip)
+      case "milvus" => new MilvusWireTransport(url, spec.apiKey)
+      case "pinecone" => new PineconeWireTransport(url, spec.apiKey, strip)
+      case other => throw new IllegalArgumentException(
+        s"no wire client for backend '$other' (url $url): expected qdrant, milvus or pinecone")
+    }
+  }
 
   /** Pre-bind an endpoint spec to a specific transport (fault-injection
     * doubles, counters); returns any previously pinned transport. */

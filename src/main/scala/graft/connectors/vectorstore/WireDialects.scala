@@ -1,11 +1,9 @@
 package graft.connectors.vectorstore
 
-import java.io.{ByteArrayOutputStream, InputStream}
-import java.net.{HttpURLConnection, InetSocketAddress, URI, URLDecoder, URLEncoder}
+import java.net.{HttpURLConnection, URI, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import com.fasterxml.jackson.databind.JsonNode
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import scala.jdk.CollectionConverters._
 
 /** Per-backend REST wire dialects: each client speaks the PUBLIC HTTP API
@@ -45,7 +43,8 @@ import scala.jdk.CollectionConverters._
   * backends whose float-only JSON APIs lack a binary face.
   */
 private[vectorstore] object WireJson {
-  val mapper = HttpJson.mapper
+  /** The package's one Jackson mapper (thread-safe once configured). */
+  val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   def obj(): ObjectNode = mapper.createObjectNode()
 

@@ -115,6 +115,14 @@ private[vectorstore] abstract class WireServer(port: Int) {
   val inject429Next = new java.util.concurrent.atomic.AtomicInteger(0)
   @volatile var inject429RetryAfterSec: Double = 1.0
 
+  /** Test knob: `> 0` answers every Nth request (counting the requests
+    * seen while it is set, faults included) with `injectEveryNthStatus`
+    * — 503 by default, or 429 with the Retry-After above — before it
+    * reaches the store: deterministic fault injection for retry tests. */
+  @volatile var injectEveryNth: Int = 0
+  @volatile var injectEveryNthStatus: Int = 503
+  private val served = new java.util.concurrent.atomic.AtomicLong(0)
+
   private val inflight = new java.util.concurrent.atomic.AtomicInteger(0)
   private val inflightHigh = new java.util.concurrent.atomic.AtomicInteger(0)
   /** High-water mark of concurrently-served requests since [[resetInflight]]
@@ -139,13 +147,22 @@ private[vectorstore] abstract class WireServer(port: Int) {
       Option(uri.getRawQuery).map("?" + _).getOrElse("")
     val body = readBody(ex)
     log.add(line -> body.toString)
-    if (inject429Next.getAndUpdate(n => math.max(0, n - 1)) > 0) {
+    val nth = injectEveryNth
+    val fault =
+      if (nth > 0 && served.incrementAndGet() % nth == 0) injectEveryNthStatus
+      else if (inject429Next.getAndUpdate(n => math.max(0, n - 1)) > 0) 429
+      else 0
+    if (fault == 429) {
       if (inject429RetryAfterSec >= 0)
         ex.getResponseHeaders.set("Retry-After",
           if (inject429RetryAfterSec == inject429RetryAfterSec.toLong)
             inject429RetryAfterSec.toLong.toString
           else inject429RetryAfterSec.toString)
       err(ex, 429, "rate limited")
+      return
+    }
+    if (fault != 0) {
+      err(ex, fault, "injected transient fault")
       return
     }
     // plain conditional, NOT a return inside the Option lambda: a

@@ -264,8 +264,8 @@ object IncrementalMigrator {
         // AND returned the flattened metadata as an empty map — hash-
         // mismatching EVERY metadata-bearing row, so each "incremental"
         // run re-appended the full collection. Eager read-side failures
-        // (JDBC schema resolution) become a failed report, like every
-        // other step.
+        // (a catalog probe or schema resolution at plan time) become a
+        // failed report, like every other step.
         try Some(target.readBack(spark, config.target.connection, load))
         catch {
           case scala.util.control.NonFatal(e) =>
@@ -280,9 +280,9 @@ object IncrementalMigrator {
         case None => base
         case Some(t) =>
           val changed = changedRecords(base, t)
-          if (target.upsertsById(config.target.connection)) changed
+          if (target.upsertsById) changed
           else {
-            // insert-only sink (JDBC append, files): shipping a CHANGED
+            // insert-only sink (files, memory): shipping a CHANGED
             // record would append a SECOND copy of its id — ship new ids
             // only. Updates are MARKED `__graft_withheld` instead of
             // anti-joined away: the Migrator filters them before the

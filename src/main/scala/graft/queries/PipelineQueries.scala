@@ -176,6 +176,8 @@ object PipelineQueries {
       "FROM bits GROUP BY media_id)"
 
   private val SearchTerms = Seq("spark", "vector", "merge", "window")
+  // q_wds_roundtrip's shard directory: unique to this JVM, deleted at exit
+  private lazy val wdsScratch = graft.core.Scratch.tempDir("gate_wds")
   // fixture-dim (64) synthetic query vector for the hybrid gate
   private val HybridQueryVec = Array.tabulate(64)(i => ((i % 7) + 1).toDouble)
 
@@ -687,11 +689,12 @@ object PipelineQueries {
         .where(col("text").isNotNull)
         .select(col("doc_id").cast("string").as("key"),
           map(lit("txt"), encode(col("text"), "UTF-8")).as("files"))
-      // FIXED scratch path, cleared per run (overwrite=true deletes prior
-      // shard-*.tar, since a smaller re-run would otherwise leave stale
-      // shards for the glob) — a fresh temp dir per invocation would leak
-      // a corpus copy on every evaluation
-      val out = "target/tmp/wds_gate"
+      // ONE scratch dir per JVM, removed at exit and cleared per run
+      // (overwrite=true deletes prior shard-*.tar, since a smaller re-run
+      // would otherwise leave stale shards for the glob): a shared fixed
+      // path let two JVMs overwrite each other's shards, and a fresh dir
+      // per invocation would leak a corpus copy on every evaluation
+      val out = wdsScratch
       graft.ops.WebDataset.writeShards(samples, out, numShards = 8, overwrite = true)
       graft.ops.WebDataset.readShards(s, s"$out/*.tar")
         .select(col("key"), col("shard"), col("ext"), col("byte_len"))

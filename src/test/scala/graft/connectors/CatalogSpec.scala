@@ -244,8 +244,8 @@ class CatalogSpec extends SparkSpec {
 
   test("catalog over the HTTP loopback transport lists and reads through the socket") {
     installCatalog("vsh")
-    val server = new HttpVectorStoreServer(InMemoryTransport)
-    val prev = VectorStore.use(new HttpTransport(server.url))
+    val server = new QdrantWireServer(InMemoryTransport)
+    val prev = VectorStore.use(new QdrantWireTransport(server.url))
     try {
       VectorStore.createCollection("sql_http", CollectionConfig(dim = 2), recreate = true)
       VectorStore.upsert("sql_http", Seq(

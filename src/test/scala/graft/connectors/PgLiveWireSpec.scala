@@ -5,20 +5,22 @@ import graft.config.QuerySpec
 import graft.connectors.pgwire.{PgTestServer, PgWireClient, PgWireException}
 import org.apache.spark.sql.functions._
 
-/** LIVE verification of the pgvector connector's hand-built SQL surface
-  * against a real PostgreSQL 15 server, through the engine's own minimal
-  * v3 wire client ([[PgWireClient]]) — closing as much of the standing
-  * "pgvector wire face env-unverifiable" gap as this sandbox allows:
+/** LIVE verification of the pgvector connector against a real
+  * PostgreSQL server, through the engine's own v3 wire client
+  * ([[PgWireClient]]) — the connector's only data path:
   *
   *   VERIFIED LIVE here: `buildSelect` projections/filters/limits,
   *   `catalogPredicate` existence + case folding + search-path
   *   resolution, the `information_schema.columns` introspection query,
-  *   the vector TEXT codec round trip, and the exact failure shape of
-  *   the `VECTOR(d)` DDL on a server without the pgvector extension.
+  *   the vector TEXT codec round trip, the exact failure shape of the
+  *   `VECTOR(d)` DDL on a server without the pgvector extension, and the
+  *   connector's reads, writes (COPY, insert, extended, binary) and
+  *   incremental migrations end to end.
   *
-  *   STILL env-blocked: Spark's JDBC data path (no driver jar on the
-  *   offline resolver) and the `vector` type itself (extension not
-  *   installed) — those remain covered by unit/property/oracle gates. */
+  *   NOT verifiable where the `vector` extension is not installed: the
+  *   `vector` type itself — covered by unit/property/oracle gates, with
+  *   the write falling back to a TEXT column. Every test skips when no
+  *   local PostgreSQL can start. */
 class PgLiveWireSpec extends SparkSpec {
   import spark.implicits._
 
@@ -54,7 +56,7 @@ class PgLiveWireSpec extends SparkSpec {
       idColumn = "vec_id", vectorColumn = Some("embedding"),
       metadataColumns = Seq("label"), filter = Some("vec_id >= 4"),
       limit = Some(3), offset = Some(1)))
-    // consumed EXACTLY like Spark's JDBC reader does: dbtable subquery
+    // run verbatim, wrapped in a subquery for a stable ORDER BY
     val r = c.query(s"SELECT * FROM ($sel) graft_scan ORDER BY vec_id")
     assert(r.columns == Seq("vec_id", "embedding", "label"), r.columns)
     assert(r.rows.length == 3, r.rows)
@@ -72,7 +74,7 @@ class PgLiveWireSpec extends SparkSpec {
     def existsCount(pred: String): Long =
       c.query(s"SELECT count(*) FROM information_schema.tables WHERE $pred")
         .rows.head.head.toLong
-    // the JDBC write path ships unquoted names, which Postgres folds —
+    // the connector's DDL ships unquoted names, which Postgres folds —
     // the probe must find the folded relation from a mixed-case reference
     assert(existsCount(connector.catalogPredicate("CaseFold_T")) >= 1,
       "folded-name probe missed the live relation")
@@ -127,7 +129,7 @@ class PgLiveWireSpec extends SparkSpec {
 
   test("VECTOR(d) DDL fails with the documented SQLSTATE on an extension-less server") {
     val c = live()
-    // the exact DDL shape the JDBC writer emits via createTableColumnTypes
+    // the exact DDL shape the connector's write emits
     val e = intercept[PgWireException] {
       c.query("CREATE TABLE no_ext (id TEXT, vector VECTOR(3), metadata TEXT)")
     }
@@ -177,7 +179,7 @@ class PgLiveWireSpec extends SparkSpec {
     val rep2 = pgv.write(one(Seq(7f, 7f)), wireConn(), load.copy(recreate = false))
     assert(rep2.written == 1)
     assert(pgv.readBack(spark, wireConn(), load).count() == 4)
-    // ...and REPLACES existing ids (the wire face's id-keyed upsert: each
+    // ...and REPLACES existing ids (the connector's id-keyed upsert: each
     // batch is one atomic delete-then-insert statement) — a re-delivered
     // batch (retried Spark task) converges instead of duplicating ids
     pgv.write(one(Seq(8f, 8f)), wireConn(), load.copy(recreate = false))
@@ -624,7 +626,7 @@ class PgLiveWireSpec extends SparkSpec {
     assert(ids.contains(Some("-7")) && ids.contains(Some("500")),
       "ids outside [lower_bound, upper_bound) were silently filtered")
     assert(ids.contains(None), "the NULL id matched no slice")
-    // TEXT id column (every table this face's own write creates): the
+    // TEXT id column (every table the connector's own write creates): the
     // slices CASE-guard the cast and a CATCH-ALL slice carries
     // non-numeric, >18-digit, and NULL ids — disjoint + covering,
     // nothing silently range-excluded even with under-covering bounds
@@ -669,8 +671,8 @@ class PgLiveWireSpec extends SparkSpec {
     // classify every row unchanged (codec-inverse fidelity, live server)
     val again = graft.core.IncrementalMigrator.run(spark, cfg(v1))
     assert(again.success && again.metrics("rows") == "0", again)
-    // v2: "a" CHANGES, "c" is new — the wire face upserts by id
-    // (upsertsById(connection) = true), so BOTH ship: the update is
+    // v2: "a" CHANGES, "c" is new — the connector upserts by id
+    // (upsertsById = true), so BOTH ship: the update is
     // APPLIED, not withheld (the r16 stretch item, now implementable
     // because each wire batch is an atomic delete-then-insert)
     val v2 = writeSrc("v2", Seq(

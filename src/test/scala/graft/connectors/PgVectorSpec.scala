@@ -90,4 +90,46 @@ class PgVectorSpec extends SparkSpec {
     assert(c.catalogPredicate("a.b", "verbatim", firstVisibleOnly = true) ==
       "table_name IN ('b') AND table_schema IN ('a')")
   }
+
+  test("connection keys the wire client would ignore fail typed before any socket opens") {
+    // a listener standing in for the server the config names: any dial
+    // at all shows up as an accepted connection
+    val listener = new java.net.ServerSocket(0, 50, java.net.InetAddress.getLoopbackAddress)
+    val accepted = new java.util.concurrent.atomic.AtomicInteger(0)
+    val acceptor = new Thread(() => {
+      try while (true) { val s = listener.accept(); accepted.incrementAndGet(); s.close() }
+      catch { case _: java.io.IOException => () }
+    })
+    acceptor.setDaemon(true)
+    acceptor.start()
+    try {
+      val base = Map("host" -> "127.0.0.1", "port" -> listener.getLocalPort.toString,
+        "database" -> "vectordb")
+      val pgv = ConnectorRegistry("pgvector")
+      val bad = Seq(
+        base + ("url" -> s"jdbc:postgresql://127.0.0.1:${listener.getLocalPort}/vectordb"),
+        (base - "database") + ("dbname" -> "vectordb"),
+        base + ("protocol" -> "wire") + ("dbname" -> "vectordb"),
+        base + ("protocol" -> "jdbc"))
+      val q = QuerySpec(collection = "items", idColumn = "id", vectorColumn = Some("embedding"))
+      val load = graft.config.LoadSpec(collection = "items")
+      val df = Seq(("1", Seq(1f, 2f), Map.empty[String, String]))
+        .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR, graft.model.Canonical.METADATA)
+      for (conn <- bad; (verb, call) <- Seq[(String, () => Any)](
+          "exists" -> (() => pgv.exists(spark, conn, "items")),
+          "schemaInfo" -> (() => pgv.schemaInfo(spark, conn, "items")),
+          "read" -> (() => pgv.read(spark, conn, q)),
+          "readBack" -> (() => pgv.readBack(spark, conn, load)),
+          "write" -> (() => pgv.write(df, conn, load)))) {
+        val e = intercept[IllegalArgumentException](call())
+        Seq("host", "port", "database").foreach(k =>
+          assert(e.getMessage.contains(k), s"$verb on $conn: ${e.getMessage}"))
+      }
+      Thread.sleep(100) // a dial in flight would land in this window
+      assert(accepted.get() == 0, "a rejected connection block still dialed the server")
+      // the accepted spellings still reach the server (which hangs up)
+      intercept[Exception](pgv.exists(spark, base + ("protocol" -> "wire"), "items"))
+      assert(accepted.get() >= 1)
+    } finally listener.close()
+  }
 }

@@ -150,7 +150,7 @@ class FallbackInventorySpec extends SparkSpec {
     val server = new PineconeWireServer(new InMemoryStore)
     try {
       val spec = TransportSpec(url = Some(server.url), backend = "pinecone")
-      val counting = new CountingTransport(HttpTransport.forSpec(spec))
+      val counting = new CountingTransport(VectorStore.wireClient(spec))
       VectorStore.pin(spec, counting)
       try {
         (0 until 400).map(i =>
@@ -182,7 +182,7 @@ class FallbackInventorySpec extends SparkSpec {
     val server = new QdrantWireServer(new InMemoryStore)
     try {
       val spec = TransportSpec(url = Some(server.url), backend = "qdrant")
-      val counting = new CountingTransport(HttpTransport.forSpec(spec))
+      val counting = new CountingTransport(VectorStore.wireClient(spec))
       VectorStore.pin(spec, counting)
       try {
         (0 until 400).map(i => (s"$i", Seq.fill(2)(i.toFloat), Map("k" -> "v")))

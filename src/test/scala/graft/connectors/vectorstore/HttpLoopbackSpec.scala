@@ -4,21 +4,37 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.model.Canonical
 
-/** The transport seam crossed for real: a localhost HTTP server fronts the
-  * store, the DSv2 scan/write and [[RetryingTransport]] drive it through
-  * actual sockets with actual JSON (de)serialization — scroll paging,
-  * batch upserts, base64 binary vectors, 404-vs-503 error semantics. */
+/** The transport seam crossed for real: a backend-shaped loopback server
+  * fronts the store, and the DSv2 scan/write and [[RetryingTransport]]
+  * drive it through actual sockets with the backend's own JSON dialect.
+  * Each case runs on the server whose wire semantics it needs: Milvus for
+  * offset-range scans and base64 binary vectors, Qdrant for the error and
+  * retry contract (404 vs 503 vs 429), the transport verbs, delete-by-id
+  * and CDC application. */
 class HttpLoopbackSpec extends SparkSpec {
   import spark.implicits._
 
-  private def withServer[A](failEveryNth: Int = 0, retries: Int = 1)
-                           (f: (HttpVectorStoreServer, HttpTransport) => A): A = {
-    val server = new HttpVectorStoreServer(InMemoryTransport, failEveryNth = failEveryNth)
-    val http = new HttpTransport(server.url)
+  /** Install `client` (retry-wrapped when `retries > 1`) as the process
+    * default transport for the body; stop the server afterwards. */
+  private def serve[S <: WireServer, T <: VectorStoreTransport, A](server: S, client: T,
+      retries: Int)(f: (S, T) => A): A = {
     val prev = VectorStore.use(
-      if (retries > 1) RetryingTransport(http, maxAttempts = retries, backoffMs = 1L) else http)
-    try f(server, http)
+      if (retries > 1) RetryingTransport(client, maxAttempts = retries, backoffMs = 1L)
+      else client)
+    try f(server, client)
     finally { VectorStore.use(prev); server.stop() }
+  }
+
+  private def withQdrant[A](failEveryNth: Int = 0, retries: Int = 1)
+                           (f: (QdrantWireServer, QdrantWireTransport) => A): A = {
+    val server = new QdrantWireServer(InMemoryTransport)
+    server.injectEveryNth = failEveryNth
+    serve(server, new QdrantWireTransport(server.url), retries)(f)
+  }
+
+  private def withMilvus[A](f: (MilvusWireServer, MilvusWireTransport) => A): A = {
+    val server = new MilvusWireServer(InMemoryTransport)
+    serve(server, new MilvusWireTransport(server.url), retries = 1)(f)
   }
 
   private def canonDf(n: Int) = {
@@ -28,15 +44,15 @@ class HttpLoopbackSpec extends SparkSpec {
   }
 
   test("DSv2 write + paged scan round trip over a real localhost socket") {
-    withServer() { (server, _) =>
-      canonDf(2500).write.format("graft-qdrant")
+    withMilvus { (server, _) =>
+      canonDf(2500).write.format("graft-milvus")
         .option("collection", "http_rt").option("recreate", "true")
         .option("batch_size", "250").mode("overwrite").save()
       val before = server.requests
-      val back = spark.read.format("graft-qdrant").option("collection", "http_rt")
+      val back = spark.read.format("graft-milvus").option("collection", "http_rt")
         .option("page_size", "500").load()
       assert(back.count() == 2500)
-      assert(back.rdd.getNumPartitions == 5) // one scroll range per page
+      assert(back.rdd.getNumPartitions == 5) // one offset range per page
       // values survive JSON: shortest-decimal float round trip is exact
       val r = back.filter(col(Canonical.ID) === "7")
         .select(Canonical.VECTOR, Canonical.METADATA)
@@ -47,7 +63,7 @@ class HttpLoopbackSpec extends SparkSpec {
   }
 
   test("binary vectors travel base64 over the wire bit-for-bit") {
-    withServer() { (_, _) =>
+    withMilvus { (_, _) =>
       val bytes = Array[Byte](0, 1, -1, 127, -128, 42)
       Seq(("b1", bytes, Map.empty[String, String]))
         .toDF(Canonical.ID, Canonical.VECTOR, Canonical.METADATA)
@@ -64,7 +80,7 @@ class HttpLoopbackSpec extends SparkSpec {
   test("RetryingTransport rides through injected 503s with backoff") {
     // every 5th request answers 503 before touching the store; with 3
     // attempts per call the write+scan must still complete exactly
-    withServer(failEveryNth = 5, retries = 3) { (server, _) =>
+    withQdrant(failEveryNth = 5, retries = 3) { (server, _) =>
       canonDf(400).write.format("graft-qdrant")
         .option("collection", "http_flaky").option("recreate", "true")
         .option("batch_size", "50").mode("overwrite").save()
@@ -77,14 +93,13 @@ class HttpLoopbackSpec extends SparkSpec {
 
   test("injected 429s: Retry-After honored end-to-end over the socket") {
     // every 4th request answers 429 with Retry-After: 0 (delta-seconds);
-    // HttpTransport must map it to RateLimitedException carrying the
+    // the wire client must map it to RateLimitedException carrying the
     // header and RetryingTransport must ride through honoring it — the
     // Pinecone rate-limit mode, proven across a real HTTP exchange
-    val server = new HttpVectorStoreServer(InMemoryTransport,
-      rateLimitEveryNth = 4, retryAfterSecs = Some(0))
-    val http = new HttpTransport(server.url)
-    val prev = VectorStore.use(RetryingTransport(http, maxAttempts = 3, backoffMs = 1L))
-    try {
+    withQdrant(retries = 3) { (server, qdrant) =>
+      server.injectEveryNth = 4
+      server.injectEveryNthStatus = 429
+      server.inject429RetryAfterSec = 0
       canonDf(200).write.format("graft-qdrant")
         .option("collection", "http_limited").option("recreate", "true")
         .option("batch_size", "25").mode("overwrite").save()
@@ -96,14 +111,14 @@ class HttpLoopbackSpec extends SparkSpec {
       // with the parsed header
       val e = intercept[RateLimitedException] {
         var i = 0
-        while (i < 8) { http.count("http_limited"); i += 1 }
+        while (i < 8) { qdrant.count("http_limited"); i += 1 }
       }
       assert(e.retryAfterMs.contains(0L), e.retryAfterMs.toString)
-    } finally { VectorStore.use(prev); server.stop() }
+    }
   }
 
   test("404 maps to NoSuchElementException and is never retried") {
-    withServer(retries = 3) { (server, _) =>
+    withQdrant(retries = 3) { (server, _) =>
       VectorStore.drop("http_missing")
       val before = server.requests
       intercept[NoSuchElementException] {
@@ -115,7 +130,7 @@ class HttpLoopbackSpec extends SparkSpec {
   }
 
   test("transport-level contract: exists/describe/count/upsert/drop over HTTP") {
-    withServer() { (_, http) =>
+    withQdrant() { (_, http) =>
       http.drop("http_c")
       assert(!http.exists("http_c"))
       http.createCollection("http_c",
@@ -135,7 +150,7 @@ class HttpLoopbackSpec extends SparkSpec {
   }
 
   test("delete-by-id crosses the socket; absent ids are a counted no-op") {
-    withServer() { (_, http) =>
+    withQdrant() { (_, http) =>
       http.createCollection("http_d", CollectionConfig(dim = 2), recreate = true)
       http.upsert("http_d", (0 until 10).map(i => VSRecord(s"$i", Array(i.toFloat, 0f), Map.empty)))
       assert(http.delete("http_d", Seq("2", "4", "nope")) == 2)
@@ -149,7 +164,7 @@ class HttpLoopbackSpec extends SparkSpec {
 
   test("CDC diff applied through the socket transport lands the new snapshot") {
     import graft.ops.SnapshotDiff
-    withServer(failEveryNth = 13, retries = 4) { (_, _) =>
+    withQdrant(failEveryNth = 13, retries = 4) { (_, _) =>
       canonDf(60).write.format("graft-qdrant")
         .option("collection", "http_cdc").option("recreate", "true")
         .mode("overwrite").save()

@@ -130,4 +130,16 @@ class TransportRoutingSpec extends SparkSpec {
       assert(!InMemoryTransport.exists("routed"))
     } finally { serverA.stop(); serverB.stop() }
   }
+
+  test("a url on a backend with no wire dialect fails typed instead of guessing one") {
+    // e.g. an operator verb or SnapshotDiff.applyTo handed type=parquet
+    // plus a url: no request may go out in a made-up protocol
+    val e = intercept[IllegalArgumentException] {
+      VectorStore.resolve(TransportSpec(url = Some("http://127.0.0.1:1"), backend = "parquet"))
+    }
+    assert(e.getMessage.contains("parquet") && e.getMessage.contains("qdrant"), e.getMessage)
+    Seq("qdrant", "milvus", "pinecone").foreach(b =>
+      assert(VectorStore.wireClient(TransportSpec(url = Some("http://127.0.0.1:1"), backend = b))
+        .isInstanceOf[WireClient], b))
+  }
 }
