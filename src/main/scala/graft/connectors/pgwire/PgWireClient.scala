@@ -1,7 +1,7 @@
 package graft.connectors.pgwire
 
 import java.io.{DataInputStream, DataOutputStream, IOException}
-import java.net.Socket
+import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** A PostgreSQL error, carrying the server's SQLSTATE and message — the
@@ -88,6 +88,10 @@ private final class ScramState(password: String,
 }
 
 object PgWireClient {
+  /** Default bound, in milliseconds, on the TCP connect and on each read
+    * of the TLS/startup/authentication exchange. */
+  val HandshakeTimeoutMs: Int = 30000
+
   /** One COPY text-format field: `\N` for NULL, otherwise the documented
     * backslash escapes (backslash itself, tab, newline, carriage return —
     * the characters that would break the row/field framing). NUL bytes
@@ -148,80 +152,103 @@ case class PgResultRaw(columns: Seq[String], oids: Seq[Int], formats: Seq[Int],
   * `buildSelect` scans, catalog predicates, DDL and upserts — which is
   * what the reference drives through psycopg2 (`adapters/pgvector.py`).
   *
+  * `handshakeTimeoutMs` bounds the connect and every read up to the
+  * first `ReadyForQuery`, so a server that accepts but never answers
+  * fails the constructor with a [[PgWireException]] (SQLSTATE 08001)
+  * instead of hanging its task. Reads after the handshake are unbounded:
+  * a long COPY or query is never cut.
+  *
   * Thread-safety: none — one client per connection, like a raw socket. */
 class PgWireClient(host: String, port: Int,
                    user: String = "postgres",
                    database: String = "postgres",
                    password: Option[String] = None,
                    ssl: Boolean = false,
-                   sslRootCert: Option[String] = None) extends AutoCloseable {
+                   sslRootCert: Option[String] = None,
+                   handshakeTimeoutMs: Int = PgWireClient.HandshakeTimeoutMs)
+  extends AutoCloseable {
+
+  private def handshakeTimedOut(e: SocketTimeoutException) = {
+    val x = new PgWireException("08001", s"$host:$port did not complete the " +
+      s"connection handshake within $handshakeTimeoutMs ms")
+    x.initCause(e)
+    x
+  }
 
   private val socket: Socket = {
-    val plain = new Socket(host, port)
-    plain.setTcpNoDelay(true)
-    if (!ssl) plain
-    else {
-      // documented TLS upgrade: SSLRequest (int32 8, int32 80877103),
-      // server answers ONE byte — 'S' = proceed with the handshake over
-      // the same connection, 'N' = no TLS here (we required it: typed
-      // refusal, never a silent cleartext fallback)
-      val o = new DataOutputStream(plain.getOutputStream)
-      o.writeInt(8)
-      o.writeInt(80877103)
-      o.flush()
-      plain.getInputStream.read() match {
-        case 'S' =>
-          val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
-          val tms: Array[javax.net.ssl.TrustManager] = sslRootCert match {
-            case None => null // platform trust store (secure default)
-            case Some(pem) => // trust exactly the given root/server cert
-              val cf = java.security.cert.CertificateFactory.getInstance("X.509")
-              val cert = {
-                val s = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(pem))
-                try cf.generateCertificate(s) finally s.close()
-              }
-              val ks = java.security.KeyStore.getInstance(
-                java.security.KeyStore.getDefaultType)
-              ks.load(null, null)
-              ks.setCertificateEntry("pgwire-root", cert)
-              val tmf = javax.net.ssl.TrustManagerFactory.getInstance(
-                javax.net.ssl.TrustManagerFactory.getDefaultAlgorithm)
-              tmf.init(ks)
-              tmf.getTrustManagers
-          }
-          ctx.init(null, tms, null)
-          val s = ctx.getSocketFactory
-            .createSocket(plain, host, port, true).asInstanceOf[javax.net.ssl.SSLSocket]
-          s.setUseClientMode(true)
-          // Endpoint verification, libpq-parity semantics:
-          //  - platform trust store (no pin): verify-full — chain AND
-          //    hostname. Without this, ANY CA-issued cert for ANY host
-          //    would pass, so an active MITM with a valid cert for its
-          //    own name defeats the handshake. "HTTPS" is the JSSE
-          //    RFC 2818/6125 rule set (SAN DNS/IP match, CN fallback for
-          //    DNS names only).
-          //  - pinned root/server cert: verify-ca — the caller opted
-          //    into ONE explicit trust anchor; a MITM would need that
-          //    specific key. (libpq's sslrootcert+verify-ca draws the
-          //    same line; hostname checks against self-signed pins with
-          //    no SAN would reject legitimate setups.)
-          if (sslRootCert.isEmpty) {
-            val p = s.getSSLParameters
-            p.setEndpointIdentificationAlgorithm("HTTPS")
-            s.setSSLParameters(p)
-          }
-          s.startHandshake()
-          s
-        case 'N' =>
-          plain.close()
-          throw new PgWireException("08P01",
-            s"$host:$port refused the TLS upgrade (ssl=off on the server?) " +
-              "and this connection requires ssl")
-        case other =>
-          plain.close()
-          throw new PgWireException("08P01",
-            s"unexpected SSLRequest response byte $other from $host:$port")
+    // connect and every TLS/startup read are bounded; the bound is lifted
+    // once the startup below reaches ReadyForQuery
+    val plain = new Socket()
+    try {
+      plain.connect(new InetSocketAddress(host, port), handshakeTimeoutMs)
+      plain.setSoTimeout(handshakeTimeoutMs)
+      plain.setTcpNoDelay(true)
+      if (!ssl) plain
+      else {
+        // documented TLS upgrade: SSLRequest (int32 8, int32 80877103),
+        // server answers ONE byte — 'S' = proceed with the handshake over
+        // the same connection, 'N' = no TLS here (we required it: typed
+        // refusal, never a silent cleartext fallback)
+        val o = new DataOutputStream(plain.getOutputStream)
+        o.writeInt(8)
+        o.writeInt(80877103)
+        o.flush()
+        plain.getInputStream.read() match {
+          case 'S' =>
+            val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
+            val tms: Array[javax.net.ssl.TrustManager] = sslRootCert match {
+              case None => null // platform trust store (secure default)
+              case Some(pem) => // trust exactly the given root/server cert
+                val cf = java.security.cert.CertificateFactory.getInstance("X.509")
+                val cert = {
+                  val s = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(pem))
+                  try cf.generateCertificate(s) finally s.close()
+                }
+                val ks = java.security.KeyStore.getInstance(
+                  java.security.KeyStore.getDefaultType)
+                ks.load(null, null)
+                ks.setCertificateEntry("pgwire-root", cert)
+                val tmf = javax.net.ssl.TrustManagerFactory.getInstance(
+                  javax.net.ssl.TrustManagerFactory.getDefaultAlgorithm)
+                tmf.init(ks)
+                tmf.getTrustManagers
+            }
+            ctx.init(null, tms, null)
+            val s = ctx.getSocketFactory
+              .createSocket(plain, host, port, true).asInstanceOf[javax.net.ssl.SSLSocket]
+            s.setUseClientMode(true)
+            // Endpoint verification, libpq-parity semantics:
+            //  - platform trust store (no pin): verify-full — chain AND
+            //    hostname. Without this, ANY CA-issued cert for ANY host
+            //    would pass, so an active MITM with a valid cert for its
+            //    own name defeats the handshake. "HTTPS" is the JSSE
+            //    RFC 2818/6125 rule set (SAN DNS/IP match, CN fallback for
+            //    DNS names only).
+            //  - pinned root/server cert: verify-ca — the caller opted
+            //    into ONE explicit trust anchor; a MITM would need that
+            //    specific key. (libpq's sslrootcert+verify-ca draws the
+            //    same line; hostname checks against self-signed pins with
+            //    no SAN would reject legitimate setups.)
+            if (sslRootCert.isEmpty) {
+              val p = s.getSSLParameters
+              p.setEndpointIdentificationAlgorithm("HTTPS")
+              s.setSSLParameters(p)
+            }
+            s.startHandshake()
+            s
+          case 'N' =>
+            throw new PgWireException("08P01",
+              s"$host:$port refused the TLS upgrade (ssl=off on the server?) " +
+                "and this connection requires ssl")
+          case other =>
+            throw new PgWireException("08P01",
+              s"unexpected SSLRequest response byte $other from $host:$port")
+        }
       }
+    } catch {
+      // the constructor throws, so close() never runs: no leaked socket
+      case e: SocketTimeoutException => plain.close(); throw handshakeTimedOut(e)
+      case e: Throwable => plain.close(); throw e
     }
   }
   private val in = new DataInputStream(socket.getInputStream)
@@ -322,12 +349,18 @@ class PgWireClient(host: String, port: Int,
         case 'Z' => ready = true
         case _ => // ParameterStatus / BackendKeyData / NoticeResponse
       }
+      // session established: long COPYs and queries must never time out
+      socket.setSoTimeout(0)
     } catch {
-      // a failed handshake (auth rejection, protocol surprise) must not
-      // leak its socket — the constructor throws, so close() never runs
+      // a failed handshake (auth rejection, protocol surprise, silence)
+      // must not leak its socket — the constructor throws, so close()
+      // never runs
       case e: Throwable =>
         try socket.close() catch { case _: IOException => () }
-        throw e
+        throw (e match {
+          case t: SocketTimeoutException => handshakeTimedOut(t)
+          case other => other
+        })
     }
   }
 

@@ -1,8 +1,12 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.ExprId
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.ArrayType
 import graft.config.{ConfigException, MigrationConfig}
 import graft.connectors.{ConnectorRegistry, WriteReport}
+import graft.model.Canonical
 
 /** Outcome of one migration run: the engine's richer version of the
   * reference's bool + log lines (`core/migrator.py:102-111`) and the Milvus
@@ -45,6 +49,10 @@ final class TransformException(msg: String, cause: Throwable)
   */
 class Migrator(spark: SparkSession) {
 
+  /** Runs the pipeline with one bounded probe on the extract (empty guard
+    * and first-row dimension) and one write action that carries every
+    * report counter. Only a transform that computes a new vector column
+    * adds a second probe, over the transformed frame. */
   def run(config: MigrationConfig,
           transform: Option[DataFrame => DataFrame] = None): RunReport = {
     val sourceType = config.source.kind
@@ -66,13 +74,23 @@ class Migrator(spark: SparkSession) {
 
       val extracted = source.read(spark, config.source.connection, query)
 
-      // Empty-extract guard (core/migrator.py:71-74). One cheap action on
-      // the pruned scan; the write below re-reads lazily.
-      val n = extracted.limit(1).count()
-      if (n == 0) {
+      // The run's one probe: a bounded action on the EXTRACT, below any
+      // repartition, transform or anti-join — a limit above a shuffle
+      // cannot stop early, so a probe there would run the whole pipeline
+      // once more before the write. No row is the empty-extract guard
+      // (core/migrator.py:71-74); the row's vector size is the first-row
+      // dimension (adapters/pgvector.py:167).
+      val probe = extracted
+        .select(if (isArrayVector(extracted)) size(col(Canonical.VECTOR)) else lit(0))
+        .limit(1).collect()
+      if (probe.isEmpty) {
         return RunReport(success = false, extracted = 0, written = 0, skipped = 0,
           sourceType = sourceType, targetType = targetType,
           error = Some("no data extracted from source"))
+      }
+      val firstDim = probe.head match {
+        case r if !r.isNullAt(0) && r.getInt(0) > 0 => Some(r.getInt(0))
+        case _ => None
       }
 
       // load.parallelism: one shuffle fans the pipeline out when the
@@ -94,52 +112,43 @@ class Migrator(spark: SparkSession) {
       }
 
       // QA counters ride along with the write action (Dataset.observe):
-      // rows, missing vectors/ids, mean vector dim — zero extra scans
-      import org.apache.spark.sql.functions._
+      // rows, missing vectors/ids, mean vector dim — zero extra scans.
       // WITHHELD-ROW contract: a transform may mark rows with a boolean
       // `__graft_withheld` column (IncrementalMigrator's insert-only
       // delta does). Marked rows are EXCLUDED from the write and counted
-      // in the same action (an observation attached BELOW the filter),
-      // so the report carries the withheld count with zero extra passes
-      // — the previous design paid a dedicated count() join per
-      // incremental run even when nothing changed.
+      // in the same action, by an observation attached BELOW the filter.
       val wCol = "__graft_withheld"
       val hasWithheld = transformed.columns.contains(wCol)
-      // probe/schema plan WITHOUT observations: the dimension-inference
-      // probe below runs a bounded action, and an Observation latches on
-      // the FIRST completed action over its plan — probing an observed
-      // plan would freeze the withheld count at the probe's row sample
+      // the shipped rows without observations, for the schema checks and
+      // the post-transform probe below
       val shipped0 =
         if (hasWithheld) transformed.filter(!col(wCol)).drop(wCol) else transformed
-      // the vector column must be ARRAY-typed for size/avg_dim: a
-      // BINARY_VECTOR collection (Canonical.binarySchema) would fail
-      // analysis inside observe() and flunk the whole run
-      val vectorIsArray = shipped0.columns.contains(graft.model.Canonical.VECTOR) &&
-        shipped0.schema(graft.model.Canonical.VECTOR).dataType
-          .isInstanceOf[org.apache.spark.sql.types.ArrayType]
-      val canObserve = vectorIsArray &&
-        shipped0.columns.contains(graft.model.Canonical.ID)
-      // resolve the target dimension BEFORE attaching any observation: a
-      // connector-side inferDim fallback would run a limit(1) probe over
-      // the OBSERVED plan, and Observation latches on the FIRST completed
-      // action — the report would claim rows=1 for a full migration.
-      // Pre-resolution is keyed on vectorIsArray, NOT canObserve: a
-      // withheld-marked frame lacking the ID column (canObserve false)
-      // still carries the withheld observation, and letting the connector
-      // probe first would latch withheldUpdates at the probe's partial
-      // sample. A frame with no array vector has nothing any current
-      // probing writer (the two pgvector faces) could infer from either —
-      // their inferDim would fail analysis — so no latchable probe
-      // remains in that branch.
-      // inferDim = None (every vector null/empty) must STILL pin the
-      // dimension — Some(0), the same value the connector's own fallback
-      // would land on — or the connector-side orElse(inferDim) re-probes
-      // the observed plan and latches the Observation anyway
+      // size/avg_dim need an ARRAY vector: a BINARY_VECTOR collection
+      // (Canonical.binarySchema) would fail analysis inside observe()
+      val vectorIsArray = isArrayVector(shipped0)
+      val canObserve = vectorIsArray && shipped0.columns.contains(Canonical.ID)
+      // Resolve the dimension BEFORE attaching any observation, never by
+      // an action over the observed plan: an Observation latches on the
+      // first completed action, so a connector-side inferDim would report
+      // the probe's one row as the run's rows and withheld count (hence
+      // keyed on vectorIsArray, not canObserve: a withheld frame without
+      // ids still carries the withheld observation). A vector
+      // passed through from the extract (same attribute through
+      // repartition, filters, joins and projections) takes the probe
+      // row's size, or the extract's first non-empty vector when that row
+      // has none. A transform that computes a new vector (chunk_embed,
+      // pca_whiten, quantize_vectors, a user lambda) still pays one
+      // post-transform probe over the unobserved shipped frame. All-empty
+      // vectors pin Some(0), the connectors' own fallback.
       val loadResolved =
-        if (load.dimension.isEmpty && vectorIsArray)
-          load.copy(dimension =
-            graft.model.Canonical.inferDim(shipped0).orElse(Some(0)))
-        else load
+        if (load.dimension.isEmpty && vectorIsArray) {
+          val passedThrough = vectorAttr(shipped0).isDefined &&
+            vectorAttr(shipped0) == vectorAttr(extracted)
+          val dim =
+            if (passedThrough) firstDim.orElse(Canonical.inferDim(extracted))
+            else Canonical.inferDim(shipped0)
+          load.copy(dimension = dim.orElse(Some(0)))
+        } else load
       // write plan, rebuilt fresh so both observations latch on the write
       // action and nothing else: [transformed] -> withheld observation ->
       // withheld filter -> QA observation -> write
@@ -155,9 +164,9 @@ class Migrator(spark: SparkSession) {
       val observed = if (canObserve)
         afterWithheld.observe(observation,
           count(lit(1)).as("rows"),
-          sum(when(col(graft.model.Canonical.VECTOR).isNull, 1L).otherwise(0L)).as("null_vectors"),
-          sum(when(col(graft.model.Canonical.ID).isNull, 1L).otherwise(0L)).as("null_ids"),
-          round(avg(size(col(graft.model.Canonical.VECTOR))), 2).as("avg_dim"))
+          sum(when(col(Canonical.VECTOR).isNull, 1L).otherwise(0L)).as("null_vectors"),
+          sum(when(col(Canonical.ID).isNull, 1L).otherwise(0L)).as("null_ids"),
+          round(avg(size(col(Canonical.VECTOR))), 2).as("avg_dim"))
       else afterWithheld
 
       val report: WriteReport = target.write(observed, config.target.connection, loadResolved)
@@ -191,6 +200,15 @@ class Migrator(spark: SparkSession) {
           error = Some(s"${e.getClass.getSimpleName}: ${e.getMessage}"))
     }
   }
+
+  private def isArrayVector(df: DataFrame): Boolean =
+    df.columns.contains(Canonical.VECTOR) &&
+      df.schema(Canonical.VECTOR).dataType.isInstanceOf[ArrayType]
+
+  /** The vector column's attribute in the analyzed plan: two frames with
+    * the same id carry the same column, unchanged. */
+  private def vectorAttr(df: DataFrame): Option[ExprId] =
+    df.queryExecution.analyzed.output.find(_.name == Canonical.VECTOR).map(_.exprId)
 }
 
 object Migrator {

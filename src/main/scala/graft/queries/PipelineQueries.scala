@@ -86,10 +86,16 @@ object PipelineQueries {
 
   /** Min-label connected components over an edge CTE `e(src, dst)` (both
     * directions present), UNROLLED: each round propagates the minimum
-    * neighbor label, then pointer-jumps (`comp → comp's comp`), so the
-    * label horizon doubles per round — `rounds` rounds converge for any
-    * component diameter ≤ 2^rounds. Produces `c(id, comp)`, comp = min id
-    * of the component, exactly the recursive `reach` CTE's answer.
+    * neighbor label, then pointer-jumps (`comp → comp's comp`). Produces
+    * `c(id, comp)`, comp = min id of the component, exactly the recursive
+    * `reach` CTE's answer — or fails the query. One check round follows
+    * the `rounds` rounds, and `c` raises (DuckDB `error`) on any label it
+    * still changes: a labeling this round leaves unchanged is the min-id
+    * labeling, so the oracle can never return unconverged components.
+    * How many rounds a component needs depends on its id layout, not only
+    * its diameter: a path with ids ascending along it converges in 8
+    * rounds up to 511 nodes, while a 200-node path with shuffled ids can
+    * need more than 9.
     *
     * Replaces the recursive formulation (r20): `reach` flooded every root
     * label through its whole component — O(Σ m²·deg) rows — and DuckDB
@@ -98,13 +104,13 @@ object PipelineQueries {
     * oracle budget). The unrolled chain is a fixed set of joins over the
     * materialized edges: the same four gates now measure 0.05-0.2 s.
     * Mirrors [[graft.ops.Dedup.connectedComponents]]'s pointer-jumping
-    * rounds; 8 rounds cover diameter 256 — the planted pair graphs and the
-    * digit-edit customer graph measure ≤ 15 at sf0.1 (validated equal to
-    * the recursive CTE at sf0.001/0.01/0.1). */
-  private def ccUnrolledCtes(e: String, rounds: Int = 8): String = {
+    * rounds; the planted pair graphs and the digit-edit customer graph
+    * converge within the 8 rounds (validated equal to the recursive CTE
+    * at sf0.001/0.01/0.1). */
+  private[queries] def ccUnrolledCtes(e: String, rounds: Int = 8): String = {
     val sb = new StringBuilder(
       s"l0 AS MATERIALIZED (SELECT DISTINCT src AS id, src AS comp FROM $e)")
-    (1 to rounds).foreach { r =>
+    (1 to rounds + 1).foreach { r =>
       sb.append(
         s", m$r AS (SELECT $e.dst AS id, min(l.comp) AS nc FROM $e " +
           s"JOIN l${r - 1} l ON $e.src = l.id GROUP BY $e.dst)" +
@@ -112,7 +118,9 @@ object PipelineQueries {
           s"FROM l${r - 1} l LEFT JOIN m$r m USING (id))" +
           s", l$r AS MATERIALIZED (SELECT a1.id, a2.comp FROM a$r a1 JOIN a$r a2 ON a1.comp = a2.id)")
     }
-    sb.append(s", c AS MATERIALIZED (SELECT id, comp FROM l$rounds)")
+    sb.append(s", c AS MATERIALIZED (SELECT id, CASE WHEN f.comp = g.comp THEN f.comp " +
+      s"ELSE error('connected components did not converge in $rounds rounds') END AS comp " +
+      s"FROM l$rounds f JOIN l${rounds + 1} g USING (id))")
     sb.toString
   }
 

@@ -691,6 +691,27 @@ class PgLiveWireSpec extends SparkSpec {
     assert(back.filter(col("id") === "a").head().getSeq[Float](1) == Seq(9f, 9f))
   }
 
+  test("zero-delta re-sync into an existing table: written 0, the anti-join runs once") {
+    live()
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pgwire-zero").toString
+    Seq(("a", Seq(1f, 2f, 3f), Map("k" -> "1")), ("b", Seq(4f, 5f, 6f), Map("k" -> "2")))
+      .toDF("id", "vector", "metadata").write.parquet(s"$tmp/docs.parquet")
+    val cfg = graft.config.MigrationConfig.fromJson(
+      s"""{"source": {"type": "parquet", "connection": {"path": "$tmp"},
+         |            "query": {"table_name": "docs"}},
+         | "target": {"type": "pgvector",
+         |            "connection": {"host": "127.0.0.1",
+         |                           "port": "${server.get.port}",
+         |                           "database": "postgres", "user": "postgres"},
+         |            "load": {"collection": "wire_zero", "parallelism": 2}}}""".stripMargin)
+    assert(graft.core.IncrementalMigrator.run(spark, cfg).success)
+    val (again, antiJoins) =
+      executionsDuring(hasLeftAnti)(graft.core.IncrementalMigrator.run(spark, cfg))
+    assert(again.success && again.written == 0 && again.metrics("rows") == "0", again)
+    assert(antiJoins == 1, s"$antiJoins executions ran the (id, hash) anti-join")
+    assert(live().query("SELECT count(*) FROM wire_zero").rows.head.head == "2")
+  }
+
   test("TLS upgrade (SSLRequest): pinned self-signed cert, secure defaults, no fallback") {
     live() // environment must run PostgreSQL at all
     import scala.sys.process._
@@ -840,6 +861,36 @@ class PgLiveWireSpec extends SparkSpec {
       assert(e.sqlState == "08P01", e.getMessage)
       assert(e.getMessage.contains("really a PostgreSQL server"), e.getMessage)
     } finally srv.close()
+  }
+
+  test("a server that accepts but never answers fails the handshake typed, within its bound") {
+    // no live PG needed: a listener that accepts and then stays silent
+    val srv = new java.net.ServerSocket(0, 1, java.net.InetAddress.getByName("127.0.0.1"))
+    val held = new java.util.concurrent.LinkedBlockingQueue[java.net.Socket]()
+    val t = new Thread(() => {
+      try held.put(srv.accept()) catch { case _: Throwable => () }
+    })
+    t.setDaemon(true)
+    t.start()
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[PgWireException](
+        new PgWireClient("127.0.0.1", srv.getLocalPort, handshakeTimeoutMs = 300))
+      val waitedMs = (System.nanoTime() - t0) / 1000000
+      assert(e.sqlState == "08001", e.getMessage)
+      assert(e.getCause.isInstanceOf[java.net.SocketTimeoutException], e.getCause)
+      assert(waitedMs < 5000, s"handshake gave up after $waitedMs ms")
+    } finally {
+      srv.close()
+      Option(held.poll()).foreach(_.close())
+    }
+  }
+
+  test("the handshake bound is lifted after startup: a query longer than it completes") {
+    live()
+    val c = new PgWireClient("127.0.0.1", server.get.port, handshakeTimeoutMs = 300)
+    try assert(c.query("SELECT 7 FROM pg_sleep(1)").rows == Seq(Seq("7")))
+    finally c.close()
   }
 
   test("password auth on the wire: SCRAM-SHA-256 (server signature verified) and MD5") {

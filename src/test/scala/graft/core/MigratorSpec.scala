@@ -1,5 +1,6 @@
 package graft.core
 
+import org.apache.spark.sql.catalyst.plans.logical.Repartition
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 import graft.config.MigrationConfig
@@ -200,6 +201,65 @@ class MigratorSpec extends SparkSpec {
     // the stale version of "a" is what the target still holds (documented)
     assert(target.filter(col("id") === "a")
       .select(element_at(col("vector"), 1)).head().getFloat(0) == 1f)
+  }
+
+  test("an incremental run executes its anti-join once: the write, no probe over the delta") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-onepass").toString
+    def src(sub: String, rows: Seq[(String, Seq[Float], Map[String, String])]): String = {
+      rows.toDF("id", "vector", "metadata").write.parquet(s"$tmp/$sub/docs.parquet")
+      s"$tmp/$sub"
+    }
+    def c(srcPath: String) = MigrationConfig.fromJson(
+      s"""{"source": {"type": "parquet", "connection": {"path": "$srcPath"},
+         |            "query": {"table_name": "docs"}},
+         | "target": {"type": "parquet", "connection": {"path": "$tmp"},
+         |            "load": {"collection": "op_t", "parallelism": 2}}}""".stripMargin)
+    val v1 = src("v1", Seq(("a", Seq(1f, 2f), Map("k" -> "1")), ("b", Seq(3f, 4f), Map("k" -> "2"))))
+    assert(IncrementalMigrator.run(spark, c(v1)).success)
+    val v2 = src("v2", Seq(("a", Seq(9f, 9f), Map("k" -> "1")), ("b", Seq(3f, 4f), Map("k" -> "2")),
+      ("c", Seq(5f, 6f), Map("k" -> "3"))))
+    val (r, antiJoins) = executionsDuring(hasLeftAnti)(IncrementalMigrator.run(spark, c(v2)))
+    assert(r.success && r.metrics("rows") == "1" && r.withheldUpdates == 1, r)
+    assert(antiJoins == 1, s"$antiJoins executions ran the (id, hash) anti-join")
+  }
+
+  test("a transform that rewrites the vector sizes the target by the transformed vectors") {
+    import graft.connectors.vectorstore.VectorStore
+    val c = MigrationConfig.fromJson(
+      s"""{"source": {"type": "parquet", "connection": {"path": "${sf()}"},
+         |            "query": {"table_name": "embeddings", "id_column": "vec_id",
+         |                      "vector_column": "embedding"}},
+         | "target": {"type": "qdrant", "connection": {},
+         |            "load": {"collection": "dim_rewrite", "recreate": true}}}""".stripMargin)
+    val r = new Migrator(spark).run(c, transform = Some(df =>
+      df.withColumn(Canonical.VECTOR, slice(col(Canonical.VECTOR), 1, 8))))
+    assert(r.success && r.written == 500, r)
+    assert(r.metrics.get("avg_dim").contains("8.0"), r)
+    assert(VectorStore.current.describe("dim_rewrite").map(_.dim).contains(8),
+      VectorStore.current.describe("dim_rewrite"))
+  }
+
+  test("a null first vector: the dimension comes from later rows, probed on the extract") {
+    import graft.connectors.vectorstore.VectorStore
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-nulldim").toString
+    Seq[(String, Option[Seq[Float]], Map[String, String])](("1", None, Map("k" -> "1")),
+      ("2", Some(Seq(1f, 2f, 3f)), Map("k" -> "2")), ("3", Some(Seq(4f, 5f, 6f)), Map("k" -> "3")))
+      .toDF("id", "vector", "metadata").coalesce(1).write.parquet(s"$tmp/docs.parquet")
+    val c = MigrationConfig.fromJson(
+      s"""{"source": {"type": "parquet", "connection": {"path": "$tmp"},
+         |            "query": {"table_name": "docs"}},
+         | "target": {"type": "qdrant", "connection": {},
+         |            "load": {"collection": "null_first", "recreate": true,
+         |                     "parallelism": 2}}}""".stripMargin)
+    val (r, fannedOut) = executionsDuring(_.exists(_.isInstanceOf[Repartition]))(
+      new Migrator(spark).run(c))
+    assert(r.success && r.metrics.get("null_vectors").contains("1"), r)
+    assert(VectorStore.current.describe("null_first").map(_.dim).contains(3),
+      VectorStore.current.describe("null_first"))
+    // the fallback scanned the extract: only the write ran the fan-out
+    assert(fannedOut == 1, s"$fannedOut executions ran the repartitioned plan")
   }
 
   test("validate counts a null-element vector signature as a mismatch, not ok") {
