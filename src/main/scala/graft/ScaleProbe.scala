@@ -172,7 +172,7 @@ object ScaleProbe {
     }
     // wire-face IO law (round 17): a THROWAWAY PostgreSQL (PgTestServer)
     // takes the amplified embeddings through the v3 wire client —
-    // partitioned upsert batches in, partitioned range reads out. Skipped
+    // per-partition COPY loads in, partitioned range reads out. Skipped
     // silently (label absent from output) where no server can run.
     graft.connectors.pgwire.PgTestServer.start().foreach { pg =>
       try {
@@ -183,17 +183,13 @@ object ScaleProbe {
           map(lit("label"), col("label").cast("string")).as("metadata"))
         val pgv = graft.connectors.ConnectorRegistry("pgvector")
         val hi = factor.toLong * 2000L * 10L // comfortably past the shifted ids
-        val binConn = conn ++ Map(
-          "query_protocol" -> "extended", "data_format" -> "binary")
+        val binConn = conn + ("data_format" -> "binary")
         def load(re: Boolean) = graft.config.LoadSpec(
-          collection = "probe_wire", recreate = re, batchSize = 500)
+          collection = "probe_wire", recreate = re)
         // the write laws side by side, text and binary framing. DIRECT =
         // recreate loads COPY straight into the target (no second
         // server-side write); STAGED = recreate=false onto the now-full
         // table — the honest upsert regime, every id's delete leg matches
-        time("pgwire upsert write INSERT (8 conns)")(
-          pgv.write(canon.repartition(8), conn + ("write_mode" -> "insert"),
-            load(true)).written)
         time("pgwire write COPY direct (8 conns)")(
           pgv.write(canon.repartition(8), conn, load(true)).written)
         time("pgwire write COPY staged (8 conns)")(
@@ -202,32 +198,14 @@ object ScaleProbe {
           pgv.write(canon.repartition(8), binConn, load(true)).written)
         time("pgwire write COPY-BIN staged (8 conns)")(
           pgv.write(canon.repartition(8), binConn, load(false)).written)
-        // extended-protocol pipeline: per-row Bind/Execute pairs in
-        // chunked Sync windows inside BEGIN/COMMIT — pays a per-row
-        // statement where multi-VALUES amortizes one parse per 500 rows;
-        // measured so the no-escaping-surface choice has a visible price
-        time("pgwire upsert write EXT (8 conns)")(
-          pgv.write(canon.repartition(8),
-            conn ++ Map("write_mode" -> "insert", "query_protocol" -> "extended"),
-            load(true)).written)
-        time("pgwire upsert write EXT-BIN (8 conns)")(
-          pgv.write(canon.repartition(8), binConn + ("write_mode" -> "insert"),
-            load(true)).written)
         time("pgwire ranged read (8 conns)")(
           pgv.read(spark, conn ++ Map("partitions" -> "8",
               "lower_bound" -> "0", "upper_bound" -> hi.toString),
             graft.config.QuerySpec(collection = "probe_wire", idColumn = "id",
               vectorColumn = Some("vector"))).count())
-        time("pgwire ranged read BIN (8 conns)")(
-          pgv.read(spark, binConn ++ Map("partitions" -> "8",
-              "lower_bound" -> "0", "upper_bound" -> hi.toString),
-            graft.config.QuerySpec(collection = "probe_wire", idColumn = "id",
-              vectorColumn = Some("vector"))).count())
-        // 10 ms RTT regime (write-mode default decision): a latency proxy
-        // adds 5 ms each way — the wide-area shape where COPY's few round
-        // trips should dominate and per-window Sync protocols pay
-        // RTT × (rows / PipeChunk). Loopback numbers CANNOT decide the
-        // default; these can.
+        // 10 ms RTT regime: a latency proxy adds 5 ms each way — the
+        // wide-area shape, where a load's cost is its round trips. COPY
+        // pays a handful per partition whatever its size.
         val proxy = new graft.connectors.pgwire.LatencyProxy(pg.port, delayMs = 5)
         try {
           val lconn = conn + ("port" -> proxy.port.toString)
@@ -236,13 +214,6 @@ object ScaleProbe {
             pgv.write(canon.repartition(8), lconn, load(false)).written)
           time("pgwire 10msRTT COPY-BIN direct (8)")(
             pgv.write(canon.repartition(8), lbin, load(true)).written)
-          time("pgwire 10msRTT INSERT (8)")(
-            pgv.write(canon.repartition(8), lconn + ("write_mode" -> "insert"),
-              load(true)).written)
-          time("pgwire 10msRTT EXT (8)")(
-            pgv.write(canon.repartition(8),
-              lconn ++ Map("write_mode" -> "insert", "query_protocol" -> "extended"),
-              load(true)).written)
         } finally proxy.close()
       } finally pg.stop()
     }

@@ -78,12 +78,13 @@ class FileConnector(fmt: String) extends VectorConnector {
         PgVectorCodec.vectorToText(col(Canonical.VECTOR)).as(Canonical.VECTOR),
         to_json(col(Canonical.METADATA)).as(Canonical.METADATA))
     else df
-    val n = out.count()
-    out.write.format(fmt)
+    // the row count rides the write action — no second pass
+    val obs = new org.apache.spark.sql.Observation(s"graft-$fmt-${System.nanoTime()}")
+    out.observe(obs, count(lit(1)).as("rows")).write.format(fmt)
       .option("header", "true")
       .mode(if (load.recreate) SaveMode.Overwrite else SaveMode.Append)
       .save(path(connection, load.collection))
-    WriteReport(written = n)
+    WriteReport(written = obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
   }
 
   override def exists(spark: SparkSession, connection: Map[String, String],

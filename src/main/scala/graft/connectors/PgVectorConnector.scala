@@ -24,59 +24,28 @@ object PgVectorCodec {
   def vectorToText(c: Column): Column =
     when(c.isNull, lit(null).cast(StringType))
       .otherwise(concat(lit("["), concat_ws(",", transform(c, _.cast("string"))), lit("]")))
-
-  /** JVM-side twin of [[vectorToText]] for values decoded OFF-plan (the
-    * wire client's binary result path): downstream always re-parses via
-    * [[textToVector]], so only the float values must survive — Scala's
-    * shortest-round-trip Float rendering guarantees exactly that. */
-  def renderText(v: Array[Float]): String =
-    if (v == null) null else v.mkString("[", ",", "]")
 }
 
 /** Connection handling for [[PgVectorConnector]]: the endpoint, the
-  * data-path switches, and the executor-side helpers (kept on the object
-  * so the partition closures capture no connector instance).
+  * write framing switch, and the executor-side helpers (kept on the
+  * object so the partition closures capture no connector instance).
   *
   * Connection keys: `host`/`port`/`database`/`user`/`password`, `ssl`
   * (`true`/`require`/`on`) + optional `ssl_root_cert` PEM pinning
   * (absent means the platform trust store), `partitions`/`lower_bound`/
-  * `upper_bound` for range-sliced reads, `write_mode` (`copy` default,
-  * `insert`), `query_protocol=extended` (Parse/Bind/Execute), and
-  * `data_format=binary` (binary COPY framing on writes, per-column binary
-  * results on extended reads). Auth = trust, cleartext, MD5 or
-  * SCRAM-SHA-256. `protocol=wire` is accepted for older configs; it names
-  * the only data path there is. */
+  * `upper_bound` for range-sliced reads, and `data_format=binary`
+  * (binary COPY framing on writes; reads are Simple Query text either
+  * way). Auth = trust, cleartext, MD5 or SCRAM-SHA-256. `protocol=wire`,
+  * `write_mode=copy` and `query_protocol=simple` are accepted for older
+  * configs; each names the only path there is. */
 object PgVectorConnector {
 
-  /** `query_protocol=extended`: route reads and insert-mode writes
-    * through the Extended Query protocol (Parse/Bind/Execute) — values
-    * travel as Bind PARAMETERS, so the SQL text never carries data and
-    * the literal-escaping surface disappears from the data path. COPY
-    * mode already has no literals (rows ride the COPY sub-protocol). */
-  private def extendedEnabled(connection: Map[String, String]): Boolean =
-    connection.get("query_protocol").contains("extended")
-
-  /** `data_format=binary`: negotiate the BINARY wire format on the data
-    * path. Writes: COPY streams `FORMAT binary` framing (and extended-
-    * mode upserts bind binary parameters); a real `VECTOR(d)` column
-    * crosses as float4s — 4 bytes/component vs ~9-13 text chars, the
-    * dominant byte tax on a vector migration — and TEXT columns skip
-    * the per-character escape scan. Reads (extended protocol only — the
-    * Simple Query protocol is text-by-definition): Describe the
-    * prepared scan, then Bind requests format 1 for every column whose
-    * type OID this client decodes text-exactly ([[pgwire.PgBinary
-    * .textExactOids]]) and format 0 for the rest — per-column
-    * negotiation, never all-or-nothing. */
+  /** `data_format=binary`: COPY streams `FORMAT binary` framing. A real
+    * `VECTOR(d)` column crosses as float4s — 4 bytes/component vs ~9-13
+    * text chars, the dominant byte tax on a vector migration — and TEXT
+    * columns skip the per-character escape scan. */
   private def binaryEnabled(connection: Map[String, String]): Boolean =
     connection.get("data_format").contains("binary")
-
-  /** Sync-window cap for the extended-protocol pipelined upsert: ~256
-    * unread per-statement responses (~5 KB) between reads — far under
-    * any socket-buffer pair, so the pipeline can never write-deadlock.
-    * Transaction (= batch) boundaries are explicit BEGIN/COMMIT, NOT the
-    * Sync windows, so this caps memory-in-flight without changing
-    * atomicity. */
-  private val PipeChunk = 128
 
   /** Serializable connection endpoint — rides into executor closures.
     * `ssl` = the `ssl` connection key ("true"/"require"/"on");
@@ -93,7 +62,9 @@ object PgVectorConnector {
     * otherwise ignore — a JDBC `url`, psycopg2's `dbname`, a `protocol`
     * other than `wire` — fail here, before any socket opens: ignored,
     * they would send the connector to its localhost:5432/postgres
-    * defaults instead of the server the config names. */
+    * defaults instead of the server the config names. So do data-path
+    * keys naming a path that does not exist: writes are COPY and reads
+    * are Simple Query, whatever an older config asks for. */
   private def endpoint(connection: Map[String, String]): PgEndpoint = {
     val unread = Seq("url", "dbname").filter(connection.contains)
     require(unread.isEmpty, s"pgvector connection key(s) ${unread.mkString(", ")} " +
@@ -102,6 +73,12 @@ object PgVectorConnector {
       s"pgvector protocol '$p' is not supported: the connector speaks the " +
         "PostgreSQL wire protocol to host, port and database (omit 'protocol' " +
         "or set it to 'wire')"))
+    connection.get("write_mode").foreach(m => require(m == "copy",
+      s"pgvector write_mode '$m' is not supported: every write is a per-partition " +
+        "COPY ... FROM STDIN (omit 'write_mode' or set it to 'copy')"))
+    connection.get("query_protocol").foreach(p => require(p == "simple",
+      s"pgvector query_protocol '$p' is not supported: reads run through the " +
+        "Simple Query protocol (omit 'query_protocol' or set it to 'simple')"))
     PgEndpoint(
       connection.getOrElse("host", "localhost"),
       connection.getOrElse("port", "5432").toInt,
@@ -110,17 +87,6 @@ object PgVectorConnector {
       connection.get("password").filter(_.nonEmpty),
       connection.get("ssl").exists(v => Set("true", "require", "on")(v.toLowerCase)),
       connection.get("ssl_root_cert").filter(_.nonEmpty))
-  }
-
-  /** Single-quoted SQL text literal: `''`-escaped, NULs rejected loudly
-    * (PostgreSQL text cannot carry them — silently stripping one would
-    * alter user data). Identifiers never ride this path — they go
-    * through the connector's whitelist (`ident`). */
-  private def sqlLit(v: String): String = {
-    if (v == null) return "NULL"
-    require(!v.contains('\u0000'),
-      "PostgreSQL text literals cannot carry NUL (\\u0000) bytes")
-    "'" + v.replace("'", "''") + "'"
   }
 
   private def withClient[A](ep: PgEndpoint)(f: PgWireClient => A): A = {
@@ -148,16 +114,17 @@ object PgVectorConnector {
   *    an extension-less server the `VECTOR(d)` DDL fails with SQLSTATE
   *    42704 and the column falls back to TEXT with ONE loud warning —
   *    vectors travel in pgvector's text form (`'[x,y,z]'`) either way, so
-  *    the readBack codec decodes both. Every write is an id-keyed upsert
-  *    ([[write]]), so the incremental migrator ships changed records here
+  *    the readBack codec decodes both. Every partition loads by ONE
+  *    `COPY … FROM STDIN` ([[write]]) and every write is an id-keyed
+  *    upsert, so the incremental migrator ships changed records here
   *    instead of withholding them. */
 class PgVectorConnector extends VectorConnector {
   import PgVectorConnector._
 
   override def name: String = "pgvector"
 
-  /** Each write batch is one atomic delete-then-insert by id
-    * ([[write]]). */
+  /** Each partition's write lands atomically, replacing earlier rows
+    * with the same ids ([[write]]). */
   override def upsertsById: Boolean = true
 
   /** Identifier whitelist — the reference interpolates unvalidated strings
@@ -168,17 +135,13 @@ class PgVectorConnector extends VectorConnector {
     s
   }
 
-  /** `rawVector = true` drops the `::text` cast on the vector column —
-    * the BINARY read path wants the column in its own type so a real
-    * `vector` column crosses as float4s (pgvector binary `vector_send`),
-    * not as decimal text; on a TEXT-column fallback table the no-cast
-    * projection is identical. Text reads always cast (the text result
-    * path has no vector decoder of its own). */
-  private[connectors] def buildSelect(q: QuerySpec, rawVector: Boolean = false): String = {
-    val vecSel = (v: String) =>
-      if (rawVector) ident(v) else s"${ident(v)}::text AS ${ident(v)}"
-    val cols = (Seq(ident(q.idColumn)) ++ q.vectorColumn.map(vecSel).toSeq
-      ++ q.metadataColumns.map(ident)).mkString(", ")
+  /** The pushdown SELECT. The `::text` cast renders a real `vector`
+    * column in pgvector's text form, the read codec's input; on a TEXT
+    * fallback column it is a no-op. */
+  private[connectors] def buildSelect(q: QuerySpec): String = {
+    val cols = (Seq(ident(q.idColumn)) ++
+      q.vectorColumn.map(v => s"${ident(v)}::text AS ${ident(v)}").toSeq ++
+      q.metadataColumns.map(ident)).mkString(", ")
     val where = q.filter.map(f => s" WHERE $f").getOrElse("")
     val limit = q.limit.map(l => s" LIMIT $l").getOrElse("")
     val offset = q.offset.filter(_ > 0).map(o => s" OFFSET $o").getOrElse("")
@@ -251,44 +214,9 @@ class PgVectorConnector extends VectorConnector {
           else slices :+ withPred(s"NOT ($digits) OR $idc IS NULL")
         case _ => Seq(query)
       }
-    val ext = extendedEnabled(connection)
-    // binary rides the extended protocol only: Simple Query results are
-    // text by definition (no Bind to carry format codes)
-    val bin = binaryEnabled(connection) && ext
-    val sqls = ranged.map(q => buildSelect(q, rawVector = bin))
-    // the `vector` type OID is extension-ASSIGNED (not a stable
-    // built-in) — one plan-time catalog probe, shipped to every slice;
-    // None on an extension-less server, where the column is TEXT anyway
-    val vecOid: Option[Int] =
-      if (!bin) None
-      else withClient(ep) { c =>
-        c.query("SELECT oid FROM pg_type WHERE typname = 'vector'")
-          .rows.headOption.map(_.head.toInt)
-      }
+    val sqls = ranged.map(buildSelect)
     val rdd = spark.sparkContext.parallelize(sqls, sqls.length).flatMap { sql =>
-      val c = ep.connect()
-      // query_protocol=extended runs each slice through Parse/Bind/
-      // Execute (unnamed statement, text results) — same rows, prepared
-      // plumbing exercised end to end. data_format=binary adds the
-      // Describe step and per-column format negotiation.
-      try {
-        if (bin) {
-          c.prepare("graft_read", sql)
-          val desc = c.describeStatement("graft_read")
-          val exact = PgBinary.textExactOids(vecOid)
-          val formats = desc.map { case (_, oid) => if (exact(oid)) 1 else 0 }
-          val res = c.execPreparedRaw("graft_read", Nil, Nil, formats)
-          res.rows.map { r =>
-            Row.fromSeq(r.zipWithIndex.map { case (cell, i) =>
-              if (cell == null) null
-              else if (res.formats(i) == 1)
-                PgBinary.recvToText(res.oids(i), vecOid, cell)
-              else new String(cell, java.nio.charset.StandardCharsets.UTF_8)
-            })
-          }
-        }
-        else (if (ext) c.execParams(sql) else c.query(sql)).rows.map(Row.fromSeq(_))
-      } finally c.close()
+      withClient(ep)(_.query(sql).rows.map(Row.fromSeq(_)))
     }
     val raw = spark.createDataFrame(rdd,
       StructType(cols.map(StructField(_, StringType, nullable = true))))
@@ -314,29 +242,25 @@ class PgVectorConnector extends VectorConnector {
         map().cast(MapType(StringType, StringType))))
 
   /** Distributed wire write: DDL once from the driver (VECTOR(d), TEXT
-    * fallback on 42704), then every partition drives its own connection.
-    * Both write modes are ATOMIC id-keyed UPSERTS — changed records
-    * replace their previous versions (the incremental migrator ships
-    * updates here instead of withholding them, [[upsertsById]]) and a
-    * RETRIED Spark task re-applies its rows idempotently instead of
-    * duplicating ids (the standing insert-only hazard of append sinks):
+    * fallback on 42704), then every partition drives its own connection
+    * through PostgreSQL's documented bulk path, `COPY … FROM STDIN`
+    * (CopyInResponse/CopyData/CopyDone). `batch_size` does not apply: a
+    * partition is one COPY, streamed in 64 KiB CopyData chunks. Every
+    * write is an ATOMIC id-keyed UPSERT — changed records replace their
+    * previous versions (the incremental migrator ships updates here
+    * instead of withholding them, [[upsertsById]]) and a RETRIED Spark
+    * task re-applies its rows idempotently instead of duplicating ids
+    * (the standing insert-only hazard of append sinks):
     *
-    *  - `write_mode=copy` (DEFAULT — PostgreSQL's documented bulk path,
-    *    CopyInResponse/CopyData/CopyDone): each partition COPYs its rows
-    *    into a session-private TEMP staging table, then publishes with
-    *    ONE `DELETE … IN (SELECT id FROM stage); INSERT … SELECT` Simple
-    *    Query — a single implicit transaction, so the whole partition
-    *    lands atomically. COPY text rows skip per-value SQL quoting and
-    *    statement parsing entirely (measured ~3–10× the multi-VALUES
-    *    law; see ScaleProbe).
-    *  - `write_mode=insert`: `batchSize`-row multi-VALUES batches (the
-    *    reference batches 100 rows per executemany,
-    *    `adapters/pgvector.py:159`), each ONE `DELETE …; INSERT …`
-    *    statement string (implicit-txn atomic per batch) — the fallback
-    *    for servers that restrict COPY. Values are single-quoted literals
-    *    with `''` escaping (standard_conforming_strings, the server
-    *    default since 9.1) and NUL bytes rejected loudly — PostgreSQL
-    *    text cannot carry them.
+    *  - a `recreate` load COPYs each partition straight into the target
+    *    the driver just recreated: there is no previous version to
+    *    replace. COPY FROM STDIN is ONE statement in its own implicit
+    *    transaction, so a task failing mid-copy lands ZERO rows and its
+    *    re-run is the first landing;
+    *  - any other load COPYs the partition into a session-private TEMP
+    *    stage, then publishes with ONE `DELETE … IN (SELECT id FROM
+    *    stage); INSERT … SELECT` Simple Query — a single implicit
+    *    transaction, so the whole partition lands atomically.
     *
     * The row count rides the write action via `Dataset.observe` — no
     * second pass. */
@@ -346,207 +270,109 @@ class PgVectorConnector extends VectorConnector {
     val table = load.collection
     val dim = load.dimension.orElse(Canonical.inferDim(df)).getOrElse(0)
     // ident-whitelist every identifier BEFORE any SQL is assembled
-    val ddlCols = (load.idColumn, load.vectorColumn)
+    val (idCol, vecCol) = (load.idColumn, load.vectorColumn)
     val select = buildSelect(QuerySpec(collection = table,
-      idColumn = load.idColumn, vectorColumn = Some(load.vectorColumn)))
+      idColumn = idCol, vectorColumn = Some(vecCol)))
     require(select.nonEmpty) // buildSelect ran the whitelist on all three
+    // the stage is a session-private TEMP table; pg_temp precedes every
+    // schema on the search path, so a TARGET named like the stage would
+    // make the publish statement's unqualified references resolve to the
+    // temp table — rows would land nowhere while the report claims
+    // success. Reject the collision loudly, before any DDL runs.
+    require(!table.split('.').last.equalsIgnoreCase("graft_copy_stage"),
+      s"collection name '$table' collides with the COPY staging table " +
+        "(pg_temp shadows it on the search path) — rename the collection")
     withClient(ep) { c =>
       if (load.recreate) c.query(s"DROP TABLE IF EXISTS $table")
       val mk = (vt: String) =>
-        s"CREATE TABLE IF NOT EXISTS $table " +
-          s"(${ddlCols._1} TEXT, ${ddlCols._2} $vt, metadata TEXT)"
+        s"CREATE TABLE IF NOT EXISTS $table ($idCol TEXT, $vecCol $vt, metadata TEXT)"
       try c.query(mk(s"VECTOR($dim)"))
       catch {
         case e: PgWireException if e.sqlState == "42704" =>
           System.err.println("[graft] pgvector extension absent on the " +
             s"target (SQLSTATE 42704 on VECTOR($dim)) — creating " +
-            s"$table.${ddlCols._2} as TEXT; vectors travel in pgvector " +
+            s"$table.$vecCol as TEXT; vectors travel in pgvector " +
             "text form and decode identically on read")
           c.query(mk("TEXT"))
       }
       // id index: the upsert's DELETE leg is an index lookup instead of a
-      // per-batch sequential scan of the growing table — without it the
-      // write law goes quadratic-in-batches (measured: 10.5k rows/s at
-      // 60k rows degrading to 6.7k at 200k; see BASELINE.md r17 probe).
-      // An INDEX, not a PRIMARY KEY: canonical frames may carry null ids
-      // and the append face must not start rejecting them.
+      // per-partition sequential scan of the growing table — without it
+      // the write law goes quadratic (measured: 10.5k rows/s at 60k rows
+      // degrading to 6.7k at 200k; see BASELINE.md r17 probe). An INDEX,
+      // not a PRIMARY KEY: canonical frames may carry null ids and the
+      // append face must not start rejecting them.
       c.query(s"CREATE INDEX IF NOT EXISTS ${table.replace('.', '_')}_graft_id_ix " +
-        s"ON $table (${ddlCols._1})")
+        s"ON $table ($idCol)")
     }
-    val useCopy0 = !connection.get("write_mode").contains("insert")
-    // COPY mode stages through a session-private TEMP table; pg_temp
-    // precedes every schema on the search path, so a TARGET named like
-    // the stage would make the publish statement's unqualified
-    // references resolve to the temp table — rows would land nowhere
-    // while the report claims success. Reject the collision loudly.
-    if (useCopy0)
-      require(!table.split('.').last.equalsIgnoreCase("graft_copy_stage"),
-        s"collection name '$table' collides with the COPY staging table " +
-          "(pg_temp shadows it on the search path) — rename the " +
-          "collection or use write_mode=insert")
     val bin = binaryEnabled(connection)
-    val ext = extendedEnabled(connection)
-    // the COPY staging table must parse the same text the TARGET column
-    // parses — and the target's actual type comes from the CATALOG, not
-    // from which DDL branch ran: `CREATE TABLE IF NOT EXISTS` on an
-    // already-existing relation short-circuits BEFORE column-type
-    // analysis, so the VECTOR probe "succeeds" against a pre-existing
-    // TEXT-column table on an extension-less server (caught live by
-    // PgLiveWireSpec's append-mode write). Only the branches that need
-    // the target's actual type pay the catalog round trip: COPY (stage
-    // DDL + binary field encoding) and binary extended (vector
-    // parameter encoding).
-    val vecType = if (!useCopy0 && !(ext && bin)) "TEXT" else {
-      val si = describe(ep, table)
-      val isVector = si.schema.fields.exists(f =>
-        f.name.equalsIgnoreCase(ddlCols._2) && f.dataType.isInstanceOf[ArrayType])
+    // the staging table must parse the same text the TARGET column
+    // parses, and binary framing must send the target's own type — and
+    // that type comes from the CATALOG, not from which DDL branch ran:
+    // `CREATE TABLE IF NOT EXISTS` on an already-existing relation
+    // short-circuits BEFORE column-type analysis, so the VECTOR probe
+    // "succeeds" against a pre-existing TEXT-column table on an
+    // extension-less server (caught live by PgLiveWireSpec's append-mode
+    // write).
+    val vecType = {
+      val isVector = describe(ep, table).schema.fields.exists(f =>
+        f.name.equalsIgnoreCase(vecCol) && f.dataType.isInstanceOf[ArrayType])
       if (isVector) s"VECTOR($dim)" else "TEXT"
     }
     // binary format against a REAL vector column ships the floats
     // themselves (vector_send) — the projection keeps the array instead
     // of rendering text the server would only re-parse
-    val vecAsFloats = bin && vecType.startsWith("VECTOR") && (useCopy0 || ext)
+    val vecFloats = bin && vecType.startsWith("VECTOR")
     val out = df.select(
       col(Canonical.ID).cast("string"),
-      if (vecAsFloats) col(Canonical.VECTOR).cast(ArrayType(FloatType))
+      if (vecFloats) col(Canonical.VECTOR).cast(ArrayType(FloatType))
       else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
       to_json(col(Canonical.METADATA)))
     val obs = new org.apache.spark.sql.Observation(s"graft-pgwire-${System.nanoTime()}")
     val observed = out.observe(obs, count(lit(1)).as("rows"))
-    val batch = math.max(1, load.batchSize)
-    val prefix = s"INSERT INTO $table (${ddlCols._1}, ${ddlCols._2}, metadata) VALUES "
     // NOTE ids are assumed unique within the written frame (the canonical
     // model's contract — every source connector emits one row per id): a
     // frame carrying the same id twice lands both copies. Cross-WRITE
     // duplicates are what the upsert delete leg removes.
-    val idCol = ddlCols._1
-    val vecCol = ddlCols._2
-    val useCopy = useCopy0
-    val useBin = bin
-    val vecFloats = vecAsFloats
-    // Non-upsert DIRECT COPY (recreate loads): the driver just dropped
-    // and recreated the target, so the staged path's publish leg would
-    // write every row a SECOND time server-side for a delete leg that
-    // can match nothing — COPY straight into the target instead. Retry
-    // safety holds because COPY FROM STDIN is ONE statement in its own
-    // implicit transaction: a task failing mid-copy (or aborting with
-    // CopyFail) lands ZERO rows, so the re-run is the first landing.
-    val direct = useCopy0 && load.recreate
+    val direct = load.recreate
     observed.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) {
-        val c = ep.connect()
-        // shared binary field encoders: TEXT columns are raw UTF-8 in
-        // binary format; the vector field is float4s against a real
-        // VECTOR column, its text rendering otherwise
-        def fTxt(r: Row, i: Int): Array[Byte] =
-          if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
-        def fVec(r: Row): Array[Byte] =
-          if (r.isNullAt(1)) null
-          else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
-          else PgBinary.textSend(r.getString(1))
-        try {
-          if (!useCopy && ext) {
-            // Extended-protocol upsert: named statements prepared once,
-            // then per batch a PIPELINE of Bind/Execute pairs (delete leg
-            // before insert per row chunk) with values as parameters.
-            // Batch atomicity rides an EXPLICIT transaction, NOT one
-            // giant Sync window: a Sync inside BEGIN...COMMIT does not
-            // commit (documented), so the batch stays all-or-nothing
-            // while each Sync window is capped at PipeChunk rows —
-            // writing an unbounded pipeline with no intermediate reads
-            // deadlocks once the server's unread BindComplete/
-            // CommandComplete responses fill both socket buffers (the
-            // classic pipelining deadlock libpq's pipeline docs warn
-            // about; a large batch_size would hang the Spark task).
-            c.prepare("graft_del", s"DELETE FROM $table WHERE $idCol = $$1")
-            c.prepare("graft_ins",
-              s"INSERT INTO $table ($idCol, $vecCol, metadata) VALUES ($$1, $$2, $$3)")
-            it.grouped(batch).foreach { g =>
-              c.query("BEGIN")
-              try {
-                // chunking keeps each id's delete before its insert
-                // (both legs ride the same chunk — ids are unique within
-                // the frame, the canonical contract)
-                g.grouped(PipeChunk).foreach { sub =>
-                  sub.foreach { r =>
-                    if (!r.isNullAt(0)) {
-                      if (useBin)
-                        c.bindExecRaw("graft_del", Seq(Option(fTxt(r, 0))), Seq(1))
-                      else c.bindExec("graft_del", Seq(Some(r.getString(0))))
-                    }
-                  }
-                  sub.foreach { r =>
-                    if (useBin)
-                      // binary parameters: the prepared statement's
-                      // inferred column types drive the server-side recv
-                      // (vector_recv for a real VECTOR column)
-                      c.bindExecRaw("graft_ins",
-                        Seq(Option(fTxt(r, 0)), Option(fVec(r)), Option(fTxt(r, 2))),
-                        Seq(1, 1, 1))
-                    else {
-                      def p(i: Int) = if (r.isNullAt(i)) None else Some(r.getString(i))
-                      c.bindExec("graft_ins", Seq(p(0), p(1), p(2)))
-                    }
-                  }
-                  c.syncBatch()
-                }
-                c.query("COMMIT")
-              } catch {
-                case e: Throwable =>
-                  // restore the session out of the failed transaction so
-                  // close() (and any retry on this connection) is clean
-                  try c.query("ROLLBACK")
-                  catch { case _: Throwable => () }
-                  throw e
-              }
-            }
-          } else if (useCopy) {
-            val copyTarget =
-              if (direct) s"$table ($idCol, $vecCol, metadata)"
-              else {
-                // per-session TEMP stage: invisible to other connections,
-                // so a half-copied retry never leaks rows; dropped with
-                // the session
-                c.query("CREATE TEMP TABLE graft_copy_stage " +
-                  s"(id TEXT, vector $vecType, metadata TEXT)")
-                "pg_temp.graft_copy_stage (id, vector, metadata)"
-              }
-            if (useBin)
-              c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
-                it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
-            else {
-              import graft.connectors.pgwire.PgWireClient.copyField
-              c.copyIn(s"COPY $copyTarget FROM STDIN",
-                it.map { r =>
-                  def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
-                  s"${f(0)}\t${f(1)}\t${f(2)}"
-                })
-            }
-            // ONE implicit-txn publish for the whole partition: the
-            // delete leg rides the target's id index; null ids have no
-            // previous version to replace. Direct mode already landed in
-            // the target — no second server-side write.
-            if (!direct) c.query(
-              s"DELETE FROM $table WHERE $idCol IN " +
-                "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
-                s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
-                "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
-            ()
-          } else it.grouped(batch).foreach { g =>
-            val values = g.map { r =>
-              def lit(i: Int) = if (r.isNullAt(i)) "NULL" else sqlLit(r.getString(i))
-              s"(${lit(0)}, ${lit(1)}, ${lit(2)})"
-            }.mkString(", ")
-            // delete leg first, SAME statement: id-keyed upsert, atomic per
-            // batch (null ids have no previous version to replace — IN with
-            // no non-null members is simply omitted)
-            val ids = g.collect { case r if !r.isNullAt(0) => sqlLit(r.getString(0)) }
-            val del =
-              if (ids.isEmpty) ""
-              else s"DELETE FROM $table WHERE $idCol IN (${ids.mkString(", ")}); "
-            c.query(del + prefix + values)
+      if (it.hasNext) withClient[Unit](ep) { c =>
+        val copyTarget =
+          if (direct) s"$table ($idCol, $vecCol, metadata)"
+          else {
+            // per-session TEMP stage: invisible to other connections, so
+            // a half-copied retry never leaks rows; dropped with the
+            // session
+            c.query("CREATE TEMP TABLE graft_copy_stage " +
+              s"(id TEXT, vector $vecType, metadata TEXT)")
+            "pg_temp.graft_copy_stage (id, vector, metadata)"
           }
-        } finally c.close()
+        if (bin) {
+          // binary fields: TEXT columns are raw UTF-8; the vector field
+          // is float4s against a real VECTOR column, its text otherwise
+          def fTxt(r: Row, i: Int): Array[Byte] =
+            if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
+          def fVec(r: Row): Array[Byte] =
+            if (r.isNullAt(1)) null
+            else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
+            else PgBinary.textSend(r.getString(1))
+          c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
+            it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
+        } else {
+          import graft.connectors.pgwire.PgWireClient.copyField
+          c.copyIn(s"COPY $copyTarget FROM STDIN",
+            it.map { r =>
+              def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
+              s"${f(0)}\t${f(1)}\t${f(2)}"
+            })
+        }
+        // ONE implicit-txn publish for the whole partition: the delete
+        // leg rides the target's id index; null ids have no previous
+        // version to replace. A direct load already landed in the target.
+        if (!direct) c.query(
+          s"DELETE FROM $table WHERE $idCol IN " +
+            "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
+            s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
+            "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
       }
     }
     WriteReport(written =

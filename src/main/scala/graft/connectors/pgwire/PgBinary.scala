@@ -21,29 +21,6 @@ import java.nio.charset.StandardCharsets.UTF_8
   * the live round trip (PgLiveWireSpec) only has to pin the framing. */
 object PgBinary {
 
-  // ---- well-known built-in type OIDs (pg_type.h — stable since v7) ----
-  val OidBool = 16
-  val OidBytea = 17
-  val OidInt8 = 20
-  val OidInt2 = 21
-  val OidInt4 = 23
-  val OidText = 25
-  val OidFloat4 = 700
-  val OidFloat8 = 701
-  val OidVarchar = 1043
-  val OidBpchar = 1042
-  val OidName = 19
-
-  /** OIDs whose BINARY result format this module decodes to a string
-    * byte-identical with the server's TEXT output — the negotiation
-    * whitelist: a column with any other OID (numeric, timestamp, json,
-    * arrays, ...) keeps result format 0 so its text rendering stays the
-    * server's own. The `vector` OID is extension-assigned (not stable),
-    * so it rides in as a parameter where known. */
-  def textExactOids(vectorOid: Option[Int]): Set[Int] =
-    Set(OidBool, OidInt8, OidInt2, OidInt4, OidText, OidVarchar, OidBpchar,
-      OidName) ++ vectorOid
-
   // ---- primitive big-endian writers ----
   def int16(v: Int): Array[Byte] = Array(((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
   def int32(v: Int): Array[Byte] =
@@ -57,7 +34,7 @@ object PgBinary {
     ((b(at) & 0xff) << 24) | ((b(at + 1) & 0xff) << 16) |
       ((b(at + 2) & 0xff) << 8) | (b(at + 3) & 0xff)
 
-  // ---- value send (client -> server binary parameter / COPY field) ----
+  // ---- value send (client -> server COPY field) ----
   /** TEXT/VARCHAR binary format IS the raw UTF-8 bytes. NUL is rejected
     * exactly like the text paths — PostgreSQL text cannot carry it, and
     * binary framing reaching the server first would turn the client-side
@@ -70,8 +47,10 @@ object PgBinary {
   def int2Send(v: Short): Array[Byte] = int16(v.toInt)
   def int4Send(v: Int): Array[Byte] = int32(v)
   def int8Send(v: Long): Array[Byte] = int64(v)
-  def float4Send(v: Float): Array[Byte] = int32(java.lang.Float.floatToIntBits(v))
-  def float8Send(v: Double): Array[Byte] = int64(java.lang.Double.doubleToLongBits(v))
+  // raw bits, like vectorSend: a NaN keeps its payload instead of being
+  // canonicalized on the way out
+  def float4Send(v: Float): Array[Byte] = int32(java.lang.Float.floatToRawIntBits(v))
+  def float8Send(v: Double): Array[Byte] = int64(java.lang.Double.doubleToRawLongBits(v))
   def boolSend(v: Boolean): Array[Byte] = Array(if (v) 1.toByte else 0.toByte)
 
   /** pgvector `vector_send`: uint16 dim, uint16 unused (0), dim float4s.
@@ -85,7 +64,7 @@ object PgBinary {
     b.array()
   }
 
-  // ---- value recv (server binary result -> client) ----
+  // ---- value recv (server binary value -> client) ----
   def textRecv(b: Array[Byte]): String = new String(b, UTF_8)
   def int2Recv(b: Array[Byte]): Short = readInt16(b, 0).toShort
   def int4Recv(b: Array[Byte]): Int = readInt32(b, 0)
@@ -105,25 +84,6 @@ object PgBinary {
         s"malformed vector binary value: dim $dim but ${b.length} bytes")
     Array.fill(dim)(buf.getFloat)
   }
-
-  /** Decode ONE binary column value to the string the server's TEXT
-    * format would have produced — only for OIDs in [[textExactOids]]
-    * (that is the negotiation contract; anything else is a client bug).
-    * The `vector` OID decodes through [[PgVectorCodec]]'s own float
-    * rendering: downstream consumes it via `textToVector`, so only the
-    * float VALUES matter, not the rendering. */
-  def recvToText(oid: Int, vectorOid: Option[Int], b: Array[Byte]): String =
-    oid match {
-      case OidText | OidVarchar | OidBpchar | OidName => textRecv(b)
-      case OidInt8 => int8Recv(b).toString
-      case OidInt4 => int4Recv(b).toString
-      case OidInt2 => int2Recv(b).toString
-      case OidBool => if (boolRecv(b)) "t" else "f"
-      case o if vectorOid.contains(o) =>
-        graft.connectors.PgVectorCodec.renderText(vectorRecv(b))
-      case other => throw new PgWireException("XX000",
-        s"BUG: binary result for un-negotiated type OID $other")
-    }
 
   // ---- COPY BINARY framing ----
   /** The documented 19-byte header: signature "PGCOPY\n\377\r\n\0",

@@ -128,14 +128,6 @@ case class PgResult(columns: Seq[String], rows: Seq[Seq[String]], tags: Seq[Stri
     tags.lastOption.flatMap(_.split(' ').lastOption).flatMap(_.toLongOption).getOrElse(0L)
 }
 
-/** A result set with per-column wire metadata and UNDECODED values — the
-  * binary-format read path's shape: `oids`/`formats` parallel `columns`
-  * (format 1 = binary, 0 = text bytes), each cell the raw value bytes
-  * (null = SQL NULL). [[PgBinary.recvToText]] decodes negotiated
-  * columns; format-0 cells are the server's own text rendering. */
-case class PgResultRaw(columns: Seq[String], oids: Seq[Int], formats: Seq[Int],
-                       rows: Seq[Seq[Array[Byte]]], tags: Seq[String])
-
 /** Minimal PostgreSQL frontend — the documented v3 wire protocol
   * (PostgreSQL docs, "Frontend/Backend Protocol"), Simple Query flavor:
   * `StartupMessage` → authentication (trust, cleartext password, MD5,
@@ -143,14 +135,13 @@ case class PgResultRaw(columns: Seq[String], oids: Seq[Int], formats: Seq[Int],
   * PostgreSQL default since v14) → `Query('Q')` with text-format
   * results. TLS rides the documented SSLRequest upgrade: platform-trust
   * mode verifies chain AND hostname (verify-full); a pinned
-  * `ssl_root_cert` is verify-ca against that one anchor. The Extended
-  * Query protocol (Parse/Bind/Execute — [[prepare]]/[[bindExec]]/
-  * [[execParams]]) carries values as parameters; `COPY FROM STDIN`
-  * ([[copyIn]], [[copyInBinary]]) is the bulk path. Not a general
-  * PostgreSQL driver: it carries exactly what the pgvector connector
-  * ([[graft.connectors.PgVectorConnector]], its only data path) sends —
-  * `buildSelect` scans, catalog predicates, DDL and upserts — which is
-  * what the reference drives through psycopg2 (`adapters/pgvector.py`).
+  * `ssl_root_cert` is verify-ca against that one anchor. `COPY FROM
+  * STDIN` ([[copyIn]], [[copyInBinary]]) is the bulk path. Not a
+  * general PostgreSQL driver: it carries exactly what the pgvector
+  * connector ([[graft.connectors.PgVectorConnector]], its only data
+  * path) sends — `buildSelect` scans, catalog predicates, DDL, COPY
+  * loads and their publish statements — which is what the reference
+  * drives through psycopg2 (`adapters/pgvector.py`).
   *
   * `handshakeTimeoutMs` bounds the connect and every read up to the
   * first `ReadyForQuery`, so a server that accepts but never answers
@@ -252,11 +243,10 @@ class PgWireClient(host: String, port: Int,
     }
   }
   private val in = new DataInputStream(socket.getInputStream)
-  // buffered: the extended-protocol pipeline writes 2-3 small frames per
-  // row (writeBind/writeExecute never flush) — unbuffered with
-  // TCP_NODELAY that is a syscall and potentially a packet per frame.
-  // Every read site is preceded by an explicit flush (send/sendSync/
-  // query/copyIn), so buffering changes no protocol timing.
+  // buffered: a CopyData frame is a type byte, a length and a chunk —
+  // unbuffered with TCP_NODELAY each write is a syscall and potentially
+  // a packet. Every read site is preceded by an explicit flush, so
+  // buffering changes no protocol timing.
   private val out = new DataOutputStream(
     new java.io.BufferedOutputStream(socket.getOutputStream, 1 << 16))
 
@@ -492,244 +482,39 @@ class PgWireClient(host: String, port: Int,
     PgResult(columns, rows, tags.result())
   }
 
-  // ---- Extended Query protocol (Parse/Bind/Execute/Sync) ----
-  // Parameterized statements: user VALUES travel as Bind parameters, so
-  // the SQL text never carries data — no quoting/escaping surface at
-  // all. Text format both ways (format code 0); an implicit transaction
-  // spans everything up to Sync, which is what makes a pipelined
-  // delete+insert batch atomic (the pgvector connector's extended write
-  // mode).
-
-  private def cstr(s: String): Array[Byte] = s.getBytes(UTF_8) :+ 0.toByte
-
-  /** Parse a NAMED prepared statement (Parse + Sync, drained) — call once
-    * per connection, then pipeline [[bindExec]]/[[syncBatch]] against it. */
-  def prepare(name: String, sql: String): Unit = {
-    val b = new java.io.ByteArrayOutputStream()
-    b.write(cstr(name))
-    b.write(cstr(sql))
-    b.write(Array[Byte](0, 0)) // 0 pre-specified parameter types
-    send('P', b.toByteArray)
-    sendSync()
-    drainExtended()
-  }
-
-  /** Queue ONE Bind("", stmt, params) + Execute("") pair — NOT flushed;
-    * the round trip happens at [[syncBatch]]. `None` binds SQL NULL. */
-  def bindExec(stmt: String, params: Seq[Option[String]]): Unit = {
-    writeBind(stmt, params)
-    writeExecute()
-  }
-
-  private def writeBind(stmt: String, params: Seq[Option[String]]): Unit =
-    writeBindRaw(stmt, params.map(_.map(_.getBytes(UTF_8))), Nil, Nil)
-
-  /** Bind with explicit format codes (the protocol's negotiation point):
-    * `paramFormats`/`resultFormats` follow the documented convention —
-    * empty = all text, one entry = applies to all, else one per
-    * param/column (1 = binary, 0 = text). */
-  private def writeBindRaw(stmt: String, params: Seq[Option[Array[Byte]]],
-                           paramFormats: Seq[Int], resultFormats: Seq[Int]): Unit = {
-    val b = new java.io.ByteArrayOutputStream()
-    b.write(cstr("")) // unnamed portal
-    b.write(cstr(stmt))
-    def codes(cs: Seq[Int]): Unit = {
-      b.write(Array[Byte]((cs.length >> 8).toByte, cs.length.toByte))
-      cs.foreach(c => b.write(Array[Byte]((c >> 8).toByte, c.toByte)))
-    }
-    codes(paramFormats)
-    b.write(Array[Byte]((params.length >> 8).toByte, params.length.toByte))
-    params.foreach {
-      case None => b.write(Array[Byte](-1, -1, -1, -1)) // int32 -1 = NULL
-      case Some(bytes) =>
-        b.write(java.nio.ByteBuffer.allocate(4).putInt(bytes.length).array())
-        b.write(bytes)
-    }
-    codes(resultFormats)
-    out.writeByte('B')
-    out.writeInt(4 + b.size())
-    b.writeTo(out)
-  }
-
-  private def writeExecute(): Unit = {
-    out.writeByte('E') // Execute: unnamed portal, no row limit
-    out.writeInt(4 + 1 + 4)
-    out.writeByte(0)
-    out.writeInt(0)
-  }
-
-  private def sendSync(): Unit = {
-    out.writeByte('S')
-    out.writeInt(4)
-    out.flush()
-  }
-
-  /** Close the pipeline: Sync, then drain every queued statement's
-    * results to ReadyForQuery. Everything since the last Sync ran in ONE
-    * implicit transaction — on the first error the server skips the rest
-    * and rolls the transaction back, so a [[bindExec]] batch is atomic. */
-  def syncBatch(): PgResult = {
-    sendSync()
-    drainExtended()
-  }
-
-  /** One-shot parameterized statement through the unnamed prepared
-    * statement: Parse + Bind + Describe + Execute + Sync in a single
-    * flush, results in text format. The read-side twin of [[bindExec]] —
-    * `sql` carries `$1..$n` placeholders and `params` the values. */
-  def execParams(sql: String, params: Seq[Option[String]] = Nil): PgResult = {
-    val p = new java.io.ByteArrayOutputStream()
-    p.write(cstr(""))
-    p.write(cstr(sql))
-    p.write(Array[Byte](0, 0))
-    send('P', p.toByteArray) // send flushes; harmless mid-pipeline
-    writeBind("", params)
-    // Describe the PORTAL between Bind and Execute — RowDescription must
-    // precede the DataRows or the drain's 'T' reset discards them
-    out.writeByte('D')
-    out.writeInt(4 + 1 + 1)
-    out.writeByte('P')
-    out.writeByte(0)
-    writeExecute()
-    syncBatch()
-  }
-
-  /** Shared drain for the extended protocol: collects the LAST result
-    * set + all tags, raises the first error AFTER ReadyForQuery (same
-    * session-survives contract as [[query]]). */
-  private def drainExtended(): PgResult = {
-    val raw = drainExtendedRaw()
-    PgResult(raw.columns,
-      raw.rows.map(_.map(b => if (b == null) null else new String(b, UTF_8))),
-      raw.tags)
-  }
-
-  private def drainExtendedRaw(): PgResultRaw = {
-    var desc = Seq.empty[(String, Int, Int)]
-    var rows = Vector.empty[Seq[Array[Byte]]]
-    val tags = Vector.newBuilder[String]
-    var err: PgWireException = null
-    var done = false
-    while (!done) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case 'T' =>
-          desc = parseRowDescriptionTyped(payload, e => if (err == null) err = e)
-          rows = Vector.empty
-        case 'D' =>
-          parseDataRowRaw(payload, e => if (err == null) err = e)
-            .foreach(r => rows :+= r)
-        case 'C' =>
-          try tags += cstring(payload, 0)._1
-          catch { case e: PgWireException => if (err == null) err = e }
-        case 'E' => if (err == null) err = errorFrom(payload)
-        case 'Z' => done = true
-        case _ => // ParseComplete '1', BindComplete '2', NoData 'n',
-        // PortalSuspended 's', CloseComplete '3', notices, param status
-      }
-    }
-    if (err != null) throw err
-    PgResultRaw(desc.map(_._1), desc.map(_._2), desc.map(_._3), rows, tags.result())
-  }
-
-  /** Describe a NAMED prepared statement: (column name, type OID) per
-    * result column — the negotiation step before a binary-format Bind
-    * ([[execPreparedRaw]] chooses per-column result formats from these
-    * OIDs). Empty for statements returning no rows. */
-  def describeStatement(name: String): Seq[(String, Int)] = {
-    out.writeByte('D')
-    out.writeInt(4 + 1 + name.getBytes(UTF_8).length + 1)
-    out.writeByte('S')
-    out.write(cstr(name))
-    sendSync()
-    var desc = Seq.empty[(String, Int, Int)]
-    var err: PgWireException = null
-    var done = false
-    while (!done) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case 'T' => desc = parseRowDescriptionTyped(payload, e => if (err == null) err = e)
-        case 'n' => // NoData: DDL/DML statement
-        case 't' => // ParameterDescription — param OIDs, unused here
-        case 'E' => if (err == null) err = errorFrom(payload)
-        case 'Z' => done = true
-        case _ => // notices / param status
-      }
-    }
-    if (err != null) throw err
-    desc.map(d => (d._1, d._2))
-  }
-
-  /** Queue ONE Bind + Execute against a NAMED prepared statement with
-    * explicit formats — the binary write path's pipelined unit (binary
-    * parameters skip both the text rendering and the server-side text
-    * parse). NOT flushed; the round trip happens at [[syncBatch]]. */
-  def bindExecRaw(stmt: String, params: Seq[Option[Array[Byte]]],
-                  paramFormats: Seq[Int], resultFormats: Seq[Int] = Nil): Unit = {
-    writeBindRaw(stmt, params, paramFormats, resultFormats)
-    writeExecute()
-  }
-
-  /** Execute a NAMED prepared statement once with explicit formats and
-    * return the RAW result (per-column OIDs + format codes + undecoded
-    * bytes) — the binary read path: Bind requests `resultFormats`
-    * (typically 1 for every OID [[describeStatement]] showed to be in
-    * the [[PgBinary.textExactOids]] whitelist, 0 elsewhere), Describe
-    * the portal so RowDescription precedes the rows, Execute, Sync. */
-  def execPreparedRaw(stmt: String, params: Seq[Option[Array[Byte]]],
-                      paramFormats: Seq[Int],
-                      resultFormats: Seq[Int]): PgResultRaw = {
-    writeBindRaw(stmt, params, paramFormats, resultFormats)
-    out.writeByte('D')
-    out.writeInt(4 + 1 + 1)
-    out.writeByte('P')
-    out.writeByte(0)
-    writeExecute()
-    sendSync()
-    drainExtendedRaw()
-  }
-
   /** Malformed-frame guards for the two payloads with internal structure:
     * a hostile or broken server's RowDescription/DataRow must surface as
     * a TYPED 08P01 — recorded via `onErr` and reported after the drain
     * reaches ReadyForQuery (readMessage consumed the whole frame, so the
     * stream stays in sync) — never a raw ArrayIndexOutOfBounds that
-    * aborts mid-stream and desyncs the session. */
-  /** (name, typeOid, formatCode) per column — format codes are 0 from a
-    * statement Describe and whatever Bind requested from a portal one. */
-  private def parseRowDescriptionTyped(payload: Array[Byte],
-                                       onErr: PgWireException => Unit): Seq[(String, Int, Int)] =
+    * aborts mid-stream and desyncs the session. Each column's name is
+    * followed by tableOid(4) colno(2) typeOid(4) typlen(2) typmod(4)
+    * format(2); the bounds check on the last of them is what catches a
+    * truncated column entry. */
+  private def parseRowDescription(payload: Array[Byte],
+                                  onErr: PgWireException => Unit): Seq[String] =
     try {
       val n = ((payload(0) & 0xff) << 8) | (payload(1) & 0xff)
       var i = 2
       (0 until n).map { _ =>
         val (name, next) = cstring(payload, i)
-        // layout after the name: tableOid(4) colno(2) typeOid(4)
-        // typlen(2) typmod(4) format(2)
-        val oid = ((payload(next + 6) & 0xff) << 24) | ((payload(next + 7) & 0xff) << 16) |
-          ((payload(next + 8) & 0xff) << 8) | (payload(next + 9) & 0xff)
-        val fmt = ((payload(next + 16) & 0xff) << 8) | (payload(next + 17) & 0xff)
+        if (next + 18 > payload.length) throw new PgWireException("08P01", "overrun")
         i = next + 18
-        (name, oid, fmt)
+        name
       }
     } catch {
       // cstring's typed overrun throw included: it must funnel through
       // onErr like the raw index failures, or it aborts the drain loop
       // mid-stream and desyncs the session
-      case _: IndexOutOfBoundsException | _: NegativeArraySizeException |
-           _: PgWireException =>
+      case _: IndexOutOfBoundsException | _: PgWireException =>
         onErr(new PgWireException("08P01",
           s"malformed RowDescription frame (${payload.length} bytes) — " +
             s"is $host:$port really a PostgreSQL server?"))
         Seq.empty
     }
 
-  private def parseRowDescription(payload: Array[Byte],
-                                  onErr: PgWireException => Unit): Seq[String] =
-    parseRowDescriptionTyped(payload, onErr).map(_._1)
-
-  private def parseDataRowRaw(payload: Array[Byte],
-                              onErr: PgWireException => Unit): Option[Seq[Array[Byte]]] =
+  private def parseDataRow(payload: Array[Byte],
+                           onErr: PgWireException => Unit): Option[Seq[String]] =
     try {
       val n = ((payload(0) & 0xff) << 8) | (payload(1) & 0xff)
       var i = 2
@@ -740,22 +525,16 @@ class PgWireClient(host: String, port: Int,
         if (len == -1) null
         else {
           if (len < 0 || i + len > payload.length) throw new PgWireException("08P01", "overrun")
-          val b = java.util.Arrays.copyOfRange(payload, i, i + len); i += len; b
+          val v = new String(payload, i, len, UTF_8); i += len; v
         }
       })
     } catch {
-      case _: IndexOutOfBoundsException | _: NegativeArraySizeException |
-           _: PgWireException =>
+      case _: IndexOutOfBoundsException | _: PgWireException =>
         onErr(new PgWireException("08P01",
           s"malformed DataRow frame (${payload.length} bytes) — " +
             s"is $host:$port really a PostgreSQL server?"))
         None
     }
-
-  private def parseDataRow(payload: Array[Byte],
-                           onErr: PgWireException => Unit): Option[Seq[String]] =
-    parseDataRowRaw(payload, onErr)
-      .map(_.map(b => if (b == null) null else new String(b, UTF_8)))
 
   /** Bulk load through the documented COPY sub-protocol: run a
     * `COPY ... FROM STDIN` statement, answer the server's CopyInResponse

@@ -303,28 +303,28 @@ object ConnectorQueries {
 
     // ---- The reference's HEADLINE use case on the pgvector face, LIVE:
     //      config-driven migration into a real PostgreSQL server over the
-    //      engine's v3 wire client (protocol=wire — batched inserts,
-    //      VECTOR DDL with the 42704 TEXT fallback, readBack codec
-    //      inverse). The gate boots a throwaway server (PgTestServer:
-    //      initdb + pg_ctl, trust auth, loopback); where the environment
-    //      has no PostgreSQL it degrades to the memory connector — SAME
-    //      canonical rows either way, so the oracle adjudicates the codec
-    //      path everywhere and the LIVE wire path wherever a server can
-    //      run (this sandbox included). The result is collected
-    //      (gate-bounded: the embeddings fixture) so the server can be
-    //      STOPPED before the frame is consumed — a postgres PROCESS must
-    //      not outlive the gate the way in-JVM loopback daemons may ----
+    //      engine's v3 wire client (per-partition COPY load, VECTOR DDL
+    //      with the 42704 TEXT fallback, readBack codec inverse). The
+    //      gate boots a throwaway server (PgTestServer: initdb + pg_ctl,
+    //      trust auth, loopback); where the environment has no PostgreSQL
+    //      it degrades to the memory connector — SAME canonical rows
+    //      either way, so the oracle adjudicates the codec path
+    //      everywhere and the LIVE wire path wherever a server can run.
+    //      The result is collected (gate-bounded: the embeddings fixture)
+    //      so the server can be STOPPED before the frame is consumed — a
+    //      postgres PROCESS must not outlive the gate the way in-JVM
+    //      loopback daemons may ----
     "q_migrate_pgwire" -> ((s, dir) => {
       val pg = graft.connectors.pgwire.PgTestServer.start()
       val (tKind, tConn) = pg match {
         case Some(run) => ("pgvector", Map(
           "host" -> "127.0.0.1", "port" -> run.port.toString,
           "protocol" -> "wire", "database" -> "postgres", "user" -> "postgres",
-          // the gate drives the BINARY data path end to end (binary COPY
-          // write — direct, since recreate=true — and the negotiated
-          // binary extended-protocol read-back); the text path stays
+          // the gate drives the binary COPY framing end to end (direct
+          // into the target, since recreate=true) and reads back through
+          // the Simple Query text scan; text COPY framing stays
           // live-pinned by PgLiveWireSpec side by side
-          "query_protocol" -> "extended", "data_format" -> "binary"))
+          "data_format" -> "binary"))
         case None => ("memory", Map.empty[String, String])
       }
       try {

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.Clustering
 
-/** Round-5 additions. */
-
 /** The fused nearest-center kernel must be BIT-IDENTICAL to the
   * crossJoin+min(struct) plan it replaced — same l2 accumulation order,
   * same lowest-id tie-break — and must actually compile under codegen. */

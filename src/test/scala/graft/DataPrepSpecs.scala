@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.{Chunking, EditDistanceJoin, SnapshotDiff}
 
-/** Round-5 fifth-session additions: batch CDC snapshot diff, exact
-  * edit-distance join, RAG chunking. */
+/** Data preparation: batch CDC snapshot diff, exact edit-distance join,
+  * RAG chunking, cohorts and mixing, resampling, transcripts, hashed
+  * embeddings, heavy hitters, validation, drift and corpus prep. */
 
 class SnapshotDiffSpec extends SparkSpec {
   import spark.implicits._

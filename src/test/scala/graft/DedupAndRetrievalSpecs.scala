@@ -4,8 +4,9 @@ import org.apache.spark.sql.functions._
 import graft.functions.{BinaryVectors, HashExpressions}
 import graft.ops.{Decontaminate, Dedup, Similarity, TextAnalysis}
 
-/** Round-5 late additions: fully-portable MinHash pipeline, duplicate-span
-  * detection, binary (sign-bit) Hamming retrieval, Bloom decontamination. */
+/** Fully-portable MinHash pipeline, duplicate-span detection, binary
+  * (sign-bit) Hamming retrieval, transport retries, Bloom
+  * decontamination. */
 
 /** Portable shingle hashes + the end-to-end portable LSH pipeline. */
 class PortableMinHashSpec extends SparkSpec {

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.{HashExpressions, TextFunctions}
 import graft.ops.{Dedup, Materialize, TextAnalysis}
 
-/** Round-4 additions: portable (cross-engine-replayable) hash kernels and
-  * the reliable-checkpoint option for iterative ops. */
+/** Portable (cross-engine-replayable) hash kernels and the
+  * reliable-checkpoint option for iterative ops. */
 class PortableHashSpec extends SparkSpec {
   import spark.implicits._
 

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.ops.{TextAnalysis, TextSearch}
 
-/** Round-5 third-session additions: BM25 keyword retrieval and
-  * unigram-LM perplexity scoring. */
+/** Text and embedding scoring: BM25 keyword and hybrid retrieval, PCA,
+  * token masking and KL, distance outliers, per-group sampling and
+  * unigram-LM perplexity. */
 
 class Bm25Spec extends SparkSpec {
   import spark.implicits._

@@ -77,33 +77,49 @@ class PgBinarySpec extends AnyFunSuite {
     assert(e.sqlState == "08P01", e.getMessage)
   }
 
-  test("recvToText renders the server's own text format per OID") {
-    assert(PgBinary.recvToText(PgBinary.OidInt8, None, PgBinary.int8Send(-42L)) == "-42")
-    assert(PgBinary.recvToText(PgBinary.OidInt4, None, PgBinary.int4Send(7)) == "7")
-    assert(PgBinary.recvToText(PgBinary.OidInt2, None, PgBinary.int2Send(0)) == "0")
-    assert(PgBinary.recvToText(PgBinary.OidBool, None, PgBinary.boolSend(true)) == "t")
-    assert(PgBinary.recvToText(PgBinary.OidBool, None, PgBinary.boolSend(false)) == "f")
-    assert(PgBinary.recvToText(PgBinary.OidText, None, PgBinary.textSend("a\tb")) == "a\tb")
-    // the extension-assigned vector OID decodes through the codec's
-    // renderer and survives textToVector downstream
-    val txt = PgBinary.recvToText(9999, Some(9999),
-      PgBinary.vectorSend(Array(1.5f, -2.25f)))
-    assert(txt == "[1.5,-2.25]", txt)
+  /** Every float class a vector can carry: NaN payloads (quiet and
+    * signalling bit patterns), ±0, the smallest and largest subnormals,
+    * the normal extremes, and ±Inf. */
+  private val specialFloats: Array[Float] = Array(
+    java.lang.Float.intBitsToFloat(0x7fc00000), java.lang.Float.intBitsToFloat(0x7fa00001),
+    java.lang.Float.intBitsToFloat(0xffc00123), 0.0f, -0.0f,
+    Float.MinPositiveValue, -Float.MinPositiveValue,
+    java.lang.Float.intBitsToFloat(0x007fffff), java.lang.Float.intBitsToFloat(0x807fffff),
+    java.lang.Float.MIN_NORMAL, Float.MaxValue, Float.MinValue,
+    Float.PositiveInfinity, Float.NegativeInfinity)
+
+  test("vectorSend/vectorRecv are bit-exact on NaN payloads, ±0, subnormals and ±Inf") {
+    val b = PgBinary.vectorSend(specialFloats)
+    assert(b.length == 4 + 4 * specialFloats.length)
+    // each component is its IEEE-754 bits, big-endian, right after the header
+    specialFloats.zipWithIndex.foreach { case (f, i) =>
+      assert(b.slice(4 + 4 * i, 8 + 4 * i).toSeq ==
+        PgBinary.int32(java.lang.Float.floatToRawIntBits(f)).toSeq, s"component $i")
+    }
+    val back = PgBinary.vectorRecv(b)
+    assert(back.map(java.lang.Float.floatToRawIntBits).toSeq ==
+      specialFloats.map(java.lang.Float.floatToRawIntBits).toSeq)
   }
 
-  test("recvToText on an un-negotiated OID is a typed client bug, not garbage") {
-    val e = intercept[PgWireException](
-      PgBinary.recvToText(1700 /* numeric */, None, Array[Byte](0)))
-    assert(e.sqlState == "XX000" && e.getMessage.contains("1700"), e.getMessage)
+  test("vectorSend rejects a dimension past the uint16 header, typed") {
+    val e = intercept[IllegalArgumentException](PgBinary.vectorSend(new Array[Float](0x10000)))
+    assert(e.getMessage.contains("65536"), e.getMessage)
+    // the largest representable dimension still frames
+    val max = PgBinary.vectorSend(new Array[Float](0xffff))
+    assert(max.take(4).toSeq == Seq[Byte](-1, -1, 0, 0))
+    assert(PgBinary.vectorRecv(max).length == 0xffff)
   }
 
-  test("textExactOids: float/numeric/json NEVER negotiate binary (their text " +
-    "rendering is the server's)") {
-    val ok = PgBinary.textExactOids(None)
-    assert(!ok(PgBinary.OidFloat4) && !ok(PgBinary.OidFloat8))
-    assert(!ok(1700) && !ok(114) && !ok(3802)) // numeric, json, jsonb
-    assert(ok(PgBinary.OidText) && ok(PgBinary.OidInt8) && ok(PgBinary.OidBool))
-    assert(PgBinary.textExactOids(Some(31337))(31337))
+  test("float4/float8 send/recv are bit-exact on every special value") {
+    specialFloats.foreach { f =>
+      val bits = java.lang.Float.floatToRawIntBits(f)
+      assert(java.lang.Float.floatToRawIntBits(
+        PgBinary.float4Recv(PgBinary.float4Send(f))) == bits, f"float4 $bits%08x")
+      val d = f.toDouble
+      val dbits = java.lang.Double.doubleToRawLongBits(d)
+      assert(java.lang.Double.doubleToRawLongBits(
+        PgBinary.float8Recv(PgBinary.float8Send(d))) == dbits, f"float8 $dbits%016x")
+    }
   }
 
   test("textSend rejects NUL like every text path") {

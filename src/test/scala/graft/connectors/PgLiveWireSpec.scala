@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *   resolution, the `information_schema.columns` introspection query,
   *   the vector TEXT codec round trip, the exact failure shape of the
   *   `VECTOR(d)` DDL on a server without the pgvector extension, and the
-  *   connector's reads, writes (COPY, insert, extended, binary) and
-  *   incremental migrations end to end.
+  *   connector's reads, writes (direct and staged COPY, text and binary
+  *   framing, per-partition atomicity) and incremental migrations end
+  *   to end.
   *
   *   NOT verifiable where the `vector` extension is not installed: the
   *   `vector` type itself — covered by unit/property/oracle gates, with
@@ -146,6 +147,61 @@ class PgLiveWireSpec extends SparkSpec {
     Map("host" -> "127.0.0.1", "port" -> server.get.port.toString,
       "protocol" -> "wire", "database" -> "postgres", "user" -> "postgres") ++ extra
 
+  private val framings = Seq("text" -> Seq.empty[(String, String)],
+    "binary" -> Seq("data_format" -> "binary"))
+
+  private def canonical(rows: Seq[(String, Seq[Float], Map[String, String])]) =
+    rows.toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
+      graft.model.Canonical.METADATA)
+
+  /** `n` canonical rows `k<i>` in two partitions, rows [0, n/2) and
+    * [n/2, n), ~0.5 KB each, metadata naming `version`. Row `bad`, when
+    * given, carries a NUL in its id: PostgreSQL text cannot hold one, so
+    * encoding that row fails its partition's COPY mid-stream. */
+  private def twoPartitions(n: Int, version: Int, bad: Option[Int] = None) =
+    spark.sparkContext.parallelize((0 until n).map { i =>
+      (if (bad.contains(i)) s"k$i\u0000" else s"k$i",
+        Seq.tabulate(64)(j => version + j + i / 1000f), Map("v" -> version.toString))
+    }, 2).toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
+      graft.model.Canonical.METADATA)
+
+  private def causedBy(e: Throwable, fragment: String): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(fragment))
+
+  /** Seeded strings over the full hazard palette — quotes, backslashes,
+    * COPY framing chars, \N lookalikes, unicode, placeholder lookalikes
+    * (NUL excluded: rejected by contract); value 0 is empty. */
+  private def fuzzValues: Seq[String] = {
+    val rnd = new scala.util.Random(181818L)
+    val palette = "ab'\"\\\t\n\r$12;—é中,{}%_N".toCharArray
+    (0 until 120).map { i =>
+      if (i == 0) "" else
+        (0 until (1 + rnd.nextInt(24))).map(_ => palette(rnd.nextInt(palette.length))).mkString
+    }
+  }
+
+  /** Writes `values` through the connector — each value inside its row's
+    * id (raw through the COPY framing) and as its metadata value — into a
+    * fresh table, direct (`recreate`) or staged, and asserts every value
+    * reads back byte-identical. */
+  private def assertConnectorRoundTrip(values: Seq[String], conn: Map[String, String],
+                                       table: String, recreate: Boolean): Unit = {
+    val pgv = ConnectorRegistry("pgvector")
+    live().query(s"DROP TABLE IF EXISTS $table")
+    val rows = values.zipWithIndex.map { case (v, i) =>
+      (s"$i:$v", Seq(i.toFloat, -0.5f), Map("v" -> v)) }
+    val load = graft.config.LoadSpec(collection = table, recreate = recreate)
+    assert(pgv.write(canonical(rows), conn, load).written == values.length)
+    val back = pgv.readBack(spark, conn, load).collect()
+      .map(r => r.getString(0) -> (r.getSeq[Float](1), r.getMap[String, String](2)("v"))).toMap
+    assert(back.size == values.length, s"$table: ${back.size} rows")
+    rows.foreach { case (id, vec, meta) =>
+      assert(back.get(id).contains((vec, meta("v"))),
+        s"$table mangled ${id.toSeq}: ${back.get(id)}")
+    }
+  }
+
   test("connector write + exists + readBack end-to-end over protocol=wire") {
     live()
     val pgv = ConnectorRegistry("pgvector")
@@ -189,20 +245,24 @@ class PgLiveWireSpec extends SparkSpec {
       .head().getSeq[Float](1) == Seq(8f, 8f), "upsert kept the stale version")
   }
 
-  test("write_mode=insert: the multi-VALUES upsert path stays live alongside COPY") {
+  test("staged COPY upsert replaces changed ids and keeps the others") {
     live()
     val pgv = ConnectorRegistry("pgvector")
-    val conn = wireConn("write_mode" -> "insert")
-    val load = graft.config.LoadSpec(collection = "wire_ins", recreate = true)
-    def one(vec: Seq[Float]) = Seq(("x", vec, Map("k" -> "it's")))
-      .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
-        graft.model.Canonical.METADATA)
-    assert(pgv.write(one(Seq(1f, 2f)), conn, load).written == 1)
-    assert(pgv.write(one(Seq(3f, 4f)), conn, load.copy(recreate = false)).written == 1)
-    val back = pgv.readBack(spark, conn, load)
-    assert(back.count() == 1, "INSERT-path upsert duplicated an id")
-    assert(back.head().getSeq[Float](1) == Seq(3f, 4f))
-    assert(back.head().getMap[String, String](2).toMap == Map("k" -> "it's"))
+    val load = graft.config.LoadSpec(collection = "wire_upsert", recreate = true)
+    val first = Seq(("x", Seq(1f, 2f), Map("k" -> "it's")),
+      ("y", Seq(3f, 4f), Map("k" -> "kept")), ("z", Seq(5f, 6f), Map.empty[String, String]))
+    assert(pgv.write(canonical(first), wireConn(), load).written == 3)
+    // staged: "x" changes, "w" is new, "y" and "z" are not in the frame
+    val second = Seq(("x", Seq(7f, 8f), Map("k" -> "it's new")),
+      ("w", Seq(9f, 9f), Map("k" -> "w")))
+    assert(pgv.write(canonical(second), wireConn(), load.copy(recreate = false)).written == 2)
+    val back = pgv.readBack(spark, wireConn(), load).collect()
+      .map(r => r.getString(0) -> (r.getSeq[Float](1), r.getMap[String, String](2).toMap))
+    assert(back.length == 4 && back.map(_._1).distinct.length == 4,
+      s"the staged upsert duplicated or lost an id: ${back.toSeq}")
+    assert(back.toMap == Map(
+      "x" -> (Seq(7f, 8f), Map("k" -> "it's new")), "w" -> (Seq(9f, 9f), Map("k" -> "w")),
+      "y" -> (Seq(3f, 4f), Map("k" -> "kept")), "z" -> (Seq(5f, 6f), Map.empty[String, String])))
   }
 
   test("COPY write path: framing characters in values survive the text-format escapes") {
@@ -251,144 +311,101 @@ class PgLiveWireSpec extends SparkSpec {
       Seq(Some("a\tb"), Some("v1"), None), back.rows)
   }
 
-  test("extended query protocol: params carry hostile values with no escaping surface") {
-    val c = live()
-    c.query("CREATE TABLE ext_t (a TEXT, b TEXT)")
-    // every classic injection/framing shape travels as a Bind PARAMETER —
-    // the SQL text never contains it, so nothing needs quoting
+  test("binary staged COPY carries hostile values with no escaping surface") {
+    live()
+    // every classic injection/framing shape, inside the id (raw through
+    // the binary framing: length-prefixed, never escaped) and as the
+    // metadata value; the SQL text never contains any of them
     val hostile = Seq(
-      "it's'; DROP TABLE ext_t; --", "back\\slash", "line1\nline2",
+      "it's'; DROP TABLE wire_hostile; --", "back\\slash", "line1\nline2",
       "tab\there", "$1 $2 lookalike", "\\N", "héllo — ünïcode", "")
-    hostile.zipWithIndex.foreach { case (v, i) =>
-      val r = c.execParams("INSERT INTO ext_t VALUES ($1, $2)",
-        Seq(Some(s"k$i"), Some(v)))
-      assert(r.rowCount == 1, r.tags)
-    }
-    c.execParams("INSERT INTO ext_t VALUES ($1, $2)", Seq(Some("knull"), None))
-    val back = c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some("k0")))
-    assert(back.columns == Seq("b") && back.rows.head.head == hostile.head, back.rows)
-    hostile.zipWithIndex.foreach { case (v, i) =>
-      assert(c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some(s"k$i")))
-        .rows.head.head == v, s"param round-trip mangled: $v")
-    }
-    assert(c.execParams("SELECT b FROM ext_t WHERE a = $1", Seq(Some("knull")))
-      .rows.head.head == null)
+    assertConnectorRoundTrip(hostile, wireConn("data_format" -> "binary"),
+      "wire_hostile", recreate = false)
     // the table survived every "injection" — the values were data
-    // (8 hostile rows + the NULL-param row)
-    assert(c.query("SELECT count(*) FROM ext_t").rows.head.head == "9")
-    // error shape: bad SQL through Parse fails typed, session survives
-    val e = intercept[PgWireException](c.execParams("SELEKT 1"))
-    assert(e.sqlState == "42601", s"${e.sqlState}: ${e.getMessage}")
-    assert(c.query("SELECT 3 + 3").rows.head.head == "6")
+    assert(live().query("SELECT count(*) FROM wire_hostile").rows.head.head == "8")
+    // a NULL vector and an empty metadata map ride the same stage
+    val pgv = ConnectorRegistry("pgvector")
+    val load = graft.config.LoadSpec(collection = "wire_hostile")
+    pgv.write(canonical(Seq(("knull", null, Map.empty[String, String]))),
+      wireConn("data_format" -> "binary"), load)
+    val n = pgv.readBack(spark, wireConn(), load)
+      .filter(col(graft.model.Canonical.ID) === "knull").head()
+    assert(n.isNullAt(1) && n.getMap[String, String](2).isEmpty, n)
   }
 
-  test("fuzz: generated strings round-trip both value paths (Bind params, COPY framing)") {
+  test("fuzz: generated strings round-trip text COPY framing, client, direct and staged") {
     val c = live()
     import graft.connectors.pgwire.PgWireClient.copyField
-    // seeded so a failure reproduces; palette is the full hazard set —
-    // quotes, backslashes, COPY framing chars, \N lookalikes, unicode,
-    // placeholder lookalikes (NUL excluded: rejected by contract)
-    val rnd = new scala.util.Random(181818L)
-    val palette = "ab'\"\\\t\n\r$12;—é中,{}%_N".toCharArray
-    val values = (0 until 120).map { i =>
-      if (i == 0) "" else
-        (0 until (1 + rnd.nextInt(24))).map(_ => palette(rnd.nextInt(palette.length))).mkString
-    }
-    c.query("CREATE TABLE fuzz_params (k INT, v TEXT); " +
-      "CREATE TABLE fuzz_copy (k INT, v TEXT)")
-    values.zipWithIndex.foreach { case (v, i) =>
-      c.execParams("INSERT INTO fuzz_params VALUES ($1, $2)",
-        Seq(Some(i.toString), Some(v)))
-    }
+    val values = fuzzValues
+    c.query("CREATE TABLE fuzz_copy (k INT, v TEXT)")
     c.copyIn("COPY fuzz_copy FROM STDIN",
       values.zipWithIndex.iterator.map { case (v, i) => s"$i\t${copyField(v)}" })
-    for (table <- Seq("fuzz_params", "fuzz_copy")) {
-      val got = c.query(s"SELECT k, v FROM $table ORDER BY k").rows
-        .map(r => r(0).toInt -> r(1)).toMap
-      values.zipWithIndex.foreach { case (v, i) =>
-        // COPY maps the empty-string field '' to '' (only \N is NULL);
-        // both paths must return the value byte-identical
-        assert(got(i) == v,
-          s"$table mangled value $i: ${got(i).toSeq} != ${v.toSeq}")
-      }
+    val got = c.query("SELECT k, v FROM fuzz_copy ORDER BY k").rows
+      .map(r => r(0).toInt -> r(1)).toMap
+    values.zipWithIndex.foreach { case (v, i) =>
+      // COPY maps the empty-string field '' to '' (only \N is NULL)
+      assert(got(i) == v, s"fuzz_copy mangled value $i: ${got(i).toSeq} != ${v.toSeq}")
     }
+    assertConnectorRoundTrip(values, wireConn(), "fuzz_direct", recreate = true)
+    assertConnectorRoundTrip(values, wireConn(), "fuzz_staged", recreate = false)
   }
 
-  test("BINARY fuzz: COPY binary + binary Bind params round-trip the text " +
-    "fuzz population byte-identically with the text paths") {
+  test("BINARY fuzz: binary COPY framing round-trips the text fuzz population, " +
+    "client, direct and staged") {
     val c = live()
     import graft.connectors.pgwire.PgBinary
-    // SAME seed and palette as the text fuzz test: the binary paths must
-    // land the identical 120-value population — framing chars included,
-    // with NO escaping pass at all (binary length-prefixes everything)
-    val rnd = new scala.util.Random(181818L)
-    val palette = "ab'\"\\\t\n\r$12;—é中,{}%_N".toCharArray
-    val values = (0 until 120).map { i =>
-      if (i == 0) "" else
-        (0 until (1 + rnd.nextInt(24))).map(_ => palette(rnd.nextInt(palette.length))).mkString
-    }
-    c.query("CREATE TABLE fuzzb_copy (k INT, v TEXT); " +
-      "CREATE TABLE fuzzb_params (k INT, v TEXT)")
+    // SAME population as the text fuzz test: the binary framing must land
+    // it identically — framing chars included, with NO escaping pass at
+    // all (binary length-prefixes everything)
+    val values = fuzzValues
+    c.query("CREATE TABLE fuzzb_copy (k INT, v TEXT)")
     // binary COPY: int4 binary key + raw-UTF-8 text field per tuple
     val r = c.copyInBinary("COPY fuzzb_copy (k, v) FROM STDIN WITH (FORMAT binary)",
       values.zipWithIndex.iterator.map { case (v, i) =>
         Array(PgBinary.int4Send(i), PgBinary.textSend(v))
       })
     assert(r.rowCount == values.length, r.tags)
-    // binary Bind parameters, pipelined through a named statement
-    c.prepare("fuzzb_ins", "INSERT INTO fuzzb_params VALUES ($1, $2)")
+    val got = c.query("SELECT k, v FROM fuzzb_copy ORDER BY k").rows
+      .map(r => r(0).toInt -> r(1)).toMap
+    assert(got.size == values.length, s"fuzzb_copy: ${got.size} rows")
     values.zipWithIndex.foreach { case (v, i) =>
-      c.bindExecRaw("fuzzb_ins",
-        Seq(Some(PgBinary.int4Send(i)), Some(PgBinary.textSend(v))), Seq(1, 1))
+      assert(got(i) == v, s"fuzzb_copy mangled value $i: ${got(i).toSeq} != ${v.toSeq}")
     }
-    c.syncBatch()
-    for (table <- Seq("fuzzb_copy", "fuzzb_params")) {
-      val got = c.query(s"SELECT k, v FROM $table ORDER BY k").rows
-        .map(r => r(0).toInt -> r(1)).toMap
-      assert(got.size == values.length, s"$table: ${got.size} rows")
-      values.zipWithIndex.foreach { case (v, i) =>
-        assert(got(i) == v,
-          s"$table mangled value $i: ${got(i).toSeq} != ${v.toSeq}")
-      }
-    }
+    val bin = wireConn("data_format" -> "binary")
+    assertConnectorRoundTrip(values, bin, "fuzzb_direct", recreate = true)
+    assertConnectorRoundTrip(values, bin, "fuzzb_staged", recreate = false)
   }
 
-  test("binary result negotiation: whitelisted OIDs decode text-exactly, " +
-    "float/numeric stay server-rendered text") {
+  test("a binary-framed write reads back byte-identically through the text scan") {
     val c = live()
-    import graft.connectors.pgwire.PgBinary
-    c.query("CREATE TABLE bin_read_t (i8 BIGINT, i4 INT, i2 SMALLINT, " +
-      "b BOOLEAN, t TEXT, f8 DOUBLE PRECISION, n NUMERIC)")
-    c.query("INSERT INTO bin_read_t VALUES " +
-      "(9223372036854775807, -2147483648, 32767, true, 'tab\thére', " +
-      "0.30000000000000004, 1.500), " +
-      "(-1, 0, -32768, false, '', 1e300, -0.000001), " +
-      "(NULL, NULL, NULL, NULL, NULL, NULL, NULL)")
-    val sql = "SELECT i8, i4, i2, b, t, f8, n FROM bin_read_t ORDER BY i8 NULLS LAST"
-    c.prepare("bread", sql)
-    val desc = c.describeStatement("bread")
-    val exact = PgBinary.textExactOids(None)
-    // the negotiation splits exactly as designed: 5 binary, 2 text
-    assert(desc.map(_._2).take(5).forall(exact), desc)
-    assert(desc.drop(5).map(_._2).forall(!exact(_)), desc)
-    val formats = desc.map(d => if (exact(d._2)) 1 else 0)
-    val res = c.execPreparedRaw("bread", Nil, Nil, formats)
-    assert(res.formats == formats, s"server did not honor the formats: ${res.formats}")
-    val decoded = res.rows.map(_.zipWithIndex.map { case (cell, i) =>
-      if (cell == null) null
-      else if (res.formats(i) == 1) PgBinary.recvToText(res.oids(i), None, cell)
-      else new String(cell, java.nio.charset.StandardCharsets.UTF_8)
-    })
-    // byte-identical with the text-protocol rows — including the float
-    // and numeric columns, which deliberately rode format 0
-    assert(decoded == c.query(sql).rows, decoded)
+    val pgv = ConnectorRegistry("pgvector")
+    // float edge values the text rendering must carry exactly: ±0,
+    // subnormals, extremes, and a value with no short decimal form
+    val df = canonical(Seq(
+      ("a", Seq(-0.0f, 0.0f, Float.MinPositiveValue, Float.MaxValue, -1e-38f, 0.1f),
+        Map("t" -> "tab\thére", "q" -> "it's")),
+      ("b", Seq(1f / 3, -2.25f, 1e20f, -7f, 1e-7f, 3.4028235e38f), Map("k" -> "")),
+      ("c", null, Map.empty[String, String])))
+    val load = (t: String) => graft.config.LoadSpec(collection = t, recreate = true)
+    pgv.write(df, wireConn(), load("wire_fmt_text"))
+    pgv.write(df, wireConn("data_format" -> "binary"), load("wire_fmt_bin"))
+    // the server holds the same bytes either way...
+    def raw(t: String) = c.query(s"SELECT id, vector, metadata FROM $t ORDER BY id").rows
+    assert(raw("wire_fmt_bin") == raw("wire_fmt_text"), raw("wire_fmt_bin"))
+    // ...and the one read path decodes the binary-framed table bit-exactly
+    val want = df.collect().map(r => r.getString(0) ->
+      Option(r.getSeq[Float](1)).map(_.map(java.lang.Float.floatToIntBits))).toMap
+    val got = pgv.readBack(spark, wireConn(), load("wire_fmt_bin")).collect()
+      .map(r => r.getString(0) ->
+        Option(r.getSeq[Float](1)).map(_.map(java.lang.Float.floatToIntBits))).toMap
+    assert(got == want, got)
   }
 
-  test("face data_format=binary: direct-COPY write, staged binary upsert, " +
-    "and the negotiated binary read match the text path end to end") {
+  test("face data_format=binary: direct-COPY write and staged binary upsert " +
+    "match the text path end to end") {
     live()
     val pgv = ConnectorRegistry("pgvector")
-    val conn = wireConn("query_protocol" -> "extended", "data_format" -> "binary")
+    val conn = wireConn("data_format" -> "binary")
     val hostile = Map(
       "tab" -> "a\tb", "nl" -> "line1\nline2", "cr" -> "x\ry",
       "bs" -> "c:\\dir\\n not a newline", "nul_lookalike" -> "\\N",
@@ -418,14 +435,6 @@ class PgLiveWireSpec extends SparkSpec {
     assert(after.count() == 3, "staged binary upsert duplicated an id")
     assert(after.filter(col(graft.model.Canonical.ID) === "b")
       .head().getSeq[Float](1) == Seq(9f, 9f))
-    // and the binary extended-protocol upsert (write_mode=insert) too
-    val connIns = wireConn("query_protocol" -> "extended",
-      "data_format" -> "binary", "write_mode" -> "insert")
-    assert(pgv.write(one(Seq(11f, 12f)), connIns, load.copy(recreate = false)).written == 1)
-    val after2 = pgv.readBack(spark, connIns, load)
-    assert(after2.count() == 3)
-    assert(after2.filter(col(graft.model.Canonical.ID) === "b")
-      .head().getSeq[Float](1) == Seq(11f, 12f))
   }
 
   test("direct COPY (recreate) and staged COPY (append onto empty) converge " +
@@ -475,72 +484,78 @@ class PgLiveWireSpec extends SparkSpec {
     assert(c.query("SELECT 2 + 2").rows.head.head == "4")
   }
 
-  test("extended-protocol pipelined batch is atomic: one bad row rolls back the batch") {
-    val c = live()
-    c.query("CREATE TABLE ext_atomic (id TEXT, n INT CHECK (n < 100))")
-    c.prepare("ins_a", "INSERT INTO ext_atomic VALUES ($1, $2)")
-    // batch of 3 with the MIDDLE row violating the check: everything
-    // between Syncs is one implicit transaction — the server skips the
-    // rest after the error and rolls back, so NONE of the 3 land
-    c.bindExec("ins_a", Seq(Some("a"), Some("1")))
-    c.bindExec("ins_a", Seq(Some("b"), Some("999")))
-    c.bindExec("ins_a", Seq(Some("c"), Some("2")))
-    val e = intercept[PgWireException](c.syncBatch())
-    assert(e.sqlState == "23514", s"${e.sqlState}: ${e.getMessage}") // check_violation
-    assert(c.query("SELECT count(*) FROM ext_atomic").rows.head.head == "0",
-      "a failed pipeline batch left partial rows — batch is not atomic")
-    // a clean batch through the same prepared statement lands whole
-    c.bindExec("ins_a", Seq(Some("a"), Some("1")))
-    c.bindExec("ins_a", Seq(Some("c"), Some("2")))
-    c.syncBatch()
-    assert(c.query("SELECT count(*) FROM ext_atomic").rows.head.head == "2")
-  }
-
-  test("extended write with a LARGE batch_size completes (pipeline deadlock fix)") {
+  test("direct COPY is atomic per partition: a bad row past the first CopyData " +
+    "chunk lands zero rows of its partition") {
     live()
     val pgv = ConnectorRegistry("pgvector")
-    // 8000 rows in ONE configured batch = ~16k queued Bind/Execute pairs
-    // pre-fix: enough unread per-statement responses to fill both socket
-    // buffers and deadlock the write. The chunked-Sync fix bounds unread
-    // responses per window; run on a watchdog thread so a regression
-    // fails the test instead of hanging the suite.
-    val df = (0 until 8000).map(i => (s"id$i", Seq(i.toFloat, 1f), Map("k" -> i.toString)))
-      .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
-        graft.model.Canonical.METADATA)
-    val conn = wireConn("write_mode" -> "insert", "query_protocol" -> "extended")
-    val load = graft.config.LoadSpec(collection = "wire_bigbatch",
-      recreate = true, batchSize = 8000)
+    for ((framing, extra) <- framings) {
+      val table = s"wire_direct_fault_$framing"
+      // partition 1 is rows 400-799; row 700 sits ~150 KB into its
+      // stream, so earlier CopyData chunks already reached the server
+      val e = intercept[Exception](pgv.write(twoPartitions(800, 1, bad = Some(700)),
+        wireConn(extra: _*), graft.config.LoadSpec(collection = table, recreate = true)))
+      assert(causedBy(e, "NUL"), s"$framing: $e")
+      val ids = live().query(s"SELECT id FROM $table").rows.map(_.head)
+      assert(ids.forall(_.drop(1).toInt < 400),
+        s"$framing: rows of the failed partition landed")
+      // the failed job may cancel the sibling partition: it lands whole
+      // or not at all, never in part
+      assert(ids.isEmpty || ids.sorted == (0 until 400).map(i => s"k$i").sorted,
+        s"$framing: a partition landed ${ids.length} of its 400 rows")
+    }
+  }
+
+  test("LARGE partition: one COPY spanning many CopyData chunks completes") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    // 8000 rows in ONE partition, ~1.4 MB of COPY text: a couple dozen
+    // 64 KiB CopyData frames on one statement. Run on a watchdog thread
+    // so a stalled stream fails the test instead of hanging the suite.
+    val df = canonical((0 until 8000).map(i =>
+      (s"id$i", Seq.tabulate(16)(j => i + j / 16f), Map("k" -> i.toString)))).coalesce(1)
+    val load = graft.config.LoadSpec(collection = "wire_bigpart")
     @volatile var written = -1L
     @volatile var err: Throwable = null
     val t = new Thread(() =>
-      try written = pgv.write(df, conn, load).written
+      try written = pgv.write(df, wireConn(), load).written
       catch { case e: Throwable => err = e })
     t.setDaemon(true)
     t.start()
     t.join(180000)
     assert(err == null, s"write failed: $err")
     assert(written == 8000,
-      if (t.isAlive) "extended-pipeline write DEADLOCKED (watchdog expired)"
-      else s"written=$written")
-    assert(pgv.readBack(spark, wireConn(), load).count() == 8000)
+      if (t.isAlive) "the COPY stream stalled (watchdog expired)" else s"written=$written")
+    val bytes = live().query("SELECT sum(octet_length(id) + octet_length(vector) + " +
+      "octet_length(metadata)) FROM wire_bigpart").rows.head.head.toLong
+    assert(bytes > 16 * 65536, s"only $bytes bytes: the stream never spanned many chunks")
+    val back = pgv.readBack(spark, wireConn(), load)
+    assert(back.count() == 8000)
+    assert(back.filter(col(graft.model.Canonical.ID) === "id7999").head()
+      .getSeq[Float](1) == Seq.tabulate(16)(j => 7999 + j / 16f))
   }
 
-  test("extended batch atomicity holds ACROSS chunked Syncs (explicit transaction)") {
-    val c = live()
-    c.query("CREATE TABLE ext_chunk (id TEXT, n INT CHECK (n < 100))")
-    c.prepare("ins_c", "INSERT INTO ext_chunk VALUES ($1, $2)")
-    // the face's deadlock fix splits one batch into several Sync windows
-    // inside BEGIN...COMMIT; a failure in a LATER window must roll back
-    // rows already synced in EARLIER windows of the same batch
-    c.query("BEGIN")
-    c.bindExec("ins_c", Seq(Some("a"), Some("1")))
-    c.syncBatch() // window 1: fine (Sync inside BEGIN does not commit)
-    c.bindExec("ins_c", Seq(Some("b"), Some("999")))
-    val e = intercept[PgWireException](c.syncBatch()) // window 2: violates
-    assert(e.sqlState == "23514", s"${e.sqlState}: ${e.getMessage}")
-    c.query("ROLLBACK")
-    assert(c.query("SELECT count(*) FROM ext_chunk").rows.head.head == "0",
-      "an earlier Sync window's rows survived the batch rollback")
+  test("staged COPY is atomic per partition: a bad row past the first CopyData " +
+    "chunk leaves the target's earlier rows untouched") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    for ((framing, extra) <- framings) {
+      val load = graft.config.LoadSpec(collection = s"wire_staged_fault_$framing",
+        recreate = true)
+      assert(pgv.write(twoPartitions(800, 1), wireConn(extra: _*), load).written == 800)
+      // version 2 of every id; partition 1 fails on row 700
+      val e = intercept[Exception](pgv.write(twoPartitions(800, 2, bad = Some(700)),
+        wireConn(extra: _*), load.copy(recreate = false)))
+      assert(causedBy(e, "NUL"), s"$framing: $e")
+      // one snapshot: the sibling partition may still be publishing
+      val rows = live().query(s"SELECT id, metadata FROM ${load.collection}").rows
+      val version = rows.map(r => r.head -> r(1)).toMap
+      assert(rows.length == 800 && version.size == 800,
+        s"$framing: ${rows.length} rows over ${version.size} ids")
+      (400 until 800).foreach(i => assert(version(s"k$i").contains("\"1\""),
+        s"$framing: the failed partition replaced k$i: ${version(s"k$i")}"))
+      assert((0 until 400).map(i => version(s"k$i")).distinct.length == 1,
+        s"$framing: the sibling partition published in part")
+    }
   }
 
   test("copyIn: an iterator failure mid-stream aborts via CopyFail, session survives") {
@@ -571,11 +586,12 @@ class PgLiveWireSpec extends SparkSpec {
     assert(e.getMessage.contains("staging table"), e.getMessage)
   }
 
-  test("query_protocol=extended: connector write (insert mode) + partitioned read e2e") {
+  test("partitioned read after a staged COPY write e2e") {
     live()
     val pgv = ConnectorRegistry("pgvector")
-    val conn = wireConn("write_mode" -> "insert", "query_protocol" -> "extended")
-    val load = graft.config.LoadSpec(collection = "wire_ext", recreate = true)
+    val conn = wireConn()
+    // recreate=false onto a table that does not exist yet: staged COPY
+    val load = graft.config.LoadSpec(collection = "wire_staged_read")
     val df = Seq(
       ("a", Seq(1.5f, -2.25f), Map("k" -> "v'--; DROP TABLE x", "u" -> "héllo")),
       ("b", Seq(0.001f, 42f), Map("k" -> "2")),
@@ -589,21 +605,23 @@ class PgLiveWireSpec extends SparkSpec {
     assert(back(0).getMap[String, String](2).toMap ==
       Map("k" -> "v'--; DROP TABLE x", "u" -> "héllo"))
     assert(back(0).getSeq[Float](1) == Seq(1.5f, -2.25f))
-    // the upsert contract holds on the parameterized path too
+    // a second staged write replaces "a" in place
     def one(vec: Seq[Float]) = Seq(("a", vec, Map("k" -> "9")))
       .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
         graft.model.Canonical.METADATA)
-    pgv.write(one(Seq(8f, 8f)), conn, load.copy(recreate = false))
+    pgv.write(one(Seq(8f, 8f)), conn, load)
     val after = pgv.readBack(spark, conn, load)
-    assert(after.count() == 3, "extended-path upsert duplicated an id")
+    assert(after.count() == 3, "staged upsert duplicated an id")
     assert(after.filter(col(graft.model.Canonical.ID) === "a")
       .head().getSeq[Float](1) == Seq(8f, 8f))
-    // partitioned read through Parse/Bind/Execute per slice
+    // partitioned read, one Simple Query scan per slice
     val sliced = pgv.read(spark,
       conn ++ Map("partitions" -> "3", "lower_bound" -> "0", "upper_bound" -> "10"),
-      QuerySpec(collection = "wire_ext"))
+      QuerySpec(collection = "wire_staged_read", metadataColumns = Seq("metadata")))
     assert(sliced.rdd.getNumPartitions == 4) // 3 numeric + text catch-all
-    assert(sliced.count() == 3)
+    assert(sliced.orderBy(graft.model.Canonical.ID).collect()
+      .map(r => r.getString(0) -> r.getMap[String, String](2)("metadata")).toSeq ==
+      Seq("a" -> """{"k":"9"}""", "b" -> """{"k":"2"}""", "c" -> "{}"))
   }
 
   test("partitioned wire read: declared id bounds split into range slices") {

@@ -106,29 +106,35 @@ class PgVectorSpec extends SparkSpec {
       val base = Map("host" -> "127.0.0.1", "port" -> listener.getLocalPort.toString,
         "database" -> "vectordb")
       val pgv = ConnectorRegistry("pgvector")
+      // each block with the words its failure must name: the addressing
+      // keys, or the one data path a data-path key asked to leave
+      val address = Seq("host", "port", "database")
       val bad = Seq(
-        base + ("url" -> s"jdbc:postgresql://127.0.0.1:${listener.getLocalPort}/vectordb"),
-        (base - "database") + ("dbname" -> "vectordb"),
-        base + ("protocol" -> "wire") + ("dbname" -> "vectordb"),
-        base + ("protocol" -> "jdbc"))
+        base + ("url" -> s"jdbc:postgresql://127.0.0.1:${listener.getLocalPort}/vectordb") -> address,
+        (base - "database") + ("dbname" -> "vectordb") -> address,
+        base + ("protocol" -> "wire") + ("dbname" -> "vectordb") -> address,
+        base + ("protocol" -> "jdbc") -> address,
+        base + ("write_mode" -> "insert") -> Seq("write_mode", "insert", "COPY"),
+        base + ("query_protocol" -> "extended") -> Seq("query_protocol", "extended", "Simple Query"))
       val q = QuerySpec(collection = "items", idColumn = "id", vectorColumn = Some("embedding"))
       val load = graft.config.LoadSpec(collection = "items")
       val df = Seq(("1", Seq(1f, 2f), Map.empty[String, String]))
         .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR, graft.model.Canonical.METADATA)
-      for (conn <- bad; (verb, call) <- Seq[(String, () => Any)](
+      for ((conn, words) <- bad; (verb, call) <- Seq[(String, () => Any)](
           "exists" -> (() => pgv.exists(spark, conn, "items")),
           "schemaInfo" -> (() => pgv.schemaInfo(spark, conn, "items")),
           "read" -> (() => pgv.read(spark, conn, q)),
           "readBack" -> (() => pgv.readBack(spark, conn, load)),
           "write" -> (() => pgv.write(df, conn, load)))) {
         val e = intercept[IllegalArgumentException](call())
-        Seq("host", "port", "database").foreach(k =>
+        words.foreach(k =>
           assert(e.getMessage.contains(k), s"$verb on $conn: ${e.getMessage}"))
       }
       Thread.sleep(100) // a dial in flight would land in this window
       assert(accepted.get() == 0, "a rejected connection block still dialed the server")
       // the accepted spellings still reach the server (which hangs up)
-      intercept[Exception](pgv.exists(spark, base + ("protocol" -> "wire"), "items"))
+      intercept[Exception](pgv.exists(spark, base + ("protocol" -> "wire") +
+        ("write_mode" -> "copy") + ("query_protocol" -> "simple"), "items"))
       assert(accepted.get() >= 1)
     } finally listener.close()
   }
