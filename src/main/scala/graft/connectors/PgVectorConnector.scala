@@ -1,24 +1,99 @@
 package graft.connectors
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Cast, GenericInternalRow, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.config.{LoadSpec, QuerySpec}
-import graft.connectors.pgwire.{PgBinary, PgWireClient, PgWireException}
+import graft.connectors.pgwire.{DataRow, PgBinary, PgWireClient, PgWireException}
 import graft.model.Canonical
 
 /** pgvector text codec: `vector` columns travel as text `[x,y,z]`
   * (the same representation the reference round-trips:
   * `list(row[1])` on extract `adapters/pgvector.py:120`, `'[...]'::vector`
-  * literals on load `adapters/pgvector.py:213-218`). Pure column
-  * expressions — codegen'd, no UDF. */
+  * literals on load `adapters/pgvector.py:213-218`). The column
+  * expressions are codegen'd, no UDF; the pgvector scan decodes the
+  * same text from its wire bytes ([[vectorFromText]]). */
 object PgVectorCodec {
-  /** `'[0.1,0.2]'` → array<float>; null/empty-safe. */
+  /** `'[0.1,0.2]'` → array<float>; null/empty-safe. A column expression,
+    * for text that is already in a DataFrame (a csv file's vectors). */
   def textToVector(c: Column): Column =
     when(c.isNull || length(trim(c)) === 0, lit(null).cast(ArrayType(FloatType)))
       .otherwise(transform(
         split(regexp_replace(trim(c), "^\\[|\\]$", ""), ","),
         x => trim(x).cast("float")))
+
+  /** [[textToVector]] of one field's UTF-8 bytes, decoded straight into
+    * Catalyst array data. Each step is the column expression's own: null
+    * when the field is empty once spaces are trimmed; then one leading
+    * `[` and one trailing `]` go (the regex's `$` also matches before a
+    * final line terminator); the rest splits on every `,`; and each token
+    * becomes a float exactly as the non-ANSI string cast makes it —
+    * `Float.parseFloat`, then Spark's `inf`/`infinity`/`nan` literals,
+    * else a null element. */
+  def vectorFromText(b: Array[Byte], off: Int, len: Int): ArrayData = {
+    var arr = b
+    var s = off
+    var e = off + len
+    while (s < e && arr(s) == ' ') s += 1
+    while (e > s && arr(e - 1) == ' ') e -= 1
+    if (s == e) return null
+    if (arr(s) == '[') s += 1
+    val close = e - 1 - terminatorBytes(arr, s, e)
+    if (close >= s && arr(close) == ']') {
+      if (close == e - 1) e -= 1
+      else { // "]" before a final line terminator: the terminator stays
+        arr = java.util.Arrays.copyOfRange(arr, s, e)
+        System.arraycopy(arr, close - s + 1, arr, close - s, e - close - 1)
+        e = e - s - 1
+        s = 0
+      }
+    }
+    var n = 1
+    var i = s
+    while (i < e) { if (arr(i) == ',') n += 1; i += 1 }
+    val out = new Array[Float](n)
+    var nulls: java.util.BitSet = null
+    var from = s
+    var k = 0
+    while (k < n) {
+      var to = from
+      while (to < e && arr(to) != ',') to += 1
+      val token = new String(arr, from, to - from, UTF_8)
+      try out(k) = java.lang.Float.parseFloat(token)
+      catch {
+        case _: NumberFormatException =>
+          Cast.processFloatingPointSpecialLiterals(token, true) match {
+            case f: java.lang.Float => out(k) = f
+            case _ =>
+              if (nulls == null) nulls = new java.util.BitSet(n)
+              nulls.set(k)
+          }
+      }
+      from = to + 1
+      k += 1
+    }
+    if (nulls == null) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(j => if (nulls.get(j)) null else out(j)))
+  }
+
+  /** Byte length of the line terminator `[s, e)` ends with — what
+    * java.util.regex's `$` may stand before: `\r\n`, `\n`, `\r`,
+    * U+0085, U+2028 or U+2029 in UTF-8 — or 0. */
+  private def terminatorBytes(b: Array[Byte], s: Int, e: Int): Int = {
+    def endsWith(tail: Int*): Boolean = e - s >= tail.length &&
+      tail.indices.forall(j => b(e - tail.length + j) == tail(j).toByte)
+    if (endsWith('\r', '\n')) 2
+    else if (endsWith('\n') || endsWith('\r')) 1
+    else if (endsWith(0xc2, 0x85)) 2
+    else if (endsWith(0xe2, 0x80, 0xa8) || endsWith(0xe2, 0x80, 0xa9)) 3
+    else 0
+  }
 
   /** array<float|double> → `'[0.1,0.2]'` text literal. */
   def vectorToText(c: Column): Column =
@@ -33,12 +108,15 @@ object PgVectorCodec {
   * Connection keys: `host`/`port`/`database`/`user`/`password`, `ssl`
   * (`true`/`require`/`on`) + optional `ssl_root_cert` PEM pinning
   * (absent means the platform trust store), `partitions`/`lower_bound`/
-  * `upper_bound` for range-sliced reads, and `data_format=binary`
+  * `upper_bound` for range-sliced source reads, and `data_format=binary`
   * (binary COPY framing on writes; reads are Simple Query text either
   * way). Auth = trust, cleartext, MD5 or SCRAM-SHA-256. `protocol=wire`,
   * `write_mode=copy` and `query_protocol=simple` are accepted for older
   * configs; each names the only path there is. */
 object PgVectorConnector {
+
+  /** Suffix of the table a `recreate` load builds before swapping it in. */
+  private val BuildSuffix = "_graft_build"
 
   /** `data_format=binary`: COPY streams `FORMAT binary` framing. A real
     * `VECTOR(d)` column crosses as float4s — 4 bytes/component vs ~9-13
@@ -93,6 +171,34 @@ object PgVectorConnector {
     val c = ep.connect()
     try f(c) finally c.close()
   }
+
+  /** One slice's rows, streamed on a connection of its own: closed when
+    * the rows run out, or when the task ends if they never do (a `limit`
+    * stops pulling, a failure stops the task). */
+  private def stream(ep: PgEndpoint, sql: String): Iterator[DataRow] = {
+    val c = ep.connect()
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => c.close()))
+    val rows = c.scan(sql)
+    new Iterator[DataRow] {
+      def hasNext: Boolean = rows.hasNext || { c.close(); false }
+      def next(): DataRow = rows.next()
+    }
+  }
+
+  /** A scanned row as a Catalyst row: TEXT fields become `UTF8String`s
+    * over the frame's own bytes, and field `vecAt` (-1: none) is parsed
+    * into a float array. */
+  private def decode(r: DataRow, vecAt: Int): InternalRow = {
+    val values = new Array[Any](r.size)
+    var i = 0
+    while (i < values.length) {
+      if (!r.isNull(i)) values(i) =
+        if (i == vecAt) PgVectorCodec.vectorFromText(r.bytes, r.offset(i), r.length(i))
+        else UTF8String.fromBytes(r.bytes, r.offset(i), r.length(i))
+      i += 1
+    }
+    new GenericInternalRow(values)
+  }
 }
 
 /** pgvector connector over the documented PostgreSQL v3 wire protocol
@@ -104,20 +210,24 @@ object PgVectorConnector {
   *
   *  - Reads run the connector's pushdown SELECT ([[buildSelect]]: the
   *    filter/projection/limit the reference builds by string concat,
-  *    `adapters/pgvector.py:94-108`), one wire connection per Spark
-  *    partition, range-sliced on the id column when `partitions`/
-  *    `lower_bound`/`upper_bound` are declared — the scale upgrade over
-  *    the reference's single-connection fetch-all
-  *    (`adapters/pgvector.py:64-132`). `limit`/`offset` force a single
-  *    range (a per-partition LIMIT would multiply it).
+  *    `adapters/pgvector.py:94-108`), one streamed wire connection per
+  *    Spark partition whose rows decode straight into Catalyst rows
+  *    (the scan behind [[read]]). A source read is range-sliced on the
+  *    id column when `partitions`/`lower_bound`/`upper_bound` are
+  *    declared — the scale upgrade over the reference's
+  *    single-connection fetch-all (`adapters/pgvector.py:64-132`);
+  *    `limit`/`offset` force a single range (a per-partition LIMIT would
+  *    multiply it). The re-sync's [[readBack]] slices itself across
+  *    cores by `ctid` block ranges.
   *  - Writes land an (id TEXT, vector VECTOR(d), metadata TEXT) table. On
   *    an extension-less server the `VECTOR(d)` DDL fails with SQLSTATE
   *    42704 and the column falls back to TEXT with ONE loud warning —
   *    vectors travel in pgvector's text form (`'[x,y,z]'`) either way, so
-  *    the readBack codec decodes both. Every partition loads by ONE
-  *    `COPY … FROM STDIN` ([[write]]) and every write is an id-keyed
-  *    upsert, so the incremental migrator ships changed records here
-  *    instead of withholding them. */
+  *    the read decodes both. Every partition loads by ONE `COPY … FROM
+  *    STDIN` ([[write]]) and every write is an id-keyed upsert, so the
+  *    incremental migrator ships changed records here instead of
+  *    withholding them; a `recreate` load builds a new table and swaps
+  *    it in. */
 class PgVectorConnector extends VectorConnector {
   import PgVectorConnector._
 
@@ -148,10 +258,10 @@ class PgVectorConnector extends VectorConnector {
     s"SELECT $cols FROM ${ident(q.collection)}$where$limit$offset"
   }
 
-  /** Partitioned wire read: the pushdown SELECT per id-range slice (one
-    * wire connection per Spark partition), text-format rows decoded
-    * through [[PgVectorCodec]]. Without declared bounds — or with a
-    * limit/offset, which cannot split — ONE range.
+  /** Partitioned wire read: the pushdown SELECT per id-range slice, each
+    * streamed by [[scan]]. Without declared bounds — or with a
+    * limit/offset, which cannot split — ONE range, so a migration's
+    * source is read as one snapshot unless the config asks otherwise.
     *
     * TYPE-ADAPTIVE slicing (one catalog probe at plan time): a numeric
     * id column compares directly; a TEXT id column — which includes
@@ -170,14 +280,13 @@ class PgVectorConnector extends VectorConnector {
   override def read(spark: SparkSession, connection: Map[String, String],
                     query: QuerySpec): DataFrame = {
     val ep = endpoint(connection)
-    val cols = Seq(query.idColumn) ++ query.vectorColumn.toSeq ++ query.metadataColumns
     val ranged: Seq[QuerySpec] =
       (connection.get("partitions"), connection.get("lower_bound"),
         connection.get("upper_bound")) match {
         case (Some(n), Some(lo), Some(hi))
           if query.limit.isEmpty && query.offset.isEmpty && n.toInt > 1 =>
           val (nP, loL, hiL) = (n.toInt, lo.toLong, hi.toLong)
-          val idNumeric = describe(ep, query.collection).schema.fields
+          val idNumeric = withClient(ep)(describe(_, query.collection)).schema.fields
             .find(_.name == query.idColumn)
             .exists(f => f.dataType == LongType || f.dataType == DoubleType)
           val idc = query.idColumn
@@ -191,8 +300,6 @@ class PgVectorConnector extends VectorConnector {
           // excludes — so the numeric slices stay restricted to numeric
           // ids without relying on evaluation order.
           val castId = s"(CASE WHEN $digits THEN ($idc)::bigint END)"
-          def withPred(p: String) = query.copy(filter = Some(
-            query.filter.map(f => s"($f) AND ($p)").getOrElse(p)))
           val step = math.max(1L, (hiL - loL) / nP)
           // Spark-JDBC partition contract: lower_bound/upper_bound set the
           // STRIDE only — the first slice is unbounded below (and carries
@@ -203,26 +310,39 @@ class PgVectorConnector extends VectorConnector {
             val b = loL + (i + 1) * step
             val ref = if (idNumeric) idc else castId
             if (i == 0) // guard above requires nP > 1, so 0 != nP - 1
-              withPred(s"$ref < $b" +
+              withPred(query, s"$ref < $b" +
                 (if (idNumeric) s" OR $idc IS NULL" else ""))
-            else if (i == nP - 1) withPred(s"$ref >= $a")
-            else withPred(s"$ref >= $a AND $ref < $b")
+            else if (i == nP - 1) withPred(query, s"$ref >= $a")
+            else withPred(query, s"$ref >= $a AND $ref < $b")
           }
           if (idNumeric) slices
           // catch-all: non-numeric, >18-digit, AND NULL ids — `NOT (id ~ …)`
           // alone is NULL for a NULL id, which would drop the row
-          else slices :+ withPred(s"NOT ($digits) OR $idc IS NULL")
+          else slices :+ withPred(query, s"NOT ($digits) OR $idc IS NULL")
         case _ => Seq(query)
       }
-    val sqls = ranged.map(buildSelect)
-    val rdd = spark.sparkContext.parallelize(sqls, sqls.length).flatMap { sql =>
-      withClient(ep)(_.query(sql).rows.map(Row.fromSeq(_)))
-    }
-    val raw = spark.createDataFrame(rdd,
-      StructType(cols.map(StructField(_, StringType, nullable = true))))
-    val decoded = query.vectorColumn.foldLeft(raw)((df, v) =>
-      df.withColumn(v, PgVectorCodec.textToVector(col(v))))
-    Canonical.from(decoded, query.idColumn, query.vectorColumn, query.metadataColumns)
+    scan(spark, ep, query, ranged)
+  }
+
+  private def withPred(query: QuerySpec, p: String): QuerySpec =
+    query.copy(filter = Some(query.filter.map(f => s"($f) AND ($p)").getOrElse(p)))
+
+  /** One Spark partition per slice: each streams its pushdown SELECT on
+    * its own connection and decodes every `DataRow` straight into a
+    * Catalyst row — TEXT fields as `UTF8String`s over the frame's bytes,
+    * the vector field parsed into a float array — with no `Row`, no
+    * `String` per field and no second parsing pass. */
+  private def scan(spark: SparkSession, ep: PgEndpoint, query: QuerySpec,
+                   slices: Seq[QuerySpec]): DataFrame = {
+    val cols = Seq(query.idColumn) ++ query.vectorColumn.toSeq ++ query.metadataColumns
+    val vecAt = if (query.vectorColumn.isDefined) 1 else -1
+    val schema = StructType(cols.zipWithIndex.map { case (c, i) =>
+      StructField(c, if (i == vecAt) ArrayType(FloatType) else StringType) })
+    val sqls = slices.map(buildSelect)
+    val rows = spark.sparkContext.parallelize(sqls, sqls.length)
+      .flatMap(sql => stream(ep, sql).map(decode(_, vecAt)))
+    Canonical.from(GraftColumnBridge.internalCreateDataFrame(spark, rows, schema),
+      query.idColumn, query.vectorColumn, query.metadataColumns)
   }
 
   /** The write codec's inverse: [[write]] renames id/vector to the load
@@ -230,16 +350,43 @@ class PgVectorConnector extends VectorConnector {
     * `to_json` string column named `metadata` — a plain read would both
     * miss renamed columns and return an EMPTY map (hash-mismatching
     * every metadata-bearing row in the incremental migrator, which then
-    * re-ships the whole collection per run). */
+    * re-ships the whole collection per run).
+    *
+    * The read slices itself across cores by physical position: one
+    * driver query sizes the relation in blocks (B), and
+    * `min(defaultParallelism, B)` slices each scan a block range —
+    * `ctid < '(b,0)'::tid`, `ctid >= '(a,0)'::tid AND ctid <
+    * '(b,0)'::tid`, …, `ctid >= '(a,0)'::tid` — the first unbounded
+    * below and the last above, so they are disjoint and cover the table
+    * even if it grows after the probe. PostgreSQL 14+ runs each as a TID
+    * Range Scan; older servers filter a sequential scan, slower but
+    * still correct. A view or foreign table has no blocks and reads as
+    * one slice. The slices do not share a snapshot (neither do the
+    * declared-bounds slices of [[read]], nor Spark's JDBC reader): the
+    * re-sync's anti-join is duplicate-safe, and a row missed under a
+    * concurrent write re-ships as an idempotent upsert. */
   override def readBack(spark: SparkSession, connection: Map[String, String],
-                        load: LoadSpec): DataFrame =
-    read(spark, connection, QuerySpec(collection = load.collection,
-      idColumn = load.idColumn, vectorColumn = Some(load.vectorColumn),
-      metadataColumns = Seq("metadata")))
+                        load: LoadSpec): DataFrame = {
+    val ep = endpoint(connection)
+    val query = QuerySpec(collection = load.collection, idColumn = load.idColumn,
+      vectorColumn = Some(load.vectorColumn), metadataColumns = Seq("metadata"))
+    // the literal resolves by search_path, as the SELECT's name does
+    val blocks = withClient(ep)(_.query(s"SELECT pg_relation_size('${ident(load.collection)}') " +
+      "/ current_setting('block_size')::int").rows.head.head.toLong)
+    val n = math.min(spark.sparkContext.defaultParallelism.toLong, blocks).toInt
+    def tid(k: Int) = s"'(${blocks * k / n},0)'::tid"
+    val slices =
+      if (n <= 1) Seq(query)
+      else (0 until n).map(i => withPred(query,
+        if (i == 0) s"ctid < ${tid(1)}"
+        else if (i == n - 1) s"ctid >= ${tid(i)}"
+        else s"ctid >= ${tid(i)} AND ctid < ${tid(i + 1)}"))
+    scan(spark, ep, query, slices)
       .withColumn(Canonical.METADATA, coalesce(
         from_json(element_at(col(Canonical.METADATA), "metadata"),
           MapType(StringType, StringType)),
         map().cast(MapType(StringType, StringType))))
+  }
 
   /** Distributed wire write: DDL once from the driver (VECTOR(d), TEXT
     * fallback on 42704), then every partition drives its own connection
@@ -252,16 +399,22 @@ class PgVectorConnector extends VectorConnector {
     * task re-applies its rows idempotently instead of duplicating ids
     * (the standing insert-only hazard of append sinks):
     *
-    *  - a `recreate` load COPYs each partition straight into the target
-    *    the driver just recreated: there is no previous version to
+    *  - a `recreate` load builds a fresh table beside the target
+    *    (`<table>_graft_build`, with its id index) and COPYs each
+    *    partition straight into it: there is no previous version to
     *    replace. COPY FROM STDIN is ONE statement in its own implicit
     *    transaction, so a task failing mid-copy lands ZERO rows and its
-    *    re-run is the first landing;
+    *    re-run is the first landing. Once every partition landed, ONE
+    *    implicit-txn Simple Query drops the old target and renames the
+    *    build table and its index into place; a failed load drops the
+    *    build table and leaves the target as it was (an absent target is
+    *    created empty by the DDL step, as for any load);
     *  - any other load COPYs the partition into a session-private TEMP
     *    stage, then publishes with ONE `DELETE … IN (SELECT id FROM
     *    stage); INSERT … SELECT` Simple Query — a single implicit
     *    transaction, so the whole partition lands atomically.
     *
+    * The driver's DDL, catalog type probe and swap share one connection.
     * The row count rides the write action via `Dataset.observe` — no
     * second pass. */
   override def write(df: DataFrame, connection: Map[String, String],
@@ -279,105 +432,140 @@ class PgVectorConnector extends VectorConnector {
     // make the publish statement's unqualified references resolve to the
     // temp table — rows would land nowhere while the report claims
     // success. Reject the collision loudly, before any DDL runs.
-    require(!table.split('.').last.equalsIgnoreCase("graft_copy_stage"),
+    val (schemaDot, name) = table.splitAt(table.lastIndexOf('.') + 1)
+    require(!name.equalsIgnoreCase("graft_copy_stage"),
       s"collection name '$table' collides with the COPY staging table " +
         "(pg_temp shadows it on the search path) — rename the collection")
-    withClient(ep) { c =>
-      if (load.recreate) c.query(s"DROP TABLE IF EXISTS $table")
-      val mk = (vt: String) =>
-        s"CREATE TABLE IF NOT EXISTS $table ($idCol TEXT, $vecCol $vt, metadata TEXT)"
-      try c.query(mk(s"VECTOR($dim)"))
-      catch {
-        case e: PgWireException if e.sqlState == "42704" =>
-          System.err.println("[graft] pgvector extension absent on the " +
-            s"target (SQLSTATE 42704 on VECTOR($dim)) — creating " +
-            s"$table.$vecCol as TEXT; vectors travel in pgvector " +
-            "text form and decode identically on read")
-          c.query(mk("TEXT"))
-      }
+    // the recreate build table: same schema, a name PostgreSQL keeps
+    // whole (it truncates identifiers past 63 bytes); it ends in the
+    // suffix, so it is never the staging table
+    val direct = load.recreate
+    val build = ident(schemaDot + name.take(63 - BuildSuffix.length) + BuildSuffix)
+    require(!direct || !build.equalsIgnoreCase(table),
+      s"collection name '$table' collides with its own recreate build table")
+    val copyInto = if (direct) build else table
+    val bin = binaryEnabled(connection)
+    withClient(ep) { driver =>
       // id index: the upsert's DELETE leg is an index lookup instead of a
       // per-partition sequential scan of the growing table — without it
       // the write law goes quadratic (measured: 10.5k rows/s at 60k rows
       // degrading to 6.7k at 200k; see BASELINE.md r17 probe). An INDEX,
       // not a PRIMARY KEY: canonical frames may carry null ids and the
       // append face must not start rejecting them.
-      c.query(s"CREATE INDEX IF NOT EXISTS ${table.replace('.', '_')}_graft_id_ix " +
-        s"ON $table ($idCol)")
-    }
-    val bin = binaryEnabled(connection)
-    // the staging table must parse the same text the TARGET column
-    // parses, and binary framing must send the target's own type — and
-    // that type comes from the CATALOG, not from which DDL branch ran:
-    // `CREATE TABLE IF NOT EXISTS` on an already-existing relation
-    // short-circuits BEFORE column-type analysis, so the VECTOR probe
-    // "succeeds" against a pre-existing TEXT-column table on an
-    // extension-less server (caught live by PgLiveWireSpec's append-mode
-    // write).
-    val vecType = {
-      val isVector = describe(ep, table).schema.fields.exists(f =>
-        f.name.equalsIgnoreCase(vecCol) && f.dataType.isInstanceOf[ArrayType])
-      if (isVector) s"VECTOR($dim)" else "TEXT"
-    }
-    // binary format against a REAL vector column ships the floats
-    // themselves (vector_send) — the projection keeps the array instead
-    // of rendering text the server would only re-parse
-    val vecFloats = bin && vecType.startsWith("VECTOR")
-    val out = df.select(
-      col(Canonical.ID).cast("string"),
-      if (vecFloats) col(Canonical.VECTOR).cast(ArrayType(FloatType))
-      else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
-      to_json(col(Canonical.METADATA)))
-    val obs = new org.apache.spark.sql.Observation(s"graft-pgwire-${System.nanoTime()}")
-    val observed = out.observe(obs, count(lit(1)).as("rows"))
-    // NOTE ids are assumed unique within the written frame (the canonical
-    // model's contract — every source connector emits one row per id): a
-    // frame carrying the same id twice lands both copies. Cross-WRITE
-    // duplicates are what the upsert delete leg removes.
-    val direct = load.recreate
-    observed.foreachPartition { (it: Iterator[Row]) =>
-      if (it.hasNext) withClient[Unit](ep) { c =>
-        val copyTarget =
-          if (direct) s"$table ($idCol, $vecCol, metadata)"
-          else {
-            // per-session TEMP stage: invisible to other connections, so
-            // a half-copied retry never leaks rows; dropped with the
-            // session
-            c.query("CREATE TEMP TABLE graft_copy_stage " +
-              s"(id TEXT, vector $vecType, metadata TEXT)")
-            "pg_temp.graft_copy_stage (id, vector, metadata)"
-          }
-        if (bin) {
-          // binary fields: TEXT columns are raw UTF-8; the vector field
-          // is float4s against a real VECTOR column, its text otherwise
-          def fTxt(r: Row, i: Int): Array[Byte] =
-            if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
-          def fVec(r: Row): Array[Byte] =
-            if (r.isNullAt(1)) null
-            else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
-            else PgBinary.textSend(r.getString(1))
-          c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
-            it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
-        } else {
-          import graft.connectors.pgwire.PgWireClient.copyField
-          c.copyIn(s"COPY $copyTarget FROM STDIN",
-            it.map { r =>
-              def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
-              s"${f(0)}\t${f(1)}\t${f(2)}"
-            })
+      var vt = s"VECTOR($dim)"
+      def create(t: String, index: Boolean): Unit = {
+        def ddl = s"CREATE TABLE IF NOT EXISTS $t ($idCol TEXT, $vecCol $vt, " +
+          "metadata TEXT)" +
+          (if (index) s"; CREATE INDEX IF NOT EXISTS ${indexName(t)} ON $t ($idCol)" else "")
+        try driver.query(ddl)
+        catch {
+          case e: PgWireException if e.sqlState == "42704" && vt != "TEXT" =>
+            System.err.println("[graft] pgvector extension absent on the " +
+              s"target (SQLSTATE 42704 on $vt) — creating " +
+              s"$t.$vecCol as TEXT; vectors travel in pgvector " +
+              "text form and decode identically on read")
+            vt = "TEXT"
+            driver.query(ddl)
         }
-        // ONE implicit-txn publish for the whole partition: the delete
-        // leg rides the target's id index; null ids have no previous
-        // version to replace. A direct load already landed in the target.
-        if (!direct) c.query(
-          s"DELETE FROM $table WHERE $idCol IN " +
-            "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
-            s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
-            "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
       }
+      // a recreate load leaves an existing target alone until the swap
+      // (whatever its columns); an absent one is created, like any load's
+      create(table, index = !direct)
+      if (direct) {
+        driver.query(s"DROP TABLE IF EXISTS $build") // left by a crashed load
+        create(build, index = true)
+      }
+      // the staging table must parse the same text the COPY target's
+      // column parses, and binary framing must send that column's own
+      // type — which comes from the CATALOG, not from which DDL branch
+      // ran: `CREATE TABLE IF NOT EXISTS` on an already-existing relation
+      // short-circuits BEFORE column-type analysis, so the VECTOR probe
+      // "succeeds" against a pre-existing TEXT-column table on an
+      // extension-less server (caught live by PgLiveWireSpec's
+      // append-mode write).
+      val vecType = {
+        val isVector = describe(driver, copyInto).schema.fields.exists(f =>
+          f.name.equalsIgnoreCase(vecCol) && f.dataType.isInstanceOf[ArrayType])
+        if (isVector) s"VECTOR($dim)" else "TEXT"
+      }
+      // binary format against a REAL vector column ships the floats
+      // themselves (vector_send) — the projection keeps the array instead
+      // of rendering text the server would only re-parse
+      val vecFloats = bin && vecType.startsWith("VECTOR")
+      val out = df.select(
+        col(Canonical.ID).cast("string"),
+        if (vecFloats) col(Canonical.VECTOR).cast(ArrayType(FloatType))
+        else PgVectorCodec.vectorToText(col(Canonical.VECTOR)),
+        to_json(col(Canonical.METADATA)))
+      val obs = new org.apache.spark.sql.Observation(s"graft-pgwire-${System.nanoTime()}")
+      val observed = out.observe(obs, count(lit(1)).as("rows"))
+      // NOTE ids are assumed unique within the written frame (the canonical
+      // model's contract — every source connector emits one row per id): a
+      // frame carrying the same id twice lands both copies. Cross-WRITE
+      // duplicates are what the upsert delete leg removes.
+      try {
+        observed.foreachPartition { (it: Iterator[Row]) =>
+          if (it.hasNext) withClient[Unit](ep) { c =>
+            val copyTarget =
+              if (direct) s"$copyInto ($idCol, $vecCol, metadata)"
+              else {
+                // per-session TEMP stage: invisible to other connections, so
+                // a half-copied retry never leaks rows; dropped with the
+                // session
+                c.query("CREATE TEMP TABLE graft_copy_stage " +
+                  s"(id TEXT, vector $vecType, metadata TEXT)")
+                "pg_temp.graft_copy_stage (id, vector, metadata)"
+              }
+            if (bin) {
+              // binary fields: TEXT columns are raw UTF-8; the vector field
+              // is float4s against a real VECTOR column, its text otherwise
+              def fTxt(r: Row, i: Int): Array[Byte] =
+                if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
+              def fVec(r: Row): Array[Byte] =
+                if (r.isNullAt(1)) null
+                else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
+                else PgBinary.textSend(r.getString(1))
+              c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
+                it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))
+            } else {
+              import graft.connectors.pgwire.PgWireClient.copyField
+              c.copyIn(s"COPY $copyTarget FROM STDIN",
+                it.map { r =>
+                  def f(i: Int) = copyField(if (r.isNullAt(i)) null else r.getString(i))
+                  s"${f(0)}\t${f(1)}\t${f(2)}"
+                })
+            }
+            // ONE implicit-txn publish for the whole partition: the delete
+            // leg rides the target's id index; null ids have no previous
+            // version to replace. A direct load already landed in the build.
+            if (!direct) c.query(
+              s"DELETE FROM $table WHERE $idCol IN " +
+                "(SELECT id FROM pg_temp.graft_copy_stage WHERE id IS NOT NULL); " +
+                s"INSERT INTO $table ($idCol, $vecCol, metadata) " +
+                "SELECT id, vector, metadata FROM pg_temp.graft_copy_stage")
+          }
+        }
+        // the swap: one implicit transaction, so readers see the old
+        // target or the new one, never neither
+        if (direct) driver.query(s"DROP TABLE IF EXISTS $table; " +
+          s"ALTER TABLE $build RENAME TO $name; " +
+          s"ALTER INDEX $schemaDot${indexName(build)} " +
+          s"RENAME TO ${indexName(table)}")
+      } catch {
+        case e: Throwable =>
+          if (direct)
+            try driver.query(s"DROP TABLE IF EXISTS $build")
+            catch { case d: Throwable => e.addSuppressed(d) }
+          throw e
+      }
+      WriteReport(written =
+        obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
     }
-    WriteReport(written =
-      obs.get.get("rows").map(String.valueOf(_).toLong).getOrElse(0L))
   }
+
+  /** The id index [[write]] gives a table: named after it, so a schema
+    * prefix keeps two schemas' indexes apart. */
+  private def indexName(table: String): String = s"${table.replace('.', '_')}_graft_id_ix"
 
   /** information_schema match for a table reference: Postgres stores
     * UNQUOTED identifiers case-folded to lowercase, and [[write]]'s DDL
@@ -444,7 +632,7 @@ class PgVectorConnector extends VectorConnector {
 
   override def schemaInfo(spark: SparkSession, connection: Map[String, String],
                           collection: String): SchemaInfo =
-    describe(endpoint(connection), collection)
+    withClient(endpoint(connection))(describe(_, collection))
 
   /** information_schema introspection (adapters/pgvector.py:244-289).
     * TWO-STEP name resolution, unlike [[exists]]: a column query against
@@ -453,12 +641,11 @@ class PgVectorConnector extends VectorConnector {
     * garbled schema — so the verbatim name is tried first, then the
     * Postgres-folded name only if verbatim matched nothing. exists()
     * keeps the combined IN: either match IS existence. */
-  private def describe(ep: PgEndpoint, collection: String): SchemaInfo = {
-    def columnsOf(mode: String) = withClient(ep) { c =>
+  private def describe(c: PgWireClient, collection: String): SchemaInfo = {
+    def columnsOf(mode: String) =
       c.query("SELECT column_name, data_type, udt_name FROM information_schema.columns " +
         s"WHERE ${catalogPredicate(collection, mode, firstVisibleOnly = true)} " +
         "ORDER BY ordinal_position").rows
-    }
     val rows = {
       val verbatim = columnsOf("verbatim")
       if (verbatim.nonEmpty) verbatim else columnsOf("folded")

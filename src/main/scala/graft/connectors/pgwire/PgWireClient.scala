@@ -5,9 +5,9 @@ import java.net.{InetSocketAddress, Socket, SocketTimeoutException}
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** A PostgreSQL error, carrying the server's SQLSTATE and message — the
-  * typed failure [[PgWireClient.query]] raises on `ErrorResponse` (after
-  * draining the stream to `ReadyForQuery`, so the connection stays
-  * usable for the next statement). */
+  * typed failure [[PgWireClient.query]] and [[PgWireClient.scan]] raise
+  * on `ErrorResponse` (after draining the stream to `ReadyForQuery`, so
+  * the connection stays usable for the next statement). */
 final class PgWireException(val sqlState: String, message: String)
   extends IOException(s"[$sqlState] $message")
 
@@ -128,20 +128,37 @@ case class PgResult(columns: Seq[String], rows: Seq[Seq[String]], tags: Seq[Stri
     tags.lastOption.flatMap(_.split(' ').lastOption).flatMap(_.toLongOption).getOrElse(0L)
 }
 
+/** One `DataRow` frame of a [[PgWireClient.scan]], its field bounds
+  * already checked: field `i` is `length(i)` bytes of [[bytes]] from
+  * `offset(i)`, in the column's text format, or SQL NULL when `length(i)`
+  * is -1. Every frame is read into its own array, so a row stays valid
+  * after the scan moves on. */
+final class DataRow private[pgwire] (val bytes: Array[Byte], bounds: Array[Int]) {
+  def size: Int = bounds.length / 2
+  def offset(i: Int): Int = bounds(2 * i)
+  def length(i: Int): Int = bounds(2 * i + 1)
+  def isNull(i: Int): Boolean = length(i) < 0
+  /** Field `i` as a string; null for SQL NULL. */
+  def text(i: Int): String =
+    if (isNull(i)) null else new String(bytes, offset(i), length(i), UTF_8)
+}
+
 /** Minimal PostgreSQL frontend — the documented v3 wire protocol
   * (PostgreSQL docs, "Frontend/Backend Protocol"), Simple Query flavor:
   * `StartupMessage` → authentication (trust, cleartext password, MD5,
   * or SASL SCRAM-SHA-256 with server-signature verification — the
   * PostgreSQL default since v14) → `Query('Q')` with text-format
-  * results. TLS rides the documented SSLRequest upgrade: platform-trust
-  * mode verifies chain AND hostname (verify-full); a pinned
-  * `ssl_root_cert` is verify-ca against that one anchor. `COPY FROM
-  * STDIN` ([[copyIn]], [[copyInBinary]]) is the bulk path. Not a
-  * general PostgreSQL driver: it carries exactly what the pgvector
-  * connector ([[graft.connectors.PgVectorConnector]], its only data
-  * path) sends — `buildSelect` scans, catalog predicates, DDL, COPY
-  * loads and their publish statements — which is what the reference
-  * drives through psycopg2 (`adapters/pgvector.py`).
+  * results, streamed frame by frame ([[scan]]: table reads) or collected
+  * ([[query]]: DDL and catalog statements) over one message loop. TLS
+  * rides the documented SSLRequest upgrade: platform-trust mode verifies
+  * chain AND hostname (verify-full); a pinned `ssl_root_cert` is
+  * verify-ca against that one anchor. `COPY FROM STDIN` ([[copyIn]],
+  * [[copyInBinary]]) is the bulk path. Not a general PostgreSQL driver:
+  * it carries exactly what the pgvector connector
+  * ([[graft.connectors.PgVectorConnector]], its only data path) sends —
+  * `buildSelect` scans, catalog predicates, DDL, COPY loads and their
+  * publish and swap statements — which is what the reference drives
+  * through psycopg2 (`adapters/pgvector.py`).
   *
   * `handshakeTimeoutMs` bounds the connect and every read up to the
   * first `ReadyForQuery`, so a server that accepts but never answers
@@ -242,7 +259,10 @@ class PgWireClient(host: String, port: Int,
       case e: Throwable => plain.close(); throw e
     }
   }
-  private val in = new DataInputStream(socket.getInputStream)
+  // buffered: a frame's header is a type byte and an int32, which read
+  // unbuffered would be five reads of the socket per frame
+  private val in = new DataInputStream(
+    new java.io.BufferedInputStream(socket.getInputStream, 1 << 16))
   // buffered: a CopyData frame is a type byte, a length and a chunk —
   // unbuffered with TCP_NODELAY each write is a syscall and potentially
   // a packet. Every read site is preceded by an explicit flush, so
@@ -434,53 +454,100 @@ class PgWireClient(host: String, port: Int,
     new PgWireException(state, msg)
   }
 
+  /** Write one Simple Query ('Q') message. Refused while a [[scan]] is
+    * still being read: the server answers statements in order, so the
+    * new statement would read the tail of the old one's rows. */
+  private def sendQuery(sql: String): Unit = {
+    if (open != null)
+      throw new IllegalStateException("a scan is still open on this connection")
+    send('Q', sql.getBytes(UTF_8) :+ 0.toByte)
+  }
+
+  /** CopyFail ('f'): abort the COPY FROM STDIN the server is waiting on. */
+  private def copyFail(reason: String): Unit = send('f', reason.getBytes(UTF_8) :+ 0.toByte)
+
+  /** The answer still being read to the last Simple Query message; null
+    * once its `ReadyForQuery` arrived. */
+  private var open: Response = _
+
+  /** The backend's answer to one Simple Query message, read one frame at
+    * a time up to `ReadyForQuery`: the one message loop behind [[query]]
+    * and [[scan]]. A failure never stops the drain. The first one (an
+    * `ErrorResponse`, a malformed frame, an unparsable tag) is recorded
+    * and thrown once `ReadyForQuery` arrived, so the session stays usable
+    * for the next statement. */
+  private final class Response {
+    var columns: Seq[String] = Seq.empty
+    /** RowDescriptions so far: each starts a result set of a batch. */
+    var resultSets = 0
+    val tags = Vector.newBuilder[String]
+    private var err: PgWireException = _
+    private def fail(e: PgWireException): Unit = if (err == null) err = e
+
+    /** The next well-formed DataRow, or null once the answer is drained. */
+    def next(): DataRow = {
+      while (open eq this) {
+        val (tpe, payload) = readMessage()
+        tpe match {
+          case 'T' => // RowDescription
+            columns = parseRowDescription(payload, fail)
+            resultSets += 1
+          case 'D' => // DataRow
+            val row = parseDataRow(payload, fail)
+            if (row != null) return row
+          case 'C' => // CommandComplete
+            try tags += cstring(payload, 0)._1
+            catch { case e: PgWireException => fail(e) }
+          case 'E' => fail(errorFrom(payload))
+          case 'Z' => open = null // ReadyForQuery
+          case 'G' => // CopyInResponse through plain query(): the server now
+            // waits for CopyData and would hang the session — abort with
+            // CopyFail so the statement fails typed instead
+            copyFail("COPY FROM STDIN requires copyIn()")
+          case _ => // EmptyQueryResponse, notices, ParameterStatus, CopyOut
+        }
+      }
+      if (err != null) throw err
+      null
+    }
+
+    /** The DataRows still to come, each read when it is pulled. */
+    def rows: Iterator[DataRow] = Iterator.continually(next()).takeWhile(_ != null)
+  }
+
+  private def start(sql: String): Response = {
+    sendQuery(sql)
+    open = new Response
+    open
+  }
+
   /** Run one SQL statement (or a `;`-separated batch) through the Simple
     * Query protocol. Returns the LAST result set plus all command tags;
     * raises [[PgWireException]] on the first server error — AFTER
     * draining to `ReadyForQuery`, so the session survives the failure
-    * (how every test asserts error shapes without reconnecting). */
+    * (how every test asserts error shapes without reconnecting). For DDL
+    * and catalog statements: a table's rows stream through [[scan]]. */
   def query(sql: String): PgResult = {
-    val body = sql.getBytes(UTF_8) :+ 0.toByte
-    out.writeByte('Q')
-    out.writeInt(4 + body.length)
-    out.write(body)
-    out.flush()
-    var columns = Seq.empty[String]
+    val r = start(sql)
     var rows = Vector.empty[Seq[String]]
-    val tags = Vector.newBuilder[String]
-    var err: PgWireException = null
-    var done = false
-    while (!done) {
-      val (tpe, payload) = readMessage()
-      tpe match {
-        case 'T' => // RowDescription
-          columns = parseRowDescription(payload, e => if (err == null) err = e)
-          rows = Vector.empty // a new result set within the batch resets rows
-        case 'D' => // DataRow
-          parseDataRow(payload, e => if (err == null) err = e)
-            .foreach(r => rows :+= r)
-        case 'C' => // CommandComplete — tag parse failure is recorded,
-          // not thrown: the drain must reach ReadyForQuery
-          try tags += cstring(payload, 0)._1
-          catch { case e: PgWireException => if (err == null) err = e }
-        case 'E' => if (err == null) err = errorFrom(payload) // keep draining
-        case 'Z' => done = true // ReadyForQuery
-        case 'I' => // EmptyQueryResponse
-        case 'N' => // NoticeResponse — ignored
-        case 'G' => // CopyInResponse through plain query(): the server now
-          // waits for CopyData and would hang the session — abort with
-          // CopyFail so the statement fails typed instead
-          val m = "COPY FROM STDIN requires copyIn()".getBytes(UTF_8) :+ 0.toByte
-          out.writeByte('f')
-          out.writeInt(4 + m.length)
-          out.write(m)
-          out.flush()
-        case _ => // ParameterStatus, CopyOut 'H'/'d'/'c' etc.: ignored
-      }
+    var rowsOf = 0 // the result set `rows` belongs to
+    r.rows.foreach { row =>
+      if (rowsOf != r.resultSets) { rows = Vector.empty; rowsOf = r.resultSets }
+      rows :+= (0 until row.size).map(row.text)
     }
-    if (err != null) throw err
-    PgResult(columns, rows, tags.result())
+    PgResult(r.columns, if (rowsOf == r.resultSets) rows else Vector.empty, r.tags.result())
   }
+
+  /** Stream one statement's rows: each `DataRow` frame is read only when
+    * the iterator pulls it. A Simple Query result already streams — the
+    * server sends rows as it produces them, and TCP backpressure stalls
+    * it while the client is busy — so the client holds about one frame,
+    * with no cursor, transaction or extra round trip. An `ErrorResponse`
+    * mid-stream surfaces as [[PgWireException]], after the rows before
+    * it, once the answer is drained to `ReadyForQuery`. The connection
+    * runs no other statement until the iterator is exhausted; a caller
+    * that stops early closes the client instead. */
+  def scan(sql: String): Iterator[DataRow] = start(sql).rows
 
   /** Malformed-frame guards for the two payloads with internal structure:
     * a hostile or broken server's RowDescription/DataRow must surface as
@@ -514,26 +581,30 @@ class PgWireClient(host: String, port: Int,
     }
 
   private def parseDataRow(payload: Array[Byte],
-                           onErr: PgWireException => Unit): Option[Seq[String]] =
+                           onErr: PgWireException => Unit): DataRow =
     try {
       val n = ((payload(0) & 0xff) << 8) | (payload(1) & 0xff)
+      val bounds = new Array[Int](2 * n)
       var i = 2
-      Some((0 until n).map { _ =>
+      var f = 0
+      while (f < n) {
         val len = ((payload(i) & 0xff) << 24) | ((payload(i + 1) & 0xff) << 16) |
           ((payload(i + 2) & 0xff) << 8) | (payload(i + 3) & 0xff)
         i += 4
-        if (len == -1) null
-        else {
-          if (len < 0 || i + len > payload.length) throw new PgWireException("08P01", "overrun")
-          val v = new String(payload, i, len, UTF_8); i += len; v
-        }
-      })
+        if (len < -1 || i + math.max(len, 0) > payload.length)
+          throw new PgWireException("08P01", "overrun")
+        bounds(2 * f) = i
+        bounds(2 * f + 1) = len
+        i += math.max(len, 0)
+        f += 1
+      }
+      new DataRow(payload, bounds)
     } catch {
       case _: IndexOutOfBoundsException | _: PgWireException =>
         onErr(new PgWireException("08P01",
           s"malformed DataRow frame (${payload.length} bytes) — " +
             s"is $host:$port really a PostgreSQL server?"))
-        None
+        null
     }
 
   /** Bulk load through the documented COPY sub-protocol: run a
@@ -576,11 +647,7 @@ class PgWireClient(host: String, port: Int,
 
   private def copyInStream(sql: String, chunkBytes: Int)
                           (body: (java.io.ByteArrayOutputStream, () => Unit) => Unit): PgResult = {
-    val sqlBody = sql.getBytes(UTF_8) :+ 0.toByte
-    out.writeByte('Q')
-    out.writeInt(4 + sqlBody.length)
-    out.write(sqlBody)
-    out.flush()
+    sendQuery(sql)
     // phase 1: the server must answer CopyInResponse — or an error (bad
     // SQL, missing table), which arrives as 'E' then 'Z'
     var err: PgWireException = null
@@ -610,8 +677,7 @@ class PgWireClient(host: String, port: Int,
     if (err != null) {
       // an unexpected-type error was recorded but the server then entered
       // COPY mode anyway — abort the copy cleanly and surface the error
-      val m = "aborted: protocol desync".getBytes(UTF_8) :+ 0.toByte
-      out.writeByte('f'); out.writeInt(4 + m.length); out.write(m); out.flush()
+      copyFail("aborted: protocol desync")
       var d = false
       while (!d) if (readMessage()._1 == 'Z') d = true
       throw err
@@ -640,12 +706,7 @@ class PgWireClient(host: String, port: Int,
         // server answers 57014), and rethrow the ORIGINAL failure
         try {
           buf.reset() // partial line: never send it
-          val m = ("aborted by client: " + String.valueOf(e.getMessage).take(200))
-            .getBytes(UTF_8) :+ 0.toByte
-          out.writeByte('f') // CopyFail
-          out.writeInt(4 + m.length)
-          out.write(m)
-          out.flush()
+          copyFail("aborted by client: " + String.valueOf(e.getMessage).take(200))
           var done = false
           while (!done) if (readMessage()._1 == 'Z') done = true
         } catch { case _: Throwable => () }

@@ -730,6 +730,133 @@ class PgLiveWireSpec extends SparkSpec {
     assert(live().query("SELECT count(*) FROM wire_zero").rows.head.head == "2")
   }
 
+  /** `readBack` rows in comparable form, in the order Spark returns them:
+    * (id, vector, metadata value `v`). */
+  private def backRows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+    (Option(r.getString(0)), Option(r.getSeq[Float](1)).map(_.toSeq),
+      r.getMap[String, String](2).get("v")))
+
+  /** One unsliced `SELECT` of a connector-written table, in [[backRows]]'s
+    * form: the vector text is parsed by hand, `v` read out of the JSON. */
+  private def plainRows(table: String) =
+    live().query(s"SELECT id, vector, metadata FROM $table").rows.map(r =>
+      (Option(r(0)),
+        Option(r(1)).map(_.stripPrefix("[").stripSuffix("]").split(',').toSeq.map(_.toFloat)),
+        Option(r(2)).flatMap("\"v\":\"([^\"]*)\"".r.findFirstMatchIn(_)).map(_.group(1))))
+
+  test("readBack slices a multi-block table by ctid: one unsliced SELECT's rows, in its order") {
+    val c = live()
+    val pgv = ConnectorRegistry("pgvector")
+    val load = graft.config.LoadSpec(collection = "wire_ctid")
+    // 64-dim vectors are ~0.6 KB of text each, stored inline: some dozen blocks
+    val rows = (0 until 1200).map(i => (s"$i", Seq.tabulate(64)(j => i + j / 8f), Map("v" -> s"$i")))
+    assert(pgv.write(canonical(rows), wireConn(), load.copy(recreate = true)).written == 1200)
+    // dead tuples, reused free space and rows appended past the old end
+    c.query("UPDATE wire_ctid SET metadata = '{\"v\":\"upd\"}' WHERE id::int % 7 = 0")
+    c.query("DELETE FROM wire_ctid WHERE id::int % 11 = 0")
+    c.query("INSERT INTO wire_ctid VALUES (NULL, '[1.5,2.5]', '{\"v\":\"null-id\"}'), " +
+      "('alpha', '[3.0]', NULL), ('k-9', NULL, '{\"v\":\"k\"}')")
+    val blocks = c.query("SELECT pg_relation_size('wire_ctid') / " +
+      "current_setting('block_size')::int").rows.head.head.toInt
+    val cores = spark.sparkContext.defaultParallelism
+    assert(blocks > cores, s"only $blocks blocks")
+    val back = pgv.readBack(spark, wireConn(), load)
+    assert(back.rdd.getNumPartitions == cores, back.rdd.getNumPartitions)
+    val want = plainRows("wire_ctid")
+    val got = backRows(back)
+    assert(got.length == want.length && got.length == 1200 - 110 + 3, s"${got.length} rows")
+    assert(got == want, "the slices' rows differ from one unsliced SELECT's, or their order does")
+  }
+
+  test("readBack of a schema-qualified mixed-case table, and of a view over it as one slice") {
+    val c = live()
+    val pgv = ConnectorRegistry("pgvector")
+    c.query("CREATE SCHEMA scan_s")
+    val rows = (0 until 600).map(i => (s"m$i", Seq.tabulate(64)(j => i - j / 4f), Map("v" -> s"$i")))
+    // unquoted DDL: the table is scan_s.mixed_case, and the build-and-swap
+    // renames its schema-qualified build table and index into place
+    val load = graft.config.LoadSpec(collection = "scan_s.Mixed_Case", recreate = true)
+    assert(pgv.write(canonical(rows), wireConn(), load).written == 600)
+    assert(pgv.write(canonical(rows.take(300)), wireConn(), load).written == 300)
+    val want = plainRows("scan_s.mixed_case")
+    assert(want.length == 300)
+    val table = pgv.readBack(spark, wireConn(), load)
+    assert(table.rdd.getNumPartitions > 1, table.rdd.getNumPartitions)
+    assert(backRows(table) == want)
+    assert(c.query("SELECT indexname FROM pg_indexes WHERE schemaname = 'scan_s'").rows ==
+      Seq(Seq("scan_s_mixed_case_graft_id_ix")), "the swap left the id index misnamed")
+    c.query("CREATE VIEW scan_s.Mixed_View AS SELECT * FROM scan_s.mixed_case")
+    val view = pgv.readBack(spark, wireConn(), load.copy(collection = "scan_s.Mixed_View"))
+    assert(view.rdd.getNumPartitions == 1, "a view has no blocks to slice")
+    assert(backRows(view).sortBy(_._1) == want.sortBy(_._1))
+  }
+
+  test("a failed recreate load leaves the existing target exactly as it was, and no build table") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    for ((framing, extra) <- framings) {
+      val load = graft.config.LoadSpec(collection = s"wire_recreate_fault_$framing",
+        recreate = true)
+      def target() = live().query(s"SELECT id, vector, metadata FROM ${load.collection}")
+        .rows.sortBy(_.head)
+      assert(pgv.write(twoPartitions(50, 1), wireConn(extra: _*), load).written == 50)
+      val before = target()
+      // version 2 of 800 ids; partition 1 fails on row 700, past its first chunk
+      val e = intercept[Exception](pgv.write(twoPartitions(800, 2, bad = Some(700)),
+        wireConn(extra: _*), load))
+      assert(causedBy(e, "NUL"), s"$framing: $e")
+      val after = target()
+      if (after != before)
+        fail(s"$framing: the failed load changed the target (${after.length} rows)")
+      assert(live().query("SELECT count(*) FROM information_schema.tables " +
+        "WHERE table_name LIKE '%graft_build%'").rows.head.head == "0",
+        s"$framing: the build table was left behind")
+    }
+  }
+
+  /** A loopback TCP relay in front of the live server that counts the
+    * connections it accepts. */
+  private final class CountingRelay(target: Int) extends AutoCloseable {
+    private val srv = new java.net.ServerSocket(0, 16, java.net.InetAddress.getByName("127.0.0.1"))
+    val port: Int = srv.getLocalPort
+    val accepted = new java.util.concurrent.atomic.AtomicInteger
+    private def daemon(body: => Unit): Unit = {
+      val t = new Thread(() => body)
+      t.setDaemon(true)
+      t.start()
+    }
+    // one direction; when it ends, so does the pair
+    private def pipe(from: java.net.Socket, to: java.net.Socket): Unit = daemon {
+      try from.getInputStream.transferTo(to.getOutputStream)
+      catch { case _: Throwable => () }
+      finally { from.close(); to.close() }
+    }
+    daemon {
+      try while (true) {
+        val client = srv.accept()
+        accepted.incrementAndGet()
+        val server = new java.net.Socket("127.0.0.1", target)
+        pipe(client, server)
+        pipe(server, client)
+      } catch { case _: Throwable => () } // close() lands here
+    }
+    override def close(): Unit = srv.close()
+  }
+
+  test("a write opens one driver connection, plus one per partition") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    val relay = new CountingRelay(server.get.port)
+    try for (recreate <- Seq(true, false)) {
+      val before = relay.accepted.get
+      val df = canonical(Seq(("a", Seq(1f, 2f), Map("k" -> "1")))).coalesce(1)
+      assert(pgv.write(df, wireConn("port" -> relay.port.toString),
+        graft.config.LoadSpec(collection = "wire_handshakes", recreate = recreate)).written == 1)
+      assert(relay.accepted.get - before == 2,
+        s"recreate=$recreate: ${relay.accepted.get - before} connections")
+    } finally relay.close()
+  }
+
   test("TLS upgrade (SSLRequest): pinned self-signed cert, secure defaults, no fallback") {
     live() // environment must run PostgreSQL at all
     import scala.sys.process._
