@@ -157,10 +157,9 @@ object Bench {
     // 0.85 → 13.3 s purely with host IO state, poisoning loaded-host
     // artifacts. The bench row measures the OPERATOR — tar framing,
     // shard partitioning, stream decode — not the co-tenant disk queue;
-    // the disk-bound law stays visible in ScaleProbe ("wds shard
-    // roundtrip") and the oracle gate still runs the target/-backed
-    // path. Shadows the gated q_wds_roundtrip here (benchOnly wins in
-    // `qs`), same pattern as the q_dedup_cosine_lsh shadow.
+    // the oracle gate still runs the target/-backed path. Shadows the
+    // gated q_wds_roundtrip here (benchOnly wins in `qs`), same pattern as
+    // the q_dedup_cosine_lsh shadow.
     "q_wds_roundtrip" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
       val samples = Tables(s, dir, "documents")
@@ -187,7 +186,7 @@ object Bench {
     s"${base}_${ProcessHandle.current().pid()}"
   }
 
-  private def cleanupWds(): Unit = {
+  private[graft] def cleanupWds(): Unit = {
     import java.nio.file.{Files, Paths}
     val root = Paths.get(wdsBenchDir)
     if (Files.isDirectory(root)) {

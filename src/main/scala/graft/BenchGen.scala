@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   *
   * Naive replication would plant every document/vector as a `factor`-
   * clique of exact duplicates, turning the near-dedup queries into
-  * output-quadratic pathologies (the ScaleProbe measures that worst case
-  * separately — see BASELINE.md). A BENCH scale ramp wants the corpus
+  * output-quadratic pathologies (BASELINE.md keeps the measurements of
+  * that worst case). A BENCH scale ramp wants the corpus
   * 10× BIGGER, not 100× more duplicate pairs, so the replicas are
   * de-correlated:
   *
@@ -31,7 +31,8 @@ import org.apache.spark.sql.functions._
   *    consistent within a copy; dims are shared like a real star);
   *  - `events`: event/user ids shift per copy — 10× users, same horizon.
   *
-  * Usage: `runMain graft.BenchGen /root/testdata/sf0.1 <outDir> [factor]`.
+  * `graft.Bench` builds its sf1 ramp with [[replicate]], and
+  * `graft.Sweep`'s `factor` shape writes one under `<outDir>/fixtures`.
   */
 object BenchGen {
 
@@ -43,8 +44,9 @@ object BenchGen {
     * one single-row-group file per table, so EVERY sf1 scan stage ran on
     * one core regardless of SPARK_GRAFT_CPUS, serializing exactly the
     * per-row work the ramp exists to measure at scale. Guide §6: control
-    * the layout of anything you write). */
-  val rampVersion = 3
+    * the layout of anything you write; v4: source schemas kept — v3 wrote
+    * `n_chars` as int and re-drawn embeddings as array<double>). */
+  val rampVersion = 4
 
   private val Shift = 1000000000L
 
@@ -105,7 +107,7 @@ object BenchGen {
           transform(split(col("text"), "\\s+"),
             w => concat(w, lit("zq"), col("__k"))))))
       .withColumn("doc_id", col("doc_id") + col("__k") * Shift)
-      .withColumn("n_chars", length(col("text")))
+      .withColumn("n_chars", length(col("text")).cast("long"))
       .drop("__k")
     writeSpread(salted, "documents", 6250, srcRows("documents") * factor)
 
@@ -114,19 +116,8 @@ object BenchGen {
       .withColumn("embedding",
         when(col("__k") === 0, col("embedding")).otherwise(
           transform(sequence(lit(0), lit(dim - 1)),
-            j => (hash(col("vec_id"), col("__k"), j) % 1000).cast("float") / 1000.0f)))
+            j => ((hash(col("vec_id"), col("__k"), j) % 1000) / 1000.0).cast("float"))))
       .withColumn("vec_id", col("vec_id") + col("__k") * Shift)
       .drop("__k"), "embeddings", 6250, srcRows("embeddings") * factor)
-  }
-
-  def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: BenchGen <srcDir> <outDir> [factor]")
-    val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = GraftSession.local("graft-benchgen")
-    spark.sparkContext.setLogLevel("WARN")
-    replicate(spark, args(0), args(1), factor)
-    println(s"[benchgen] wrote ${factor}x of ${args(0)} -> ${args(1)}")
-    spark.stop()
-    sys.exit(0)
   }
 }

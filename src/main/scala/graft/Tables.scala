@@ -55,7 +55,6 @@ object Tables {
     // get their parallelism from the source's own partitioning — pass
     // them through untouched (the streaming twins found this in r19)
     if (df.isStreaming) return df
-    if (sys.env.get("SPARK_GRAFT_SPREAD").contains("off")) return df
     val p = df.sparkSession.sparkContext.defaultParallelism
     val n =
       if (!bareFileScan(df)) df.rdd.getNumPartitions

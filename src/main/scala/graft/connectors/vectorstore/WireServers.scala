@@ -103,8 +103,8 @@ private[vectorstore] abstract class WireServer(port: Int) {
   /** Test/probe knob: per-request latency injection, emulating the
     * network + backend service time a real cluster charges every page of
     * a cursor walk (the loopback answers in microseconds, which makes
-    * sequential walks look artificially cheap — see the "wire cursor
-    * walk" ScaleProbe). */
+    * sequential walks look artificially cheap — BASELINE.md's round-10
+    * cursor-walk probe). */
   @volatile var injectLatencyMs: Int = 0
 
   /** Test/probe knob: answer the next N requests with `429 Too Many

@@ -232,14 +232,12 @@ object IncrementalMigrator {
   /** Rows of `source` whose (id, vector+metadata hash) is absent from
     * `target` — inserts and updates; deletions are [[deletedIds]]. */
   def changedRecords(source: DataFrame, target: DataFrame): DataFrame = {
-    // hash SORTED map entries, not the raw map: to_json serializes map
-    // entries in construction order, and a round trip through a wire
-    // store can return the same logical metadata in a different key
-    // order — which would re-classify every row as "changed" and re-ship
-    // the whole collection on each incremental run
+    // the values are hashed directly, the map's entries SORTED (a wire store
+    // may return metadata in another key order). xxhash64 skips nulls, hence
+    // the isnull flags; it hashes -0.0 as 0.0 (DEPLOYMENT.md).
     def keyed(df: DataFrame) = df.withColumn("__h",
-      xxhash64(to_json(struct(col(Canonical.VECTOR),
-        array_sort(map_entries(col(Canonical.METADATA)))))))
+      xxhash64(isnull(col(Canonical.VECTOR)), isnull(col(Canonical.METADATA)),
+        col(Canonical.VECTOR), array_sort(map_entries(col(Canonical.METADATA)))))
     keyed(source).join(keyed(target).select(col(Canonical.ID), col("__h")),
         Seq(Canonical.ID, "__h"), "left_anti")
       .drop("__h")

@@ -28,12 +28,12 @@ object Clustering {
     * contract-enforcement shape as `Decontaminate.MaxEvalRows`. */
   private[graft] val MaxCenters = 65536
 
-  /** Deterministic seed centers: the k lowest-id vectors (k-means++ is a
-    * quality upgrade, not a scale requirement — sorted ids keep the gate
-    * SQL-replayable). */
+  /** Deterministic seed centers: the k lowest-id non-null vectors
+    * (k-means++ is a quality upgrade, not a scale requirement — sorted ids
+    * keep the gate SQL-replayable). */
   def initCenters(df: DataFrame, k: Int, vecCol: String = "embedding",
                   idCol: String = "vec_id"): DataFrame =
-    df.orderBy(col(idCol)).limit(k)
+    df.filter(col(vecCol).isNotNull).orderBy(col(idCol)).limit(k)
       .select(col(idCol).as("center_id"),
         transform(col(vecCol), _.cast("double")).as("center"))
 
@@ -251,6 +251,7 @@ object Clustering {
       .select(col("center_id"), transform(col("center"), _.cast("double")))
       .orderBy("center_id").limit(MaxCenters + 1).collect()
     require(rows.nonEmpty, "empty center set")
+    require(rows.forall(!_.isNullAt(1)), "a center vector is null")
     require(rows.length <= MaxCenters,
       s"center set exceeds Clustering.MaxCenters ($MaxCenters rows) — centers are " +
         "driver-collected into the fused argmin kernel by contract (k is a cell/cluster " +
@@ -330,7 +331,7 @@ object Clustering {
   def fitCentersFrom(df: DataFrame, init: DataFrame, iters: Int,
                      vecCol: String = "embedding", idCol: String = "vec_id"): DataFrame = {
     require(iters > 0)
-    val vecs = df.select(col(idCol), col(vecCol))
+    val vecs = df.select(col(idCol), col(vecCol)).filter(col(vecCol).isNotNull)
     var centers = init
     var i = 1
     while (i < iters) {

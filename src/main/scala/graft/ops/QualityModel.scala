@@ -85,12 +85,16 @@ object QualityModel {
   /** (j, grad, __cnt) with full double precision — the fit loop's face. */
   private def gradientRaw(docs: DataFrame, labelCol: String, model: LogisticModel,
                           textCol: String): DataFrame = {
-    val hs = tokenHashes(col(textCol))
-    val r = (sigmoid(margin(col(textCol), model)) - col(labelCol).cast("double")).as("r")
+    val hs = col("__hs")
+    val r = sigmoid(FeatureExpressions.bucketWeightSum(hs, model.weights) + lit(model.bias)) -
+      col(labelCol).cast("double")
     // each token contributes the doc residual at its bucket; the appended
-    // `dim` sentinel is the always-on bias feature
+    // `dim` sentinel is the always-on bias feature. The residual is a column
+    // BELOW the explode: beside the generator it would run once per token
     docs
-      .select(r, explode(concat(transform(hs, h => pmod(h, lit(model.dim.toLong))),
+      .select(col(labelCol), tokenHashes(col(textCol)).as("__hs"))
+      .select(r.as("r"), hs)
+      .select(col("r"), explode(concat(transform(hs, h => pmod(h, lit(model.dim.toLong))),
         array(lit(model.dim.toLong)))).as("j"))
       .groupBy("j")
       .agg(sum("r").as("grad"), count(lit(1)).as("__cnt"))

@@ -140,6 +140,8 @@ object Quantization {
       .select(transform(col(vecCol), _.cast("double"))).collect()
       .map(_.getSeq[Double](0).toArray)
     require(seeds.nonEmpty, "empty training set")
+    require(seeds.forall(_.length == dim), s"PQ training vectors must all have dim $dim, " +
+      s"got ${seeds.map(_.length).distinct.sorted.mkString(", ")} among the seeds")
     var cb: Array[Array[Array[Double]]] =
       Array.tabulate(m)(s => seeds.map(v => v.slice(s * dsub, math.min((s + 1) * dsub, v.length))))
     var it = 1

@@ -358,7 +358,8 @@ object Similarity {
     }.getOrElse(
       bruteForceTopK(candidates, queries, nCand, idCol, vecCol).join(
         candidates.select(col(idCol).as("cand_id"), col(vecCol).as("c_vec")), "cand_id"))
-    val withVec = short
+    // a null query or candidate vector has no score: it cannot rank
+    val withVec = short.filter(col("score").isNotNull && col("c_vec").isNotNull)
       .select(col("query_id").cast("long"), col("cand_id").cast("long"),
         col("score").cast("double"),
         // accept array<double> corpora too (VectorFunctions.normalize —
@@ -567,6 +568,7 @@ object Similarity {
         .orderBy(col("center_id"))
         .select(transform(col("center"), _.cast("double")))
         .collect().map(_.getSeq[Double](0).toArray)
+    require(seeds.nonEmpty, "empty center set: no non-null candidate vector")
 
     def cellScores(vec: String): Seq[org.apache.spark.sql.Column] =
       seeds.toIndexedSeq.zipWithIndex.map { case (sv, i) =>

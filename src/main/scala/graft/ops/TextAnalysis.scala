@@ -505,9 +505,16 @@ object TextAnalysis {
     // and cutting spans OFFSET BY ONE from the fingerprinted windows.
     // Filtering empties equals Java-trim semantics for all inputs (split
     // on \s+ can only produce "" at the ends).
-    val toks = filter(split(col(textCol), "\\s+"), t => t =!= "")
-    val kept = filter(toks, (_, i) => !array_contains(col("__dj"), (i / width).cast("int")))
+    // kept windows' token slices: a set difference, not a per-token scan
+    // of the dropped list (O(len²) on repetitive text); the tokens are a
+    // column below, so the lambda does not split the text once per window
+    val toks = col("__toks")
+    val windows = sequence(lit(0), ((size(toks) + (width - 1)) / width).cast("int") - 1)
+    val kept = flatten(transform(array_except(windows, col("__dj")),
+      w => slice(toks, w * width + 1, lit(width))))
     docs.join(dropped, Seq(idCol), "left_outer")
+      .withColumn("__toks", when(col("__dj").isNotNull,
+        filter(split(col(textCol), "\\s+"), t => t =!= "")))
       .select(col(idCol),
         when(col("__dj").isNull, col(textCol))
           .otherwise(array_join(kept, " ")).as("new_text"),

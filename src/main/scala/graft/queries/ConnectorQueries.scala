@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -572,10 +572,10 @@ object ConnectorQueries {
   def searchQuery(s: SparkSession, dir: String, conn: Map[String, String] = Map.empty,
                   coll: String = "gate_srch", minLabel: Option[Int] = None): DataFrame = {
     loadFixture(s, dir, "graft-qdrant", coll, options = conn)
-    val qv = Canonical.from(Tables(s, dir, "embeddings"),
+    val qv = queryRow(Canonical.from(Tables(s, dir, "embeddings"),
       idCol = "vec_id", vectorCol = Some("embedding"), metadataCols = Nil)
-      .filter(col(Canonical.ID) === "0").select(col(Canonical.VECTOR))
-      .head().getSeq[Float](0).toSeq
+      .filter(col(Canonical.ID) === "0").select(col(Canonical.VECTOR)))
+      .getSeq[Float](0).toSeq
     val df = s.read.format("graft-qdrant").options(conn).option("collection", coll).load()
     // optional metadata predicate: PushVectorSearch absorbs it into the
     // pushed search (the FILTERED-search gate variant)
@@ -595,10 +595,10 @@ object ConnectorQueries {
   def searchQueryAliased(s: SparkSession, dir: String): DataFrame = {
     val coll = "gate_srcha"
     loadFixture(s, dir, "graft-qdrant", coll)
-    val qv = Canonical.from(Tables(s, dir, "embeddings"),
+    val qv = queryRow(Canonical.from(Tables(s, dir, "embeddings"),
       idCol = "vec_id", vectorCol = Some("embedding"), metadataCols = Nil)
-      .filter(col(Canonical.ID) === "0").select(col(Canonical.VECTOR))
-      .head().getSeq[Float](0).toSeq
+      .filter(col(Canonical.ID) === "0").select(col(Canonical.VECTOR)))
+      .getSeq[Float](0).toSeq
     val df = s.read.format("graft-qdrant").option("collection", coll).load()
       .withColumn("score",
         graft.functions.VectorExpressions.cosine(col(Canonical.VECTOR), typedLit(qv)))
@@ -611,6 +611,10 @@ object ConnectorQueries {
         df.queryExecution.executedPlan.toString)
     df
   }
+
+  /** The search gates' query vector: `df`'s one row, typed if absent or null. */
+  private def queryRow(df: DataFrame): Row = df.limit(1).collect().find(!_.isNullAt(0))
+    .getOrElse(throw new IllegalArgumentException("no query vector: embeddings row 0 is missing or null"))
 
   /** Native HAMMING search pushdown over a BINARY_VECTOR collection:
     * ORDER BY binary_hamming ASC LIMIT k — [[graft.plans.PushVectorSearch]]
@@ -625,9 +629,9 @@ object ConnectorQueries {
       .write.format("graft-milvus").option("collection", coll)
       .option("vector_type", "BINARY_VECTOR").option("distance", "Hamming")
       .option("recreate", "true").mode("overwrite").save()
-    val qb = Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
-      .select(graft.functions.BinaryVectors.pack(col("embedding")).as("b"))
-      .head().getAs[Array[Byte]](0)
+    val qb = queryRow(Tables(s, dir, "embeddings").filter(col("vec_id") === 0)
+      .select(graft.functions.BinaryVectors.pack(col("embedding")).as("b")))
+      .getAs[Array[Byte]](0)
     val df = s.read.format("graft-milvus").option("collection", coll).load()
     val src = minLabel.map(m => df.filter(
       element_at(col(Canonical.METADATA), "label").cast("double") >= m)).getOrElse(df)

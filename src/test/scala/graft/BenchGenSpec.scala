@@ -7,6 +7,13 @@ import org.apache.spark.sql.functions._
   * BIGGER corpus, not replica cliques. */
 class BenchGenSpec extends SparkSpec {
 
+  test("replicas keep every table's schema") {
+    val out = java.nio.file.Files.createTempDirectory("benchgen-schema").toString
+    BenchGen.replicate(spark, sf(), out, 2)
+    Tables.names.foreach(t => assert(
+      Tables(spark, out, t).schema.catalogString == Tables(spark, sf(), t).schema.catalogString, t))
+  }
+
   test("replicas scale counts, keep joins consistent, and are not cross-copy near-dups") {
     val out = java.nio.file.Files.createTempDirectory("benchgen").toString
     BenchGen.replicate(spark, sf(), out, 3)

@@ -145,6 +145,24 @@ class DuplicateSpansSpec extends SparkSpec {
     assert(got(4L)._2 == "short text" && got(4L)._3 == 0)
   }
 
+  test("removeDuplicateSpans: the rebuild neither scans the dropped list per token nor " +
+    "splits the text per window (O(len²) on repetitive text); a doc repeated 40x keeps one copy") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayContains, LambdaFunction, StringSplit}
+    val span = (1 to 16).map(i => s"w$i").mkString(" ")
+    // a file scan, so the optimizer cannot fold the plan into a local relation
+    val path = java.nio.file.Files.createTempDirectory("spans").resolve("d").toString
+    Seq((1L, Seq.fill(40)(span).mkString(" ") + " end")).toDF("doc_id", "text")
+      .write.parquet(path)
+    val df = TextAnalysis.removeDuplicateSpans(spark.read.parquet(path), width = 16)
+    val lambdas = df.queryExecution.optimizedPlan.flatMap(_.expressions)
+      .flatMap(_.collect { case l: LambdaFunction => l })
+    assert(lambdas.nonEmpty)
+    assert(!lambdas.exists(_.exists(e => e.isInstanceOf[ArrayContains] || e.isInstanceOf[StringSplit])),
+      s"a lambda scans the dropped list or re-splits the text:\n${df.queryExecution.optimizedPlan}")
+    val r = df.as[(Long, String, Int)].collect().head
+    assert(r._2 == s"$span end" && r._3 == 39, r)
+  }
+
   test("removeDuplicateSpans: fingerprint pass runs ONCE (drop-list branches share the exchange)") {
     val df = TextAnalysis.removeDuplicateSpans(Tables(spark, sf(), "documents"), width = 16)
     df.collect()

@@ -815,20 +815,41 @@ class PgLiveWireSpec extends SparkSpec {
   }
 
   /** A loopback TCP relay in front of the live server that counts the
-    * connections it accepts. */
-  private final class CountingRelay(target: Int) extends AutoCloseable {
+    * connections it accepts. A connection whose client has sent
+    * `resetAfter` bytes is reset (RST) on both sides, mid-stream. */
+  private final class CountingRelay(target: Int, resetAfter: Long = Long.MaxValue)
+      extends AutoCloseable {
     private val srv = new java.net.ServerSocket(0, 16, java.net.InetAddress.getByName("127.0.0.1"))
     val port: Int = srv.getLocalPort
     val accepted = new java.util.concurrent.atomic.AtomicInteger
+    val resets = new java.util.concurrent.atomic.AtomicInteger
     private def daemon(body: => Unit): Unit = {
       val t = new Thread(() => body)
       t.setDaemon(true)
       t.start()
     }
-    // one direction; when it ends, so does the pair
-    private def pipe(from: java.net.Socket, to: java.net.Socket): Unit = daemon {
-      try from.getInputStream.transferTo(to.getOutputStream)
-      catch { case _: Throwable => () }
+    private def reset(s: java.net.Socket): Unit =
+      try { s.setSoLinger(true, 0); s.close() } catch { case _: Throwable => () }
+    // one direction, forwarding at most `limit` bytes; when it ends, so
+    // does the pair
+    private def pipe(from: java.net.Socket, to: java.net.Socket, limit: Long): Unit = daemon {
+      val (in, out) = (from.getInputStream, to.getOutputStream)
+      val buf = new Array[Byte](8192)
+      var sent = 0L
+      try {
+        var n = in.read(buf)
+        while (n >= 0 && sent + n <= limit) {
+          out.write(buf, 0, n)
+          sent += n
+          n = in.read(buf)
+        }
+        if (n >= 0) {
+          out.write(buf, 0, (limit - sent).toInt)
+          resets.incrementAndGet()
+          reset(from)
+          reset(to)
+        }
+      } catch { case _: Throwable => () }
       finally { from.close(); to.close() }
     }
     daemon {
@@ -836,8 +857,8 @@ class PgLiveWireSpec extends SparkSpec {
         val client = srv.accept()
         accepted.incrementAndGet()
         val server = new java.net.Socket("127.0.0.1", target)
-        pipe(client, server)
-        pipe(server, client)
+        pipe(client, server, resetAfter)
+        pipe(server, client, Long.MaxValue)
       } catch { case _: Throwable => () } // close() lands here
     }
     override def close(): Unit = srv.close()
@@ -855,6 +876,51 @@ class PgLiveWireSpec extends SparkSpec {
       assert(relay.accepted.get - before == 2,
         s"recreate=$recreate: ${relay.accepted.get - before} connections")
     } finally relay.close()
+  }
+
+  test("a connection reset past the first 64 KiB of a one-partition COPY leaves the " +
+    "target as it was; the re-run lands every row exactly once (staged and recreate)") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    val src = java.nio.file.Files.createTempDirectory("graft-pgwire-reset").toString
+    // 800 rows of ~0.5 KB: one partition's COPY is ~400 KB of CopyData
+    val rows = twoPartitions(800, 2)
+    rows.write.parquet(s"$src/docs.parquet")
+    val want = rows.collect().map(r => r.getString(0) ->
+      r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits)).toMap
+    for (recreate <- Seq(false, true)) {
+      val table = s"wire_reset_${if (recreate) "recreate" else "staged"}"
+      def cfg(port: Int) = graft.config.MigrationConfig.fromJson(
+        s"""{"source": {"type": "parquet", "connection": {"path": "$src"},
+           |            "query": {"table_name": "docs"}},
+           | "target": {"type": "pgvector",
+           |            "connection": {"host": "127.0.0.1", "port": "$port",
+           |                           "database": "postgres", "user": "postgres"},
+           |            "load": {"collection": "$table", "recreate": $recreate,
+           |                     "parallelism": 1}}}""".stripMargin)
+      def target() = live().query(s"SELECT id, vector, metadata FROM $table").rows.sortBy(_.head)
+      assert(pgv.write(twoPartitions(50, 1), wireConn(),
+        graft.config.LoadSpec(collection = table, recreate = true)).written == 50)
+      val before = target()
+      val relay = new CountingRelay(server.get.port, resetAfter = 100 * 1024)
+      val failed =
+        try new graft.core.Migrator(spark).run(cfg(relay.port))
+        finally relay.close()
+      assert(!failed.success, s"recreate=$recreate: the reset went unnoticed: $failed")
+      assert(relay.resets.get > 0, s"recreate=$recreate: no connection was reset")
+      if (target() != before) fail(s"recreate=$recreate: the failed write changed the target")
+      assert(live().query("SELECT count(*) FROM information_schema.tables " +
+        "WHERE table_name LIKE '%graft_build%'").rows.head.head == "0",
+        s"recreate=$recreate: the build table was left behind")
+      val again = new graft.core.Migrator(spark).run(cfg(server.get.port))
+      assert(again.success && again.written == 800, again)
+      val back = pgv.readBack(spark, wireConn(), graft.config.LoadSpec(collection = table))
+        .collect().map(r => r.getString(0) ->
+          r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits))
+      assert(back.length == 800 && back.map(_._1).distinct.length == 800,
+        s"recreate=$recreate: ${back.length} rows over ${back.map(_._1).distinct.length} ids")
+      assert(back.toMap == want, s"recreate=$recreate: vectors differ from the source's bits")
+    }
   }
 
   test("TLS upgrade (SSLRequest): pinned self-signed cert, secure defaults, no fallback") {

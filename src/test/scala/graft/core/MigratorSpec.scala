@@ -112,6 +112,51 @@ class MigratorSpec extends SparkSpec {
     assert(IncrementalMigrator.deletedIds(narrowSource, target).count() == 10)
   }
 
+  /** Ids that `changedRecords` ships when each id's target row is the
+    * second vector/metadata pair and its source row the first. */
+  private def shipped(pairs: (String, (Array[Float], Map[String, String]),
+      (Array[Float], Map[String, String]))*): Set[String] = {
+    import org.apache.spark.sql.types._
+    def frame(side: Int) = spark.createDataFrame(
+      java.util.Arrays.asList(pairs.map { case (id, a, b) =>
+        val (v, m) = if (side == 0) a else b
+        org.apache.spark.sql.Row(id, Option(v).map(_.toSeq).orNull,
+          Option(m).map(x => scala.collection.immutable.ListMap(x.toSeq: _*)).orNull)
+      }: _*), Canonical.schema)
+    IncrementalMigrator.changedRecords(frame(0), frame(1))
+      .collect().map(_.getString(0)).toSet
+  }
+
+  test("re-sync diff: metadata key order does not count as a change") {
+    val v = Array(1f, 2f)
+    assert(shipped(
+      ("ab", (v, Map("a" -> "1", "b" -> "2")), (v, Map("b" -> "2", "a" -> "1"))),
+      ("abc", (v, Map("a" -> "1", "b" -> "2", "c" -> "3")),
+        (v, Map("c" -> "3", "a" -> "1", "b" -> "2")))).isEmpty)
+  }
+
+  test("re-sync diff: a null vector or map differs from an empty one") {
+    val v = Array(1f, 2f)
+    val m = Map("a" -> "1")
+    assert(shipped(
+      ("vec", (null, m), (Array.empty[Float], m)),
+      ("vec2", (Array.empty[Float], m), (null, m)),
+      ("map", (v, null), (v, Map.empty[String, String])),
+      ("map2", (v, Map.empty[String, String]), (v, null)),
+      ("same", (null, null), (null, null)),
+      ("val", (v, Map("a" -> null)), (v, Map("a" -> ""))),
+      ("moved", (Array(1f, 0f), m), (Array(0f, 1f), m))) ==
+      Set("vec", "vec2", "map", "map2", "val", "moved"))
+  }
+
+  test("re-sync diff: -0.0 and 0.0 hash alike (DEPLOYMENT.md), other bits do not") {
+    val m = Map("a" -> "1")
+    assert(shipped(
+      ("zero", (Array(-0f, 1f), m), (Array(0f, 1f), m)),
+      ("nan", (Array(Float.NaN), m), (Array(java.lang.Float.intBitsToFloat(0x7fc00001)), m)),
+      ("ulp", (Array(1f), m), (Array(Math.nextUp(1f)), m))) == Set("ulp"))
+  }
+
   test("incremental is idempotent on a parquet target WITH metadata (map round trip)") {
     // the read-back used to drop the stored metadata map (Canonical.from
     // with no metadata columns emptied it), hash-mismatching EVERY row so

@@ -39,6 +39,28 @@ class BoundedCollectSpec extends SparkSpec {
     assert(e.getMessage.contains("MaxKsub"), e.getMessage)
   }
 
+  test("pqTrain: a training vector of another dimension fails typed, not in the encode") {
+    // odd ids at half the dimension: the lowest-id seeds mix 4 and 2
+    val mixed = vecsDf(10).selectExpr("vec_id",
+      "IF(vec_id % 2 = 1, slice(embedding, 1, 2), embedding) AS embedding")
+    val e = intercept[IllegalArgumentException] {
+      Quantization.pqTrain(mixed, m = 2, ksub = 4)
+    }
+    assert(e.getMessage.contains("dim 4"), e.getMessage)
+  }
+
+  test("k-means seeds skip null vectors; an all-null input fails typed") {
+    val someNull = vecsDf(10).selectExpr("vec_id",
+      "IF(vec_id < 2, CAST(NULL AS array<float>), embedding) AS embedding")
+    val centers = Clustering.fitCenters(someNull, k = 3, iters = 2).collect()
+    assert(centers.length == 3 && centers.forall(!_.isNullAt(1)))
+    val allNull = vecsDf(4).selectExpr("vec_id", "CAST(NULL AS array<float>) AS embedding")
+    val e = intercept[IllegalArgumentException] {
+      Clustering.kmeans(allNull, k = 2, iters = 2).collect()
+    }
+    assert(e.getMessage.contains("empty center set"), e.getMessage)
+  }
+
   test("pqTopK: an oversized query set fails naming MaxQueryRows, not an OOM") {
     val e = intercept[IllegalArgumentException] {
       Quantization.pqTopK(vecsDf(8), queries = vecsDf(Quantization.MaxQueryRows + 5L),

@@ -63,4 +63,23 @@ class QualityModelSpec extends SparkSpec {
     val s = QualityModel.score(docs, QualityModel.zero(4))
     assert(s.collect().forall(_.getDouble(1) == 0.5))
   }
+
+  test("gradientStep scores each document ONCE, below the explode " +
+    "(a per-doc margin above the Generate re-runs per token: O(len²))") {
+    import org.apache.spark.sql.catalyst.plans.logical.Generate
+    import graft.functions.BucketWeightSumExpr
+    // the gate's own input: a file scan (a local Seq would be folded away)
+    val docs = graft.Tables(spark, sf(), "documents")
+      .withColumn("label", (col("lang") === "en").cast("double"))
+    val plan = QualityModel.gradientStep(docs, "label", QualityModel.zero(64))
+      .queryExecution.optimizedPlan
+    def margins(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      e.collect { case m: BucketWeightSumExpr => m }
+    val aboveGenerate = plan.collect {
+      case p if !p.isInstanceOf[Generate] && p.exists(_.isInstanceOf[Generate]) => p
+    }
+    assert(aboveGenerate.nonEmpty, s"no Generate in the plan:\n$plan")
+    aboveGenerate.foreach(p => assert(p.expressions.flatMap(margins).isEmpty,
+      s"the margin is evaluated above the Generate in ${p.nodeName}:\n$plan"))
+  }
 }
