@@ -14,8 +14,9 @@ package graft.connectors.vectorstore
   * drop-if-exists form. Executor-thread-safe iff the inner transport is.
   *
   * `retryOn` filters which failures are worth re-attempting (default:
-  * everything except `NoSuchElementException` — a missing collection is a
-  * logic error, not a transient fault; a network impl would match on its
+  * everything except `NoSuchElementException` and `IllegalArgumentException`
+  * — a missing collection or a rejected argument is a logic error, not a
+  * transient fault; a network impl would match on its
   * client's timeout/unavailable exceptions instead).
   */
 case class RetryingTransport(
@@ -100,11 +101,13 @@ case class RetryingTransport(
 }
 
 object RetryingTransport {
-  /** Retry transient-looking faults; never retry a missing collection, and
-    * never a [[WireShapeException]] — a protocol-shape mismatch is
-    * deterministic (the retry would replay the same wrong shape). */
+  /** Retry transient-looking faults; never retry a missing collection, a
+    * rejected argument (a malformed filter, a vector-less index a filtered
+    * query cannot size), or a [[WireShapeException]] — a protocol-shape
+    * mismatch is deterministic (the retry would replay the same wrong shape). */
   val defaultRetryOn: Throwable => Boolean = {
     case _: NoSuchElementException => false
+    case _: IllegalArgumentException => false
     case _: WireShapeException => false
     case _ => true
   }

@@ -1259,27 +1259,44 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
   @transient private lazy val dimCache =
     scala.collection.concurrent.TrieMap.empty[String, Int]
   /** Vector dim for the dummy query vector: the index description when it
-    * carries one, else one listed record's vector length (indexes created
-    * through the engine's writer may register before the dim is known). */
-  private def dimOf(name: String): Int = {
+    * carries one, else the first listed vector's length (indexes created
+    * through the engine's writer may register before the dim is known).
+    * None when the namespace lists no record: there is nothing to query.
+    * Records but no vector cannot size a query: IllegalArgumentException. */
+  private def dimOf(name: String): Option[Int] = {
     val ix = split(name)._1
-    dimCache.getOrElseUpdate(ix,
-      describe(name).map(_.dim).filter(_ > 0).getOrElse(
-        scrollPage(name, None, 1)._1.headOption.flatMap(r => Option(r.vector))
-          .map(_.length).getOrElse(throw new NoSuchElementException(
-            s"cannot determine vector dim for a filtered query on $name"))))
+    dimCache.get(ix).orElse {
+      val d = describe(name).map(_.dim).filter(_ > 0).orElse(listedDim(name, None, seen = false))
+      d.foreach(dimCache.put(ix, _))
+      d
+    }
+  }
+
+  // one record first (it has a vector in any real index), then whole pages
+  @annotation.tailrec
+  private def listedDim(name: String, cursor: Option[String], seen: Boolean): Option[Int] = {
+    val (recs, next) = scrollPage(name, cursor, if (seen) queryCap else 1)
+    recs.iterator.flatMap(r => Option(r.vector)).map(_.length).nextOption() match {
+      case found @ Some(_) => found
+      case None if next.isEmpty =>
+        if (seen || recs.nonEmpty) throw new IllegalArgumentException(
+          s"cannot size a filtered query on Pinecone index ${split(name)._1}: " +
+            s"$name holds records but none has a vector")
+        None
+      case None => listedDim(name, next, seen || recs.nonEmpty)
+    }
   }
 
   /** One filtered `/query` call: the caller's filter AND-composed with a
     * `__gid` work-item condition, a constant non-zero query vector (scores
     * are irrelevant — the filter does the selection), full values +
     * metadata back. */
-  private def filteredQuery(name: String, f: String, gidCond: String,
+  private def filteredQuery(name: String, dim: Int, f: String, gidCond: String,
                             topK: Int): Seq[VSRecord] = {
     val (ix, ns) = resolved(name)
     val b = obj()
     if (ns.nonEmpty) b.put("namespace", ns)
-    putFloats(b, "vector", Array.fill(dimOf(name))(1.0f))
+    putFloats(b, "vector", Array.fill(dim)(1.0f))
     b.put("topK", topK)
     b.put("includeValues", true)
     b.put("includeMetadata", true)
@@ -1320,9 +1337,10 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
     * ≤ 2× the minimal ceil(n/cap) query calls. */
   override def scrollPageFiltered(name: String, cursor: Option[String], pageSize: Int,
                                   filter: Option[String]): (Seq[VSRecord], Option[String]) =
-    filter match {
+    filter.map(f => (f, dimOf(name))) match {
       case None => scrollPage(name, cursor, pageSize)
-      case Some(f) =>
+      case Some((_, None)) => (Seq.empty, None) // nothing listed: no /query to send
+      case Some((f, Some(dim))) =>
         val st = cursor.map(decodeScanState).getOrElse(
           ScanState(List((None, None)), existsLeg = true))
         st.ranges match {
@@ -1332,7 +1350,7 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
             val gidCond =
               if (conds.isEmpty) """{"__gid":{"$exists":true}}"""
               else s"""{"__gid":{${conds.mkString(",")}}}"""
-            val recs = filteredQuery(name, f, gidCond, queryCap)
+            val recs = filteredQuery(name, dim, f, gidCond, queryCap)
             if (recs.size < queryCap)
               (recs, encodeScanState(ScanState(rest, st.existsLeg)))
             else {
@@ -1350,7 +1368,7 @@ class PineconeWireTransport(baseUrl: String, apiKey: Option[String] = None,
                 ScanState((lo, Some(pivot)) :: (Some(pivot), hi) :: rest, st.existsLeg)))
             }
           case Nil =>
-            val recs = filteredQuery(name, f, """{"__gid":{"$exists":false}}""", queryCap)
+            val recs = filteredQuery(name, dim, f, """{"__gid":{"$exists":false}}""", queryCap)
             if (recs.size >= queryCap)
               throw new java.io.IOException(
                 s"filtered scan of $name: >= $queryCap matching records lack the numeric " +

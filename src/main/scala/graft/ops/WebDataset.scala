@@ -35,9 +35,15 @@ object WebDataset {
     * `key` is the member basename up to the FIRST dot — webdataset's
     * sample grouping rule (`a/b/000123.seg.png` → key `a/b/000123`, ext
     * `seg.png`). Directories and zero-length PAX/metadata members are
-    * skipped. */
+    * skipped. A glob that matches no shard (what [[writeShards]] leaves for
+    * an empty frame) reads as no rows with the same schema. */
   def readShards(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
+    val glob = new org.apache.hadoop.fs.Path(pathGlob)
+    val shards = Option(glob.getFileSystem(spark.sparkContext.hadoopConfiguration).globStatus(glob))
+    if (shards.forall(_.isEmpty))
+      return spark.emptyDataset[(String, String, String, Array[Byte], Long)]
+        .toDF("shard", "key", "ext", "content", "byte_len")
     spark.read.format("binaryFile").load(pathGlob)
       .select(col("path"), col("content"))
       .as[(String, Array[Byte])]

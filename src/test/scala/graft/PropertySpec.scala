@@ -220,3 +220,39 @@ object KernelProps extends Properties("kernels") {
     }
   }
 }
+
+/** Both paths of [[graft.ops.Dedup.connectedComponents]] — the driver
+  * union-find finish and the distributed min-label loop (bound 0) — return
+  * the same rows and schema on generated graphs. */
+object ComponentProps extends Properties("components") {
+
+  private lazy val spark = SparkSpec.session
+  import spark.implicits._
+
+  override def overrideParameters(p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(8)
+
+  private def sameOnBothPaths(pairs: org.apache.spark.sql.DataFrame): Prop = {
+    import Prop.propBoolean
+    val driver = graft.ops.Dedup.connectedComponents(pairs)
+    val loop = graft.ops.Dedup.connectedComponents(pairs, driverMaxEdges = 0L)
+    val (d, l) = (driver.collect().toSet, loop.collect().toSet)
+    (driver.schema == loop.schema) :| s"${driver.schema} vs ${loop.schema}" &&
+      (d == l) :| s"driver $d vs loop $l"
+  }
+
+  private def graph[A](node: Gen[A]): Gen[List[(A, A)]] =
+    Gen.chooseNum(0, 24).flatMap(Gen.listOfN(_, Gen.zip(node, node)))
+
+  property("long ids: driver finish equals the distributed loop") =
+    forAll(graph(Gen.chooseNum(-12L, 12L)))(ps => sameOnBothPaths(ps.toDF("id_a", "id_b")))
+
+  // "｡" (U+FF61) sorts before "😀" (U+1F600) in UTF-8 bytes, as Spark
+  // orders strings, but after it in Java's UTF-16 compareTo
+  property("string ids (UTF-8 vs UTF-16 order, nulls): driver finish equals the loop") =
+    forAll(graph(Gen.frequency(
+      8 -> Gen.oneOf("｡", "😀", "ｚ", "𝄞", "a", "b", "é", "").map(Option(_)),
+      1 -> Gen.const(Option.empty[String])))) { ps =>
+      sameOnBothPaths(ps.toDF("id_a", "id_b"))
+    }
+}

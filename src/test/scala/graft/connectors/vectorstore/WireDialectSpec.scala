@@ -584,6 +584,30 @@ class WireDialectSpec extends SparkSpec {
     } finally server.stop()
   }
 
+  test("pinecone wire: a filtered scan of an empty namespace is empty with no /query; " +
+    "records with no vector fail typed, unretried") {
+    val server = new PineconeWireServer(new InMemoryStore)
+    val t = new PineconeWireTransport(server.url)
+    try {
+      t.createCollection("ev::n", CollectionConfig(dim = 0), recreate = true)
+      val f = Some("""{"lbl":{"$eq":"l1"}}""")
+      assert(t.scrollPageFiltered("ev::n", None, 100, f) == ((Seq.empty, None)))
+      assert(!server.requestLines.exists(_.startsWith("POST /query")), server.requestLines)
+      t.upsert("ev::n", Seq(VSRecord("1", null, Map("lbl" -> "l1"))))
+      def requestsOf(scan: => Any): Seq[String] = {
+        val before = server.requestLines.size
+        val e = intercept[IllegalArgumentException](scan)
+        assert(e.getMessage.contains("Pinecone index ev"), e.getMessage)
+        server.requestLines.drop(before)
+      }
+      val once = requestsOf(t.scrollPageFiltered("ev::n", None, 100, f))
+      assert(!once.exists(_.startsWith("POST /query")), once)
+      val retrying = requestsOf(
+        RetryingTransport(t, backoffMs = 0L).scrollPageFiltered("ev::n", None, 100, f))
+      assert(retrying == once, s"retried: $retrying")
+    } finally server.stop()
+  }
+
   test("pinecone wire: $exists:true reaches present non-numeric __gid; $lte bound inclusive") {
     val inner = new InMemoryStore
     val server = new PineconeWireServer(inner)

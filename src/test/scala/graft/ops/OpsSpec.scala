@@ -127,22 +127,64 @@ class OpsSpec extends SparkSpec {
     assert(v == Seq(("apple", 3L, 2L), ("banana", 2L, 2L)), v.toString)
   }
 
+  // each connectedComponents case runs on both paths: the driver finish
+  // (default bound) and the distributed loop (bound 0)
+  private val ccBounds = Seq(1L << 20, 0L)
+
   test("connectedComponents merges chains and keeps islands separate") {
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L), (21L, 22L), (22L, 23L))
       .toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(Seq(1L, 2L, 3L).forall(comps(_) == 1L))
-    assert(Seq(10L, 11L).forall(comps(_) == 10L))
-    assert(Seq(20L, 21L, 22L, 23L).forall(comps(_) == 20L))
+    for (bound <- ccBounds) {
+      val comps = Dedup.connectedComponents(pairs, driverMaxEdges = bound).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(Seq(1L, 2L, 3L).forall(comps(_) == 1L), s"bound $bound")
+      assert(Seq(10L, 11L).forall(comps(_) == 10L), s"bound $bound")
+      assert(Seq(20L, 21L, 22L, 23L).forall(comps(_) == 20L), s"bound $bound")
+    }
   }
 
   test("connectedComponents converges on a 64-node chain within maxIter=20 " +
     "(pointer jumping: pure propagation would need 63 rounds)") {
     val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comps = Dedup.connectedComponents(pairs).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comps.size == 64 && (1L to 64L).forall(comps(_) == 1L), comps.toString)
+    for (bound <- ccBounds) {
+      val comps = Dedup.connectedComponents(pairs, driverMaxEdges = bound).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(comps.size == 64 && (1L to 64L).forall(comps(_) == 1L), s"bound $bound: $comps")
+    }
+  }
+
+  test("connectedComponents: the driver finish returns the loop's rows and schema " +
+    "on null ids, self-loops, duplicate and reversed edges, a chain and no edges") {
+    val nullable = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (2L, 1L), (2L, 1L), (3L, 3L), (4L, null), (null, null), (null, 5L),
+      (7L, 6L), (6L, 8L)).toDF("id_a", "id_b")
+    val chain = (1L until 64L).map(i => (65L - i, 64L - i)).toDF("id_a", "id_b")
+    val none = Seq.empty[(String, String)].toDF("id_a", "id_b")
+    for (pairs <- Seq(nullable, chain, none)) {
+      val Seq(driver, loop) = ccBounds.map(b => Dedup.connectedComponents(pairs, driverMaxEdges = b))
+      assert(driver.schema == loop.schema)
+      assert(driver.collect().toSet == loop.collect().toSet, pairs.schema.simpleString)
+    }
+    val labels = Dedup.connectedComponents(nullable).collect()
+      .map(r => Option(r.get(0)) -> Option(r.get(1))).toMap
+    assert(labels == Map(Some(1L) -> Some(1L), Some(2L) -> Some(1L), Some(3L) -> Some(3L),
+      Some(4L) -> Some(4L), Some(5L) -> Some(5L), Some(6L) -> Some(6L), Some(7L) -> Some(6L),
+      Some(8L) -> Some(6L), None -> None), labels.toString)
+    // Spark orders strings by UTF-8 bytes: "｡" (U+FF61) < "😀" (U+1F600),
+    // the reverse of Java's UTF-16 compareTo
+    val strings = Seq(("😀", "｡")).toDF("id_a", "id_b")
+    for (bound <- ccBounds)
+      assert(Dedup.connectedComponents(strings, driverMaxEdges = bound).as[(String, String)]
+        .collect().toSet == Set("😀" -> "｡", "｡" -> "｡"), s"bound $bound")
+  }
+
+  test("keepCanonical over a small pair list runs two executions in connectedComponents " +
+    "(materialize + collect, no label rounds)") {
+    val pairs = Seq((1L, 2L), (2L, 3L), (5L, 6L)).toDF("id_a", "id_b")
+    val docs = (1L to 6L).map(i => (i, s"text $i")).toDF("doc_id", "text")
+    val (kept, n) = executionsDuring(_ => true)(Dedup.keepCanonical(docs, pairs))
+    assert(n == 2, s"$n executions")
+    assert(kept.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 4L, 5L))
   }
 
   test("keepCanonical keeps one doc per cluster plus all unpaired docs") {

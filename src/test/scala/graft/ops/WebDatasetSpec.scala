@@ -56,6 +56,17 @@ class WebDatasetSpec extends SparkSpec {
     assert(j == """{"id":7}""", j)
   }
 
+  test("empty round trip: writeShards of no samples, readShards gives 0 rows and the same schema") {
+    val samples = Seq(("k1", Map("txt" -> "one".getBytes("UTF-8")))).toDF("key", "files")
+    val full = tmp("wds_full")
+    WebDataset.writeShards(samples, full, numShards = 2)
+    val empty = tmp("wds_empty")
+    assert(WebDataset.writeShards(samples.limit(0), empty, numShards = 2) == 0L)
+    val read = WebDataset.readShards(spark, s"$empty/*.tar")
+    assert(read.collect().isEmpty)
+    assert(read.schema == WebDataset.readShards(spark, s"$full/*.tar").schema)
+  }
+
   test("shard assignment is deterministic and repartition-proof") {
     val s1 = (0 until 100).map(i => WebDataset.shardOf(s"key$i", 8))
     val s2 = (0 until 100).map(i => WebDataset.shardOf(s"key$i", 8))
