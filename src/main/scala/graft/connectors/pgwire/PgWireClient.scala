@@ -730,7 +730,18 @@ class PgWireClient(host: String, port: Int,
     PgResult(Seq.empty, Seq.empty, tags.result())
   }
 
-  override def close(): Unit = {
+  /** Send `sql` as one last Simple Query message, then Terminate, and
+    * close without reading the answer. The backend runs the statement
+    * before it reads the Terminate queued behind it, so the statement
+    * still runs (and commits, or fails unseen) after this returns — for
+    * cleanup no caller's result depends on. */
+  def closeAfter(sql: String): Unit =
+    try sendQuery(sql) finally close()
+
+  private var closed = false
+
+  override def close(): Unit = if (!closed) {
+    closed = true
     try {
       out.writeByte('X') // Terminate
       out.writeInt(4)

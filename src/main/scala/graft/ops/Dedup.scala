@@ -703,6 +703,9 @@ object Dedup {
     * the edge cases too: a null id is one row labeled null that joins no
     * component, self-loops and duplicate or reversed edges change nothing.
     *
+    * @param maxIter the distributed loop's round budget: a loop whose
+    *   last round still changed labels throws
+    *   [[ComponentsNotConvergedException]] instead of returning them.
     * @param driverMaxEdges the driver finish's bound on distinct directed
     *   edges; 0 always runs the distributed loop.
     * @return (id, component) — component = smallest id in the cluster.
@@ -710,6 +713,7 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, idACol: String = "id_a",
                           idBCol: String = "id_b", maxIter: Int = 20,
                           driverMaxEdges: Long = DriverMaxEdges): DataFrame = {
+    require(maxIter > 0, s"maxIter must be positive: $maxIter")
     // Materialize the edge list ONCE: it is re-read every iteration, and
     // its lineage is whatever produced the pairs (e.g. the full LSH
     // pipeline) — without this each propagation round re-executes that
@@ -726,8 +730,8 @@ object Dedup {
     var labels = edges.select(col("src").as("id")).distinct()
       .withColumn("comp", col("id"))
     var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
+    var changed = 1L // labels the last round lowered; 0 = the fixpoint
+    while (iter < maxIter && changed > 0) {
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "dst").withColumnRenamed("comp", "dst_comp"), "dst")
         .groupBy(col("src").as("id"))
@@ -767,12 +771,20 @@ object Dedup {
         .drop("__changed")
       labels = Materialize(updated) // truncate the iterative lineage
       // sum over an empty label set observes null → converged
-      converged = obs.get.get("n_changed")
-        .flatMap(Option(_)).map(String.valueOf(_).toLong).forall(_ == 0L)
+      changed = obs.get.get("n_changed")
+        .flatMap(Option(_)).map(String.valueOf(_).toLong).getOrElse(0L)
       iter += 1
     }
+    if (changed > 0) throw new ComponentsNotConvergedException(iter, changed)
     labels
   }
+
+  /** [[connectedComponents]]'s distributed loop ran `rounds` rounds and
+    * its last one still lowered `lastChanged` labels: the labels it has
+    * may split components, so it returns none. */
+  final class ComponentsNotConvergedException(val rounds: Int, val lastChanged: Long)
+    extends IllegalStateException(s"connected components did not converge in $rounds " +
+      s"rounds: the last round still changed $lastChanged labels (raise maxIter)")
 
   /** Default bound of [[connectedComponents]]'s driver finish, in distinct
     * directed edges (see its scaladoc for the memory it stands for). */

@@ -783,6 +783,9 @@ class PgLiveWireSpec extends SparkSpec {
     val table = pgv.readBack(spark, wireConn(), load)
     assert(table.rdd.getNumPartitions > 1, table.rdd.getNumPartitions)
     assert(backRows(table) == want)
+    // the second load's retired table (and its index) is dropped after
+    // the write returned
+    assert(retiredGone(""), "the retired table was never dropped")
     assert(c.query("SELECT indexname FROM pg_indexes WHERE schemaname = 'scan_s'").rows ==
       Seq(Seq("scan_s_mixed_case_graft_id_ix")), "the swap left the id index misnamed")
     c.query("CREATE VIEW scan_s.Mixed_View AS SELECT * FROM scan_s.mixed_case")
@@ -811,7 +814,96 @@ class PgLiveWireSpec extends SparkSpec {
       assert(live().query("SELECT count(*) FROM information_schema.tables " +
         "WHERE table_name LIKE '%graft_build%'").rows.head.head == "0",
         s"$framing: the build table was left behind")
+      // the first load's retire runs after its write returned
+      assert(retiredGone(""), s"$framing: a retired table was left behind")
     }
+  }
+
+  /** Waits, at most 10 s, until no relation named like
+    * `<prefix>%graft_retired%` is left — a recreate load drops the table
+    * it retired after its write returned — and says whether none is. */
+  private def retiredGone(prefix: String): Boolean = {
+    val deadline = System.nanoTime() + 10000000000L
+    def left = live().query("SELECT count(*) FROM pg_class " +
+      s"WHERE relname LIKE '$prefix%graft_retired%'").rows.head.head != "0"
+    while (left && System.nanoTime() < deadline) Thread.sleep(10)
+    !left
+  }
+
+  /** The relations `pg_class` holds named like `<prefix>%`, with their kinds. */
+  private def relations(prefix: String) =
+    live().query(s"SELECT relname, relkind FROM pg_class WHERE relname LIKE '$prefix%' " +
+      "ORDER BY relname").rows
+
+  test("a recreate load onto a target with a dependent view fails as a drop would, " +
+    "and leaves the target, the view and no build or retired table") {
+    val c = live()
+    val pgv = ConnectorRegistry("pgvector")
+    c.query("CREATE TABLE wire_dep_t (id TEXT, vector TEXT, metadata TEXT); " +
+      "INSERT INTO wire_dep_t VALUES ('a', '[1,2]', '{\"v\":\"old\"}'); " +
+      "CREATE VIEW wire_dep_v AS SELECT id, metadata FROM wire_dep_t")
+    def state = (relations("wire_dep"), c.query("SELECT * FROM wire_dep_t").rows,
+      c.query("SELECT * FROM wire_dep_v").rows)
+    val before = state
+    val e = intercept[PgWireException](pgv.write(twoPartitions(20, 2), wireConn(),
+      graft.config.LoadSpec(collection = "wire_dep_t", recreate = true)))
+    assert(e.sqlState == "2BP01", e.getMessage) // dependent_objects_still_exist
+    assert(e.getMessage.contains("wire_dep_t"), e.getMessage)
+    assert(state == before, s"the failed load changed ${state} (was $before)")
+    // the session survived: the same driver connection cleaned up
+    assert(c.query("SELECT count(*) FROM pg_class WHERE relname LIKE '%graft_build%' " +
+      "OR relname LIKE 'wire_dep%graft_retired%'").rows.head.head == "0")
+  }
+
+  test("a retired table left by an earlier load is dropped by the next recreate's swap") {
+    val c = live()
+    val pgv = ConnectorRegistry("pgvector")
+    val load = graft.config.LoadSpec(collection = "wire_leftover", recreate = true)
+    assert(pgv.write(twoPartitions(30, 1), wireConn(), load).written == 30)
+    assert(retiredGone("wire_leftover"))
+    // what a load whose retire never ran leaves: the old target, with
+    // its index, under the retired names
+    c.query("CREATE TABLE wire_leftover_graft_retired (id TEXT, vector TEXT, metadata TEXT); " +
+      "CREATE INDEX wire_leftover_graft_retired_graft_id_ix ON wire_leftover_graft_retired (id); " +
+      "INSERT INTO wire_leftover_graft_retired VALUES ('stale', '[0]', NULL)")
+    assert(pgv.write(twoPartitions(40, 2), wireConn(), load).written == 40)
+    assert(retiredGone("wire_leftover"), "the leftover or this load's retired table stayed")
+    val rows = plainRows("wire_leftover")
+    assert(rows.length == 40 && rows.forall(_._3.contains("2")), rows)
+    assert(relations("wire_leftover") == Seq(Seq("wire_leftover", "r"),
+      Seq("wire_leftover_graft_id_ix", "i")), relations("wire_leftover"))
+  }
+
+  test("recreate and staged loads into 51- and 63-byte names keep their id index") {
+    val c = live()
+    val pgv = ConnectorRegistry("pgvector")
+    for (n <- Seq(51, 63)) {
+      val table = s"wl${n}_" + "x" * (n - 5)
+      assert(table.length == n)
+      for ((version, recreate) <- Seq(1 -> true, 2 -> true, 3 -> false)) {
+        val rows = twoPartitions(if (recreate) 60 else 20, version)
+        assert(pgv.write(rows, wireConn(),
+          graft.config.LoadSpec(collection = table, recreate = recreate)).written == rows.count(),
+          s"$n bytes, version $version")
+        val got = plainRows(table).groupBy(_._1.get).map { case (id, r) => id -> r.map(_._3) }
+        // the staged load replaces k0..k19 and keeps the rest
+        val want = (0 until 60).map(i => s"k$i" ->
+          Seq(Some(if (recreate) s"$version" else if (i < 20) "3" else "2"))).toMap
+        assert(got == want, s"$n bytes, version $version: $got")
+        val ix = c.query("SELECT indexname, indexdef FROM pg_indexes " +
+          s"WHERE tablename = '$table'").rows
+        assert(ix.length == 1 && ix.head(0).endsWith("_graft_id_ix") &&
+          ix.head(1).endsWith("(id)"), s"$n bytes, version $version: $ix")
+        if (n == 51) assert(ix.head(0) == s"${table}_graft_id_ix")
+      }
+      assert(retiredGone(s"wl$n"), s"$n bytes: the retired table stayed")
+    }
+    // a name PostgreSQL would cut is refused before any DDL runs
+    val long = "wl64_" + "x" * 59
+    val e = intercept[IllegalArgumentException](pgv.write(twoPartitions(2, 1), wireConn(),
+      graft.config.LoadSpec(collection = long, recreate = true)))
+    assert(e.getMessage.contains("63-byte"), e.getMessage)
+    assert(relations("wl64").isEmpty)
   }
 
   /** A loopback TCP relay in front of the live server that counts the

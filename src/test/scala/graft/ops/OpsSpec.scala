@@ -153,6 +153,17 @@ class OpsSpec extends SparkSpec {
     }
   }
 
+  test("connectedComponents: a loop out of rounds throws, naming them and the last change count") {
+    val pairs = (1L until 64L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[Dedup.ComponentsNotConvergedException](
+      Dedup.connectedComponents(pairs, maxIter = 2, driverMaxEdges = 0L))
+    assert(e.rounds == 2 && e.lastChanged > 0, e.getMessage)
+    assert(e.getMessage.contains("2 rounds") && e.getMessage.contains(s"${e.lastChanged} labels"),
+      e.getMessage)
+    // the driver finish needs no rounds
+    assert(Dedup.connectedComponents(pairs, maxIter = 2).count() == 64)
+  }
+
   test("connectedComponents: the driver finish returns the loop's rows and schema " +
     "on null ids, self-loops, duplicate and reversed edges, a chain and no edges") {
     val nullable = Seq[(java.lang.Long, java.lang.Long)](
