@@ -96,10 +96,32 @@ object PgVectorCodec {
     else 0
   }
 
-  /** array<float|double> → `'[0.1,0.2]'` text literal. */
+  /** array<float|double> → `'[0.1,0.2]'` text literal; a null array is
+    * null. One whole-stage-codegen projection (a `transform` lambda runs
+    * interpreted, once per element). A null element renders as `null`:
+    * [[textToVector]] and [[vectorFromText]] read it back as a null
+    * element, and a `VECTOR(d)` column rejects it, where dropping it
+    * would have stored a shorter vector. */
   def vectorToText(c: Column): Column =
-    when(c.isNull, lit(null).cast(StringType))
-      .otherwise(concat(lit("["), concat_ws(",", transform(c, _.cast("string"))), lit("]")))
+    concat(lit("["), array_join(c.cast(ArrayType(StringType)), ",", "null"), lit("]"))
+
+  /** pgvector's binary `vector_send` field of row `id`'s float vector. A
+    * null element fails with an IllegalArgumentException naming the row:
+    * unboxed, it would be sent as 0.0. */
+  def vectorSend(id: String, v: scala.collection.Seq[Any]): Array[Byte] = {
+    val out = new Array[Float](v.length)
+    val it = v.iterator
+    var i = 0
+    while (it.hasNext) {
+      it.next() match {
+        case f: Float => out(i) = f
+        case _ => throw new IllegalArgumentException(
+          s"vector of id '$id' has a null element at index $i; a pgvector VECTOR holds none")
+      }
+      i += 1
+    }
+    PgBinary.vectorSend(out)
+  }
 }
 
 /** Connection handling for [[PgVectorConnector]]: the endpoint, the
@@ -576,7 +598,7 @@ class PgVectorConnector extends VectorConnector {
                 if (r.isNullAt(i)) null else PgBinary.textSend(r.getString(i))
               def fVec(r: Row): Array[Byte] =
                 if (r.isNullAt(1)) null
-                else if (vecFloats) PgBinary.vectorSend(r.getSeq[Float](1).toArray)
+                else if (vecFloats) PgVectorCodec.vectorSend(r.getString(0), r.getSeq[Any](1))
                 else PgBinary.textSend(r.getString(1))
               c.copyInBinary(s"COPY $copyTarget FROM STDIN WITH (FORMAT binary)",
                 it.map(r => Array(fTxt(r, 0), fVec(r), fTxt(r, 2))))

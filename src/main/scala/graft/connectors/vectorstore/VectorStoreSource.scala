@@ -803,7 +803,17 @@ class VSScan(collection: String, dialect: FilterDialect, pushed: Array[Filter],
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.of(rows)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  /** The planned partitions, AT MOST ONCE per scan instance: Spark calls
+    * `planInputPartitions` again for every copy of the `BatchScanExec` it
+    * makes while planning (two per sliced query, measured), and each call
+    * of [[planCursorSlices]] scrolls a whole probe page. Slices are
+    * disjoint and covering for any split points, so freezing them freezes
+    * balance only, as [[population]] already does. */
+  private lazy val partitions: Array[InputPartition] = plan()
+
+  private def plan(): Array[InputPartition] = {
     search match {
       // native top-k: ONE search call replaces the collection scroll —
       // only when the backend serves the metric AND any pushed filters

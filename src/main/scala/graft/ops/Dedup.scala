@@ -644,17 +644,30 @@ object Dedup {
     *  3. connected components → clusters
     *  4. keep the canonical (smallest-id) doc per cluster
     *
+    * The representative documents themselves (step 1's rows, not just
+    * their ids) are materialized once, so steps 2–4 and whatever the
+    * caller does with the result read that one checkpoint instead of
+    * re-running the caller's `docs` lineage. The checkpoint is about the
+    * size of the exact-deduplicated input; under
+    * `spark.graft.checkpoint.dir` it is one DFS write of that size.
+    *
     * @return the deduplicated corpus (same schema as `docs`).
     */
   def fuzzyDedupPipeline(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                          threshold: Double = 0.5, verifyExact: Boolean = true): DataFrame = {
-    // Checkpointed: the rep-id list is tiny, but its lineage is a groupBy
-    // keyed on the full TEXT — and repDocs feeds three downstream branches
-    // (band stage, verify shingles, canonical keep), each of which would
-    // otherwise re-run that full-corpus text shuffle.
+    // Two checkpoints. The rep ids keep the groupBy keyed on the full
+    // TEXT out of the join below. The rep DOCS are read by the signature/
+    // band pass, the verify shingles, connected components' edge list,
+    // keepCanonical's join and the caller; without their checkpoint each
+    // of those re-plans and re-runs `docs` ⋈ reps (the edge list's plan
+    // holds that lineage once per branch, and AQE re-plans it after
+    // every stage). perfbench `curate_corpus`, 600 docs, 4-core host,
+    // ids-only → both: `run_s` 2.15 → 1.52 s (−29%, 10/10 paired runs),
+    // 31 → 25 Spark jobs, driver gap 1.09 → 0.65 s; the price is one
+    // write of the exact-deduplicated rows (shuffle 0.89 → 1.05 MB).
     val reps = Materialize(
       exactDuplicates(docs, idCol, textCol).select(col("keep_id").as(idCol)))
-    val repDocs = docs.join(reps, idCol) // one representative per exact group
+    val repDocs = Materialize(docs.join(reps, idCol)) // one representative per exact group
     val pairs = minHashDuplicatePairs(repDocs, idCol, textCol, threshold = threshold,
       verifyExact = verifyExact)
     keepCanonical(repDocs, pairs, idCol)

@@ -32,4 +32,17 @@ class FileConnectorSpec extends SparkSpec {
         graft.config.LoadSpec(collection = s"t_$fmt")).count() == 3, fmt)
     }
   }
+
+  test("a null vector element survives a csv write and read-back in its place") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-file-nullelem").toString
+    val df = spark.sql("SELECT 'a' AS id, array(1.5F, NULL, 2.0F) AS vector, " +
+      "map('k', '1') AS metadata UNION ALL " +
+      "SELECT 'b', array(3.0F, 4.0F, 5.0F), map('k', '2')")
+    val csv = ConnectorRegistry("csv")
+    val load = graft.config.LoadSpec(collection = "nullelem")
+    assert(csv.write(df, Map("path" -> tmp), load).written == 2)
+    val back = csv.readBack(spark, Map("path" -> tmp), load).orderBy("id").collect()
+      .map(r => r.getString(0) -> r.getSeq[Any](1).toSeq).toSeq
+    assert(back == Seq("a" -> Seq(1.5f, null, 2.0f), "b" -> Seq(3f, 4f, 5f)), back)
+  }
 }

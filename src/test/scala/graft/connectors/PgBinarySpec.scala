@@ -101,6 +101,16 @@ class PgBinarySpec extends AnyFunSuite {
       specialFloats.map(java.lang.Float.floatToRawIntBits).toSeq)
   }
 
+  test("the connector's binary vector field equals vectorSend, and a null element " +
+    "fails naming the row instead of sending 0.0") {
+    val v = Seq[Any](1.5f, -0f, Float.NaN)
+    assert(PgVectorCodec.vectorSend("a", v).sameElements(
+      PgBinary.vectorSend(Array(1.5f, -0f, Float.NaN))))
+    val e = intercept[IllegalArgumentException](
+      PgVectorCodec.vectorSend("row-7", Seq[Any](1f, null, 2f)))
+    assert(e.getMessage.contains("'row-7'") && e.getMessage.contains("index 1"), e.getMessage)
+  }
+
   test("vectorSend rejects a dimension past the uint16 header, typed") {
     val e = intercept[IllegalArgumentException](PgBinary.vectorSend(new Array[Float](0x10000)))
     assert(e.getMessage.contains("65536"), e.getMessage)

@@ -245,6 +245,23 @@ class PgLiveWireSpec extends SparkSpec {
       .head().getSeq[Float](1) == Seq(8f, 8f), "upsert kept the stale version")
   }
 
+  test("a null vector element round-trips through a TEXT target as a null element, " +
+    "text and binary framing") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    val df = spark.sql("SELECT 'a' AS id, array(1.5F, NULL, 2.0F) AS vector, " +
+      "map('k', '1') AS metadata UNION ALL " +
+      "SELECT 'b', array(3.0F, 4.0F, 5.0F), map('k', '2')")
+    for ((framing, extra) <- framings) {
+      val load = graft.config.LoadSpec(collection = s"wire_nullelem_$framing", recreate = true)
+      assert(pgv.write(df, wireConn(extra: _*), load).written == 2, framing)
+      val back = pgv.readBack(spark, wireConn(), load).orderBy(graft.model.Canonical.ID)
+        .collect().map(r => r.getString(0) -> r.getSeq[Any](1).toSeq).toSeq
+      assert(back == Seq("a" -> Seq(1.5f, null, 2.0f), "b" -> Seq(3f, 4f, 5f)),
+        s"$framing: $back")
+    }
+  }
+
   test("staged COPY upsert replaces changed ids and keeps the others") {
     live()
     val pgv = ConnectorRegistry("pgvector")
@@ -1013,6 +1030,60 @@ class PgLiveWireSpec extends SparkSpec {
         s"recreate=$recreate: ${back.length} rows over ${back.map(_._1).distinct.length} ids")
       assert(back.toMap == want, s"recreate=$recreate: vectors differ from the source's bits")
     }
+  }
+
+  test("an incremental run whose staged-upsert COPY is reset mid-stream fails; the re-run " +
+    "ships the part of the delta that had not landed and leaves exactly the source") {
+    live()
+    val pgv = ConnectorRegistry("pgvector")
+    val table = "wire_inc_reset"
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pgwire-inc-reset").toString
+    // ~0.5 KB rows; v2 changes k0..k399, keeps k400..k799 and adds k800..k1199,
+    // so the delta's COPY is ~400 KB of CopyData
+    def version(sub: String, n: Int, v: Int => Int): String = {
+      spark.sparkContext.parallelize((0 until n).map(i =>
+        (s"k$i", Seq.tabulate(64)(j => v(i) + j + i / 1000f), Map("v" -> v(i).toString))), 2)
+        .toDF(graft.model.Canonical.ID, graft.model.Canonical.VECTOR,
+          graft.model.Canonical.METADATA)
+        .write.parquet(s"$tmp/$sub/docs.parquet")
+      s"$tmp/$sub"
+    }
+    val v1 = version("v1", 800, _ => 1)
+    val v2 = version("v2", 1200, i => if (i < 400 || i >= 800) 2 else 1)
+    def cfg(src: String, port: Int) = graft.config.MigrationConfig.fromJson(
+      s"""{"source": {"type": "parquet", "connection": {"path": "$src"},
+         |            "query": {"table_name": "docs"}},
+         | "target": {"type": "pgvector",
+         |            "connection": {"host": "127.0.0.1", "port": "$port",
+         |                           "database": "postgres", "user": "postgres"},
+         |            "load": {"collection": "$table", "parallelism": 1}}}""".stripMargin)
+    def bits(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.getString(0) ->
+      r.getSeq[Float](1).map(java.lang.Float.floatToRawIntBits)).toSeq
+    def target() = bits(pgv.readBack(spark, wireConn(),
+      graft.config.LoadSpec(collection = table)))
+    val want = bits(spark.read.parquet(s"$v2/docs.parquet")).toMap
+    assert(graft.core.IncrementalMigrator.run(spark, cfg(v1, server.get.port)).written == 800)
+    val before = target().toMap
+    val relay = new CountingRelay(server.get.port, resetAfter = 100 * 1024)
+    val failed =
+      try graft.core.IncrementalMigrator.run(spark, cfg(v2, relay.port))
+      finally relay.close()
+    assert(!failed.success, s"the reset went unnoticed: $failed")
+    assert(relay.resets.get > 0, "no connection was reset")
+    // a partition's staged upsert lands whole or not at all
+    val mid = target()
+    assert(mid.map(_._1).distinct.length == mid.length, "the failed run duplicated an id")
+    assert(mid.forall { case (id, v) => before.get(id).contains(v) || want.get(id).contains(v) },
+      "the failed run left a row that is neither the old nor the new version")
+    val landed = mid.toMap
+    val missing = want.count { case (id, v) => !landed.get(id).contains(v) }
+    assert(missing > 0, "the reset kept nothing from landing")
+    val again = graft.core.IncrementalMigrator.run(spark, cfg(v2, server.get.port))
+    assert(again.success && again.written == missing, s"$missing rows missing: $again")
+    val back = target()
+    assert(back.length == 1200 && back.map(_._1).distinct.length == 1200,
+      s"${back.length} rows over ${back.map(_._1).distinct.length} ids")
+    assert(back.toMap == want, "vectors differ from the source's bits")
   }
 
   test("TLS upgrade (SSLRequest): pinned self-signed cert, secure defaults, no fallback") {

@@ -26,6 +26,31 @@ class PgVectorSpec extends SparkSpec {
     assert(back == Seq(0.5f, -1.25f, 3.0f))
   }
 
+  test("vectorToText's text is the per-element-cast formulation's, byte for byte, " +
+    "on null-free float and double vectors; a null element renders as null") {
+    def perElement(c: org.apache.spark.sql.Column) =
+      when(c.isNull, lit(null).cast("string"))
+        .otherwise(concat(lit("["), concat_ws(",", transform(c, _.cast("string"))), lit("]")))
+    val rnd = new scala.util.Random(13)
+    val edges = Seq(0f, -0f, Float.MinPositiveValue, Float.MaxValue, -Float.MaxValue,
+      Float.PositiveInfinity, Float.NegativeInfinity, Float.NaN, 1e-45f, 1.17549435e-38f,
+      0.1f, 1e7f, 1e-3f, 123456.78f)
+    val floats: Seq[Seq[Float]] = Seq(edges, Seq.empty, null) ++
+      Seq.fill(200)(Seq.fill(rnd.nextInt(9))(java.lang.Float.intBitsToFloat(rnd.nextInt())))
+    val doubles: Seq[Seq[Double]] = Seq(edges.map(_.toDouble), Seq(Double.MinPositiveValue,
+      Double.MaxValue, 1e-300, 0.1, 1e21), Seq.empty, null) ++
+      Seq.fill(200)(Seq.fill(rnd.nextInt(9))(java.lang.Double.longBitsToDouble(rnd.nextLong())))
+    for (df <- Seq(floats.map(Tuple1(_)).toDF("v"), doubles.map(Tuple1(_)).toDF("v"))) {
+      val pairs = df.select(PgVectorCodec.vectorToText(col("v")), perElement(col("v")))
+        .collect().map(r => (r.getString(0), r.getString(1)))
+      assert(pairs.count(_._1 == null) == 1)
+      pairs.foreach { case (got, want) => assert(got == want) }
+    }
+    val withNull = spark.sql("SELECT array(1.5F, NULL, 2.0F) AS v")
+    assert(withNull.select(PgVectorCodec.vectorToText(col("v"))).as[String].head() ==
+      "[1.5,null,2.0]")
+  }
+
   test("codec handles null and empty") {
     val res = spark.sql("SELECT CAST(NULL AS STRING) AS t UNION ALL SELECT ''")
       .select(PgVectorCodec.textToVector(col("t")).as("v")).as[Option[Seq[Float]]].collect()

@@ -205,4 +205,27 @@ class FallbackInventorySpec extends SparkSpec {
       } finally VectorStore.clearRemotes()
     } finally server.stop()
   }
+
+  test("a planned and executed sliced scan sends exactly one probe scroll (qdrant)") {
+    val server = new QdrantWireServer(new InMemoryStore)
+    try {
+      (0 until 400).map(i => (s"$i", Seq.fill(2)(i.toFloat), Map("k" -> "v")))
+        .toDF(Canonical.ID, Canonical.VECTOR, Canonical.METADATA)
+        .write.format("graft-qdrant").option("collection", "fb_probe")
+        .option("url", server.url).option("recreate", "true")
+        .mode("overwrite").save()
+      val scroll = "POST /collections/fb_probe/points/scroll"
+      val mark = server.bodiesOf(scroll).size
+      assert(spark.read.format("graft-qdrant").option("collection", "fb_probe")
+        .option("url", server.url).option("page_size", "50").load()
+        .select(Canonical.ID).as[String].collect().length == 400)
+      // the probe is the one scroll without a slice's __gid range; the
+      // slice walks each carry one. Spark asks for the scan's partitions
+      // once per copy of its BatchScanExec (2 probe scrolls when each ask
+      // planned anew).
+      val (sliced, probes) = server.bodiesOf(scroll).drop(mark).partition(_.contains("__gid"))
+      assert(sliced.nonEmpty, "the scan was not sliced")
+      assert(probes.size == 1, s"${probes.size} probe scrolls: $probes")
+    } finally server.stop()
+  }
 }

@@ -341,6 +341,57 @@ class OpsSpec extends SparkSpec {
     assert(kept == Seq("1", "5", "6"), kept.toString) // 2,3 exact; 4 fuzzy
   }
 
+  /** `rows` as a parquet fixture, and a plan predicate that holds a scan of it. */
+  private def parquetDocs(rows: Seq[(Option[Long], String)]) = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fuzzy-docs").toString
+    rows.toDF("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(dir)
+    val reads = (p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) => p.exists {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation match {
+        case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+          fs.location.rootPaths.exists(_.toUri.getPath.stripSuffix("/") == dir)
+        case _ => false
+      }
+      case _ => false
+    }
+    (spark.read.parquet(dir), reads)
+  }
+
+  private val fuzzyFixture = {
+    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    Seq(Some(1L) -> base, Some(2L) -> base, Some(3L) -> base.replace("kappa", "lambda"),
+      Some(4L) -> "entirely different text with its own unique words here now",
+      Some(5L) -> "another unrelated document talking about other things too")
+  }
+
+  test("fuzzyDedupPipeline's result reads its checkpoint, not the caller's docs") {
+    val (docs, readsDocs) = parquetDocs(fuzzyFixture)
+    val out = Dedup.fuzzyDedupPipeline(docs, threshold = 0.4)
+    // the rep-id-only checkpoint re-read the fixture here: 1 execution
+    val (_, n) = executionsDuring(readsDocs)(
+      out.write.format("noop").mode("overwrite").save())
+    assert(n == 0, s"$n executions re-read the fixture")
+    assert(out.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 4L, 5L))
+  }
+
+  test("fuzzyDedupPipeline keeps the rows of its join-then-dedup formulation " +
+    "(null ids, null text, a shared id)") {
+    val base = "one two three four five six seven eight nine ten"
+    val (docs, _) = parquetDocs(fuzzyFixture ++ Seq(
+      None -> base, None -> "a null id with text of its own for the group by",
+      Some(10L) -> null, Some(11L) -> null,
+      Some(12L) -> base, Some(12L) -> "the same id on a second row, different text",
+      Some(13L) -> base.replace("ten", "eleven")))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (Option(r.get(0)), Option(r.getString(1)))).toSeq
+        .sortBy(_.toString)
+    val reps = Dedup.exactDuplicates(docs).select(col("keep_id").as("doc_id"))
+    val repDocs = docs.join(reps, "doc_id")
+    val want = rows(Dedup.keepCanonical(repDocs,
+      Dedup.minHashDuplicatePairs(repDocs, threshold = 0.4)))
+    assert(rows(Dedup.fuzzyDedupPipeline(docs, threshold = 0.4)) == want)
+    assert(want.exists(_._1.contains(12L)) && want.exists(_._2.isEmpty), want)
+  }
+
   test("milvus parser precedence: AND binds tighter than OR") {
     val d = new graft.connectors.vectorstore.MilvusExprDialect()
     val docs = Seq(("1", "a", "1"), ("2", "b", "9"), ("3", "a", "9"))
