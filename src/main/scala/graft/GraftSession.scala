@@ -43,24 +43,17 @@ object GraftSession {
       // Static estimate-driven broadcasts are disabled; AQE promotes joins
       // to broadcast (10m) or shuffled-hash (≤128m per-partition build)
       // from actual shuffle statistics at runtime. Explicit broadcast()
-      // hints on known-small dimension tables are unaffected. Values are
-      // env-overridable for cluster tuning; the defaults are
-      // scale-independent policy (meas. sf1: q3 6.04→2.26 s,
-      // q_join_pricing 3.71→1.76 s, q5 3.44→3.00 s; sf0.1 board unchanged).
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AUTO_BROADCAST", "-1"))
-      .config("spark.sql.adaptive.autoBroadcastJoinThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_BROADCAST", "10m"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_SHJ", "128m"))
-      // Shuffle/broadcast/spill block codec (guide §2.3): lz4 is Spark's
-      // default; zstd trades CPU for ratio. A/B'd at sf1 on the
-      // shuffle-heaviest rows each round (r19: ±20% = host noise at
-      // ≤25 MB shuffles; r20 re-run on the multi-file ramp: see
-      // OPTIMIZATION_r20.md) — env-overridable so a cluster with slow
-      // network can flip it without a rebuild.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
+      // hints on known-small dimension tables are unaffected. The values
+      // are scale-independent policy (meas. sf1: q3 6.04→2.26 s,
+      // q_join_pricing 3.71→1.76 s, q5 3.44→3.00 s; sf0.1 board unchanged);
+      // a cluster that needs others sets the Spark keys at submit time.
+      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
+      .config("spark.sql.adaptive.autoBroadcastJoinThreshold", "10m")
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "128m")
+      // Shuffle/broadcast/spill block codec (guide §2.3): Spark's default
+      // lz4 stays — zstd trades CPU for ratio and A/B'd as host noise at
+      // sf1 on the shuffle-heaviest rows (r19: ±20% at ≤25 MB shuffles;
+      // r20 re-run on the multi-file ramp: see OPTIMIZATION_r20.md).
       .config("spark.sql.session.timeZone", "UTC")
       // Hash pipelines (rolling hash, MinHash) rely on deterministic 64-bit
       // wraparound; Spark 4's ANSI default would throw on long overflow.

@@ -870,15 +870,20 @@ class VSScan(collection: String, dialect: FilterDialect, pushed: Array[Filter],
     * walks is exactly the single walk's row set — only BALANCE depends on
     * where the split points land, never correctness.
     *
-    * Split points span `[min probe id, max(max probe id, min + count)]`:
-    * a one-page probe of the (filtered) id stream gives the low end, and
-    * the backend's count extends the high end under the dense-numeric-id
-    * assumption (the common shape after digit-id coercion). Quantiles of
-    * the probe page alone would be badly skewed — a first page of ids
-    * 0..499 over a 200k collection puts 99.8% of the rows in the last
-    * slice. Falls back to the single sequential walk when the collection
-    * fits in one page, the probe has no numeric ids, or the dialect
-    * cannot render a slice (metadata-only filter languages). */
+    * Split points span `[min probe id, max(max probe id, min + count ·
+    * spacing)]`: a one-page probe of the (filtered) id stream gives the low
+    * end, and the backend's count extends the high end at the id spacing —
+    * 1 for dense numeric ids (the common shape after digit-id coercion).
+    * When the probe page arrives in ascending id order (a prefix of an
+    * id-ordered scroll, as Qdrant serves it) its mean id spacing is the
+    * spacing, so a filter that keeps every other id sizes the range twice
+    * as wide; a page in any other order (insertion or string order) is no
+    * prefix and keeps the dense assumption. Quantiles of the probe page
+    * alone would be badly skewed — a first page of ids 0..499 over a 200k
+    * collection puts 99.8% of the rows in the last slice. Falls back to
+    * the single sequential walk when the collection fits in one page, the
+    * probe has no numeric ids, or the dialect cannot render a slice
+    * (metadata-only filter languages). */
   private def planCursorSlices(store: VectorStoreTransport): Array[InputPartition] = {
     import org.apache.spark.sql.sources.{Filter => SFilter, _}
     val single = Array[InputPartition](VSCursorPartition(0, -1))
@@ -925,7 +930,12 @@ class VSScan(collection: String, dialect: FilterDialect, pushed: Array[Filter],
     // per-scan value serves BOTH branches (a fresh store.count here would
     // be the second wire count the at-most-one invariant forbids).
     val total = filteredPopulation
-    val hi = math.max(numeric.max, lo + total.toDouble)
+    // mean id spacing of an ascending probe page: a filter that thins the
+    // ids (every other id) stretches the range the count covers by as much
+    val ascending = numeric.size > 1 &&
+      numeric.iterator.sliding(2).forall { case Seq(a, b) => a < b }
+    val spacing = if (ascending) (numeric.last - lo) / (numeric.size - 1) else 1.0
+    val hi = math.max(numeric.max, lo + total.toDouble * spacing)
     if (!(hi > lo)) return single
     val want = cursorParallelism
     val splits = (1 until want).map(i => lo + (hi - lo) * i / want).distinct

@@ -34,8 +34,11 @@ object SigIndex {
                           corpusDups: Long, withinBatchDups: Long,
                           novelDocs: Long)
 
-  /** Build the index from a corpus; returns the number of indexed docs
-    * (docs with at least one shingle). Writes a `params.json` MANIFEST
+  /** Build the index from a corpus; returns the number of docs with at
+    * least one shingle. Every doc with an id is indexed by id: one without
+    * shingles keeps the all-sentinel signature, which bands to nothing
+    * ([[Dedup.lshBands]]), so a re-ingest reports it as already indexed.
+    * Writes a `params.json` MANIFEST
     * alongside the artifacts: the hashing parameters (num_hashes /
     * num_bands / shingle_size / portable) are STRUCTURAL — an ingest
     * signed with different ones would never collide with the stored bands
@@ -49,12 +52,12 @@ object SigIndex {
         .write.mode("overwrite").parquet(s"$indexDir/sigs")
       // band the PERSISTED sigs: one text scan total, banding is integer math
       val sigs = spark.read.parquet(s"$indexDir/sigs")
-      Dedup.bandedSignatureTable(sigs, p.idCol, p.numBands, p.numHashes / p.numBands, p.portable)
+      Dedup.lshBands(sigs, p.idCol, p.numBands, p.numHashes / p.numBands, p.portable)
         .write.mode("overwrite").parquet(s"$indexDir/bands")
       val bands = spark.read.parquet(s"$indexDir/bands")
       Dedup.bucketWidths(bands, p.idCol).write.mode("overwrite").parquet(s"$indexDir/widths")
       writeManifest(spark, indexDir, p)
-      sigs.count()
+      sigs.filter(Dedup.hasShingles(col("minhash_sig"))).count()
     }
   }
 
@@ -275,10 +278,10 @@ object SigIndex {
       new java.net.URI(indexDir), spark.sparkContext.hadoopConfiguration)
     withLease(fsys, indexDir, "ingest") {
     val (sigs, bands, widths) = openFrames(spark, indexDir, params.idCol)
-    // ids are the idempotence key (leg 1 anti-joins on them, the marker
-    // rows key on them): a NULL id can never match its own marker, so it
-    // would be re-reported as novel and re-append a (null, []) marker row
-    // on EVERY re-ingest — refuse loudly instead of drifting forever
+    // ids are the idempotence key (leg 1 anti-joins on them): a NULL id
+    // can never match its own sig row, so it would be re-reported as novel
+    // and re-append a row on EVERY re-ingest — refuse loudly instead of
+    // drifting forever
     if (batch.filter(col(p.idCol).isNull).limit(1).count() > 0)
       throw new IllegalArgumentException(
         s"ingest batch contains rows with NULL ${p.idCol} — ids are the " +
@@ -309,8 +312,8 @@ object SigIndex {
       pairs.select(col("batch_id").as(p.idCol)).distinct())
     val corpusNovel = fresh.join(dupIds, Seq(p.idCol), "left_anti")
     // leg 3: collapse near-dup groups WITHIN the surviving batch — from
-    // the SAME signature table (estimate-mode pairs, identical to
-    // minHashDuplicatePairs(verifyExact = false) over these docs)
+    // the SAME signature table (estimate-mode pairs, which is how
+    // minHashDuplicatePairs(verifyExact = false) runs over these docs)
     val withinPairs = Dedup.duplicatePairsFromSigs(
       freshSigs.join(dupIds, Seq(p.idCol), "left_anti"),
       p.idCol, p.numHashes, p.numBands, p.threshold, p.maxBucket, p.portable)
@@ -330,23 +333,15 @@ object SigIndex {
       // ONE signing pass above (novel ⊆ fresh, so a semi-join selects
       // them); bands derive from those signatures. Both sides read only
       // checkpoints, so the append job never lists the directory it is
-      // writing into.
+      // writing into. A zero-shingle doc (empty/too-short text) lands in
+      // sigs/ with its sentinel signature and no bands: leg 1 keys on its
+      // id, so a re-ingest never re-reports it as novel.
       val novelSigs = graft.ops.Materialize(
         freshSigs.join(novel.select(col(p.idCol)), Seq(p.idCol), "left_semi"))
       val novelBands = graft.ops.Materialize(
-        Dedup.bandedSignatureTable(novelSigs, p.idCol,
-          p.numBands, p.numHashes / p.numBands, p.portable))
+        Dedup.lshBands(novelSigs, p.idCol, p.numBands, p.numHashes / p.numBands, p.portable))
       novelBands.write.mode("append").parquet(s"$indexDir/bands")
       novelSigs.write.mode("append").parquet(s"$indexDir/sigs")
-      // zero-shingle docs (empty/too-short text) produce no signature, so
-      // without a marker the leg-1 anti-join would re-report the same doc
-      // as novel on every re-ingest. Index them by id with an EMPTY
-      // signature: leg 1 keys on the id column only, and no bands row ever
-      // makes an empty-sig doc a near-dup candidate.
-      if (novelSigs.count() < novelN) // only when the batch had any
-        novel.join(novelSigs.select(col(p.idCol)), Seq(p.idCol), "left_anti")
-          .select(col(p.idCol), typedLit(Array.empty[Long]).as("minhash_sig"))
-          .write.mode("append").parquet(s"$indexDir/sigs")
       // widths/ is both input and output: land the merge beside it, then
       // swap via the filesystem rename
       val merged = Dedup.mergeBucketWidths(widths,

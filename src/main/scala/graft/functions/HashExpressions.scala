@@ -313,9 +313,9 @@ case class RollingWindowHashesExpr(child: Expression, width: Int, stride: Int)
   * full-corpus scan, so this is the production signature kernel; the
   * k-hash form ([[MinHashSignatureExpr]]) stays the audit baseline.
   *
-  * Empty input → all Long.MaxValue, matching [[MinHashSignatureExpr]]
-  * (two empty docs collide in every band and are discarded by the exact
-  * verify, identically in both modes).
+  * Empty input → all Long.MaxValue, matching [[MinHashSignatureExpr]]:
+  * the empty-set sentinel, which `Dedup.lshBands` gives no bands, so two
+  * empty docs never pair in either kernel.
   */
 case class OnePermMinHashExpr(child: Expression, k: Int, a: Long, b: Long)
   extends UnaryExpression {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
   StringType, StructType}
-import graft.functions.{TextFunctions, VectorFunctions}
+import graft.functions.{HashExpressions, TextFunctions, VectorFunctions}
 
 /** Deduplication operators for training-data pipelines.
   *
@@ -29,20 +29,15 @@ object Dedup {
   private val P = 2147483647L
 
   /** Deterministic (a, b) parameters for the universal hash family
-    * h_i(x) = (a_i·x + b_i) mod P. Seeded so results are reproducible
-    * across runs/clusters. */
-  private def hashParams(numHashes: Int): Seq[(Long, Long)] = {
-    val rnd = new scala.util.Random(42L)
-    Seq.fill(numHashes)((1L + rnd.nextInt((P - 1).toInt).toLong, rnd.nextInt(P.toInt).toLong))
-  }
-
-  /** The (a, b) permutation parameters as arrays — public so the DuckDB
-    * oracle for the portable pipeline interpolates the IDENTICAL constants
-    * into its SQL (generated from the same source, the two sides cannot
-    * drift). */
+    * h_i(x) = (a_i·x + b_i) mod P, seeded so results are reproducible
+    * across runs/clusters — public so the DuckDB oracle for the portable
+    * pipeline interpolates the IDENTICAL constants into its SQL (generated
+    * from the same source, the two sides cannot drift). */
   def minhashParams(numHashes: Int): (Array[Long], Array[Long]) = {
-    val ps = hashParams(numHashes)
-    (ps.map(_._1).toArray, ps.map(_._2).toArray)
+    val rnd = new scala.util.Random(42L)
+    val ps = Array.fill(numHashes)(
+      (1L + rnd.nextInt((P - 1).toInt).toLong, rnd.nextInt(P.toInt).toLong))
+    (ps.map(_._1), ps.map(_._2))
   }
 
   /** Exact dedup: group identical normalized text, keep the lowest id.
@@ -79,20 +74,38 @@ object Dedup {
       .select(col("best.id").as("keep_id"), (-col("best.neg")).as("score"),
         col("n_copies"), md5(col("norm_text")).as("content_md5"))
 
-  /** MinHash signature column: array<long> of length `numHashes`, built
-    * from word `shingleSize`-gram shingles. The signature itself is a
-    * codegen'd Catalyst expression ([[graft.functions.MinHashSignatureExpr]])
-    * — the HOF formulation (64 interpreted `aggregate`s) costs ~2.6 ms/doc;
-    * the compiled loop is ~100× cheaper, which decides feasibility at
-    * 100 TB. */
-  def withMinHashSignature(docs: DataFrame, textCol: String = "text",
-                           numHashes: Int = 64, shingleSize: Int = 3): DataFrame = {
-    val hashes = graft.functions.HashExpressions.wordShingleHashes(col(textCol), shingleSize)
-    val params = hashParams(numHashes)
-    docs.withColumn("minhash_sig",
-      graft.functions.HashExpressions.minHashSignature(
-        hashes, params.map(_._1).toArray, params.map(_._2).toArray))
+  /** Sorted distinct word `shingleSize`-gram hashes in [0, P): xxhash64
+    * shingles, or the codepoint-polynomial ones a SQL oracle replays
+    * (`portable`). */
+  private def shingleHashes(text: Column, shingleSize: Int, portable: Boolean): Column =
+    if (portable) HashExpressions.portableShingleHashes(text, shingleSize)
+    else HashExpressions.wordShingleHashes(text, shingleSize)
+
+  /** The MinHash signature of a text column — the one place either kernel
+    * is called. Both kernels are codegen'd Catalyst expressions
+    * ([[graft.functions.MinHashSignatureExpr]],
+    * [[graft.functions.OnePermMinHashExpr]]): the HOF formulation (64
+    * interpreted `aggregate`s) costs ~2.6 ms/doc, the compiled loop ~100×
+    * less, which decides feasibility at 100 TB. A text without shingles
+    * signs to all `Long.MaxValue` — see [[hasShingles]]. */
+  private def signatureColumn(text: Column, numHashes: Int, shingleSize: Int,
+                              portable: Boolean, onePerm: Boolean): Column = {
+    val sh = shingleHashes(text, shingleSize, portable)
+    if (onePerm) {
+      val (a, b) = minhashParams(1)
+      HashExpressions.onePermMinHash(sh, numHashes, a(0), b(0))
+    } else {
+      val (as, bs) = minhashParams(numHashes)
+      HashExpressions.minHashSignature(sh, as, bs)
+    }
   }
+
+  /** MinHash signature column: array<long> of length `numHashes`, built
+    * from word `shingleSize`-gram shingles. */
+  def withMinHashSignature(docs: DataFrame, textCol: String = "text",
+                           numHashes: Int = 64, shingleSize: Int = 3): DataFrame =
+    docs.withColumn("minhash_sig",
+      signatureColumn(col(textCol), numHashes, shingleSize, portable = false, onePerm = false))
 
   /** One-permutation MinHash signature: same column name and banding
     * semantics as [[withMinHashSignature]], but ONE universal hash per
@@ -102,46 +115,125 @@ object Dedup {
     * from `numHashes` multiply-mods to one is the production default at
     * scale; k-hash stays the audit baseline. */
   def withOnePermSignature(docs: DataFrame, textCol: String = "text",
-                           numHashes: Int = 64, shingleSize: Int = 3): DataFrame = {
-    val hashes = graft.functions.HashExpressions.wordShingleHashes(col(textCol), shingleSize)
-    val (a, b) = hashParams(1).head
+                           numHashes: Int = 64, shingleSize: Int = 3): DataFrame =
     docs.withColumn("minhash_sig",
-      graft.functions.HashExpressions.onePermMinHash(hashes, numHashes, a, b))
-  }
+      signatureColumn(col(textCol), numHashes, shingleSize, portable = false, onePerm = true))
+
+  /** `(id, carry…, minhash_sig)` for every doc with a non-null id: the one
+    * signing pass of every near-dup face (batch pairs, [[signatureTable]],
+    * SigIndex, the streaming dedup). One projection, so the shingle kernel
+    * runs once per document; docs without shingles keep their row (and
+    * sentinel signature) and [[lshBands]] gives them no bands.
+    *
+    * Explicit id-not-null (a null id could never appear in a pair output
+    * anyway): the candidate self-join INFERS isnotnull on its branches
+    * while the count-guard branch would not, and that one-filter
+    * difference breaks plan canonicalization — with it aligned, all four
+    * consumers of the banded relation reuse ONE shuffle stage. */
+  private[graft] def signatures(docs: DataFrame, idCol: String, textCol: String,
+                                numHashes: Int, shingleSize: Int, portable: Boolean,
+                                onePerm: Boolean = false,
+                                carryCols: Seq[String] = Nil): DataFrame =
+    docs.filter(col(idCol).isNotNull)
+      .select(col(idCol) +: carryCols.map(col) :+
+        signatureColumn(col(textCol), numHashes, shingleSize, portable, onePerm)
+          .as("minhash_sig"): _*)
+
+  /** Whether a signature was signed from at least one shingle. Both kernels
+    * sign an empty shingle set to all `Long.MaxValue` (no real value
+    * reaches it: k-hash values are < P, densified one-perm values
+    * < 4097·P), and SigIndex ingests before the sentinel marker wrote `[]`
+    * for such docs; a null text signs to null. `get` reads the first
+    * element null-safely, so `[]` is false, not an ANSI index error. */
+  private[graft] def hasShingles(sig: Column): Column =
+    coalesce(get(sig, lit(0)) =!= lit(Long.MaxValue), lit(false))
 
   /** LSH banding: explode each signature into `numBands` (band, bandHash)
-    * keys; docs sharing a key are candidate near-duplicates.
+    * keys; docs sharing a key are candidate near-duplicates. A signature
+    * without shingles ([[hasShingles]]) gets NO band rows — the one place
+    * the "no shingles" rule is decided, so no face can pair two empty
+    * docs through their shared all-sentinel band keys. The generator reads
+    * the projected signature attribute (no Filter for Catalyst to push
+    * below the signing projection), so the kernel is never re-run.
     *
     * `portable = true` derives the band key with the polynomial fold of the
     * band's signature values + band index instead of xxhash64 — pure int64
     * math a SQL oracle reproduces (signature values are < P so the fold's
     * precondition holds). Key collisions merge buckets identically in both
-    * engines, so outputs still match exactly. */
+    * engines, so outputs still match exactly.
+    *
+    * Written out once and APPENDED on each accepted batch, this is the
+    * BANDED persisted face of the MinHash index (SigIndex `bands/`): three
+    * narrow columns (~25 bytes/row vs `numHashes` longs in the signature
+    * table), so even the 100 TB corpus' banded face is a sub-TB scan of
+    * exactly the columns a bucket semi-join needs. */
   def lshBands(signed: DataFrame, idCol: String = "doc_id",
                numBands: Int = 16, rowsPerBand: Int = 4,
                portable: Boolean = false, carryCols: Seq[String] = Nil): DataFrame = {
+    val sig = col("minhash_sig")
     val bands = array((0 until numBands).map { j =>
       val key =
         if (portable)
-          graft.functions.HashExpressions.polyFoldHash(
-            concat(slice(col("minhash_sig"), j * rowsPerBand + 1, rowsPerBand),
-              array(lit(j.toLong))))
+          HashExpressions.polyFoldHash(
+            concat(slice(sig, j * rowsPerBand + 1, rowsPerBand), array(lit(j.toLong))))
         else {
-          val elems = (0 until rowsPerBand).map(r =>
-            element_at(col("minhash_sig"), j * rowsPerBand + r + 1))
+          val elems = (0 until rowsPerBand).map(r => element_at(sig, j * rowsPerBand + r + 1))
           xxhash64(elems :+ lit(j): _*)
         }
       struct(lit(j).as("band"), key.as("band_hash"))
     }: _*)
-    signed.select(col(idCol) +: carryCols.map(col) :+ explode(bands).as("b"): _*)
+    signed.select(col(idCol) +: carryCols.map(col) :+
+        explode(when(hasShingles(sig), bands)).as("b"): _*)
       .select(col(idCol) +: carryCols.map(col) :+ col("b.band") :+ col("b.band_hash"): _*)
+  }
+
+  /** The LSH skew guard: drop every band bucket holding more than
+    * `maxBucket` rows of `bands` (boilerplate docs all colliding) instead
+    * of letting it explode into O(bucket²) pairs.
+    *
+    * A partial-aggregate + equi-join rather than a Window: the groupBy
+    * count combines map-side (tiny per-bucket rows through the shuffle),
+    * where a Window would sort and buffer full per-bucket row state — the
+    * state that explodes on a boilerplate bucket at 100 TB.
+    * count(idCol), not count(1): keeps the id column referenced so the
+    * guard branch projects the SAME columns as the join branch and
+    * canonicalizes equal — AQE then reuses one shuffle stage for both
+    * (count(1) lets pruning narrow the guard's scan, breaking reuse). */
+  private[graft] def withinBucketCap(bands: DataFrame, idCol: String,
+                                     maxBucket: Int): DataFrame = {
+    val smallBuckets = bands.groupBy("band", "band_hash")
+      .agg(count(col(idCol)).as("__n"))
+      .filter(col("__n") <= maxBucket)
+      .select("band", "band_hash")
+    bands.join(smallBuckets, Seq("band", "band_hash"))
+  }
+
+  /** Candidate pairs `(id_a < id_b)` of a signature table: banding, the
+    * skew guard and the bucket self-join. */
+  private def candidatePairs(sigs: DataFrame, idCol: String, numBands: Int,
+                             rowsPerBand: Int, maxBucket: Int,
+                             portable: Boolean): DataFrame = {
+    // Explicit repartition on the bucket key: the count guard's aggregate
+    // and the pair join below then share this ONE exchange (ReusedExchange)
+    // instead of each re-running the shingle+signature scan — the expensive
+    // part; the bands themselves are ~1% of the text width. Without it the
+    // guard's partial aggregate sits below its own exchange and defeats
+    // exchange reuse, doubling the signature scan (measured +0.2 s at sf0.1).
+    val bands = lshBands(sigs, idCol, numBands, rowsPerBand, portable)
+      .repartition(col("band"), col("band_hash"))
+    val bounded = withinBucketCap(bands, idCol, maxBucket)
+    val left = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
+    val right = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_b"))
+    left.join(right, Seq("band", "band_hash"))
+      .filter(col("id_a") < col("id_b"))
+      .select("id_a", "id_b").distinct()
   }
 
   /** Candidate pairs from banded LSH, verified with true n-gram Jaccard.
     *
     * @param threshold   minimum Jaccard similarity to report
-    * @param maxBucket   skew guard: buckets larger than this (boilerplate /
-    *                    empty docs all colliding) are dropped rather than
+    * @param maxBucket   skew guard: buckets larger than this (boilerplate
+    *                    docs all colliding) are dropped rather than
     *                    exploding into O(bucket²) pairs — at 100 TB a single
     *                    hot bucket would otherwise dominate the stage.
     * @param verifyExact true (audit mode): re-check candidates against
@@ -160,9 +252,11 @@ object Dedup {
     *                    band keys): a DuckDB oracle then replays every
     *                    stage — signatures, banding, bucket guard, pair
     *                    join, exact verify — bit-for-bit on the full
-    *                    corpus. Shingle-less docs are excluded upfront
-    *                    (they can never verify; keeping them out also
-    *                    spares the all-sentinel signature bucket).
+    *                    corpus.
+    *
+    * In every mode shingle-less docs are excluded upfront: they get no
+    * band rows ([[lshBands]]), so they never pair and never fill the
+    * all-sentinel signature bucket.
     */
   def minHashDuplicatePairs(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                             numHashes: Int = 64, numBands: Int = 16, shingleSize: Int = 3,
@@ -172,69 +266,26 @@ object Dedup {
     require(!(portable && onePerm),
       "portable mode uses the k-hash kernel (densified one-perm values exceed P, " +
         "breaking the polynomial band key's precondition)")
-    val rowsPerBand = numHashes / numBands
-    def shingleExpr(c: org.apache.spark.sql.Column) =
-      if (portable) graft.functions.HashExpressions.portableShingleHashes(c, shingleSize)
-      else graft.functions.HashExpressions.wordShingleHashes(c, shingleSize)
     // NO Tables.spread here (r19, measured): after the shingle-kernel
     // rework the sign pass is cheap enough that a pre-shuffle of the text
     // costs more than the single-core scan it parallelizes — spread(docs)
     // read 1.00→1.50 s at sf0.1 and 2.45→2.63 s at sf1 (the band
-    // repartition right below is already the operator's parallelism
-    // boundary). The compute-bound paths that DO win keep it
-    // (chunkByTokens, the multimodal fixture tables).
-    // Explicit id-not-null upfront (a null id could never appear in the
-    // pair output anyway): the self-join below INFERS isnotnull on its
-    // branches while the count-guard branch would not, and that one-filter
-    // difference breaks plan canonicalization — with it aligned, all four
-    // consumers of the banded relation reuse ONE shuffle stage.
-    val notNull = docs.filter(col(idCol).isNotNull)
-    val signedAll =
-      if (portable) {
-        val (as, bs) = minhashParams(numHashes)
-        notNull
-          .withColumn("__sh", shingleExpr(col(textCol)))
-          .filter(size(col("__sh")) > 0)
-          .withColumn("minhash_sig",
-            graft.functions.HashExpressions.minHashSignature(col("__sh"), as, bs))
-      } else if (onePerm) withOnePermSignature(notNull, textCol, numHashes, shingleSize)
-      else withMinHashSignature(notNull, textCol, numHashes, shingleSize)
-    // Estimate mode: the signature join below shuffles by ID while bands
+    // repartition is already the operator's parallelism boundary). The
+    // compute-bound paths that DO win keep it (chunkByTokens, the
+    // multimodal fixture tables).
+    val signed = signatures(docs, idCol, textCol, numHashes, shingleSize, portable, onePerm)
+    // Estimate mode: the signature join shuffles by ID while bands
     // shuffle by bucket key — no exchange to share, so without
     // materialization the corpus text would be scanned+shingled+signed
     // TWICE (at 100 TB: double IO of the whole corpus). The (id, sig)
     // table is numHashes longs per doc — ~0.5% of text width — so one
     // eager checkpoint feeds both consumers. Exact mode keeps the lazy
     // plan: its shingle table shares the band exchange instead.
-    val signed =
-      if (verifyExact) signedAll
-      else Materialize(signedAll.select(col(idCol), col("minhash_sig")))
-    // Explicit repartition on the bucket key: the count guard's aggregate
-    // and the pair join below then share this ONE exchange (ReusedExchange)
-    // instead of each re-running the shingle+signature scan — the expensive
-    // part; the bands themselves are ~1% of the text width. Without it the
-    // guard's partial aggregate sits below its own exchange and defeats
-    // exchange reuse, doubling the signature scan (measured +0.2 s at sf0.1).
-    val bands = lshBands(signed, idCol, numBands, rowsPerBand, portable)
-      .repartition(col("band"), col("band_hash"))
-    // Skew guard as a partial-aggregate + equi-join rather than a Window:
-    // the groupBy count combines map-side (tiny per-bucket rows through the
-    // shuffle), where a Window would sort and buffer full per-bucket row
-    // state — the state that explodes on a boilerplate bucket at 100 TB.
-    // count(idCol), not count(1): keeps the id column referenced so the
-    // guard branch projects the SAME columns as the join branch and
-    // canonicalizes equal — AQE then reuses one shuffle stage for both
-    // (count(1) lets pruning narrow the guard's scan, breaking reuse).
-    val smallBuckets = bands.groupBy("band", "band_hash")
-      .agg(count(col(idCol)).as("__n"))
-      .filter(col("__n") <= maxBucket)
-      .select("band", "band_hash")
-    val bounded = bands.join(smallBuckets, Seq("band", "band_hash"))
-    val left = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-    val right = bounded.select(col("band"), col("band_hash"), col(idCol).as("id_b"))
-    val candidates = left.join(right, Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
+    if (!verifyExact)
+      return duplicatePairsFromSigs(Materialize(signed), idCol, numHashes, numBands,
+        threshold, maxBucket, portable)
+    val candidates = candidatePairs(signed, idCol, numBands, numHashes / numBands,
+      maxBucket, portable)
     // verify on hashed shingle sets with the merge-join kernel: the
     // shingle arrays come out of WordShingleHashesExpr SORTED, so the
     // per-pair Jaccard is a zero-allocation two-pointer merge instead of
@@ -247,94 +298,51 @@ object Dedup {
     // of a diamond dependency and defeats subtree reuse. Materializing the
     // candidate list first and semi-joining to it was also slower at sf0.1
     // and sf1 — OPTIMIZATION_r20.md keeps the measurement.)
-    if (verifyExact) {
-      val sh = docs.select(col(idCol), shingleExpr(col(textCol)).as("sh"))
-      candidates
-        .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
-        .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
-        .withColumn("jaccard",
-          round(graft.functions.HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    } else {
-      // estimate mode: join the fixed-width signatures, never the shingles
-      val sig = signed.select(col(idCol), col("minhash_sig"))
-      candidates
-        .join(sig.select(col(idCol).as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
-        .join(sig.select(col(idCol).as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
-        .withColumn("jaccard", round(graft.functions.HashExpressions
-          .signatureMatchFraction(col("sig_a"), col("sig_b")), 6))
-        .filter(col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    }
+    val sh = docs.select(col(idCol), shingleHashes(col(textCol), shingleSize, portable).as("sh"))
+    candidates
+      .join(sh.select(col(idCol).as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sh.select(col(idCol).as("id_b"), col("sh").as("sh_b")), "id_b")
+      .withColumn("jaccard", round(HashExpressions.sortedJaccard(col("sh_a"), col("sh_b")), 6))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard")
   }
 
   /** Estimate-mode near-dup pairs from a PRECOMPUTED signature table — the
-    * banding / skew-guard / candidate / signature-verify legs of
-    * [[minHashDuplicatePairs]] (estimate mode) without its signing pass.
-    * The reuse face for callers that already hold a [[signatureTable]]
-    * (e.g. [[graft.core.SigIndex.ingest]]'s within-batch leg, which would
-    * otherwise re-sign text it signed for the corpus leg). Results are
-    * identical to `minHashDuplicatePairs(docs, …, verifyExact = false)`
-    * over the documents the signatures were built from. */
+    * candidate and signature-verify legs of [[minHashDuplicatePairs]]
+    * (estimate mode) without its signing pass, which is exactly how that
+    * mode runs. The reuse face for callers that already hold a
+    * [[signatureTable]] (e.g. [[graft.core.SigIndex.ingest]]'s within-batch
+    * leg, which would otherwise re-sign text it signed for the corpus
+    * leg). Results are identical to
+    * `minHashDuplicatePairs(docs, …, verifyExact = false)` over the
+    * documents the signatures were built from. */
   def duplicatePairsFromSigs(sigs: DataFrame, idCol: String = "doc_id",
                              numHashes: Int = 64, numBands: Int = 16,
                              threshold: Double = 0.5, maxBucket: Int = 1000,
                              portable: Boolean = false): DataFrame = {
-    val rowsPerBand = numHashes / numBands
-    // same exchange-sharing shape as minHashDuplicatePairs: one
-    // repartition on the bucket key feeds the guard count and the pair join
-    val bands = lshBands(sigs, idCol, numBands, rowsPerBand, portable)
-      .repartition(col("band"), col("band_hash"))
-    val smallBuckets = bands.groupBy("band", "band_hash")
-      .agg(count(col(idCol)).as("__n"))
-      .filter(col("__n") <= maxBucket)
-      .select("band", "band_hash")
-    val bounded = bands.join(smallBuckets, Seq("band", "band_hash"))
-    val candidates = bounded
-      .select(col("band"), col("band_hash"), col(idCol).as("id_a"))
-      .join(bounded.select(col("band"), col("band_hash"), col(idCol).as("id_b")),
-        Seq("band", "band_hash"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b").distinct()
-    candidates
-      .join(sigs.select(col(idCol).as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
-      .join(sigs.select(col(idCol).as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
-      .withColumn("jaccard", round(graft.functions.HashExpressions
-        .signatureMatchFraction(col("sig_a"), col("sig_b")), 6))
+    // join the fixed-width signatures, never the shingles
+    val sig = sigs.select(col(idCol), col("minhash_sig"))
+    candidatePairs(sigs, idCol, numBands, numHashes / numBands, maxBucket, portable)
+      .join(sig.select(col(idCol).as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
+      .join(sig.select(col(idCol).as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
+      .withColumn("jaccard",
+        round(HashExpressions.signatureMatchFraction(col("sig_a"), col("sig_b")), 6))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
   }
 
   /** The persisted face of the MinHash index: `(id, minhash_sig)` for every
-    * doc — fixed `numHashes` longs per row (~0.5% of text width), the table
-    * a production corpus keeps next to itself so each INCREMENTAL batch
-    * dedups against the whole history without re-signing it. Write it out
-    * bucketed/partitioned once; append each accepted batch's signatures. */
+    * doc with a non-null id — fixed `numHashes` longs per row (~0.5% of
+    * text width), the table a production corpus keeps next to itself so
+    * each INCREMENTAL batch dedups against the whole history without
+    * re-signing it. A doc without shingles keeps its row with the
+    * all-sentinel signature, which bands to nothing ([[lshBands]]). Write
+    * it out bucketed/partitioned once; append each accepted batch's
+    * signatures. */
   def signatureTable(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text",
                      numHashes: Int = 64, shingleSize: Int = 3,
-                     portable: Boolean = false): DataFrame = {
-    val sh =
-      if (portable) graft.functions.HashExpressions.portableShingleHashes(col(textCol), shingleSize)
-      else graft.functions.HashExpressions.wordShingleHashes(col(textCol), shingleSize)
-    val (as, bs) = minhashParams(numHashes)
-    docs.filter(col(idCol).isNotNull)
-      .withColumn("__sh", sh)
-      .filter(size(col("__sh")) > 0)
-      .select(col(idCol),
-        graft.functions.HashExpressions.minHashSignature(col("__sh"), as, bs).as("minhash_sig"))
-  }
-
-  /** The BANDED persisted face of the MinHash index: `(id, band,
-    * band_hash)` — the [[signatureTable]] after [[lshBands]], written out
-    * once and APPENDED on each accepted batch so no ingest ever re-bands
-    * history. Three narrow columns (~25 bytes/row vs `numHashes` longs in
-    * the signature table), so even the 100 TB corpus' banded face is a
-    * sub-TB scan of exactly the columns a bucket semi-join needs. */
-  def bandedSignatureTable(sigs: DataFrame, idCol: String = "doc_id",
-                           numBands: Int = 16, rowsPerBand: Int = 4,
-                           portable: Boolean = false): DataFrame =
-    lshBands(sigs, idCol, numBands, rowsPerBand, portable)
+                     portable: Boolean = false): DataFrame =
+    signatures(docs, idCol, textCol, numHashes, shingleSize, portable)
 
   /** Per-bucket widths `(band, band_hash, bucket_n)` of a banded table —
     * the skew-guard statistic, persisted alongside the banded face so each
@@ -386,11 +394,11 @@ object Dedup {
                              idCol: String, numHashes: Int, numBands: Int,
                              portable: Boolean): Unit = {
     val spark = corpusSigs.sparkSession
-    // size > 0, not just isNotNull: zero-shingle docs are marker-indexed
-    // with EMPTY signatures (SigIndex ingest leg 1), and a marker row
-    // would fail the width check on perfectly correct params
+    // shingled signatures only: a zero-shingle doc's row (sentinel, or a
+    // legacy `[]` marker that would fail the width check on perfectly
+    // correct params) has no bands to compare
     val proj = corpusSigs.select(col(idCol), col("minhash_sig"))
-      .filter(col(idCol).isNotNull && size(col("minhash_sig")) > 0)
+      .filter(col(idCol).isNotNull && hasShingles(col("minhash_sig")))
     val sigRows = proj.limit(ProbeSamples).collect()
     if (sigRows.isEmpty) return // fresh/empty index: nothing to contradict
     sigRows.foreach { r =>
@@ -441,7 +449,7 @@ object Dedup {
     * work proportional to |corpus| instead of |batch|.
     *
     * The corpus side enters as its persisted artifacts: [[signatureTable]]
-    * (for verification), [[bandedSignatureTable]] and [[bucketWidths]]
+    * (for verification), its [[lshBands]] and [[bucketWidths]]
     * (for candidate generation) — all maintained on append, never
     * recomputed at ingest. The only full-text work of the whole operation
     * is signing the BATCH; the corpus-side work is one broadcast-pruned

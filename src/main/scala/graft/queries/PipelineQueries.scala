@@ -877,7 +877,7 @@ object PipelineQueries {
       val stranded = Dedup.signatureTable(even.filter(col("doc_id") % 10 === 0),
         numHashes = 16, portable = true)
       stranded.write.mode("append").parquet(s"$tmp/sigs")
-      Dedup.bandedSignatureTable(stranded, numBands = 4, rowsPerBand = 4, portable = true)
+      Dedup.lshBands(stranded, numBands = 4, rowsPerBand = 4, portable = true)
         .write.mode("append").parquet(s"$tmp/bands") // widths NOT swapped
       Dedup.incrementalNearDupPairsIndexed(
         s.read.parquet(s"$tmp/sigs"), s.read.parquet(s"$tmp/bands"),

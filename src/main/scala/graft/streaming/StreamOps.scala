@@ -274,16 +274,12 @@ object StreamOps {
                                 shingleSize: Int = 3,
                                 broadcastBatch: Boolean = true): DataFrame = {
     import graft.ops.Dedup
-    val rowsPerBand = numHashes / numBands
     // static side: banded + skew-guarded ONCE (materialized so microbatches
     // reuse it instead of re-banding the corpus every trigger)
-    val corpusBands0 = Dedup.lshBands(corpusSigs, idCol, numBands, rowsPerBand, portable,
-      carryCols = Seq("minhash_sig"))
-    val smallBuckets = corpusBands0.groupBy("band", "band_hash")
-      .agg(count(col(idCol)).as("__n")).filter(col("__n") <= maxBucket)
-      .select("band", "band_hash")
+    val corpusBands = Dedup.lshBands(corpusSigs, idCol, numBands, numHashes / numBands,
+      portable, carryCols = Seq("minhash_sig"))
     val staticSide = graft.ops.Materialize(
-      corpusBands0.join(smallBuckets, Seq("band", "band_hash"))
+      Dedup.withinBucketCap(corpusBands, idCol, maxBucket)
         .select(col("band"), col("band_hash"), col(idCol).as("corpus_id"),
           col("minhash_sig").as("sig_c")))
     incrementalDedupAgainst(docs, staticSide, idCol, textCol, tsCol,
@@ -330,7 +326,7 @@ object StreamOps {
       broadcastBatch = true)
 
   /** [[streamingIncrementalDedup]] over the PERSISTED index artifacts
-    * ([[graft.core.SigIndex]] / [[graft.ops.Dedup.bandedSignatureTable]] +
+    * ([[graft.core.SigIndex]] / [[graft.ops.Dedup.lshBands]] +
     * [[graft.ops.Dedup.bucketWidths]]): the static side is assembled from
     * the stored banded face and width table — no corpus re-banding and no
     * corpus aggregation at stream start; the one-time setup cost is the
@@ -395,19 +391,11 @@ object StreamOps {
                                       broadcastBatch: Boolean = true): DataFrame = {
     import graft.ops.Dedup
     import graft.functions.HashExpressions
-    val rowsPerBand = numHashes / numBands
     // shingleSize is STRUCTURAL: it must equal the corpus signatures'
     // (SigIndex manifest) or band hashes never collide — see SigIndex
-    val sh =
-      if (portable) HashExpressions.portableShingleHashes(col(textCol), shingleSize)
-      else HashExpressions.wordShingleHashes(col(textCol), shingleSize)
-    val (as, bs) = Dedup.minhashParams(numHashes)
-    val signed = docs
-      .withColumn("__sh", sh)
-      .filter(size(col("__sh")) > 0)
-      .withColumn("minhash_sig", HashExpressions.minHashSignature(col("__sh"), as, bs))
-      .select(col(idCol), col(tsCol), col("minhash_sig"))
-    val streamBands = Dedup.lshBands(signed, idCol, numBands, rowsPerBand, portable,
+    val signed = Dedup.signatures(docs, idCol, textCol, numHashes, shingleSize, portable,
+      carryCols = Seq(tsCol))
+    val streamBands = Dedup.lshBands(signed, idCol, numBands, numHashes / numBands, portable,
       carryCols = Seq(tsCol, "minhash_sig"))
     // broadcast the MICROBATCH side: without the hint each trigger plans a
     // SortMergeJoin that re-shuffles and re-sorts the corpus-sized static

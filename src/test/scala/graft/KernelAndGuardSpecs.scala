@@ -300,6 +300,24 @@ class BucketGuardPlanSpec extends SparkSpec {
     assert(finalPlan.contains("ReusedExchange"), "expected AQE stage reuse in the final plan")
   }
 
+  test("the shingle kernel runs once per signing branch (no shingle-count filter to push down)") {
+    // a Filter on the shingle count above the signing projection is pushed
+    // below it with the kernel inlined — two kernel passes per document
+    val docs = Tables(spark, sf(), "documents")
+    def n(plan: String, re: String) = re.r.findAllMatchIn(plan).length
+    val table = Dedup.signatureTable(docs, portable = true).queryExecution.optimizedPlan.toString
+    assert(n(table, "portable_shingle_hashes\\(") == 1, table)
+    // exact portable pairs: each signing branch wraps the kernel in its
+    // signature; the only other use is the verify's shingle table (`sh_a`,
+    // `sh_b`)
+    val pairs = Dedup.minHashDuplicatePairs(docs, portable = true)
+      .queryExecution.optimizedPlan.toString
+    val signing = n(pairs, "minhash_signature\\(portable_shingle_hashes\\(")
+    val verify = n(pairs, "portable_shingle_hashes\\([^()]*\\) AS sh_[ab]#")
+    assert(signing >= 1 && verify >= 1, pairs)
+    assert(n(pairs, "portable_shingle_hashes\\(") == signing + verify, pairs)
+  }
+
   test("guard still caps oversized buckets and keeps duplicate pairs") {
     // 40 exact copies of one text: every band bucket holds all 40 ids.
     // maxBucket=10 must drop those buckets -> no pairs; maxBucket=1000 keeps

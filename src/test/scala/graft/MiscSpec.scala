@@ -311,6 +311,33 @@ class CliSpec extends SparkSpec {
     assert(r2 == graft.core.SigIndex.IngestReport(3, 3, 0, 0, 0), r2.toString)
   }
 
+  test("sig-index: build indexes a shingle-less doc by id; a legacy [] marker still ingests") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("sigsentinel")
+    val indexDir = s"$root/index"
+    val p = graft.core.SigIndex.Params(numHashes = 16, numBands = 4, portable = true)
+    val text = "the quick brown fox jumps over the lazy dog right now"
+    // build returns the number of docs with a shingle; the "ok" doc is
+    // indexed too, by id with the sentinel signature
+    assert(graft.core.SigIndex.build(spark,
+      Seq((2L, text), (3L, "ok")).toDF("doc_id", "text"), indexDir, p) == 1)
+    val r1 = graft.core.SigIndex.ingest(spark, Seq((3L, "ok")).toDF("doc_id", "text"),
+      indexDir, p)
+    assert(r1 == graft.core.SigIndex.IngestReport(1, 1, 0, 0, 0), r1.toString)
+    // an index written before the sentinel carries `[]` marker rows: the
+    // marker keeps its id known, bands to nothing, and leaves the
+    // structural probe and the corpus leg working
+    Seq((99L, Seq.empty[Long])).toDF("doc_id", "minhash_sig")
+      .write.mode("append").parquet(s"$indexDir/sigs")
+    val batch = Seq((99L, "xy"), (100L, text), (101L, "ok")).toDF("doc_id", "text")
+    val r2 = graft.core.SigIndex.ingest(spark, batch, indexDir, p)
+    assert(r2 == graft.core.SigIndex.IngestReport(3, 1, 1, 0, 1), r2.toString)
+    val replay = graft.core.SigIndex.ingest(spark, batch, indexDir, p, append = false)
+    assert(replay == graft.core.SigIndex.IngestReport(3, 2, 1, 0, 0), replay.toString)
+    graft.ops.Dedup.requireIndexCompatible(spark.read.parquet(s"$indexDir/sigs"),
+      spark.read.parquet(s"$indexDir/bands"), "doc_id", 16, 4, portable = true)
+  }
+
   test("sig-index: PRE-MANIFEST ingest with guessed-wrong params throws, right params work") {
     // the manifest-less branch trusts caller params — exactly the
     // population the structural probe exists for: a portable=true legacy
@@ -324,7 +351,7 @@ class CliSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val sigs = graft.ops.Dedup.signatureTable(corpus, numHashes = 16, portable = true)
     sigs.write.parquet(s"$indexDir/sigs")
-    graft.ops.Dedup.bandedSignatureTable(sigs, numBands = 4, rowsPerBand = 4,
+    graft.ops.Dedup.lshBands(sigs, numBands = 4, rowsPerBand = 4,
       portable = true).write.parquet(s"$indexDir/bands")
     // no params.json, no widths — a hand-rolled legacy index
     val batch = Seq(

@@ -121,6 +121,31 @@ object KernelProps extends Properties("kernels") {
         sig(scala.util.Random.shuffle(xs)) == base
     }
 
+  property("estimate-mode pairs equal duplicatePairsFromSigs(signatureTable), short texts never pair") = {
+    import graft.ops.Dedup
+    import Prop.propBoolean
+    // a 4-word vocabulary makes shared 3-shingles common; 0..2 words (and
+    // "") have no shingle at all
+    val text = Gen.chooseNum(0, 6).flatMap(Gen.listOfN(_, Gen.oneOf("a", "b", "c", "d")))
+      .map(_.mkString(" "))
+    forAll(Gen.listOfN(10, text)) { texts =>
+      val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+      val short = texts.zipWithIndex.collect { case (t, i) if t.split(" ").length < 3 => i.toLong }
+      def pairs(df: org.apache.spark.sql.DataFrame) =
+        df.as[(Long, Long, Double)].collect().toSet
+      Seq(false, true).map { portable =>
+        val direct = pairs(Dedup.minHashDuplicatePairs(docs, numHashes = 16, numBands = 4,
+          verifyExact = false, portable = portable))
+        val viaSigs = pairs(Dedup.duplicatePairsFromSigs(
+          Dedup.signatureTable(docs, numHashes = 16, portable = portable),
+          numHashes = 16, numBands = 4, portable = portable))
+        ((direct == viaSigs) :| s"portable=$portable: $direct vs $viaSigs") &&
+          (direct.forall { case (a, b, _) => !short.contains(a) && !short.contains(b) }
+            :| s"portable=$portable: a shingle-less doc paired in $direct")
+      }.reduce(_ && _)
+    }
+  }
+
   property("chunking covers every token exactly; boundaries follow the stride") = {
     val gen = for {
       n <- Gen.chooseNum(0, 60)

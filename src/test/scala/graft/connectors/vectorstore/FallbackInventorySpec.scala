@@ -228,4 +228,35 @@ class FallbackInventorySpec extends SparkSpec {
       assert(probes.size == 1, s"${probes.size} probe scrolls: $probes")
     } finally server.stop()
   }
+
+  test("cursor slices follow the probe's id spacing: a filter keeping every other id") {
+    // ids 0..1999, the filter keeps the even ones: 1,000 rows over an id
+    // range of 2,000. Sized for dense ids, the split points cover only
+    // 0..1000 and the last slice holds 562 rows (three 256-row pages);
+    // sized at the probe page's spacing of 2, each slice fits one page.
+    val server = new QdrantWireServer(new InMemoryStore)
+    try {
+      // seeded in id order through the wire client (which adds the __gid
+      // mirror the slices range-filter): the scroll is id-ordered, as
+      // Qdrant's is
+      val t = new QdrantWireTransport(server.url)
+      t.createCollection("fb_thin", CollectionConfig(dim = 2), recreate = true)
+      t.upsert("fb_thin", (0 until 2000).map(i =>
+        VSRecord(s"$i", Array(i.toFloat, 1f), Map("parity" -> s"${i % 2}"))))
+      val scroll = "POST /collections/fb_thin/points/scroll"
+      val mark = server.bodiesOf(scroll).size
+      val ids = spark.read.format("graft-qdrant").option("collection", "fb_thin")
+        .option("url", server.url).option("page_size", "256")
+        .option("cursor_parallelism", "8").load()
+        .filter(element_at(col(Canonical.METADATA), "parity") === "0")
+        .select(Canonical.ID).as[String].collect().map(_.toInt).sorted.toSeq
+      assert(ids == (0 until 2000 by 2))
+      // one slice = one filter; each page of its walk is one scroll
+      val pagesPerSlice = server.bodiesOf(scroll).drop(mark).filter(_.contains("__gid"))
+        .groupBy(b => WireJson.mapper.readTree(b).get("filter").toString)
+        .values.map(_.size).toSeq
+      assert(pagesPerSlice.size >= 8, s"${pagesPerSlice.size} slices")
+      assert(pagesPerSlice.max == 1, s"pages per slice: $pagesPerSlice")
+    } finally server.stop()
+  }
 }

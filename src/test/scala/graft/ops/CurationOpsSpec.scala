@@ -90,7 +90,7 @@ class CurationOpsSpec extends SparkSpec {
     val sigs = Dedup.signatureTable(corpus, numHashes = 16, portable = true)
     // persist the maintained artifacts the way an ingest pipeline would
     val dir = java.nio.file.Files.createTempDirectory("sig_index").toString
-    Dedup.bandedSignatureTable(sigs, numBands = 4, rowsPerBand = 4, portable = true)
+    Dedup.lshBands(sigs, numBands = 4, rowsPerBand = 4, portable = true)
       .write.mode("overwrite").parquet(s"$dir/bands")
     val bands = spark.read.parquet(s"$dir/bands")
     Dedup.bucketWidths(bands).write.mode("overwrite").parquet(s"$dir/widths")
@@ -121,7 +121,7 @@ class CurationOpsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("stale_widths").toString
     val sigs0 = Dedup.signatureTable(corpus, numHashes = 16, portable = true)
     sigs0.write.parquet(s"$dir/sigs")
-    Dedup.bandedSignatureTable(sigs0, numBands = 4, rowsPerBand = 4, portable = true)
+    Dedup.lshBands(sigs0, numBands = 4, rowsPerBand = 4, portable = true)
       .write.parquet(s"$dir/bands")
     // widths reflect ONLY the pre-crash corpus
     Dedup.bucketWidths(spark.read.parquet(s"$dir/bands"))
@@ -129,7 +129,7 @@ class CurationOpsSpec extends SparkSpec {
     // replay the crash window: bands + sigs of the stranded doc land, widths stay stale
     val strandedSigs = Dedup.signatureTable(stranded, numHashes = 16, portable = true)
     strandedSigs.write.mode("append").parquet(s"$dir/sigs")
-    Dedup.bandedSignatureTable(strandedSigs, numBands = 4, rowsPerBand = 4, portable = true)
+    Dedup.lshBands(strandedSigs, numBands = 4, rowsPerBand = 4, portable = true)
       .write.mode("append").parquet(s"$dir/bands")
     val batch = Seq(
       (1L, "a stranded document appended during the crash window of the swap") // dup of 6
@@ -150,7 +150,7 @@ class CurationOpsSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again today"))
       .toDF("doc_id", "text")
     val sigs = Dedup.signatureTable(corpus, numHashes = 16, portable = true)
-    val bands = Dedup.bandedSignatureTable(sigs, numBands = 4, rowsPerBand = 4,
+    val bands = Dedup.lshBands(sigs, numBands = 4, rowsPerBand = 4,
       portable = true)
     val widths = Dedup.bucketWidths(bands)
     val batch = Seq(
@@ -177,7 +177,7 @@ class CurationOpsSpec extends SparkSpec {
       (2L, "an entirely different second text stored under the same doc id"))
       .toDF("doc_id", "text")
     val sigs2 = sigs.union(Dedup.signatureTable(collided, numHashes = 16, portable = true))
-    val bands2 = bands.union(bands).union(Dedup.bandedSignatureTable(
+    val bands2 = bands.union(bands).union(Dedup.lshBands(
       Dedup.signatureTable(collided, numHashes = 16, portable = true),
       numBands = 4, rowsPerBand = 4, portable = true))
     val out2 = Dedup.incrementalNearDupPairsIndexed(sigs2, bands2,
@@ -191,7 +191,7 @@ class CurationOpsSpec extends SparkSpec {
     val half = docs.filter($"doc_id" % 2 === 0)
     val other = docs.filter($"doc_id" % 2 =!= 0)
     def widthsOf(d: org.apache.spark.sql.DataFrame) =
-      Dedup.bucketWidths(Dedup.bandedSignatureTable(
+      Dedup.bucketWidths(Dedup.lshBands(
         Dedup.signatureTable(d, numHashes = 16, portable = true),
         numBands = 4, rowsPerBand = 4, portable = true))
     val merged = Dedup.mergeBucketWidths(widthsOf(half), widthsOf(other))

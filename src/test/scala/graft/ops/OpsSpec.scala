@@ -89,18 +89,28 @@ class OpsSpec extends SparkSpec {
   test("estimate-mode verify finds the planted pair and tracks exact Jaccard") {
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
     val near = base.replace("mu", "nu")
+    // ids 30..32 have no 3-word shingle: both kernels sign them to the
+    // same all-sentinel signature, which must never make them a pair
     val docs = (Seq(("0", base), ("1", near)) ++
-      (2 until 30).map(i => (i.toString, s"unrelated text number $i with words w$i x$i y$i z$i v$i u$i t$i s$i"))).
+      (2 until 30).map(i => (i.toString, s"unrelated text number $i with words w$i x$i y$i z$i v$i u$i t$i s$i")) ++
+      Seq(("30", "hello world"), ("31", "ok"), ("32", ""))).
       toDF("doc_id", "text")
-    val est = Dedup.minHashDuplicatePairs(docs, threshold = 0.4, verifyExact = false)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
-    assert(est.contains(("0", "1")), s"expected planted pair, got ${est.keySet}")
-    // the planted pair's exact hashed-shingle Jaccard is 9/11 (only the
-    // final 3-shingle differs); the k=64 signature estimate must land
-    // near it (binomial sd ≈ 0.05)
-    assert(math.abs(est(("0", "1")) - 9.0 / 11.0) < 0.2, est(("0", "1")).toString)
-    // no unrelated doc pairs survive the threshold
-    assert(est.keySet.forall { case (a, b) => (a, b) == (("0", "1")) }, est.keySet.toString)
+    for (onePerm <- Seq(false, true)) {
+      val est = Dedup.minHashDuplicatePairs(docs, threshold = 0.4, verifyExact = false,
+        onePerm = onePerm)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getDouble(2)).toMap
+      assert(est.contains(("0", "1")), s"onePerm=$onePerm: expected planted pair, got ${est.keySet}")
+      // the planted pair's exact hashed-shingle Jaccard is 9/11 (only the
+      // final 3-shingle differs); the k=64 signature estimate must land
+      // near it (binomial sd ≈ 0.05)
+      assert(math.abs(est(("0", "1")) - 9.0 / 11.0) < 0.2, est(("0", "1")).toString)
+      // no unrelated or shingle-less doc pairs survive the threshold
+      assert(est.keySet.forall { case (a, b) => (a, b) == (("0", "1")) },
+        s"onePerm=$onePerm: ${est.keySet}")
+    }
+    val kept = Dedup.fuzzyDedupPipeline(docs, verifyExact = false)
+      .select("doc_id").as[String].collect().toSet
+    assert(Set("30", "31", "32").subsetOf(kept), kept.toString)
   }
 
   test("quantile quality cut keeps at least the requested fraction, stable under repartition") {

@@ -578,7 +578,7 @@ class StreamingSpec extends SparkSpec {
       graft.core.SigIndex.Params(numHashes = 16, numBands = 4, portable = true))
     val sSigs = graft.ops.Dedup.signatureTable(stranded, numHashes = 16, portable = true)
     sSigs.write.mode("append").parquet(s"$dir/sigs")
-    graft.ops.Dedup.bandedSignatureTable(sSigs, numBands = 4, rowsPerBand = 4, portable = true)
+    graft.ops.Dedup.lshBands(sSigs, numBands = 4, rowsPerBand = 4, portable = true)
       .write.mode("append").parquet(s"$dir/bands") // widths NOT re-swapped
     val batch = Seq(
       (1L, "a stranded document appended during the crash window of the swap"))
