@@ -321,10 +321,9 @@ object Dedup {
                              threshold: Double = 0.5, maxBucket: Int = 1000,
                              portable: Boolean = false): DataFrame = {
     // join the fixed-width signatures, never the shingles
-    val sig = sigs.select(col(idCol), col("minhash_sig"))
     candidatePairs(sigs, idCol, numBands, numHashes / numBands, maxBucket, portable)
-      .join(sig.select(col(idCol).as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
-      .join(sig.select(col(idCol).as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
+      .join(sigs.select(col(idCol).as("id_a"), col("minhash_sig").as("sig_a")), "id_a")
+      .join(sigs.select(col(idCol).as("id_b"), col("minhash_sig").as("sig_b")), "id_b")
       .withColumn("jaccard",
         round(HashExpressions.signatureMatchFraction(col("sig_a"), col("sig_b")), 6))
       .filter(col("jaccard") >= threshold)
